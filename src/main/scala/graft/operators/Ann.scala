@@ -707,24 +707,26 @@ object Ann {
   }
 
   /** The persisted coarse codebook (double centroids, for assignment
-    * parity with the original build) plus the previous occupancy
-    * counts — the single owner of the sidecar read + dense-cells
-    * validation shared by [[addToIvfIndex]] and
-    * [[Pq.addToIvfPqIndex]]. Bounded collect: <= nlist rows.
+    * parity with the original build) plus the occupancy counts — the
+    * single owner of the sidecar read + dense-cells validation shared
+    * by every verb of the IVF family, reads and writes alike. Bounded
+    * collect (<= nlist rows), resident per codebook generation
+    * ([[SidecarMemo]]): callers must not mutate the arrays.
     */
   private[operators] def readCodebookSidecar(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): (Array[Array[Double]], Map[Int, Long]) = {
-    val cbRows = spark.read.parquet(s"$path/codebook")
-      .select("cell", "centroid_d", "members").collect()
-    require(cbRows.nonEmpty, s"$path/codebook is empty -- not an index")
-    val byCell = cbRows.sortBy(_.getInt(0))
-    require(
-      byCell.map(_.getInt(0)).sameElements(byCell.indices),
-      s"$path/codebook cells are not dense 0..${byCell.length - 1} -- corrupt index")
-    (byCell.map(_.getSeq[Double](1).toArray),
-      byCell.map(r => r.getInt(0) -> r.getLong(2)).toMap)
-  }
+      path: String): (Array[Array[Double]], Map[Int, Long]) =
+    SidecarMemo(spark, s"$path/codebook", "codebook") {
+      val cbRows = spark.read.parquet(s"$path/codebook")
+        .select("cell", "centroid_d", "members").collect()
+      require(cbRows.nonEmpty, s"$path/codebook is empty -- not an index")
+      val byCell = cbRows.sortBy(_.getInt(0))
+      require(
+        byCell.map(_.getInt(0)).sameElements(byCell.indices),
+        s"$path/codebook cells are not dense 0..${byCell.length - 1} -- corrupt index")
+      (byCell.map(_.getSeq[Double](1).toArray),
+        byCell.map(r => r.getInt(0) -> r.getLong(2)).toMap)
+    }
 
   /** Invalidate the index-complete marker (`path/codebook`) BEFORE an
     * in-place REBUILD touches the lakes: a crash after the base
@@ -922,11 +924,8 @@ object Ann {
 
   def indexOccupancy(
       spark: org.apache.spark.sql.SparkSession, path: String): IndexOccupancy = {
-    val agg = spark.read.parquet(s"$path/codebook").agg(
-      coalesce(sum(col("members")), lit(0L)).as("occ"),
-      count(lit(1)).as("cells"),
-      count_if(col("members") > 0).as("live")).head()
-    IndexOccupancy(agg.getLong(0), agg.getLong(1), agg.getLong(2))
+    val (codebook, members) = readCodebookSidecar(spark, path)
+    IndexOccupancy(members.values.sum, codebook.length, members.values.count(_ > 0))
   }
 
   /** KNN against a persisted [[buildIvfIndex]] index. The probe ranks
@@ -962,14 +961,13 @@ object Ann {
       eligible: Option[(DataFrame, Column)] = None,
       withVec: Boolean = false): DataFrame = {
     requireBaseServable(spark, path)
-    val centDf = readLiveCentroids(spark, path)
+    val (codebook, live, centDf) = readLiveCentroids(spark, path)
     val q = validQueries(queries, qId, qVec)
-    // take(1): an index whose every cell is dead has an empty live
-    // codebook — no rows can come back, so there is no dim to enforce
-    centDf.select(size(col("centroid"))).take(1)
-      .foreach(r => requireQueryDim(q, r.getInt(0)))
+    // an index whose every cell is dead has an empty live codebook —
+    // no rows can come back, so there is no dim to enforce
+    if (live.nonEmpty) requireQueryDim(q, codebook(0).length)
     val (cells, probed) = probePruned(q, centDf, nprobe)
-    val base = spark.read.parquet(s"$path/base")
+    val base = readBaseLake(spark, path)
       .filter(col("cell").isin(cells.map(Int.box): _*))
       .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
     val filtered = eligible match {
@@ -1030,24 +1028,43 @@ object Ann {
     graft.etl.Compact.requireServable(fs, new org.apache.hadoop.fs.Path(path))
   }
 
-  /** LIVE (members > 0) centroids from a persisted index's codebook
-    * sidecar — single owner of the probe-side read shared by the IVF
-    * and IVF-PQ query paths (probe ranking must stay bit-identical
-    * across the index family).
+  /** LIVE (members > 0) centroids of a persisted index — single owner
+    * of the probe-side read shared by the IVF, IVF-PQ and IVF-SQ8 query
+    * paths. Returns the resident double codebook, the live cells, and
+    * the probe frame (cell, centroid, c_nrm) as a LOCAL relation built
+    * from the codebook through [[centroidFrame]] — the same float cast
+    * the sidecar's float column was written with, so probe ranks stay
+    * bit-identical, and the broadcast probe side costs no Spark job.
     */
   private[operators] def readLiveCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebook")
-      .filter(col("members") > 0) // live cells only: see topProbeCells
-      .withColumn("c_nrm", Vectors.norm2(col("centroid")))
-      .select("cell", "centroid", "c_nrm")
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): (Array[Array[Double]], Seq[Int], DataFrame) = {
+    val (codebook, members) = readCodebookSidecar(spark, path)
+    val live = members.collect { case (c, m) if m > 0 => c }.toSeq.sorted
+    (codebook, live, centroidFrame(spark, codebook)
+      .filter(col("cell").isin(live.map(Int.box): _*))) // live cells: see topProbeCells
+  }
+
+  /** The cell-partitioned base lake of a persisted index, listed on
+    * every read; its schema is resident per codebook generation (every
+    * writer of the base rewrites the codebook sidecar), which spares
+    * the footer-inference job per read.
+    */
+  private[operators] def readBaseLake(
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val lake = s"$path/base"
+    spark.read.schema(SidecarMemo(spark, s"$path/codebook", "base")(
+      spark.read.parquet(lake).schema)).parquet(lake)
+  }
 
   /** Probe + prune for a persisted index: the probe result is needed
     * TWICE (the pruning cell list and the scoring join). It is
     * queries x nprobe rows -- NOT driver-bounded when the query set is
     * a big batch (the normal case for a corpus-vs-corpus ANN pass) --
     * so it is CACHED, not collected: the only driver materialization
-    * is the distinct cell list, which is <= nlist rows by construction.
+    * is the distinct cell list, deduplicated per partition before the
+    * collect (<= nlist rows per partition, whatever the batch size —
+    * and no shuffle job for a global distinct).
     * scopedCache: Verify/Bench clear the cache between queries;
     * long-lived callers wrap in [[Dedup.scoped]] like the other
     * multi-branch operators. Returns (pruning cells, probe frame
@@ -1056,7 +1073,8 @@ object Ann {
   private[operators] def probePruned(
       q: DataFrame, centDf: DataFrame, nprobe: Int): (Array[Int], DataFrame) = {
     val tc = Dedup.scopedCache(topProbeCells(q, centDf, nprobe))
-    val cells = tc.select("cell").distinct().collect().map(_.getInt(0))
+    import tc.sparkSession.implicits._
+    val cells = tc.select("cell").as[Int].mapPartitions(_.distinct).collect().distinct
     (cells, tc.join(q, "q_id"))
   }
 

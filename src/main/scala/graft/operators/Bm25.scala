@@ -146,8 +146,14 @@ object Bm25 {
     */
   private def readPostingsLake(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    try spark.read.parquet(s"$path/postings")
-    catch {
+    try {
+      // the lake is listed on every read; only its schema is resident,
+      // per stats-sidecar generation (every writer of the lake rewrites
+      // the sidecar), which spares the footer-inference job per read
+      val lake = s"$path/postings"
+      spark.read.schema(SidecarMemo(spark, s"$path/stats", "postings")(
+        spark.read.parquet(lake).schema)).parquet(lake)
+    } catch {
       // narrow to the zero-data-file conditions — a DIFFERENT analysis
       // failure (corrupt footer, foreign files) must throw, not read
       // as an empty index. Matched on the stable error condition, not
@@ -289,11 +295,8 @@ object Bm25 {
     graft.etl.Compact.requireServable(
       target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
     val (_, _, nBuckets) = readStatsSidecar(spark, path)
-    val qt = Dedup.scopedCache(phraseSlots(queries, qId, qPhrase))
-    // bounded driver collect (≤ distinct phrase terms): the pruning list
-    val buckets = qt
-      .select(bucketOf(col("term"), nBuckets).as("bucket")).distinct()
-      .collect().map(_.getInt(0))
+    val qt = phraseSlots(queries, qId, qPhrase)
+    val buckets = queryBuckets(queries, qPhrase, nBuckets)
     val post = readPostingsLake(spark, path)
     require(post.columns.contains("positions"),
       s"$path/postings has no positions column (pre-positional index) -- " +
@@ -312,6 +315,17 @@ object Bm25 {
     */
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(xxhash64(term), lit(nBuckets.toLong)).cast("int")
+
+  /** The pruning list of a query batch: the distinct buckets its
+    * analyzed terms hash into. One narrow collect of a bucket array per
+    * query (bounded: the batch contract every serving verb keeps), with
+    * no cache, so over a driver-local batch — every HTTP request —
+    * Spark folds the projection into the local relation and no job
+    * runs.
+    */
+  private def queryBuckets(queries: DataFrame, qText: Column, nBuckets: Int): Array[Int] =
+    queries.select(transform(analyze(qText), t => bucketOf(t, nBuckets)))
+      .collect().flatMap(_.getSeq[Int](0)).distinct
 
   /** Build a persisted lexical (BM25 + exact-phrase) index at `path`:
     * the serving shape for repeated search over a corpus that one-shot
@@ -893,7 +907,9 @@ object Bm25 {
     * directories instead of a corpus scan. The bucket list is derived
     * driver-side from the analyzed query batch (bounded: ≤ distinct
     * query terms, the same boundedness contract as the ANN probe cell
-    * list).
+    * list). The batch is evaluated for that list and again inside the
+    * scoring plan, so it must be deterministic (materialize a sampled
+    * batch first).
     */
   def queryLexIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -911,11 +927,8 @@ object Bm25 {
     graft.etl.Compact.requireServable(
       target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
-    val qt = Dedup.scopedCache(queryTerms(queries, qId, qText))
-    // bounded driver collect (≤ distinct query terms): the pruning list
-    val buckets = qt
-      .select(bucketOf(col("term"), nBuckets).as("bucket")).distinct()
-      .collect().map(_.getInt(0))
+    val qt = queryTerms(queries, qId, qText)
+    val buckets = queryBuckets(queries, qText, nBuckets)
     val post = readPostingsLake(spark, path)
       .filter(col("bucket").isin(buckets.map(Int.box): _*))
       // a bucket holds OTHER terms' postings too — the vocab semi-join
@@ -978,10 +991,14 @@ object Bm25 {
         s"$path has a rebucket in flight (crashed mid-rebucket?) -- run " +
           "Bm25.rebucketLexIndex(path, newBuckets) to converge it first")
     }
-    val rows = spark.read.parquet(s"$path/stats")
-      .select("n_docs", "total_tokens", "n_buckets").collect()
-    require(rows.length == 1, s"$path/stats is not a 1-row sidecar -- not a lex index")
-    (rows(0).getLong(0), rows(0).getLong(1), rows(0).getInt(2))
+    // resident per sidecar generation (SidecarMemo); the intent guard
+    // above still runs on every call
+    SidecarMemo(spark, s"$path/stats", "stats") {
+      val rows = spark.read.parquet(s"$path/stats")
+        .select("n_docs", "total_tokens", "n_buckets").collect()
+      require(rows.length == 1, s"$path/stats is not a 1-row sidecar -- not a lex index")
+      (rows(0).getLong(0), rows(0).getLong(1), rows(0).getInt(2))
+    }
   }
 
   /** Re-bucket a persisted lex index to `newBuckets` posting buckets —

@@ -460,16 +460,9 @@ object Pq {
     Ann.requireBaseServable(spark, path) // crashed-swap guard: see Ann
     val sl = shortlistSize(shortlist, k)
     val cb = loadPqTables(spark, path)
-    // ONE sidecar read serves both the probe frame and the residual
-    // decode: the live probe centroids are re-derived from the
-    // collected DOUBLE codebook through the same float cast the
-    // sidecar's own float column was written with (codebookFrame is
-    // the single owner), so probe ranking stays bit-identical to
-    // Ann.readLiveCentroids — without a second parquet job per call
-    val (coarse, members) = Ann.readCodebookSidecar(spark, path)
-    val live = members.collect { case (c, m) if m > 0 => c }.toSeq
-    val centDf = Ann.centroidFrame(spark, coarse) // (cell, centroid, c_nrm)
-      .filter(col("cell").isin(live.map(Int.box): _*)) // live cells: see topProbeCells
+    // ONE resident sidecar read serves both the probe frame and the
+    // residual decode (the double codebook)
+    val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
     val q = Ann.validQueries(queries, qId, qVec)
     Ann.requireQueryDim(q, cb.m * cb.sub)
     val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
@@ -481,7 +474,7 @@ object Pq {
     val probedQ = probed
       .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
       .withColumn("lut", lutExpr(col("q_emb"), cb))
-    val pruned = spark.read.parquet(s"$path/base")
+    val pruned = Ann.readBaseLake(spark, path)
       .filter(col("cell").isin(cells.map(Int.box): _*))
     // filtered search (see Ann.queryIvfIndex's `eligible` scaladoc):
     // the semi-join lands on the COMPRESSED scan, before the shortlist

@@ -332,14 +332,11 @@ object Sq {
       "Ann.queryIvfIndex / Pq.queryIvfPqIndex")
     val sl = Pq.shortlistSize(shortlist, k)
     val st = loadSqStats(spark, path)
-    val (coarse, members) = Ann.readCodebookSidecar(spark, path)
-    val live = members.collect { case (c, m) if m > 0 => c }.toSeq
-    val centDf = Ann.centroidFrame(spark, coarse)
-      .filter(col("cell").isin(live.map(Int.box): _*))
+    val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
     val q = Ann.validQueries(queries, qId, qVec)
     Ann.requireQueryDim(q, st.dim)
     val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
-    val pruned = spark.read.parquet(s"$path/base")
+    val pruned = Ann.readBaseLake(spark, path)
       .filter(col("cell").isin(cells.map(Int.box): _*))
     val filtered = eligible match {
       case Some((el, elId)) =>

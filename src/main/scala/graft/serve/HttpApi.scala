@@ -45,6 +45,17 @@ import graft.pipeline.{HtmlReport, Pipeline, ResultStore}
   *        ({"queries":[{"id","q","vec"},…]}, ≤500) through ONE Spark plan
   *   GET  /index/stats                    — index lifecycle state from the sidecars
   *
+  * What a search request costs: the index sidecars (BM25 stats, IVF
+  * codebook) and each lake's schema are RESIDENT per index generation
+  * ([[graft.operators.SidecarMemo]]: the sidecar's file listing is the
+  * generation, and every mutating verb rewrites it), so a request pays
+  * one metadata listing per sidecar instead of Spark jobs to read it;
+  * the postings/base lakes are RE-LISTED on every request, so appends,
+  * removals and compactions are visible to the next query, and the
+  * crash guards (parked swap trees, rebucket intent) run per request.
+  * Every Spark job a search request launches carries the job
+  * description `search.<kind>`.
+  *
   * Serving discipline at scale: every endpoint that touches DATA goes
   * through a Spark plan with the limit/filter PUSHED INTO the plan
   * before a bounded collect — `/audit/findings` is
@@ -371,21 +382,36 @@ final class HttpApi(
     * comma-separated float vector (`vec=`); embedding text server-side
     * is a model concern outside this engine.
     */
-  private def searchRoute(kind: String)(ex: HttpExchange): (Int, JValue) =
-    // scoped: the retrieval verbs cache small intermediates
-    // (query-term/slot frames) via Dedup.scopedCache — in a
-    // long-running server each request would otherwise leak one tiny
-    // cached frame into the block manager forever. The scope
-    // unpersists them after the bounded collect below; requests are
-    // single-threaded within a handler call, satisfying the scope's
-    // threading contract.
-    graft.operators.Dedup.scoped { searchRouteImpl(kind, ex) }
+  private def searchRoute(kind: String)(ex: HttpExchange): (Int, JValue) = {
+    // every Spark job of the request carries `search.<kind>` as its
+    // description (the job GROUP is left to callers that attribute by
+    // group); the handler thread's previous value is restored after
+    val sc = spark.sparkContext
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"search.$kind")
+    // scoped: the retrieval verbs cache small intermediates (the ANN
+    // probe frame) via Dedup.scopedCache — in a long-running server
+    // each request would otherwise leak one tiny cached frame into the
+    // block manager forever. The scope unpersists them after the
+    // bounded collect below; requests are single-threaded within a
+    // handler call, satisfying the scope's threading contract.
+    try graft.operators.Dedup.scoped { searchRouteImpl(kind, ex) }
+    finally sc.setJobDescription(prevDesc) // null clears it
+  }
 
   private final case class SearchQ(id: Long, text: Option[String], vec: Option[Array[Float]])
 
+  /** A query vector must be finite: NaN passes the norm > 0 filter
+    * (every NaN comparison in Spark SQL orders NaN above all numbers)
+    * and would be served as arbitrary ranks with "NaN" sims.
+    */
+  private def finiteVec(what: String, v: Array[Float]): Either[String, Array[Float]] =
+    if (v.forall(java.lang.Float.isFinite)) Right(v)
+    else Left(s"$what must hold finite numbers (no NaN or Infinity)")
+
   private def parseVecStr(s: String): Either[String, Array[Float]] = {
     val parts = s.split(',').map(_.trim.toFloatOption)
-    if (parts.nonEmpty && parts.forall(_.isDefined)) Right(parts.map(_.get))
+    if (parts.nonEmpty && parts.forall(_.isDefined)) finiteVec("query 0 vec", parts.map(_.get))
     else Left("vec must be comma-separated floats")
   }
 
@@ -440,7 +466,8 @@ final class HttpApi(
                     case JDecimal(d) => Some(d.toFloat)
                     case _ => None
                   }
-                  if (fs.forall(_.isDefined)) Right(Some(fs.flatten.toArray))
+                  if (fs.forall(_.isDefined))
+                    finiteVec(s"query $id vec", fs.flatten.toArray).map(Some(_))
                   else Left(s"query $id vec must be an array of numbers")
                 case JNothing => Right(None)
                 case _ => Left(s"query $id vec must be an array of numbers")

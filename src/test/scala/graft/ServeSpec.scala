@@ -323,14 +323,7 @@ class ServeSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val root = tmpDir("srch")
-    val docs = Seq(
-      (1L, "the quick brown fox jumps", Array(1f, 0f, 0f, 0f)),
-      (2L, "lazy dogs sleep all day", Array(0f, 1f, 0f, 0f)),
-      (3L, "quick brown foxes and quick dogs", Array(0.9f, 0.1f, 0f, 0f)),
-      (4L, "a completely unrelated document", Array(0f, 0f, 1f, 0f)),
-      (5L, "brown bears eat honey", Array(0f, 0f, 0.9f, 0.1f)),
-      (6L, "the fox den sits under the hill", Array(0.8f, 0f, 0.2f, 0f))
-    ).toDF("id", "text", "emb")
+    val docs = searchDocs
     graft.operators.Bm25.buildLexIndex(docs, col("id"), col("text"), s"$root/lex", nBuckets = 8)
     graft.operators.Ann.buildIvfIndex(docs, col("id"), col("emb"), s"$root/ann", nlist = 2)
 
@@ -390,6 +383,18 @@ class ServeSpec extends SparkSpecBase {
       assert(mc == 400 && (mj \ "error") != JNothing)
       val (vc, _) = get(client, port, "/search/ann?vec=not,floats")
       assert(vc == 400)
+      // non-finite vectors parse as floats but are a 400, never a 200
+      // ranked by NaN sims (NaN passes Spark's norm > 0 filter); 1e39
+      // overflows the float the index stores
+      for (v <- Seq("NaN,0,0,0", "1,Infinity,0,0", "-Infinity,0,0,0", "1e39,0,0,0");
+           kind <- Seq("ann?", "hybrid?q=quick%20fox&")) {
+        val (nfc, nfj) = get(client, port, s"/search/${kind}vec=$v&k=2")
+        assert(nfc == 400, s"vec=$v on $kind answered $nfc")
+        assert((nfj \ "error").asInstanceOf[JString].s.contains("finite"))
+      }
+      val (pnc, pnj) = postJson(client, port, "/search/ann",
+        """{"queries":[{"id":1,"vec":[1,0,0,0]},{"id":9,"vec":[1e400,0,0,0]}]}""")
+      assert(pnc == 400 && (pnj \ "error").asInstanceOf[JString].s.contains("query 9"))
 
       // ?diversify= on a non-ann kind is a LOUD 400, not a silent
       // ignore — undiversified results that look diversified would
@@ -553,6 +558,165 @@ class ServeSpec extends SparkSpecBase {
       assert(s1 == 200 && (sj1 \ "count") == JInt(1))
       val scan = (sj1 \ "scans").asInstanceOf[JArray].arr.head
       assert((scan \ "pipeline_name") == JString("process_scan"))
+    }
+  }
+
+  /** Job descriptions of the Spark jobs launched while `body` runs —
+    * counted by a listener, the bus drained on both sides so no earlier
+    * job leaks in and no late event is missed.
+    */
+  private def jobsDuring[A](body: => A): (A, Seq[String]) = {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+      (a, descs.toArray(Array.empty[String]).toSeq)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The six-document corpus of the serving specs: (id, text, emb). */
+  private def searchDocs = {
+    import spark.implicits._
+    Seq(
+      (1L, "the quick brown fox jumps", Array(1f, 0f, 0f, 0f)),
+      (2L, "lazy dogs sleep all day", Array(0f, 1f, 0f, 0f)),
+      (3L, "quick brown foxes and quick dogs", Array(0.9f, 0.1f, 0f, 0f)),
+      (4L, "a completely unrelated document", Array(0f, 0f, 1f, 0f)),
+      (5L, "brown bears eat honey", Array(0f, 0f, 0.9f, 0.1f)),
+      (6L, "the fox den sits under the hill", Array(0.8f, 0f, 0.2f, 0f))
+    ).toDF("id", "text", "emb")
+  }
+
+  test("http: per-verb Spark job budget of a served search request") {
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("jobs")
+    graft.operators.Bm25.buildLexIndex(searchDocs, col("id"), col("text"), s"$root/lex", nBuckets = 8)
+    graft.operators.Ann.buildIvfIndex(searchDocs, col("id"), col("emb"), s"$root/ann", nlist = 2)
+    val api = new HttpApi(spark, () => Findings.toDS(spark, fixtureFindings).toDF,
+      lexIndexPath = Some(s"$root/lex"), annIndexPath = Some(s"$root/ann"))
+    // (kind, request, job description, most jobs one request may run):
+    // with the sidecars, lake schemas and probe centroids resident, a
+    // request pays only its pruning list and its pruned scoring plan
+    val budget = Seq(
+      ("lexical", "/search/lexical?q=quick%20fox&k=3", "search.lexical", 9),
+      ("phrase", "/search/phrase?q=quick%20brown&k=3", "search.phrase", 9),
+      ("ann", "/search/ann?vec=1,0,0,0&k=2&nprobe=2", "search.ann", 8),
+      ("hybrid", "/search/hybrid?q=quick%20fox&vec=1,0,0,0&k=3&nprobe=2", "search.hybrid", 16),
+      ("batch", "/search/lexical?k=3", "search.lexical", 9))
+    val batch = """{"queries":[{"id":1,"q":"quick fox"},{"id":2,"q":"lazy dogs"},{"id":3,"q":"honey"}]}"""
+    withApi(api) { (port, client) =>
+      for ((kind, path, desc, maxJobs) <- budget) {
+        def once() = jobsDuring {
+          if (kind == "batch") postJson(client, port, path, batch)._1
+          else get(client, port, path)._1
+        }
+        once() // the first request of an index generation loads the sidecars
+        val (code, descs) = once()
+        assert(code == 200)
+        assert(descs.nonEmpty && descs.forall(_ == desc),
+          s"$kind: jobs not all described as $desc: ${descs.distinct}")
+        assert(descs.size <= maxJobs, s"$kind ran ${descs.size} Spark jobs, budget $maxJobs")
+      }
+    }
+  }
+
+  test("http: one long-lived server follows every index generation, never a stale memo") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Ann, Bm25, Fusion}
+    val root = tmpDir("gens")
+    val (lex, ann) = (s"$root/lex", s"$root/ann")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val seed = searchDocs.as[(Long, String, Array[Float])].collect().toSeq
+    val inc = Seq(
+      (7L, "quick honey for the brown fox", Array(0.7f, 0f, 0f, 0.7f)),
+      (8L, "dogs chase the quick fox", Array(0.6f, 0.6f, 0f, 0f)),
+      (9L, "honey bears and lazy dogs", Array(0f, 0.3f, 0.9f, 0f)))
+    var corpus = seed
+    def df(rows: Seq[(Long, String, Array[Float])]) = rows.toDF("id", "text", "emb")
+    Bm25.buildLexIndex(df(corpus), col("id"), col("text"), lex, nBuckets = 4)
+    Ann.buildIvfIndex(df(corpus), col("id"), col("emb"), ann, nlist = 2)
+
+    val (k, kPerLeg, q, vec) = (3, 20, "quick honey dogs", Array(0.8f, 0.2f, 0.1f, 0.3f))
+    val vecP = vec.mkString(",")
+    def served(path: String, id: String, metric: String)(client: HttpClient, port: Int) = {
+      val (c, j) = get(client, port, path)
+      assert(c == 200, s"$path answered $c: $j")
+      (j \ "results").asInstanceOf[JArray].arr.map(r => (
+        (r \ id).asInstanceOf[JInt].num.toLong, (r \ "rank").asInstanceOf[JInt].num.toInt,
+        r \ metric match { case JDouble(d) => d; case JInt(n) => n.toDouble; case o => sys.error(s"$o") }))
+        .sortBy(_._2)
+    }
+    def rows(d: org.apache.spark.sql.DataFrame, id: String, metric: String) =
+      d.select(col(id).cast("long"), col("rank").cast("int"), col(metric).cast("double"))
+        .as[(Long, Int, Double)].collect().toSeq.sortBy(_._2)
+    // on-the-fly references over the CURRENT corpus; nprobe >= nlist
+    // makes both IVF sides exhaustive, hence comparable across refits
+    def lexRef(kk: Int) = Bm25.searchTopK(df(corpus), col("id"), col("text"),
+      Seq((0L, q)).toDF("q_id", "qtext"), col("q_id"), col("qtext"), kk)
+    def annRef(kk: Int) = Ann.knnIvf(df(corpus), col("id"), col("emb"),
+      Seq((0L, vec)).toDF("q_id", "qvec"), col("q_id"), col("qvec"), kk, nlist = 2, nprobe = 64)
+    def check(step: String)(client: HttpClient, port: Int): Unit = {
+      assert(served(s"/search/lexical?q=${q.replace(" ", "%20")}&k=$k", "doc_id", "score_micro")(client, port) ==
+        rows(lexRef(k), "doc_id", "score_micro"), s"lexical after $step")
+      val annGot = served(s"/search/ann?vec=$vecP&k=$k&nprobe=64", "b_id", "sim")(client, port)
+      val annWant = rows(annRef(k), "b_id", "sim")
+      assert(annGot.map(r => (r._1, r._2)) == annWant.map(r => (r._1, r._2)), s"ann after $step")
+      assert(annGot.zip(annWant).forall { case (g, w) => math.abs(g._3 - w._3) <= 1e-12 },
+        s"ann sims after $step")
+      val hybWant = Fusion.rrf(Seq(
+        lexRef(kPerLeg).select("q_id", "doc_id", "rank"),
+        annRef(kPerLeg).select(col("q_id"), col("b_id").as("doc_id"), col("rank"))), k)
+      assert(served(s"/search/hybrid?q=${q.replace(" ", "%20")}&vec=$vecP&k=$k&nprobe=64&k_per_leg=$kPerLeg",
+        "doc_id", "rrf_micro")(client, port) == rows(hybWant, "doc_id", "rrf_micro"), s"hybrid after $step")
+    }
+
+    val api = new HttpApi(spark, () => Findings.toDS(spark, fixtureFindings).toDF,
+      lexIndexPath = Some(lex), annIndexPath = Some(ann))
+    withApi(api) { (port, client) =>
+      check("build")(client, port)
+      Bm25.addToLexIndex(spark, lex, df(inc), col("id"), col("text"))
+      Ann.addToIvfIndex(spark, ann, df(inc), col("id"), col("emb"))
+      corpus = corpus ++ inc
+      check("add")(client, port)
+      val victims = Seq(2L, 8L)
+      Bm25.removeFromLexIndex(spark, lex, df(corpus.filter(r => victims.contains(r._1))),
+        col("id"), col("text"))
+      Ann.removeFromIvfIndex(spark, ann, victims.toDF("id"), col("id"))
+      corpus = corpus.filterNot(r => victims.contains(r._1))
+      check("remove")(client, port)
+      Bm25.compactLexIndex(spark, lex)
+      Ann.compactIndex(spark, ann)
+      check("compact")(client, port)
+      Bm25.rebucketLexIndex(spark, lex, 3)
+      check("rebucket")(client, port)
+      Ann.refitIvfIndex(spark, ann, 3)
+      check("refit")(client, port)
+
+      // an in-place rebuild deletes the sidecar first: a request landing
+      // in that window fails loudly, never from the memo of the old
+      // generation
+      fs.delete(new org.apache.hadoop.fs.Path(s"$lex/stats"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$ann/codebook"), true)
+      for ((path, sidecar) <- Seq(s"/search/lexical?q=quick&k=$k" -> "lex/stats",
+          s"/search/ann?vec=$vecP&k=$k" -> "ann/codebook",
+          s"/search/hybrid?q=quick&vec=$vecP&k=$k" -> "lex/stats")) {
+        val (c, j) = get(client, port, path)
+        assert(c == 500, s"$path answered $c while the sidecar was gone")
+        assert((j \ "error").asInstanceOf[JString].s.contains(sidecar),
+          s"$path failed without naming the missing $sidecar: $j")
+      }
+      Bm25.buildLexIndex(df(corpus), col("id"), col("text"), lex, nBuckets = 4)
+      Ann.buildIvfIndex(df(corpus), col("id"), col("emb"), ann, nlist = 2)
+      check("rebuild")(client, port)
     }
   }
 }

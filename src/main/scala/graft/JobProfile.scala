@@ -4,12 +4,15 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
-/** Dev-only (the [[TimeOne]] posture): run declared queries with a
-  * job-level listener and print one line per Spark job — wall time,
-  * description, first stage name — so optimization work can see WHERE a
-  * multi-job query (index lifecycles, iterative operators) spends its
-  * build seconds instead of guessing from the aggregate. Args:
-  * name[,name…] [sfDir] [reps].
+/** Dev-only: run declared queries in one quiet JVM with a job-level
+  * listener. Per rep it prints `[profile] <name> rep <r> build <b>
+  * serve <s> jobs <n>` (the line `tools/bench_gate.py`'s isolation
+  * rerun parses, best-of-reps), then one line per Spark job — wall
+  * time, description, first stage name — so optimization work can see
+  * WHERE a multi-job query (index lifecycles, iterative operators)
+  * spends its build seconds instead of guessing from the aggregate.
+  * Comma-separated names share the JVM, so an N-query pass pays
+  * startup once. Args: name[,name…] [sfDir] [reps].
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {

@@ -454,9 +454,11 @@ object Bm25 {
     // sidecar would already count them) — the same guard every other
     // mutation and both query verbs apply
     val addTarget = new org.apache.hadoop.fs.Path(s"$path/postings")
-    graft.etl.Compact.requireServable(
-      addTarget.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      addTarget, action = "adding to")
+    val addFs = addTarget.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.etl.Compact.requireServable(addFs, addTarget, action = "adding to")
+    // the empty docs below extend the membership record: a missing one
+    // must refuse BEFORE the posting append, not leave a partial record
+    requireEmptyMembers(addFs, path)
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
     val toks = docs
       .select(docId.as("doc_id"), analyze(text).as("toks"))
@@ -482,8 +484,8 @@ object Bm25 {
     * index — the lex twin of [[Ann.removeFromIvfIndex]], sharing its
     * hazard discipline:
     *
-    *  - victims are MATERIALIZED once ((doc_id, dl) — one
-    *    increment-sized parquet) and every downstream job reads the
+    *  - victim ids are MATERIALIZED once (one increment-sized
+    *    parquet; `text` is not consulted) and every downstream job reads the
     *    copy: a nondeterministic caller plan (sample/limit/first-wins)
     *    could otherwise remove one victim set and decrement stats by
     *    another, silently diverging postings from the sidecar forever;
@@ -536,10 +538,7 @@ object Bm25 {
     * corruption (spec-pinned); the membership record is rewritten
     * minus the removed ids BEFORE the sidecar, so retrying a remove
     * after a crash-before-sidecar never double-decrements empty
-    * victims either. Fallback for a pre-membership index (no
-    * `path/empty` dir): the legacy trusted-empty-text behavior, with
-    * its documented caveat that a never-indexed empty-text victim
-    * skews stats until [[rebuildLexStats]].
+    * victims either.
     */
   def removeFromLexIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -573,9 +572,7 @@ object Bm25 {
     val vicDir = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_vic")
     fs.delete(vicDir, true)
     try {
-      docs.select(docId.as("doc_id"), analyze(text).as("toks"))
-        .select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-        .dropDuplicates("doc_id")
+      docs.select(docId.as("doc_id")).dropDuplicates("doc_id")
         .write.mode("overwrite").parquet(vicDir.toString)
       removeWithVictims(spark, path, target, fs, tmpRoot, oldRoot,
         spark.read.parquet(vicDir.toString), nDocs, totalTokens, nBuckets,
@@ -585,15 +582,14 @@ object Bm25 {
 
   /** [[removeFromLexIndex]] after victim materialization: locate
     * affected buckets from the index, rewrite, gate, swap, decrement
-    * (present victims + trusted empty docs only).
+    * (present victims + recorded empty docs only).
     */
   private def removeWithVictims(
       spark: org.apache.spark.sql.SparkSession, path: String,
       target: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
       tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vic: DataFrame, nDocs: Long, totalTokens: Long, nBuckets: Int,
+      vicIds: DataFrame, nDocs: Long, totalTokens: Long, nBuckets: Int,
       crashBeforeStatsSidecar: Boolean): Unit = {
-    val vicIds = vic.select("doc_id")
     // the victims' postings AS INDEXED — one narrow (doc_id, bucket,
     // dl) scan; feeds the affected-bucket list (≤ nBuckets driver
     // rows), the presence gate, AND the token decrement (the INDEXED
@@ -611,22 +607,12 @@ object Bm25 {
     //    (every posting row of a doc carries the same dl — max is it);
     //  - victims ABSENT from the postings count only if the index's
     //    OWN empty-membership record lists them (indexed zero-token
-    //    docs — see buildLexIndex's `path/empty`); on a pre-membership
-    //    index the legacy fallback trusts caller-supplied empty text.
-    //    The residual blind spot (either branch) is a doc indexed
-    //    EMPTY whose source text later gained tokens: the caller's
-    //    text is not consulted for membership, but the membership
-    //    record IS — so with the record this case now counts
-    //    correctly; only the legacy fallback retains the old
-    //    rebuildLexStats-repairable skew.
+    //    docs — see buildLexIndex's `path/empty`). The caller's text
+    //    is not consulted for membership, so a doc indexed EMPTY whose
+    //    source text later gained tokens still counts correctly.
     val present = vicPost.groupBy("doc_id").agg(max(col("dl")).as("dl"))
-    val emptyMembers = readEmptyMembers(spark, path)
-    val emptyVictims = emptyMembers match {
-      case Some(members) =>
-        members.join(vicIds, "doc_id").select(col("doc_id"), lit(0L).as("dl"))
-      case None => // legacy index: no membership record to consult
-        vic.filter(col("dl") === 0).select(col("doc_id"), col("dl"))
-    }
+    val emptyVictims = readEmptyMembers(spark, path)
+      .join(vicIds, "doc_id").select(col("doc_id"), lit(0L).as("dl"))
     val countable = present.unionByName(
       emptyVictims
         .join(present.select("doc_id"), Seq("doc_id"), "left_anti"))
@@ -697,10 +683,8 @@ object Bm25 {
     // membership record rewritten BEFORE the sidecar (see ORDERING);
     // re-derived here (not threaded in) so a resume replays it too —
     // minus of already-absent ids is skipped by the emptiness probe
-    readEmptyMembers(spark, path).foreach { members =>
-      if (!members.join(vicIds, "doc_id").isEmpty)
-        rewriteEmptyMembersMinus(spark, path, vicIds)
-    }
+    if (!readEmptyMembers(spark, path).join(vicIds, "doc_id").isEmpty)
+      rewriteEmptyMembersMinus(spark, path, vicIds)
     if (crashBeforeStatsSidecar)
       throw new IllegalStateException(
         "injected crash before stats sidecar (test hook)")
@@ -768,36 +752,51 @@ object Bm25 {
       crashBeforeStatsSidecar = false)
   }
 
-  /** The `path/empty` membership record, or None for a pre-membership
-    * (legacy) index. A record DIRECTORY with no data files reads as
-    * zero members — existence of the record, not of rows, is what
-    * upgrades remove-accounting from trusted to proven.
+  /** The `path/empty` membership record. A record DIRECTORY with no
+    * data files reads as zero members; a MISSING record is refused
+    * ([[requireEmptyMembers]]) — reading it as "no empty docs" would
+    * drop indexed-empty ids and skip their stats decrements.
     */
   private def readEmptyMembers(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] = {
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/empty")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else if (Ann.listDataFiles(fs, p.toString).isEmpty)
-      Some(spark.range(0).select(col("id").as("doc_id")))
-    else Some(spark.read.parquet(p.toString).select("doc_id"))
+    requireEmptyMembers(fs, path)
+    if (Ann.listDataFiles(fs, p.toString).isEmpty)
+      spark.range(0).select(col("id").as("doc_id"))
+    else spark.read.parquet(p.toString).select("doc_id")
+  }
+
+  /** Every build writes `path/empty`, so its absence is damage: a
+    * crash between the two renames of a record swap leaves it parked
+    * at `path/empty__old` (rename it back); anything else is repaired
+    * by [[rebuildLexStats]] over the full corpus.
+    */
+  private def requireEmptyMembers(
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/empty")
+    if (!fs.exists(p)) {
+      val old = new org.apache.hadoop.fs.Path(s"$path/empty__old")
+      if (fs.exists(old) && fs.listFiles(old, true).hasNext)
+        throw new IllegalStateException(
+          s"$p is missing and $old holds the parked empty-doc membership record -- " +
+            s"a swap crashed mid-rename; rename $old back to $p")
+      throw new IllegalStateException(
+        s"$p (the empty-doc membership record) is missing -- " +
+          "run Bm25.rebuildLexStats over the full corpus")
+    }
   }
 
   /** Write (build/rebuild: overwrite via park-and-swap) or extend
-    * (add: append) the empty-doc membership record. An APPEND to a
-    * legacy index that has no record is deliberately skipped: creating
-    * a partial record would "prove" the pre-record empty docs were
-    * never indexed, which is worse than staying legacy (trusted-text
-    * fallback) until [[rebuildLexStats]] migrates the index.
+    * (add: append) the empty-doc membership record.
     */
   private def writeEmptyMembers(
       spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, overwrite: Boolean): Unit = {
     val target = new org.apache.hadoop.fs.Path(s"$path/empty")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!overwrite) {
-      if (fs.exists(target)) ids.write.mode("append").parquet(target.toString)
-    } else {
+    if (!overwrite) ids.write.mode("append").parquet(target.toString)
+    else {
       val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
       val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
       fs.delete(tmp, true); fs.delete(old, true)
@@ -815,34 +814,24 @@ object Bm25 {
   private def rewriteEmptyMembersMinus(
       spark: org.apache.spark.sql.SparkSession, path: String,
       vicIds: DataFrame): Unit = {
+    val kept = readEmptyMembers(spark, path).join(vicIds, Seq("doc_id"), "left_anti")
     val target = new org.apache.hadoop.fs.Path(s"$path/empty")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
     val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
     fs.delete(tmp, true); fs.delete(old, true)
-    val kept = readEmptyMembers(spark, path)
-      .getOrElse(sys.error(s"$target vanished mid-remove"))
-      .join(vicIds, Seq("doc_id"), "left_anti")
     kept.write.mode("overwrite").parquet(tmp.toString)
     graft.etl.Compact.swapInto(fs, tmp, target, old)
   }
 
-  /** Indexed-empty membership count, or None on a legacy
-    * pre-membership index — the observability surface for
-    * [[graft.pipeline.HtmlReport.indexInventory]]'s lex cards.
-    */
-  def lexEmptyDocCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Option[Long] =
-    readEmptyMembers(spark, path).map(_.count())
-
   /** Bounded observability read of a lex index: corpus scalars from
-    * the 1-row stats sidecar plus the indexed-empty membership count
-    * (None on a pre-record lake). SINGLE owner of the read shared by
+    * the 1-row stats sidecar plus the indexed-empty membership count.
+    * SINGLE owner of the read shared by
     * the HTML inventory cards and the HTTP `/index/stats` endpoint —
     * the postings lake is never scanned.
     */
   case class LexIndexStats(
-      nDocs: Long, totalTokens: Long, nBuckets: Int, indexedEmpty: Option[Long])
+      nDocs: Long, totalTokens: Long, nBuckets: Int, indexedEmpty: Long)
 
   def lexIndexStats(
       spark: org.apache.spark.sql.SparkSession, path: String): LexIndexStats = {
@@ -851,7 +840,7 @@ object Bm25 {
     // sidecar must fail loudly on the observability surface too, not
     // report whichever row head() happens to return)
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
-    LexIndexStats(nDocs, totalTokens, nBuckets, lexEmptyDocCount(spark, path))
+    LexIndexStats(nDocs, totalTokens, nBuckets, readEmptyMembers(spark, path).count())
   }
 
   /** Every doc_id the index currently serves: postings members plus
@@ -862,9 +851,8 @@ object Bm25 {
     */
   def lexIndexIds(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val posted = readPostingsLake(spark, path).select("doc_id")
-    readEmptyMembers(spark, path)
-      .map(m => posted.unionByName(m)).getOrElse(posted)
+    readPostingsLake(spark, path).select("doc_id")
+      .unionByName(readEmptyMembers(spark, path))
       .distinct()
   }
 
@@ -872,10 +860,8 @@ object Bm25 {
     * from the CURRENT full corpus: the universal repair for any crash
     * window that left postings and stats inconsistent
     * ([[addToLexIndex]]'s append-then-refresh,
-    * [[removeFromLexIndex]]'s swap-then-decrement), and the MIGRATION
-    * verb for a legacy pre-membership index (the rebuilt record
-    * upgrades its remove-accounting from trusted to proven). One
-    * narrow tokenize pass; postings untouched.
+    * [[removeFromLexIndex]]'s swap-then-decrement, a lost membership
+    * record). One narrow tokenize pass; postings untouched.
     */
   def rebuildLexStats(
       spark: org.apache.spark.sql.SparkSession, path: String,

@@ -779,27 +779,12 @@ object Sketches {
       .toDF("inc", "item", "cnt", "inc_total")
   }
 
-  /** LEGACY sentinel item for the per-increment total marker row
-    * (contains a NUL byte). Lakes written before the null-item marker
-    * used this string, which a data key containing NUL could in
-    * principle equal (dropping that key's counter row). New markers
-    * are NULL `item` — a value [[frequentCandidates]] can never emit
-    * (null keys are excluded before the cast), so the collision class
-    * is gone. Reads accept both via [[mgIsMarker]]: legacy markers are
-    * recognized by sentinel AND `cnt = 0` (MG counters are strictly
-    * positive — the reduce keeps counts ≥ 1, the sweep and the merge
-    * drop non-positives — so no data counter row can match).
+  /** Marker-row predicate over sketch-lake rows: the per-increment
+    * total marker is the NULL `item` — a value [[frequentCandidates]]
+    * can never emit (null keys are excluded before the cast), so no
+    * data key can collide with it.
     */
-  val MgTotalMarker: String = "\u0000__mg_total__"
-
-  /** Marker-row predicate over sketch-lake rows: the null-item marker,
-    * or a legacy sentinel marker (sentinel item with the impossible
-    * `cnt = 0`). A well-defined boolean for every row — the `isNull`
-    * disjunct decides the null case, so the negation (the counter-row
-    * filter) never drops a row to three-valued-logic null.
-    */
-  private def mgIsMarker: Column =
-    col("item").isNull || (col("item") === MgTotalMarker && col("cnt") === 0L)
+  private def mgIsMarker: Column = col("item").isNull
 
   /** Merge per-increment MG summaries WITHOUT re-scanning any corpus:
     * sum counters per item, then reduce back to ≤ k by subtracting the

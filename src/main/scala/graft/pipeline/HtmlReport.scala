@@ -274,7 +274,7 @@ object HtmlReport {
   /** Inventory cards for the persisted-index lifecycle — occupancy and
     * live-cell split from an ANN index's codebook sidecar, corpus
     * scalars and bucket count from a lex index's stats sidecar (plus
-    * the indexed-empty membership count when the record exists). The
+    * the indexed-empty membership count). The
     * build/add/remove/compact verbs become OBSERVABLE on the same
     * report surface as the collector inventory. All reads are bounded
     * (codebook ≤ nlist rows, stats 1 row, membership an id-only
@@ -291,9 +291,8 @@ object HtmlReport {
     }
     val lex = lexIndexes.map { case (label, path) =>
       val st = graft.operators.Bm25.lexIndexStats(spark, path)
-      val emptySub = st.indexedEmpty.map(n => s" · $n empty").getOrElse("")
       InventoryCard(st.nDocs.toString, label,
-        s"${st.totalTokens} tokens · ${st.nBuckets} buckets$emptySub")
+        s"${st.totalTokens} tokens · ${st.nBuckets} buckets · ${st.indexedEmpty} empty")
     }
     ann ++ lex
   }

@@ -613,8 +613,7 @@ final class HttpApi(
         "n_docs" -> JLong(st.nDocs),
         "total_tokens" -> JLong(st.totalTokens),
         "n_buckets" -> JInt(st.nBuckets),
-        "indexed_empty" -> st.indexedEmpty
-          .map(n => JLong(n): JValue).getOrElse(JNull))
+        "indexed_empty" -> JLong(st.indexedEmpty))
     }
     if (ann.isEmpty && lex.isEmpty)
       (503, JObject("error" -> JString("no indexes configured")))

@@ -872,98 +872,47 @@ object Streams {
     * ledger, uncommitted `_temporary` residue from a crashed append,
     * or no touched bucket materialized yet — all legitimately "no
     * prior fingerprints").
-    *
-    * LEGACY interop: a pre-bucketing ledger has its fp files directly
-    * at the root. Those flat files can hold ANY prefix, so they are
-    * always read (exactly the old full-scan behavior — their cost is
-    * frozen at migration-time size since appends are always bucketed);
-    * bucketed dirs still prune. [[bucketLedger]] migrates a legacy
-    * ledger to fully-bucketed in one rewrite and restores pure
-    * touched-bucket reads.
     */
   private[graft] def ledgerScan(
       spark: org.apache.spark.sql.SparkSession, ledgerPath: String,
       touched: Seq[String], withBatchTag: Boolean = false): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(ledgerPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a parked __bucket_old tree WITH FILES is a crashed bucketLedger
-    // swap — it may hold the ENTIRE dedup history while the root is
-    // absent or half-formed; reading the root as "no prior
-    // fingerprints" would mass-re-emit months of suppressed documents.
-    // Refuse loudly until recovered (the Compact rule applied to the
-    // ledger's own migration verb).
-    requireNoParkedLedger(fs, ledgerPath)
-    if (!fs.exists(root)) return None
-    val legacyFiles = fs.listStatus(root).filter(s =>
-      s.isFile && !graft.etl.Compact.isHiddenName(s.getPath.getName))
+    // a parked `<ledger>__*_old` sibling WITH FILES (a crashed
+    // compactLedger leaf swap) may hold a bucket's ONLY copy; reading
+    // the half-formed root as "no prior fingerprints" would re-emit
+    // suppressed documents while the next append cements the loss by
+    // recreating the bucket dir. Refuse loudly until recovered.
+    graft.etl.Compact.requireServable(fs, root,
+      action = "reading or mutating the dedup ledger")
     val bucketDirs = touched.map(b => s"$ledgerPath/bucket=$b")
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    // two reads, not one: mixing root-level files and bucket= dirs in
-    // a single basePath read would make partition inference conflict
-    def tryRead(mk: => DataFrame): Option[DataFrame] =
-      try Some(mk)
-      catch {
-        // ONLY the zero-committed-file conditions a crashed append
-        // leaves behind (bucket dir with `_temporary` residue only) —
-        // any other analysis failure (fp column renamed, corrupt
-        // footers) must THROW, not silently discard the dedup history
-        // and mass-re-emit. Matched on the stable error condition
-        // (single owner: Compact.emptyLakeRead).
-        case e: org.apache.spark.sql.AnalysisException
-            if graft.etl.Compact.emptyLakeRead(e) =>
-          None
-      }
+    if (bucketDirs.isEmpty) return None
     // withBatchTag (the exactly-once gate): read through an EXPLICIT
-    // schema so files from the at-least-once era — no batch_tag column
-    // — surface null tags (genuine prior history, never self-excluded)
+    // schema so files written by dedupGate — no batch_tag column —
+    // surface null tags (genuine prior history, never self-excluded)
     // instead of failing schema inference on a mixed ledger
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    def proj(df: DataFrame): DataFrame =
-      if (withBatchTag)
-        df.select(col("fp").as("__fp"), col("batch_tag").as("__batch_tag"))
-      else df.select(col("fp").as("__fp"))
-    def reader(partitioned: Boolean) = {
-      val base = spark.read
-      if (!withBatchTag) base
-      else base.schema(StructType(
-        Seq(StructField("fp", StringType), StructField("batch_tag", StringType)) ++
-          (if (partitioned) Seq(StructField("bucket", StringType)) else Nil)))
+    val reader =
+      if (!withBatchTag) spark.read
+      else spark.read.schema(StructType(Seq(
+        StructField("fp", StringType), StructField("batch_tag", StringType),
+        StructField("bucket", StringType))))
+    val cols =
+      if (withBatchTag) Seq(col("fp").as("__fp"), col("batch_tag").as("__batch_tag"))
+      else Seq(col("fp").as("__fp"))
+    try Some(reader.option("basePath", ledgerPath).parquet(bucketDirs: _*).select(cols: _*))
+    catch {
+      // ONLY the zero-committed-file conditions a crashed append
+      // leaves behind (bucket dir with `_temporary` residue only) —
+      // any other analysis failure (fp column renamed, corrupt
+      // footers) must THROW, not silently discard the dedup history
+      // and mass-re-emit. Matched on the stable error condition
+      // (single owner: Compact.emptyLakeRead).
+      case e: org.apache.spark.sql.AnalysisException
+          if graft.etl.Compact.emptyLakeRead(e) =>
+        None
     }
-    val legacy =
-      if (legacyFiles.isEmpty) None
-      else tryRead(proj(
-        reader(partitioned = false).parquet(legacyFiles.map(_.getPath.toString).toSeq: _*)))
-    val bucketed =
-      if (bucketDirs.isEmpty) None
-      else tryRead(proj(
-        reader(partitioned = true).option("basePath", ledgerPath).parquet(bucketDirs: _*)))
-    (legacy, bucketed) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b) => a.orElse(b)
-    }
-  }
-
-  /** Fail loudly when ANY `<ledger>__*_old` sibling holds data files:
-    * `__bucket_old` is a crashed [[bucketLedger]] swap, and
-    * `__compact_old/bucket=xx` is a crashed [[compactLedger]] leaf
-    * swap (via [[graft.etl.Compact.compactPartitioned]]) — either may
-    * be a bucket's ONLY copy, and reading the half-formed root as "no
-    * prior fingerprints" would silently re-emit suppressed documents
-    * while the next append cements the loss by recreating the bucket
-    * dir. File-less `__bucket_old` residue is cleared. Single rule
-    * owner for the read ([[ledgerScan]]) and maintenance
-    * ([[bucketLedger]]/[[compactLedger]]) paths — the same
-    * all-siblings posture the lex/ANN serving paths take via
-    * [[graft.etl.Compact.requireServable]].
-    */
-  private def requireNoParkedLedger(
-      fs: org.apache.hadoop.fs.FileSystem, ledgerPath: String): Unit = {
-    graft.etl.Compact.clearOrRefuseParked(
-      fs, new org.apache.hadoop.fs.Path(ledgerPath + "__bucket_old"),
-      "ledger migration")
-    graft.etl.Compact.requireServable(
-      fs, new org.apache.hadoop.fs.Path(ledgerPath),
-      action = "reading or mutating the dedup ledger")
   }
 
   /** Compact the dedup ledger's bucket dirs: every micro-batch appends
@@ -971,87 +920,16 @@ object Streams {
     * `bucket=` dir into thousands of tiny files — the same decay (and
     * the same cure) as [[graft.operators.Bm25.compactLexIndex]],
     * delegating to [[graft.etl.Compact.compactPartitioned]] (work dirs
-    * outside the lake, per-leaf row-count gate, park-then-swap). A
-    * ledger still carrying LEGACY flat files (pure or mixed layout) is
-    * refused with the correct remedy — run [[bucketLedger]] first —
-    * instead of compactPartitioned's misleading not-partitioned error.
-    * Run while the stream is STOPPED (the gate is the ledger's only
-    * writer). Fingerprint content — and therefore dedup semantics —
-    * is untouched.
+    * outside the lake, per-leaf row-count gate, park-then-swap, and
+    * the same refusal of a parked `<ledger>__*_old` sibling that
+    * [[ledgerScan]] applies). Run while the stream is STOPPED (the gate
+    * is the ledger's only writer). Fingerprint content — and therefore
+    * dedup semantics — is untouched.
     */
   def compactLedger(
       spark: org.apache.spark.sql.SparkSession, ledgerPath: String,
-      targetBytes: Long = 128L * 1024 * 1024): Seq[(String, graft.etl.Compact.CompactStats)] = {
-    val root = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    requireNoParkedLedger(fs, ledgerPath)
-    if (fs.exists(root)) {
-      val flat = fs.listStatus(root).exists(s =>
-        s.isFile && !graft.etl.Compact.isHiddenName(s.getPath.getName))
-      require(!flat,
-        s"$ledgerPath still holds legacy flat fingerprint files -- run " +
-          "Streams.bucketLedger first, then compactLedger")
-    }
+      targetBytes: Long = 128L * 1024 * 1024): Seq[(String, graft.etl.Compact.CompactStats)] =
     graft.etl.Compact.compactPartitioned(spark, ledgerPath, targetBytes)
-  }
-
-  /** Migrate a legacy FLAT dedup ledger (pre-bucketing: fp files at
-    * the root) to the bucketed layout in one rewrite — park-and-swap
-    * via a tmp dir. A crash leaves the old layout, the new layout, or
-    * (between the swap's two renames) the history PARKED at
-    * `<ledger>__bucket_old` — that last window is detected by every
-    * ledger entry point ([[ledgerScan]], this verb, [[compactLedger]])
-    * and refused LOUDLY until an operator renames the parked tree
-    * back; it can never silently read as an empty ledger. A no-op when
-    * no flat files exist. Run while the stream is STOPPED (the ledger
-    * has a single writer — the gate itself).
-    */
-  def bucketLedger(
-      spark: org.apache.spark.sql.SparkSession, ledgerPath: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // parked-swap check BEFORE the missing-root early return: a crash
-    // between swapInto's two renames leaves the root ABSENT with all
-    // history parked — a re-run must refuse loudly (recovery: rename
-    // the parked tree back), never no-op over a destroyed ledger
-    requireNoParkedLedger(fs, ledgerPath)
-    if (!fs.exists(root)) return
-    val flat = fs.listStatus(root).filter(s =>
-      s.isFile && !graft.etl.Compact.isHiddenName(s.getPath.getName))
-    if (flat.isEmpty) return
-    val tmp = new org.apache.hadoop.fs.Path(ledgerPath + "__bucket_tmp")
-    val old = new org.apache.hadoop.fs.Path(ledgerPath + "__bucket_old")
-    fs.delete(tmp, true)
-    // a MIXED lake (flat files + bucket= dirs from post-migration-era
-    // appends) defeats a naive root read — Spark's partition discovery
-    // sees the root files and ignores the partition dirs. ledgerScan
-    // already owns the two-layout read; feed it every present bucket.
-    val present = fs.listStatus(root).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(_.getPath.getName.stripPrefix("bucket=")).toSeq
-    // batch_tag carried through (null for legacy-era rows): dropping an
-    // UNCOMMITTED batch's tags in the rewrite would make its replay
-    // see its own half-landed fingerprints as genuine history and
-    // silently swallow the batch — the exact loss window the
-    // exactly-once gate's self-exclusion closes
-    val all = ledgerScan(spark, ledgerPath, present, withBatchTag = true)
-      .getOrElse(sys.error(s"$ledgerPath has flat files but none are readable"))
-    all.select(col("__fp").as("fp"), col("__batch_tag").as("batch_tag")).distinct()
-      .withColumn("bucket", substring(col("fp"), 1, 2))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(tmp.toString)
-    // the exactly-once gate's commit markers are COPIED (not renamed —
-    // a crash before the swap must leave them at the still-live root)
-    // into the rewritten tree so it swaps in complete
-    val mb = new org.apache.hadoop.fs.Path(s"$ledgerPath/_batches")
-    if (fs.exists(mb)) {
-      val dst = new org.apache.hadoop.fs.Path(tmp, "_batches")
-      fs.mkdirs(dst)
-      fs.listStatus(mb).filter(_.isFile).foreach(s =>
-        fs.create(new org.apache.hadoop.fs.Path(dst, s.getPath.getName), true).close())
-    }
-    graft.etl.Compact.swapInto(fs, tmp, root, old)
-  }
 
   /** Stream-stream inner join within an event-time bound — correlate
     * two live streams (tool findings ↔ collector snapshots, clicks ↔

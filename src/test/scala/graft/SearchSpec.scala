@@ -564,6 +564,58 @@ class SearchSpec extends SparkSpecBase {
       .as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
+  test("empty-doc membership record parked by a crashed swap: id/stats readers and mutators refuse, serving continues") {
+    val ddf = Seq((1L, "alpha beta"), (2L, ""), (3L, "gamma"), (4L, " -- "))
+      .toDF("doc_id", "text")
+    val p = java.nio.file.Files.createTempDirectory("graft_lex_park").toString + "/ix"
+    graft.operators.Bm25.buildLexIndex(ddf, col("doc_id"), col("text"), p, nBuckets = 4)
+    def ids() = graft.operators.Bm25.lexIndexIds(spark, p).as[Long].collect().toSet
+    def serve() = graft.operators.Bm25.queryLexIndex(
+      spark, p, Seq((0L, "alpha gamma")).toDF("q_id", "qtext"), col("q_id"), col("qtext"), k = 10)
+      .collect().map(r => (r.getLong(1), r.getLong(3))).toSet
+    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def postingFiles() = graft.operators.Ann.listDataFiles(fs, s"$p/postings")
+    val idsBefore = ids()
+    val statsBefore = graft.operators.Bm25.lexIndexStats(spark, p)
+    val served = serve()
+    assert(idsBefore == Set(1L, 2L, 3L, 4L))
+    assert(statsBefore.indexedEmpty == 2L)
+    // a crash between Compact.swapInto's two renames: the record is
+    // parked at empty__old and `empty` is absent
+    val record = new java.io.File(s"$p/empty")
+    val parked = new java.io.File(s"$p/empty__old")
+    assert(record.renameTo(parked))
+    def refuses(naming: String)(f: => Any)(
+        implicit pos: org.scalactic.source.Position): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains(naming), e.getMessage)
+    }
+    // read as "no empty docs" the ids would drop 2 and 4 (stream
+    // ingest would re-index them) and a remove would skip their
+    // decrement: every reader and mutator refuses instead
+    refuses("empty__old")(graft.operators.Bm25.lexIndexIds(spark, p))
+    refuses("empty__old")(graft.operators.Bm25.lexIndexStats(spark, p))
+    refuses("empty__old")(graft.operators.Bm25.removeFromLexIndex(
+      spark, p, Seq((2L, "")).toDF("doc_id", "text"), col("doc_id"), col("text")))
+    val filesBefore = postingFiles()
+    refuses("empty__old")(graft.operators.Bm25.addToLexIndex(
+      spark, p, Seq((5L, "delta"), (6L, "")).toDF("doc_id", "text"), col("doc_id"), col("text")))
+    assert(postingFiles() == filesBefore, "the refused add appended postings")
+    assert(!record.exists, "the refused add created a partial membership record")
+    // BM25 serving never reads the record
+    assert(serve() == served)
+    // with no parked copy the remedy named is the stats rebuild
+    val aside = new java.io.File(s"$p/../empty_aside")
+    assert(parked.renameTo(aside))
+    refuses("rebuildLexStats")(graft.operators.Bm25.lexIndexIds(spark, p))
+    assert(aside.renameTo(parked))
+    // rename-back recovery restores the pre-crash ids and stats
+    assert(parked.renameTo(record))
+    assert(ids() == idsBefore)
+    assert(graft.operators.Bm25.lexIndexStats(spark, p) == statsBefore)
+    assert(serve() == served)
+  }
+
   test("remove write-ahead intent: crash before the sidecar, retry converges to the one-remove state") {
     val ddf = Seq((1L, "alpha beta"), (2L, ""), (3L, "gamma delta epsilon"))
       .toDF("doc_id", "text")

@@ -436,37 +436,31 @@ class SketchesSpec extends SparkSpecBase {
     assert(got === brute)
   }
 
-  test("MG marker is null-item: legacy sentinel lakes read, sentinel-valued data keys keep counters") {
+  test("MG marker is null-item: sentinel-valued data keys keep counters") {
     val k = 4
-    val sentinel = Sketches.MgTotalMarker
+    // the sentinel string markers once used (contains a NUL byte)
+    val sentinel = "\u0000__mg_total__"
     val dir = java.nio.file.Files.createTempDirectory("graft_mg_marker").toString
-    // a NEW increment whose hot key IS the legacy sentinel string — the
-    // pathological collision the null-item marker exists to survive
+    // an increment whose hot key IS that sentinel string — the
+    // collision the null-item marker exists to survive
     val incNew = Seq.fill(300)(sentinel) ++ (1 to 40).map(i => s"n$i")
     Sketches.mgSketch(incNew.toDF("key"), col("key"), k, "new")
       .write.mode("append").parquet(dir)
     val newRows = spark.read.parquet(dir)
-    assert(newRows.filter(col("item").isNull).count() === 1L, "new marker must be the null item")
+    assert(newRows.filter(col("item").isNull).count() === 1L, "the marker must be the null item")
     assert(newRows.filter(col("item") === sentinel && col("cnt") === 0L).count() === 0L,
-      "new lakes must not write the legacy sentinel marker")
+      "lakes must not write a sentinel marker")
     assert(newRows.filter(col("item") === sentinel && col("cnt") > 0L).count() === 1L,
       "the sentinel-valued DATA key must hold a counter row")
-    // a LEGACY increment, hand-written in the pre-null format
-    val legacy = Seq(("old", sentinel, 0L, 120L), ("old", "hotOld", 100L, 120L))
-      .toDF("inc", "item", "cnt", "inc_total")
-    legacy.write.mode("append").parquet(dir)
-    val mg = Sketches.mgMergeSketches(spark.read.parquet(dir), k)
-    assert(mg.total === incNew.size + 120, "legacy sentinel marker total lost")
+    val mg = Sketches.mgMergeSketches(newRows, k)
+    assert(mg.total === incNew.size)
     assert(mg.candidates.contains(sentinel), "sentinel-valued data key lost its counter")
-    assert(mg.candidates.contains("hotOld"), "legacy counter row lost")
-    // end-to-end: the union corpus flags BOTH hot keys, sentinel included
-    val union = incNew ++ Seq.fill(100)("hotOld") ++ (1 to 20).map(i => s"o$i")
+    // end-to-end: the corpus flags the sentinel-valued hot key
     val got = Sketches.heavyHittersFromSketches(
-      union.toDF("key"), col("key"), spark.read.parquet(dir), k)
+      incNew.toDF("key"), col("key"), spark.read.parquet(dir), k)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got === Seq((sentinel, 300L), ("hotOld", 100L)))
-    // compaction of the MIXED lake rewrites to the null-marker form
-    // and preserves every answer
+    assert(got === Seq((sentinel, 300L)))
+    // compaction keeps the null-marker form and every answer
     Sketches.compactMgLake(spark, dir, k)
     val rows = spark.read.parquet(dir)
     assert(rows.filter(col("item").isNull).count() === 1L)

@@ -698,43 +698,6 @@ class StreamingSpec extends SparkSpecBase {
     assert(emitted2.toSeq == Seq(901L), s"post-compaction dedup broke: $emitted2")
   }
 
-  test("dedupGate legacy flat ledger: still honored, bucketLedger migrates it") {
-    implicit val sqlCtx = spark.sqlContext
-    val work = java.nio.file.Files.createTempDirectory("graft_dedupgate_leg").toString
-    val ledger = s"$work/ledger"
-    // fabricate a PRE-BUCKETING ledger: flat fp files at the root
-    val oldFps = Seq("old text one", "old text two").toDF("t")
-      .select(graft.functions.Text.fingerprint(col("t")).as("fp"))
-    oldFps.coalesce(1).write.parquet(ledger)
-    assert(new java.io.File(ledger).listFiles().exists(f =>
-      f.isFile && f.getName.endsWith(".parquet")), "fixture should be flat")
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val in = MemoryStream[(Long, String)]
-    val q = Streams.dedupGate(
-      in.toDF().toDF("id", "text"), s"$work/ckpt", ledger, "id", "text",
-      batch => emitted.synchronized { emitted ++= batch.collect().map(_.getLong(0)) })
-    try {
-      // a legacy fingerprint suppresses; a new one emits and appends
-      // BUCKETED (mixed lake)
-      in.addData((1L, "old text one"), (2L, "fresh text"))
-      q.processAllAvailable()
-      // the mixed lake still suppresses both generations
-      in.addData((3L, "old text two"), (4L, "fresh text"), (5L, "newest"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(emitted.toSeq.sorted == Seq(2L, 5L), s"mixed-lake dedup broke: $emitted")
-    // migrate: all-flat → all-bucketed, same fingerprint set
-    Streams.bucketLedger(spark, ledger)
-    val post = new java.io.File(ledger).listFiles()
-    assert(!post.exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "flat files survived migration")
-    // 4 fingerprints spread over SOME prefix dirs (collisions on
-    // 2-hex prefixes are chance; the invariant is bucketed-not-flat)
-    assert(post.count(f => f.isDirectory && f.getName.startsWith("bucket=")) >= 2)
-    val fps = spark.read.parquet(ledger).select("fp").as[String].collect().toSet
-    assert(fps.size == 4, s"migration lost/duplicated fingerprints: $fps")
-  }
-
   test("exactly-once dedup gate: every crash window converges — nothing emitted twice, nothing lost") {
     implicit val sqlCtx = spark.sqlContext
     val work = java.nio.file.Files.createTempDirectory("graft_dedup_eo").toString
@@ -879,28 +842,11 @@ class StreamingSpec extends SparkSpecBase {
       in.addData((1L, "history one"), (2L, "history two"))
       q.processAllAvailable()
     } finally q.stop()
-    // simulate bucketLedger dying between swapInto's two renames: the
-    // ENTIRE history parked, the root gone
-    assert(new java.io.File(ledger).renameTo(new java.io.File(ledger + "__bucket_old")))
-    // the scan must REFUSE (reading "no prior fingerprints" would
-    // mass-re-emit months of suppressed documents)
-    val e = intercept[IllegalArgumentException](
-      Streams.ledgerScan(spark, ledger, Seq("00")))
-    assert(e.getMessage.contains("crashed mid-swap"), e.getMessage)
-    // the maintenance verbs refuse too — a bucketLedger re-run must
-    // not no-op over a destroyed ledger, compaction must not bless it
-    intercept[IllegalArgumentException](Streams.bucketLedger(spark, ledger))
-    intercept[IllegalArgumentException](Streams.compactLedger(spark, ledger))
-    // operator recovery (rename back) restores service and history
-    assert(new java.io.File(ledger + "__bucket_old").renameTo(new java.io.File(ledger)))
-    assert(Streams.ledgerScan(spark, ledger,
-      (0 until 256).map(b => f"$b%02x")).get.count() == 2)
     // a crashed compactLedger leaf swap parks at
     // <ledger>__compact_old/bucket=xx — a bucket's only copy; every
-    // entry point must refuse THAT tree too (not just __bucket_old),
-    // or the stream reads the missing bucket as "no prior
-    // fingerprints" and the next append recreates the dir, blocking
-    // rename-back recovery
+    // entry point must refuse it, or the stream reads the missing
+    // bucket as "no prior fingerprints" and the next append recreates
+    // the dir, blocking rename-back recovery
     val bucketDir = new java.io.File(ledger).listFiles()
       .find(_.getName.startsWith("bucket=")).get
     val parkedLeaf = new java.io.File(
@@ -911,24 +857,11 @@ class StreamingSpec extends SparkSpecBase {
       Streams.ledgerScan(spark, ledger, Seq("00")))
     assert(e1b.getMessage.contains("crashed mid-rename"), e1b.getMessage)
     intercept[IllegalArgumentException](Streams.compactLedger(spark, ledger))
-    intercept[IllegalArgumentException](Streams.bucketLedger(spark, ledger))
     // rename-back recovery restores service with full history
     assert(parkedLeaf.renameTo(bucketDir))
     assert(parkedLeaf.getParentFile.delete())
     assert(Streams.ledgerScan(spark, ledger,
       (0 until 256).map(b => f"$b%02x")).get.count() == 2)
-    // a MIXED lake (legacy flat files + bucketed dirs) is refused by
-    // compactLedger with the right remedy named (bucketLedger), not
-    // compactPartitioned's misleading not-partitioned error
-    Seq("legacy one").toDF("t")
-      .select(graft.functions.Text.fingerprint(col("t")).as("fp"))
-      .coalesce(1).write.mode("append").parquet(s"$work/flat_stage")
-    val flatFile = new java.io.File(s"$work/flat_stage").listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(flatFile.toPath,
-      java.nio.file.Paths.get(s"$ledger/legacy-part.parquet"))
-    val e2 = intercept[IllegalArgumentException](Streams.compactLedger(spark, ledger))
-    assert(e2.getMessage.contains("bucketLedger"), e2.getMessage)
   }
 
   test("dedupGate: null-id rows pass through instead of silently vanishing") {

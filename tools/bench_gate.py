@@ -28,8 +28,8 @@ Two layers, both required for a round to pass:
 3. ISOLATION RERUN (since round 15): a per-query flag from the full
    suite carries the ~12% bench-window environment term plus scheduler
    contention -- rounds 12-14 each settled such flags as noise BY HAND
-   with an isolated graft.TimeOne rerun. The gate now automates that:
-   flagged queries re-run in one quiet JVM (`sbt "runMain graft.TimeOne
+   with an isolated rerun. The gate now automates that: flagged
+   queries re-run in one quiet JVM (`sbt "runMain graft.JobProfile
    <names> <sfdir> 2"`) and the verdict uses the ISOLATED number --
    surviving flags fail as CONFIRMED, cleared flags demote to notes.
    `--no-isolate` gates on raw suite numbers; `--isolate-cmd CMD`
@@ -127,7 +127,7 @@ def phase_times(doc, name):
 def regression_check(doc, base):
     """(hard_fails, notes, flagged). `flagged` holds the PER-QUERY time
     regressions as dicts {name, phase, msg} -- candidates for the
-    TimeOne isolation rerun (three consecutive rounds settled such
+    isolation rerun (three consecutive rounds settled such
     flags as suite-window noise by hand; the rerun automates exactly
     that methodology). Missing/crashed queries are hard fails: there is
     nothing to re-time."""
@@ -175,27 +175,29 @@ def regression_check(doc, base):
 
 
 # ---------------------------------------------------------------- #
-# TimeOne isolation rerun (round 15): a per-query flag from the     #
-# full-suite window carries a ~12% environment term plus scheduler  #
-# contention; rounds 12-14 each cleared such flags BY HAND with an  #
-# isolated graft.TimeOne rerun. The gate now does that itself: the  #
-# flagged queries re-run in ONE quiet JVM and the gate verdict uses #
-# the isolated number -- flags that survive isolation fail louder   #
-# (CONFIRMED), flags that clear become notes.                       #
+# Isolation rerun (round 15): a per-query flag from the full-suite #
+# window carries a ~12% environment term plus scheduler            #
+# contention; rounds 12-14 each cleared such flags BY HAND with an #
+# isolated rerun. The gate now does that itself through            #
+# graft.JobProfile: the flagged queries re-run in ONE quiet JVM    #
+# and the gate verdict uses the isolated number -- flags that      #
+# survive isolation fail louder (CONFIRMED), flags that clear      #
+# become notes.                                                    #
 # ---------------------------------------------------------------- #
 
 ISOLATE_REPS = 2
 ISOLATE_TIMEOUT_S = 1800
 
 
-def parse_timeone(text):
-    """{name: (min_build_s, min_serve_s)} from TimeOne's
-    '[timeone] <name> rep <r> build <b> serve <s>' lines (best-of-reps
-    per phase -- the 'time the second run' methodology, minimized)."""
+def parse_profile(text):
+    """{name: (min_build_s, min_serve_s)} from JobProfile's
+    '[profile] <name> rep <r> build <b> serve <s> jobs <n>' lines
+    (best-of-reps per phase -- the 'time the second run' methodology,
+    minimized)."""
     out = {}
     for line in text.splitlines():
         parts = line.split()
-        if len(parts) >= 8 and parts[0] == "[timeone]":
+        if len(parts) >= 8 and parts[0] == "[profile]":
             try:
                 b, s = float(parts[5]), float(parts[7])
             except ValueError:
@@ -208,18 +210,18 @@ def parse_timeone(text):
 
 def isolate_rerun(names, isolate_cmd, repo_dir, sfdir):
     """Run the flagged queries isolated; returns ({name: (build,
-    serve)}, err). One command for ALL names -- TimeOne takes a
+    serve)}, err). One command for ALL names -- JobProfile takes a
     comma-separated list so JVM startup is paid once."""
     joined = ",".join(names)
     cmd = isolate_cmd or (
-        f'sbt -batch "runMain graft.TimeOne {joined} {sfdir} {ISOLATE_REPS}"')
+        f'sbt -batch "runMain graft.JobProfile {joined} {sfdir} {ISOLATE_REPS}"')
     cmd = cmd.replace("{names}", joined).replace("{sfdir}", sfdir)
     try:
         r = subprocess.run(cmd, shell=True, capture_output=True, text=True,
                            cwd=repo_dir, timeout=ISOLATE_TIMEOUT_S)
     except (OSError, subprocess.SubprocessError) as e:
         return None, f"isolation rerun failed to run ({e})"
-    return parse_timeone(r.stdout + r.stderr), None
+    return parse_profile(r.stdout + r.stderr), None
 
 
 def apply_isolation(flagged, base, iso):

@@ -117,7 +117,7 @@ def main():
         check("one-sided split still catches total regression",
               rc == 1 and "totals compared" in out, out)
 
-        # --- TimeOne isolation rerun (round 15) ---
+        # --- isolation rerun (round 15) ---
 
         def echo_cmd(*lines):
             return "; ".join(f"echo '{ln}'" for ln in lines)
@@ -126,8 +126,8 @@ def main():
         rc, out = run_gate(
             tmp, artifact({"q1": 2.0, "q2": 0.05}), base,
             extra=["--isolate-cmd",
-                   echo_cmd("[timeone] q1 rep 1 build 0.000 serve 1.100",
-                            "[timeone] q1 rep 2 build 0.000 serve 0.900")])
+                   echo_cmd("[profile] q1 rep 1 build 0.000 serve 1.100",
+                            "[profile] q1 rep 2 build 0.000 serve 0.900")])
         check("isolation clears a noisy flag (best-of-reps)",
               rc == 0 and "CLEARED" in out, out)
 
@@ -135,7 +135,7 @@ def main():
         rc, out = run_gate(
             tmp, artifact({"q1": 2.0, "q2": 0.05}), base,
             extra=["--isolate-cmd",
-                   echo_cmd("[timeone] q1 rep 1 build 0.000 serve 5.000")])
+                   echo_cmd("[profile] q1 rep 1 build 0.000 serve 5.000")])
         check("isolation confirms a real regression",
               rc == 1 and "CONFIRMED" in out, out)
 
@@ -151,7 +151,7 @@ def main():
         rc, out = run_gate(
             tmp, artifact({"q1": 2.0, "q2": 0.05}), base,
             extra=["--no-isolate", "--isolate-cmd",
-                   echo_cmd("[timeone] q1 rep 1 build 0.000 serve 0.900")])
+                   echo_cmd("[profile] q1 rep 1 build 0.000 serve 0.900")])
         check("--no-isolate skips the rerun",
               rc == 1 and "CLEARED" not in out, out)
 
@@ -164,7 +164,7 @@ def main():
                      split={"r1": {"build_s": 0.0, "serve_s": 2.0}}),
             base_split,
             extra=["--isolate-cmd",
-                   echo_cmd("[timeone] r1 rep 1 build 0.000 serve 1.900")])
+                   echo_cmd("[profile] r1 rep 1 build 0.000 serve 1.900")])
         check("isolated serve phase judged like-for-like",
               rc == 1 and "CONFIRMED" in out and "serve" in out, out)
 
@@ -172,7 +172,7 @@ def main():
         rc, out = run_gate(
             tmp, artifact({"q1": -1.0, "q2": 0.05}, failed=1), base,
             extra=["--isolate-cmd",
-                   echo_cmd("[timeone] q1 rep 1 build 0.000 serve 0.100")])
+                   echo_cmd("[profile] q1 rep 1 build 0.000 serve 0.100")])
         check("crash is a hard fail despite isolation",
               rc == 1 and "FAILED in this run" in out, out)
 

@@ -19,11 +19,12 @@ import org.apache.spark.sql.SparkSession
   *    root, or the partition column (encoded in dir names, absent from
   *    the files) would be silently dropped in the rewrite.
   *  - NOT transactional: the rewrite lands in a sibling temp dir and is
-  *    swapped in with two renames, so a crash in the swap window can
-  *    leave the old data at `<path>__compact_old` (never silently
-  *    lost). Concurrent readers mid-swap see a missing directory —
-  *    coordinate externally, or use an ACID table format when that
-  *    matters.
+  *    swapped in with two renames under an intent journal, so a crash
+  *    in the swap window parks the old data at `<path>__compact_old`
+  *    (never silently lost) and the next [[compact]] of the same path
+  *    converges it ([[convergeCrashedSwap]]) before recompacting.
+  *    Concurrent readers mid-swap see a missing directory — coordinate
+  *    externally, or use an ACID table format when that matters.
   */
 object Compact {
 
@@ -131,10 +132,10 @@ object Compact {
   }
 
   /** Two-rename swap — the single owner of the replace-a-directory
-    * sequence (also used by the IVF sidecar refresh): the target is
-    * PARKED at `old`, never deleted before the replacement at `tmp` is
-    * in place; `old` is removed only after the swap lands. A crash
-    * inside the window leaves the original recoverable at `old`.
+    * sequence: the target is PARKED at `old`, never deleted before the
+    * replacement at `tmp` is in place; `old` is removed only after the
+    * swap lands. A crash inside the window leaves the original
+    * recoverable at `old`.
     */
   private[graft] def swapInto(
       fs: org.apache.hadoop.fs.FileSystem, tmp: Path, target: Path, old: Path): Unit = {
@@ -143,6 +144,28 @@ object Compact {
     require(fs.rename(target, old), s"could not park $target")
     require(fs.rename(tmp, target), s"could not swap in $tmp for $target")
     fs.delete(old, true)
+  }
+
+  /** Replace the directory `target` with what `write` puts at the path
+    * it is handed, `<target>__<tag>tmp`: stale tmp and park dirs are
+    * cleared first, then the written dir swaps in through [[swapInto]]
+    * via `<target>__<tag>old` when `target` exists, or is renamed into
+    * place when it does not. A crash mid-write leaves only the tmp dir,
+    * never a partial `target`. `write` may gate what it wrote and throw
+    * to abort with `target` untouched. The single owner of the
+    * tmp-then-replace sequence for sidecars, records and rewritten
+    * lakes.
+    */
+  private[graft] def replaceDir[A](
+      fs: org.apache.hadoop.fs.FileSystem, target: Path, tag: String)(write: Path => A): A = {
+    val tmp = new Path(target.getParent, s"${target.getName}__${tag}tmp")
+    val old = new Path(target.getParent, s"${target.getName}__${tag}old")
+    fs.delete(tmp, true)
+    fs.delete(old, true)
+    val out = write(tmp)
+    if (fs.exists(target)) swapInto(fs, tmp, target, old)
+    else require(fs.rename(tmp, target), s"could not place $tmp at $target")
+    out
   }
 
   /** Sibling intent marker for an intent-journaled flat-dir swap:

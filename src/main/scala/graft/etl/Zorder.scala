@@ -80,7 +80,7 @@ object Zorder {
     * only file placement (and therefore per-file min/max stats)
     * changes.
     *
-    * The write goes through a sibling tmp dir + [[Compact.swapInto]]
+    * The write goes through a sibling tmp dir + [[Compact.replaceDir]]
     * rather than overwriting `path` directly: the PRIMARY use case is
     * re-clustering a lake in place (`df` reads from `path` itself),
     * where a direct overwrite either aborts on Spark's self-overwrite
@@ -113,16 +113,12 @@ object Zorder {
     val maxs = cols.indices.map(i => if (row.isNullAt(2 * i + 1)) 0.0 else row.getDouble(2 * i + 1))
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__zorder_tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__zorder_old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    df.withColumn("__z", zvalue(cols.map(col), mins, maxs))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) Compact.swapInto(fs, tmp, target, old)
-    else require(fs.rename(tmp, target), s"could not move $tmp to $target")
+    Compact.replaceDir(fs, target, "zorder_") { tmp =>
+      df.withColumn("__z", zvalue(cols.map(col), mins, maxs))
+        .repartitionByRange(nFiles, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 }

@@ -360,34 +360,32 @@ object Ann {
     val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
     val fitB = fitOn.map(_.select(baseId.as("b_id"), baseVec.as("b_emb"))).getOrElse(b)
     val codebook = fitCodebook(fitB, nlist, seed, maxFit)
-    invalidateIndexMarker(base.sparkSession, path) // in-place rebuild: see scaladoc
-    b.withColumn("cell", cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull) // see knnIvf
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      // cluster by the partition key before the write — see
-      // [[clusterForWrite]] for why REBALANCE, not repartition(key)
-      .transform(clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    // occupancy of SCOREABLE members from the WRITTEN files — at build
-    // time this re-read costs what the write just cost, and the stats
-    // provably describe the data on disk
-    val spark = base.sparkSession
-    val members = spark.read.parquet(s"$path/base")
-      .filter(col("b_nrm") > 0)
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // <= nlist rows
-    writeCodebookSidecar(spark, path, codebook, members, atomicSwap = false)
+    writeIvfLake(base.sparkSession, path, ivfRows(b, codebook), col("b_nrm") > 0,
+      (codebook, Map.empty), increment = None, ivfNothingWritten(path, codebook))(())
   }
+
+  /** Plain-IVF encode: (b_id, b_emb, cell, b_nrm); a null vector or a
+    * null element has no cell and is dropped (see knnIvf).
+    */
+  private def ivfRows(b: DataFrame, codebook: Array[Array[Double]]): DataFrame =
+    b.withColumn("cell", cellExpr(col("b_emb"), codebook))
+      .filter(col("cell").isNotNull)
+      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+
+  private def ivfNothingWritten(path: String, codebook: Array[Array[Double]]): String =
+    s"no input row got a cell for $path -- null embedding, null element or " +
+      s"dimension != index dim ${codebook(0).length}? nothing was written"
 
   /** Incrementally extend a persisted [[buildIvfIndex]] index: assign
     * `rows` with the index's PERSISTED double codebook (no re-fit --
     * the codebook is immutable for the index's lifetime, so build+add
     * and build-all-with-the-same-codebook produce identical cells),
     * append them to the cell partition directories, and refresh the
-    * occupancy sidecar via a two-rename swap (the [[graft.etl.Compact]]
-    * pattern: the old sidecar is parked, never deleted before the new
-    * one is in place). This is the 1%/day growth path for a 10^9-vector
-    * corpus, where a daily re-fit + full rewrite is not an option.
+    * occupancy sidecar ([[writeIvfLake]]). This is the 1%/day growth
+    * path for a 10^9-vector corpus, where a daily re-fit + full rewrite
+    * is not an option. Rows without a cell or of the wrong dimension
+    * are dropped one by one; a non-empty increment of which no row
+    * lands is refused.
     *
     * Not transactional: a reader racing the sidecar swap can see a
     * missing codebook directory for an instant -- coordinate externally
@@ -400,43 +398,22 @@ object Ann {
     // CODES, not vectors — appending vector rows would corrupt it
     // silently (mixed parquet schemas + occupancy counting rows the
     // compressed scan can't read), so refuse by the pq-sidecar marker
-    requirePqMarker(spark, path, expectPq = false,
+    requireQuantizerMarker(spark, path, "",
       otherVerb = "Pq.addToIvfPqIndex", sqOtherVerb = "Sq.addToIvfSq8Index")
-    val (codebook, prevMembers) = readCodebookSidecar(spark, path)
-    val basePath = s"$path/base"
-    // belt-and-braces with the marker check above: the schema read is
-    // footer-weight, and appending vector rows into a codes-only base
-    // would be silent mixed-schema corruption (the worst failure mode)
-    require(spark.read.parquet(basePath).schema.fieldNames.contains("b_emb"),
-      s"$basePath does not hold vector rows (no b_emb column) -- not a plain IVF index")
-    // snapshot the file listing around the append so the occupancy
-    // delta is counted from exactly the FILES THIS ADD WROTE -- not
-    // from re-evaluating the (lazy, uncached) assignment plan, which a
-    // non-deterministic input would make disagree with what landed on
-    // disk (an undercounted cell whose only members are appended rows
-    // would read members=0 and be unreachable forever). Listing is
-    // metadata-weight; the data read is increment-sized. Re-counting
-    // the WHOLE base instead would cost a full-corpus scan per 1%
-    // increment -- what the growth path exists to avoid.
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = listDataFiles(fs, basePath)
-    rows.select(id.as("b_id"), vec.as("b_emb"))
-      .withColumn("cell", cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull) // see knnIvf
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .transform(clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .filter(col("b_nrm") > 0)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val members = codebook.indices
-      .map(c => c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    writeCodebookSidecar(spark, path, codebook, members, atomicSwap = true)
+    val sidecar = readCodebookSidecar(spark, path)
+    // belt-and-braces with the marker check above (the base schema is
+    // resident per codebook generation): appending vector rows into a
+    // codes-only base would be silent mixed-schema corruption (the
+    // worst failure mode)
+    require(readBaseLake(spark, path).schema.fieldNames.contains("b_emb"),
+      s"$path/base does not hold vector rows (no b_emb column) -- not a plain IVF index")
+    // a row of the wrong dimension would take a cell by its prefix
+    // distance yet never score (every dot with a query is NULL):
+    // dropped, as the PQ and SQ8 adds drop it
+    val inc = rows.select(id.as("b_id"), vec.as("b_emb"))
+      .filter(size(col("b_emb")) === sidecar._1(0).length)
+    writeIvfLake(spark, path, ivfRows(inc, sidecar._1), col("b_nrm") > 0, sidecar,
+      Some(rows), ivfNothingWritten(path, sidecar._1))(())
   }
 
   /** Delete ids from a persisted [[buildIvfIndex]] index — the
@@ -469,19 +446,13 @@ object Ann {
   def removeFromIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       victims: DataFrame, vicId: Column): Unit = {
-    requirePqMarker(spark, path, expectPq = false,
+    requireQuantizerMarker(spark, path, "",
       otherVerb = "Pq.removeFromIvfPqIndex",
       sqOtherVerb = "Sq.removeFromIvfSq8Index")
     // occupancy counts SCOREABLE members (norm > 0), matching the build
     removeFromIndexBase(spark, path, victims, vicId, scoreable = col("b_nrm") > 0)
   }
 
-  /** The pq sidecar directory IS the index-type marker: present ⇒ IVF-PQ
-    * (codes-only base), absent ⇒ plain IVF (vector base). Every lifecycle
-    * verb checks it in the direction it needs before touching the base —
-    * this is the single owner of that rule; `otherVerb` names the verb
-    * the caller should have used on the other index type.
-    */
   /** Directed-misuse guard across the three index layouts sharing the
     * codebook/base shape: a plain-IVF verb must refuse a PQ or SQ8
     * index (its base holds codes, not vectors) and vice versa.
@@ -518,23 +489,19 @@ object Ann {
     }
   }
 
-  private[operators] def requirePqMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      expectPq: Boolean, otherVerb: String, sqOtherVerb: String = ""): Unit =
-    requireQuantizerMarker(spark, path, if (expectPq) "pq" else "", otherVerb,
-      sqOtherVerb)
-
-  /** Shared removal core for every partitioned index layout — IVF and
-    * IVF-PQ (partition column `cell`, occupancy sidecar refreshed) and
-    * the flat OPQ lake (partition column `bucket`, no occupancy — a
-    * flat layout has no probe structure to keep honest). The layouts
-    * differ only in what the base rows hold, which rows count toward
-    * occupancy (`scoreable`), and the partition key; the safety-
-    * critical machinery — victim materialization, per-leaf row-count
-    * gate, park-then-swap — has exactly ONE owner here, so a fix
-    * reaches every family at once. See [[removeFromIvfIndex]] for the
-    * contract; [[Pq.removeFromIvfPqIndex]] passes `lit(true)` (every
-    * persisted codes row is scoreable by construction);
+  /** Shared removal core for every partitioned index layout — IVF,
+    * IVF-PQ and IVF-SQ8 (partition column `cell`, occupancy sidecar
+    * refreshed) and the flat OPQ lake (partition column `bucket`, no
+    * occupancy — a flat layout has no probe structure to keep honest).
+    * The layouts differ only in what the base rows hold, which rows
+    * count toward occupancy (`scoreable`), and the partition key; the
+    * safety-critical machinery — victim materialization
+    * ([[withVictims]]), the per-leaf rewrite and row-count gate
+    * ([[rewriteLeavesWithout]]), park-then-swap — has exactly ONE
+    * owner, so a fix reaches every family at once. See
+    * [[removeFromIvfIndex]] for the contract; [[Pq.removeFromIvfPqIndex]]
+    * and [[Sq.removeFromIvfSq8Index]] pass `lit(true)` (every persisted
+    * codes row is scoreable by construction);
     * [[Opq.removeFromOpqIndex]] passes `partCol = "bucket",
     * withOccupancy = false`.
     */
@@ -558,107 +525,166 @@ object Ann {
     // victims by definition — and a schema-less read of it would die
     // in parquet inference with an error naming nothing
     if (!fs.exists(bp) || listDataFiles(fs, basePath).isEmpty) return
-    fs.delete(tmpRoot, true)
-    // victims are MATERIALIZED once and read back for every use below:
-    // the affected-cell scan, the anti-join rewrite and the row-count
-    // gate would otherwise each re-evaluate the caller's victims plan,
-    // and a nondeterministic one (sample, limit, first-wins agg — the
-    // hazard class addToIvfIndex's listing snapshot defends against)
-    // could agree with itself at the gate while leaving "removed" rows
-    // on disk. One narrow id column, increment-sized.
-    val vicDir = new org.apache.hadoop.fs.Path(bp.getParent, bp.getName + "__remove_vic")
-    fs.delete(vicDir, true)
-    try {
-      victims.select(vicId.as("b_id")).distinct()
-        .write.mode("overwrite").parquet(vicDir.toString)
-      removeWithVictims(spark, path, basePath, bp, fs, tmpRoot, oldRoot,
-        spark.read.parquet(vicDir.toString), scoreable, partCol, withOccupancy)
-    } finally fs.delete(vicDir, true)
+    withVictims(fs, bp, victims.select(vicId.as("b_id")).distinct()) { vic =>
+      val sidecar =
+        if (withOccupancy) Some(readCodebookSidecar(spark, path)) else None
+      val (affected, tmpCnt) = rewriteLeavesWithout(
+        readBaseLake(spark, path), basePath, vic, "b_id", partCol, tmpRoot, scoreable)
+      if (affected.nonEmpty) {
+        // the DECREMENTED sidecar is written BEFORE the swaps: occupancy
+        // must never overcount a swapped-out cell (members > 0 with no
+        // cell dir is a GHOST cell — probed, silently empty, and a
+        // re-run of the removal finds no victims so it can never heal).
+        // With the sidecar first, every crash window is retry-safe
+        // instead: an emptied cell goes members=0 while its victim rows
+        // are still on disk (liveCentroids skips it — unreachable
+        // victims ARE removed), and a partially-emptied cell stays live
+        // with its victims still present, so re-running the same
+        // removal finds them and completes the rewrite.
+        // Transiently-visible victims until the retry beat
+        // permanently-invisible survivors. (Occupancy-less layouts —
+        // the flat OPQ lake — skip this step: nothing probes their
+        // leaves.)
+        sidecar.foreach { case (codebook, prevMembers) =>
+          val members = codebook.indices.map { c =>
+            c -> (if (affected.contains(c)) tmpCnt.get(c).map(_._2).getOrElse(0L)
+                  else prevMembers.getOrElse(c, 0L))
+          }.toMap
+          writeCodebookSidecar(spark, path, codebook, members)
+        }
+        // per-leaf two-rename swaps (metadata ops); a fully-emptied leaf
+        // is parked then dropped — its occupancy row (if any) is already 0
+        graft.etl.Compact.swapRewrittenLeaves(
+          fs, bp, tmpRoot, oldRoot, affected.map(c => s"$partCol=$c").toSeq)
+      }
+    }
   }
 
-  /** [[removeFromIndexBase]] after victim materialization: locate,
-    * rewrite, gate, swap, decrement.
+  /** Run `body` over the victim ids MATERIALIZED once at
+    * `<lake>__remove_vic` (read back with their known schema): every
+    * job of a removal would otherwise re-evaluate the caller's plan,
+    * and a nondeterministic one (sample, limit, first-wins agg) could
+    * pass the gate while leaving "removed" rows on disk.
     */
-  private def removeWithVictims(
-      spark: org.apache.spark.sql.SparkSession, path: String, basePath: String,
-      bp: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vic: DataFrame, scoreable: Column, partCol: String,
-      withOccupancy: Boolean): Unit = {
-    val sidecar =
-      if (withOccupancy) Some(readCodebookSidecar(spark, path)) else None
-    val base = spark.read.parquet(basePath)
-    // ONE narrow pass over the base answers BOTH removal questions —
-    // which leaves hold a victim, and the per-leaf (rows, victims)
-    // counts the post-rewrite gate needs (the old shape paid a second
-    // scan+join over the affected leaves just for the counts). ≤ nlist
-    // (or nBuckets) driver rows either way.
-    val leafStats = base.select(col("b_id"), col(partCol))
-      .join(vic.withColumn("__v", lit(1)), Seq("b_id"), "left")
+  private[operators] def withVictims[A](
+      fs: org.apache.hadoop.fs.FileSystem, lake: org.apache.hadoop.fs.Path,
+      ids: DataFrame)(body: DataFrame => A): A = {
+    val dir = new org.apache.hadoop.fs.Path(lake.getParent, lake.getName + "__remove_vic")
+    fs.delete(dir, true)
+    try {
+      ids.write.mode("overwrite").parquet(dir.toString)
+      body(ids.sparkSession.read.schema(ids.schema).parquet(dir.toString))
+    } finally fs.delete(dir, true)
+  }
+
+  /** The leaf-removal rewrite-and-gate of every partitioned lake (the
+    * IVF family, OPQ, the BM25 postings): only the `partCol` leaves
+    * holding a victim `idCol` are rewritten without it, into `tmpRoot`.
+    * ONE narrow (id, leaf) ⋈ victims pass answers which leaves those
+    * are and the per-leaf (rows, victims) counts of the gate. The
+    * rewrite is one job for all of them, OUTSIDE the lake (a work dir
+    * inside it would read as a partition directory), clustered so each
+    * leaf lands as ONE file. Gate BEFORE any swap: kept must equal
+    * read − victims per leaf, or `tmpRoot` is dropped and the removal
+    * aborts with the lake untouched. Returns the affected leaves
+    * (sorted; none: nothing written) and the (rows, `scoreable` rows)
+    * per non-empty rewritten leaf; the caller swaps them in
+    * ([[graft.etl.Compact.swapRewrittenLeaves]]) in its own order.
+    */
+  private[operators] def rewriteLeavesWithout(
+      lake: DataFrame, lakeName: String, vic: DataFrame, idCol: String, partCol: String,
+      tmpRoot: org.apache.hadoop.fs.Path,
+      scoreable: Column = lit(true)): (Array[Int], Map[Int, (Long, Long)]) = {
+    val spark = lake.sparkSession
+    val fs = tmpRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmpRoot, true)
+    val leafStats = lake.select(col(idCol), col(partCol))
+      .join(vic.withColumn("__v", lit(1)), Seq(idCol), "left")
       .groupBy(partCol)
       .agg(count(lit(1)).as("n"), count(col("__v")).as("nv"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     val affected = leafStats.collect { case (c, (_, nv)) if nv > 0 => c }
       .toArray.sorted
-    if (affected.isEmpty) return // no victim is indexed — nothing to do
-    val pruned = base.filter(col(partCol).isin(affected.map(Int.box): _*))
-    // one distributed rewrite job for ALL affected leaves; the write
-    // lands OUTSIDE the index (a work dir inside path/base would read
-    // as a partition directory — the Compact lesson). Clustered by the
-    // partition key first (the writeShards pattern) so each rewritten
-    // leaf lands as ONE file — a bare partitionBy would let every task
-    // fragment every leaf it holds rows for, undoing compactIndex on
-    // each retention delete.
-    pruned.join(vic, Seq("b_id"), "left_anti")
+    if (affected.isEmpty) return (affected, Map.empty)
+    lake.filter(col(partCol).isin(affected.map(Int.box): _*))
+      .join(vic, Seq(idCol), "left_anti")
       .transform(clusterForWrite(partCol))
       .write.partitionBy(partCol).mode("overwrite").parquet(tmpRoot.toString)
-    // row-count gate per leaf BEFORE any swap: kept-on-disk must equal
-    // source − victims for every affected leaf. Source-side counts come
-    // from the single leafStats pass above.
-    val srcCnt = leafStats.filter { case (c, _) => affected.contains(c) }
-    val tmpFiles = listDataFiles(fs, tmpRoot.toString)
-    // (rows, scoreable rows) per rewritten leaf — the same read feeds
-    // the gate and the occupancy refresh. An all-victims rewrite
-    // produces no files at all: guard the schema-less read.
+    // an all-victims rewrite produces no files at all: no read
     val tmpCnt: Map[Int, (Long, Long)] =
-      if (tmpFiles.isEmpty) Map.empty
-      else spark.read.parquet(tmpRoot.toString)
+      if (listDataFiles(fs, tmpRoot.toString).isEmpty) Map.empty
+      else spark.read.schema(lake.schema).parquet(tmpRoot.toString)
         .groupBy(partCol)
         .agg(count(lit(1)).as("n"), count(when(scoreable, lit(1))).as("ns"))
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
     affected.foreach { c =>
-      val (n, nv) = srcCnt(c)
+      val (n, nv) = leafStats(c)
       val kept = tmpCnt.get(c).map(_._1).getOrElse(0L)
       if (kept != n - nv) {
         fs.delete(tmpRoot, true)
         throw new IllegalStateException(
-          s"removal rewrite of $basePath $partCol=$c would lose rows " +
+          s"removal rewrite of $lakeName $partCol=$c would lose rows " +
             s"($n read, $nv victims, $kept rewritten) -- aborted, index untouched")
       }
     }
-    // the DECREMENTED sidecar is written BEFORE the swaps: occupancy
-    // must never overcount a swapped-out cell (members > 0 with no
-    // cell dir is a GHOST cell — probed, silently empty, and a re-run
-    // of the removal finds no victims so it can never heal). With the
-    // sidecar first, every crash window is retry-safe instead: an
-    // emptied cell goes members=0 while its victim rows are still on
-    // disk (liveCentroids skips it — unreachable victims ARE removed),
-    // and a partially-emptied cell stays live with its victims still
-    // present, so re-running the same removal finds them and completes
-    // the rewrite. Transiently-visible victims until the retry beat
-    // permanently-invisible survivors. (Occupancy-less layouts — the
-    // flat OPQ lake — skip this step: nothing probes their leaves.)
-    sidecar.foreach { case (codebook, prevMembers) =>
-      val members = codebook.indices.map { c =>
-        c -> (if (affected.contains(c)) tmpCnt.get(c).map(_._2).getOrElse(0L)
-              else prevMembers.getOrElse(c, 0L))
-      }.toMap
-      writeCodebookSidecar(spark, path, codebook, members, atomicSwap = true)
-    }
-    // per-leaf two-rename swaps (metadata ops); a fully-emptied leaf is
-    // parked then dropped — its occupancy row (if any) is already 0
-    graft.etl.Compact.swapRewrittenLeaves(
-      fs, bp, tmpRoot, oldRoot, affected.map(c => s"$partCol=$c").toSeq)
+    (affected, tmpCnt)
+  }
+
+  /** The write core of the IVF family: plain IVF, IVF-PQ and IVF-SQ8
+    * build (`increment = None`: overwrite) and add (`Some(rows)`:
+    * append) through it; each family keeps its guard, its encoder and
+    * its quantizer sidecar.
+    *
+    *  1. A rebuild first deletes the index-complete marker
+    *     (`path/codebook`): a crash after the base overwrite must not
+    *     pair the new base with the stale codebook and serve silently
+    *     wrong results — with the marker gone every entry point refuses.
+    *  2. `encoded` — (b_id, payload…, cell) rows — is written to
+    *     `path/base` by cell ([[clusterForWrite]]).
+    *  3. Occupancy (`scoreable` rows per cell) is counted from exactly
+    *     the data files this write landed (a listing snapshot), read
+    *     with the written frame's schema — not by re-evaluating the
+    *     encode plan, which a nondeterministic input would make
+    *     disagree with disk (a cell whose only members were appended
+    *     could read members=0, unreachable forever), and not over the
+    *     whole base (a corpus scan per 1% increment).
+    *  4. A write that landed no data file is refused with
+    *     `nothingWritten` unless it adds an empty increment (the
+    *     `rows.limit(1)` probe runs only then): the silent drop is the
+    *     ANN family's worst failure mode. Rows gated out one by one
+    *     stay dropped.
+    *  5. `quantizerSidecar` (the `pq`/`sq` dir, also the layout
+    *     marker), then the codebook sidecar LAST: `sidecar`'s
+    *     centroids, its occupancy (empty on build) plus what landed.
+    */
+  private[operators] def writeIvfLake(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      encoded: DataFrame, scoreable: Column,
+      sidecar: (Array[Array[Double]], Map[Int, Long]),
+      increment: Option[DataFrame], nothingWritten: => String)(
+      quantizerSidecar: => Unit): Unit = {
+    val basePath = s"$path/base"
+    val fs = new org.apache.hadoop.fs.Path(basePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (increment.isEmpty) fs.delete(new org.apache.hadoop.fs.Path(s"$path/codebook"), true)
+    val before = if (increment.isEmpty) Set.empty[String] else listDataFiles(fs, basePath)
+    encoded.transform(clusterForWrite("cell"))
+      .write.partitionBy("cell").mode(if (increment.isEmpty) "overwrite" else "append")
+      .parquet(basePath)
+    val written = (listDataFiles(fs, basePath) -- before).toSeq
+    if (written.isEmpty) require(increment.exists(_.limit(1).collect().isEmpty), nothingWritten)
+    val reader = spark.read.schema(encoded.schema)
+    val delta =
+      if (written.isEmpty) Map.empty[Int, Long]
+      else (if (increment.isEmpty) reader.parquet(basePath)
+            else reader.option("basePath", basePath).parquet(written: _*))
+        .filter(scoreable)
+        .groupBy("cell").agg(count(lit(1)).as("__m"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap // <= nlist rows
+    quantizerSidecar
+    val (codebook, prior) = sidecar
+    writeCodebookSidecar(spark, path, codebook, codebook.indices
+      .map(c => c -> (prior.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap)
   }
 
   /** Cluster rows by the partition key before a `partitionBy` write —
@@ -728,31 +754,15 @@ object Ann {
         byCell.map(r => r.getInt(0) -> r.getLong(2)).toMap)
     }
 
-  /** Invalidate the index-complete marker (`path/codebook`) BEFORE an
-    * in-place REBUILD touches the lakes: a crash after the base
-    * overwrite would otherwise pair the NEW base with the STALE
-    * codebook (probe ranking disagreeing with the new cell
-    * assignment — and for the quantizer tiers, stale stats/tables
-    * decoding new codes) and serve silently wrong results. With the
-    * marker gone every crash window refuses loudly at
-    * [[readCodebookSidecar]] instead (the [[graft.operators.Bm25]]
-    * build discipline applied to the ANN family).
-    */
-  private[operators] def invalidateIndexMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/codebook")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true): Unit
-  }
-
   /** Write the codebook sidecar (centroids in both precisions +
     * occupancy, via [[codebookFrame]] — the single owner of the float
-    * cast). With `atomicSwap` the new sidecar lands in a sibling temp
-    * dir and replaces the old one with two renames.
+    * cast) into `codebook__tmp` and put it in place
+    * ([[graft.etl.Compact.replaceDir]]): a crash mid-write never
+    * leaves a partial index-complete marker.
     */
   private[operators] def writeCodebookSidecar(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      codebook: Array[Array[Double]], members: Map[Int, Long],
-      atomicSwap: Boolean): Unit = {
+      codebook: Array[Array[Double]], members: Map[Int, Long]): Unit = {
     import spark.implicits._
     val mdf = members.toSeq.toDF("__cell", "__m")
     val cb = codebookFrame(spark, codebook)
@@ -760,18 +770,10 @@ object Ann {
       .select(col("cell"), col("centroid"), col("centroid_d"),
         coalesce(col("__m"), lit(0L)).as("members"))
       .coalesce(1)
-    val target = s"$path/codebook"
-    if (!atomicSwap) {
-      cb.write.mode("overwrite").parquet(target)
-    } else {
-      val p = new org.apache.hadoop.fs.Path(target)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__tmp")
-      val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__old")
-      fs.delete(tmp, true)
-      fs.delete(old, true)
+    val target = new org.apache.hadoop.fs.Path(s"$path/codebook")
+    graft.etl.Compact.replaceDir(
+      target.getFileSystem(spark.sparkContext.hadoopConfiguration), target, "") { tmp =>
       cb.write.mode("overwrite").parquet(tmp.toString)
-      graft.etl.Compact.swapInto(fs, tmp, p, old) // single owner of the 2-rename swap
     }
   }
 
@@ -869,7 +871,7 @@ object Ann {
         else fs.delete(old, true)
       }
     }
-    requirePqMarker(spark, path, expectPq = false,
+    requireQuantizerMarker(spark, path, "",
       otherVerb = "Pq.buildIvfPqIndex on the source corpus (codes carry no raw vectors to re-fit from)",
       sqOtherVerb = "Sq.buildIvfSq8Index on the source corpus (codes carry no raw vectors to re-fit from)")
     // parked BASE leaves (a crashed remove/compact) block equally — a

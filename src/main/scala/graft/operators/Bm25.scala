@@ -485,23 +485,22 @@ object Bm25 {
     * hazard discipline:
     *
     *  - victim ids are MATERIALIZED once (one increment-sized
-    *    parquet; `text` is not consulted) and every downstream job reads the
-    *    copy: a nondeterministic caller plan (sample/limit/first-wins)
-    *    could otherwise remove one victim set and decrement stats by
-    *    another, silently diverging postings from the sidecar forever;
+    *    parquet, [[Ann.withVictims]]) and every downstream job reads
+    *    the copy: a nondeterministic caller plan (sample/limit/
+    *    first-wins) could otherwise remove one victim set and decrement
+    *    stats by another, silently diverging postings from the sidecar
+    *    forever;
     *  - the rewrite is BUCKET-CONFINED, with the affected-bucket list
     *    derived from the INDEX ITSELF (a narrow (doc_id, bucket) scan
-    *    joined to the victim ids, ≤ nBuckets driver rows) — NOT from
-    *    the supplied victim text: text that drifted from what was
-    *    indexed (edited source row, re-normalization) would miss
-    *    buckets and leave ghost postings serving a retention-deleted
-    *    document forever. Removing a handful of documents still
-    *    rewrites a handful of bucket dirs, not the whole lake;
-    *  - clustered `repartition(bucket)` before the partitioned write:
-    *    one file per rewritten bucket, not one per task per bucket;
-    *  - a per-bucket row-count gate (kept == read − victims) runs
-    *    BEFORE any swap — a lossy rewrite aborts with the lake
-    *    untouched;
+    *    joined to the victim ids, ≤ nBuckets driver rows) — never from
+    *    victim text, which could have drifted from what was indexed
+    *    (edited source row, re-normalization), miss buckets and leave
+    *    ghost postings serving a retention-deleted document forever.
+    *    Removing a handful of documents still rewrites a handful of
+    *    bucket dirs, not the whole lake;
+    *  - the rewrite and its per-bucket row-count gate (kept == read −
+    *    victims, BEFORE any swap — a lossy rewrite aborts with the lake
+    *    untouched) are the shared [[Ann.rewriteLeavesWithout]];
     *  - a parked `__remove_old` tree with files is a crashed swap and
     *    blocks until recovered (the Compact rule) — never deleted
     *    blindly.
@@ -542,9 +541,8 @@ object Bm25 {
     */
   def removeFromLexIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      docs: DataFrame, docId: Column, text: Column): Unit =
-    removeFromLexIndex(spark, path, docs, docId, text,
-      crashBeforeStatsSidecar = false)
+      docs: DataFrame, docId: Column): Unit =
+    removeFromLexIndex(spark, path, docs, docId, crashBeforeStatsSidecar = false)
 
   /** Fault-injection overload for the crash-window specs: when
     * `crashBeforeStatsSidecar` is set the remove performs the bucket
@@ -554,63 +552,50 @@ object Bm25 {
     */
   private[graft] def removeFromLexIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      docs: DataFrame, docId: Column, text: Column,
+      docs: DataFrame, docId: Column,
       crashBeforeStatsSidecar: Boolean): Unit = {
     resumePendingRemove(spark, path)
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
     val target = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_old")
-    graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal")
+    graft.etl.Compact.clearOrRefuseParked(fs, removeOldRoot(target), "removal")
     // ANY other verb's parked tree (a crashed compactLexIndex swap
     // lives at postings__compact_old) also blocks: the lake is missing
     // a bucket's only copy, and an anti-join rewrite against it would
     // cement the loss
     graft.etl.Compact.requireServable(fs, target, action = "removal")
-    fs.delete(tmpRoot, true)
-    val vicDir = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_vic")
-    fs.delete(vicDir, true)
-    try {
-      docs.select(docId.as("doc_id")).dropDuplicates("doc_id")
-        .write.mode("overwrite").parquet(vicDir.toString)
-      removeWithVictims(spark, path, target, fs, tmpRoot, oldRoot,
-        spark.read.parquet(vicDir.toString), nDocs, totalTokens, nBuckets,
+    Ann.withVictims(fs, target, docs.select(docId.as("doc_id")).distinct()) { vicIds =>
+      removeWithVictims(spark, path, fs, vicIds, nDocs, totalTokens, nBuckets,
         crashBeforeStatsSidecar)
-    } finally fs.delete(vicDir, true)
+    }
   }
 
-  /** [[removeFromLexIndex]] after victim materialization: locate
-    * affected buckets from the index, rewrite, gate, swap, decrement
-    * (present victims + recorded empty docs only).
+  private def removeOldRoot(target: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_old")
+
+  /** [[removeFromLexIndex]] after victim materialization: decrement
+    * (present victims + recorded empty docs only) under a write-ahead
+    * intent, then rewrite, gate, swap.
     */
   private def removeWithVictims(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      target: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
+      fs: org.apache.hadoop.fs.FileSystem,
       vicIds: DataFrame, nDocs: Long, totalTokens: Long, nBuckets: Int,
       crashBeforeStatsSidecar: Boolean): Unit = {
-    // the victims' postings AS INDEXED — one narrow (doc_id, bucket,
-    // dl) scan; feeds the affected-bucket list (≤ nBuckets driver
-    // rows), the presence gate, AND the token decrement (the INDEXED
-    // dl, not the supplied text's: drifted victim text already cannot
-    // mislocate buckets, and it must not mis-size Σdl either)
-    val vicPost = spark.read.parquet(target.toString)
-      .select("doc_id", "bucket", "dl")
-      .join(vicIds, "doc_id")
-    val affected = vicPost.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // the decrement is COMPUTED before any swap (vicPost is lazy — after
-    // the swaps it would re-read the rewritten lake and see every
-    // present victim as absent) but WRITTEN last (see ORDERING):
-    //  - victims PRESENT in the postings count with their indexed dl
+    // the decrement is COMPUTED before any swap (the postings read is
+    // lazy — after the swaps it would re-read the rewritten lake and
+    // see every present victim as absent) but WRITTEN last (see
+    // ORDERING):
+    //  - victims PRESENT in the postings count with their INDEXED dl
     //    (every posting row of a doc carries the same dl — max is it);
     //  - victims ABSENT from the postings count only if the index's
     //    OWN empty-membership record lists them (indexed zero-token
-    //    docs — see buildLexIndex's `path/empty`). The caller's text
-    //    is not consulted for membership, so a doc indexed EMPTY whose
-    //    source text later gained tokens still counts correctly.
-    val present = vicPost.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+    //    docs — see buildLexIndex's `path/empty`), so a doc indexed
+    //    EMPTY whose source text later gained tokens still counts
+    //    correctly.
+    val present = readPostingsLake(spark, path).select("doc_id", "dl")
+      .join(vicIds, "doc_id")
+      .groupBy("doc_id").agg(max(col("dl")).as("dl"))
     val emptyVictims = readEmptyMembers(spark, path)
       .join(vicIds, "doc_id").select(col("doc_id"), lit(0L).as("dl"))
     val countable = present.unionByName(
@@ -619,16 +604,17 @@ object Bm25 {
     val dec = countable.agg(
       count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("total_tokens")).head()
-    // nothing indexed anywhere → complete no-op: no intent, no writes
-    // (same graceful degradation as the ANN remove's early return)
-    if (dec.getLong(0) == 0 && affected.isEmpty) return
+    // nothing indexed anywhere (no victim has postings or is a
+    // recorded empty doc) → complete no-op: no intent, no writes (same
+    // graceful degradation as the ANN remove's early return)
+    if (dec.getLong(0) == 0) return
     // WRITE-AHEAD INTENT before any mutation (see ORDERING): victim
     // ids + the ABSOLUTE post-remove stats, so any crash window below
     // is resumable to exactly the one-remove state
     writeRemoveIntent(spark, path, fs, vicIds,
       nDocs - dec.getLong(0), totalTokens - dec.getLong(1))
-    executeRemove(spark, path, target, fs, tmpRoot, oldRoot, vicIds,
-      affected, nDocs - dec.getLong(0), totalTokens - dec.getLong(1),
+    executeRemove(spark, path, fs, vicIds,
+      nDocs - dec.getLong(0), totalTokens - dec.getLong(1),
       nBuckets, crashBeforeStatsSidecar)
   }
 
@@ -642,44 +628,22 @@ object Bm25 {
     */
   private def executeRemove(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      target: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-      tmpRoot: org.apache.hadoop.fs.Path, oldRoot: org.apache.hadoop.fs.Path,
-      vicIds: DataFrame, affected: Array[Int],
+      fs: org.apache.hadoop.fs.FileSystem, vicIds: DataFrame,
       newNDocs: Long, newTotalTokens: Long, nBuckets: Int,
       crashBeforeStatsSidecar: Boolean): Unit = {
-    if (affected.nonEmpty) {
-      val pruned = spark.read.parquet(target.toString)
-        .filter(col("bucket").isin(affected.map(Int.box): _*))
-      pruned.join(vicIds, Seq("doc_id"), "left_anti")
-        .transform(Ann.clusterForWrite("bucket"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmpRoot.toString)
-      // per-bucket gate BEFORE any swap: kept must equal read − victims
-      val srcCnt = pruned.select(col("doc_id"), col("bucket"))
-        .join(vicIds.withColumn("__v", lit(1)), Seq("doc_id"), "left")
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), count(col("__v")).as("nv"))
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val tmpFiles = Ann.listDataFiles(fs, tmpRoot.toString)
-      val tmpCnt: Map[Int, Long] =
-        if (tmpFiles.isEmpty) Map.empty
-        else spark.read.parquet(tmpRoot.toString)
-          .groupBy("bucket").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      srcCnt.foreach { case (b, (n, nv)) =>
-        val kept = tmpCnt.getOrElse(b, 0L)
-        if (kept != n - nv) {
-          fs.delete(tmpRoot, true)
-          throw new IllegalStateException(
-            s"removal rewrite of $target bucket=$b would lose rows " +
-              s"($n read, $nv victims, $kept rewritten) -- aborted, index untouched")
-        }
-      }
-      // per-bucket two-rename swaps (single owner: Compact); an emptied
-      // bucket's dir disappears — queries prune by bucket value, a
-      // missing dir reads as zero postings
+    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
+    val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
+    // the crashed remove being resumed may have emptied the lake
+    // entirely (last posted docs removed): an empty lake reads as empty
+    // and has nothing to rewrite
+    val (affected, _) = Ann.rewriteLeavesWithout(
+      readPostingsLake(spark, path), target.toString, vicIds, "doc_id", "bucket", tmpRoot)
+    // per-bucket two-rename swaps (single owner: Compact); an emptied
+    // bucket's dir disappears — queries prune by bucket value, a
+    // missing dir reads as zero postings
+    if (affected.nonEmpty)
       graft.etl.Compact.swapRewrittenLeaves(
-        fs, target, tmpRoot, oldRoot, affected.map(b => s"bucket=$b").toSeq)
-    }
+        fs, target, tmpRoot, removeOldRoot(target), affected.map(b => s"bucket=$b").toSeq)
     // membership record rewritten BEFORE the sidecar (see ORDERING);
     // re-derived here (not threaded in) so a resume replays it too —
     // minus of already-absent ids is skipped by the emptiness probe
@@ -732,23 +696,12 @@ object Bm25 {
     val vicIds = spark.read.parquet(s"$dst/victims").select("doc_id")
     val (_, _, nBuckets) = readStatsSidecar(spark, path)
     val target = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
-    val oldRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_old")
     // a crash MID-SWAP parks buckets at __remove_old — that still
     // blocks loudly (the Compact rule): the intent cannot replay a
     // rewrite over a lake missing a bucket's only copy
-    graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal resume")
+    graft.etl.Compact.clearOrRefuseParked(fs, removeOldRoot(target), "removal resume")
     graft.etl.Compact.requireServable(fs, target, action = "resuming removal on")
-    fs.delete(tmpRoot, true)
-    // the crashed remove may have emptied the lake entirely (last
-    // posted docs removed) — a file-less lake has nothing to replay
-    val affected =
-      if (Ann.listDataFiles(fs, target.toString).isEmpty) Array.empty[Int]
-      else spark.read.parquet(target.toString)
-        .select("doc_id", "bucket").join(vicIds, "doc_id")
-        .select("bucket").distinct().collect().map(_.getInt(0)).sorted
-    executeRemove(spark, path, target, fs, tmpRoot, oldRoot, vicIds,
-      affected, st.getLong(0), st.getLong(1), nBuckets,
+    executeRemove(spark, path, fs, vicIds, st.getLong(0), st.getLong(1), nBuckets,
       crashBeforeStatsSidecar = false)
   }
 
@@ -792,18 +745,21 @@ object Bm25 {
     */
   private def writeEmptyMembers(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      ids: DataFrame, overwrite: Boolean): Unit = {
-    val target = new org.apache.hadoop.fs.Path(s"$path/empty")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!overwrite) ids.write.mode("append").parquet(target.toString)
-    else {
-      val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-      val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-      fs.delete(tmp, true); fs.delete(old, true)
-      ids.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(target)) graft.etl.Compact.swapInto(fs, tmp, target, old)
-      else require(fs.rename(tmp, target),
-        s"could not place empty-doc membership record at $target")
+      ids: DataFrame, overwrite: Boolean): Unit =
+    if (!overwrite) ids.write.mode("append").parquet(s"$path/empty")
+    else replaceRecord(spark, path, "empty")(ids)
+
+  /** Replace the record or sidecar dir `path/name` with `df`
+    * ([[graft.etl.Compact.replaceDir]]: written to `name__tmp`, then
+    * swapped in via `name__old`, or renamed into place on first write).
+    */
+  private def replaceRecord(
+      spark: org.apache.spark.sql.SparkSession, path: String, name: String)(
+      df: DataFrame): Unit = {
+    val target = new org.apache.hadoop.fs.Path(s"$path/$name")
+    graft.etl.Compact.replaceDir(
+      target.getFileSystem(spark.sparkContext.hadoopConfiguration), target, "") { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
     }
   }
 
@@ -814,14 +770,8 @@ object Bm25 {
   private def rewriteEmptyMembersMinus(
       spark: org.apache.spark.sql.SparkSession, path: String,
       vicIds: DataFrame): Unit = {
-    val kept = readEmptyMembers(spark, path).join(vicIds, Seq("doc_id"), "left_anti")
-    val target = new org.apache.hadoop.fs.Path(s"$path/empty")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    kept.write.mode("overwrite").parquet(tmp.toString)
-    graft.etl.Compact.swapInto(fs, tmp, target, old)
+    replaceRecord(spark, path, "empty")(
+      readEmptyMembers(spark, path).join(vicIds, Seq("doc_id"), "left_anti"))
   }
 
   /** Bounded observability read of a lex index: corpus scalars from
@@ -945,16 +895,9 @@ object Bm25 {
       spark: org.apache.spark.sql.SparkSession, path: String,
       row: org.apache.spark.sql.Row, nBuckets: Int): Unit = {
     import spark.implicits._
-    val target = new org.apache.hadoop.fs.Path(s"$path/stats")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    Seq((row.getLong(0), row.getLong(1), nBuckets))
-      .toDF("n_docs", "total_tokens", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) graft.etl.Compact.swapInto(fs, tmp, target, old)
-    else require(fs.rename(tmp, target), s"could not place stats sidecar at $target")
+    replaceRecord(spark, path, "stats")(
+      Seq((row.getLong(0), row.getLong(1), nBuckets))
+        .toDF("n_docs", "total_tokens", "n_buckets").coalesce(1))
   }
 
   /** (n_docs, total_tokens, n_buckets) — bounded 1-row read; fails
@@ -1021,7 +964,6 @@ object Bm25 {
     resumePendingRemove(spark, path)
     val target = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__rebucket_tmp")
     val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__rebucket_old")
     val intent = new org.apache.hadoop.fs.Path(s"$path/rebucket_intent")
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/rebucket_intent__tmp"), true)
@@ -1064,7 +1006,6 @@ object Bm25 {
         .write.mode("overwrite").parquet(itmp.toString)
       require(fs.rename(itmp, intent), s"could not place rebucket intent at $intent")
     }
-    fs.delete(tmp, true)
     // cache for the rewrite + count gate, UNPERSISTED before the swap:
     // a cached plan over path/postings would keep answering
     // post-rebucket reads of the same path with the OLD lake's rows
@@ -1077,26 +1018,28 @@ object Bm25 {
       // only the sidecar's bucket count moves (and an empty tmp would
       // fail its own count-gate read)
       if (n > 0) {
-        // bucket recomputed from the TERM — idempotent over any layout
-        src.drop("bucket")
-          .withColumn("bucket", bucketOf(col("term"), newBuckets))
-          .transform(Ann.clusterForWrite("bucket"))
-          .write.partitionBy("bucket").mode("overwrite").parquet(tmp.toString)
-        val nTmp = spark.read.parquet(tmp.toString).count()
-        if (nTmp != n) {
-          fs.delete(tmp, true)
-          // the lake and sidecar are untouched at this point, so the
-          // intent must not outlive the abort: leaving it standing
-          // would wedge every verb ("rebucket in flight") on a fully
-          // servable index whose error just said "original untouched"
-          fs.delete(intent, true)
-          throw new IllegalStateException(
-            s"rebucket of $path would lose postings ($n read, $nTmp rewritten) -- " +
-              "aborted, original untouched and still serving")
+        // rewritten at postings__rebucket_tmp, swapped in via the
+        // __rebucket_old park recovered above
+        graft.etl.Compact.replaceDir(fs, target, "rebucket_") { tmp =>
+          // bucket recomputed from the TERM — idempotent over any layout
+          src.drop("bucket")
+            .withColumn("bucket", bucketOf(col("term"), newBuckets))
+            .transform(Ann.clusterForWrite("bucket"))
+            .write.partitionBy("bucket").mode("overwrite").parquet(tmp.toString)
+          val nTmp = spark.read.parquet(tmp.toString).count()
+          if (nTmp != n) {
+            fs.delete(tmp, true)
+            // the lake and sidecar are untouched at this point, so the
+            // intent must not outlive the abort: leaving it standing
+            // would wedge every verb ("rebucket in flight") on a fully
+            // servable index whose error just said "original untouched"
+            fs.delete(intent, true)
+            throw new IllegalStateException(
+              s"rebucket of $path would lose postings ($n read, $nTmp rewritten) -- " +
+                "aborted, original untouched and still serving")
+          }
+          src.unpersist(blocking = true)
         }
-        src.unpersist(blocking = true)
-        if (fs.exists(target)) graft.etl.Compact.swapInto(fs, tmp, target, old)
-        else require(fs.rename(tmp, target), s"could not place rebucketed lake at $target")
         // drop any cached file listing/data for the swapped path — a
         // stale InMemoryFileIndex would read renamed-away files
         spark.catalog.refreshByPath(target.toString)

@@ -242,19 +242,19 @@ object LangModel {
     require(minCount >= 2, s"minCount must be >= 2 (got $minCount; 1 is a no-op)")
     val target = new org.apache.hadoop.fs.Path(s"$path/bigrams")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__prune_tmp")
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__prune_old")
-    graft.etl.Compact.clearOrRefuseParked(fs, old, "model prune")
+    graft.etl.Compact.clearOrRefuseParked(
+      fs, new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__prune_old"),
+      "model prune")
     // sidecar presence = fitted-model marker (scoreWith's contract)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats")),
       s"$path has no stats sidecar -- not a fitted LM model")
-    fs.delete(tmp, true)
     val src = spark.read.parquet(target.toString)
     val before = src.count()
-    src.filter(col("c2") >= minCount)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val after = spark.read.parquet(tmp.toString).count()
-    graft.etl.Compact.swapInto(fs, tmp, target, old)
+    val after = graft.etl.Compact.replaceDir(fs, target, "prune_") { tmp =>
+      src.filter(col("c2") >= minCount)
+        .write.mode("overwrite").parquet(tmp.toString)
+      spark.read.parquet(tmp.toString).count()
+    }
     spark.catalog.refreshByPath(target.toString)
     (before, after)
   }

@@ -225,7 +225,7 @@ object Opq {
     val rot = fitRotation(fitB, m, maxFit)
     val d = rot.inputDim
     // in-place rebuild: kill the completeness marker BEFORE touching
-    // the lakes (the Ann.invalidateIndexMarker discipline) so every
+    // the lakes (the Ann.writeIvfLake discipline) so every
     // crash window refuses loudly instead of pairing a new base with a
     // stale rotation
     val rotPath = new org.apache.hadoop.fs.Path(s"$path/rotation")
@@ -309,7 +309,7 @@ object Opq {
   }
 
   /** Directed misuse guard, symmetric with
-    * [[Ann.requirePqMarker]]: an IVF-family index at `path` shares
+    * [[Ann.requireQuantizerMarker]]: an IVF-family index at `path` shares
     * nothing with the flat OPQ layout, and the wrong verb must name
     * the right one instead of failing somewhere deep.
     */

@@ -395,44 +395,34 @@ object Pq {
     // sample scan still feeds both quantizers
     val cb = fitFromSample(residualSample(sample, coarse), m, kSub, pqSeed(seed))
     val spark = base.sparkSession
-    Ann.invalidateIndexMarker(spark, path) // in-place rebuild: see its scaladoc
-    pqScoreable(b0, coarse, cb)
-      .select("b_id", "codes", "d_nrm", "cell")
-      // cluster by the partition key before the write (the removal
-      // rewrite's writeShards discipline, round-15 extended to
-      // build/add): one file per cell instead of tasks × cells
-      .transform(Ann.clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    // occupancy of PQ-SCOREABLE members from the WRITTEN files (every
-    // written row is scoreable by construction of the filters above)
-    val members = spark.read.parquet(s"$path/base")
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // a base whose EVERY row fell to the PQ-scoreable gates (classic
-    // cause: fitOn frame with a different embedding dimension than the
-    // base) must not persist as a silently empty index
-    require(members.nonEmpty,
+    // every written row is PQ-scoreable by construction of the gates; a
+    // base whose EVERY row fell to them (classic cause: fitOn frame
+    // with a different embedding dimension than the base) is refused,
+    // never persisted as a silently empty index
+    Ann.writeIvfLake(spark, path, pqRows(b0, coarse, cb), lit(true), (coarse, Map.empty),
+      increment = None,
       s"no base row was PQ-scoreable for $path -- does the base embedding " +
-        s"dimension match the fitted codebooks (dim ${cb.m * cb.sub})?")
-    // WRITE ORDER: base → pq → codebook sidecar. The pq dir doubles as
-    // the index-type marker Ann.addToIvfIndex refuses on, and the
-    // sidecar is what every reader/appender loads first — so the
-    // sidecar must land LAST (the index-complete marker). A crash
-    // before it leaves an index every entry point rejects loudly
-    // (readCodebookSidecar: no codebook dir), never a half-index that
-    // passes the plain-IVF guard and accepts vector-row appends.
-    import spark.implicits._
-    // `residual = true` is a LAYOUT VERSION marker: an index whose pq
-    // rows lack it was built with raw (pre-residual) encoding, and
-    // decoding its codes with the residual arithmetic would silently
-    // corrupt every score — loadPqTables refuses such indexes
-    (for (j <- 0 until cb.m; c <- cb.tables(j).indices)
-      yield (j, c, cb.tables(j)(c).toSeq, true))
-      .toDF("subspace", "code", "centroid_d", "residual")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/pq")
-    Ann.writeCodebookSidecar(spark, path, coarse, members, atomicSwap = false)
+        s"dimension match the fitted codebooks (dim ${cb.m * cb.sub})?") {
+      // the pq dir lands between the base and the codebook: it doubles
+      // as the index-type marker Ann.addToIvfIndex refuses on, so a
+      // crash before the codebook leaves a half-index every entry
+      // point rejects, never one that accepts vector-row appends.
+      // `residual = true` is a LAYOUT VERSION marker: an index whose pq
+      // rows lack it was built with raw (pre-residual) encoding, and
+      // decoding its codes with the residual arithmetic would silently
+      // corrupt every score — loadPqTables refuses such indexes
+      import spark.implicits._
+      (for (j <- 0 until cb.m; c <- cb.tables(j).indices)
+        yield (j, c, cb.tables(j)(c).toSeq, true))
+        .toDF("subspace", "code", "centroid_d", "residual")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/pq")
+    }
   }
+
+  /** The persisted IVF-PQ row: [[pqScoreable]] as (b_id, codes, d_nrm, cell). */
+  private def pqRows(b0: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
+    pqScoreable(b0, coarse, cb).select("b_id", "codes", "d_nrm", "cell")
 
   /** KNN against a persisted [[buildIvfPqIndex]] index: probe ranks
     * from the codebook sidecar, a partition-pruned CODES scan of only
@@ -542,8 +532,8 @@ object Pq {
     * re-fit of either quantizer — build+add equals
     * build-all-with-the-same-codebooks), appended to the cell
     * partitions as codes, and the occupancy sidecar refreshed from the
-    * files this add wrote, exactly like [[Ann.addToIvfIndex]] (same
-    * listing-diff delta, same two-rename sidecar swap, same
+    * files this add wrote — the family's write core,
+    * [[Ann.writeIvfLake]], shared with [[Ann.addToIvfIndex]] (same
     * not-transactional caveat).
     */
   def addToIvfPqIndex(
@@ -551,36 +541,16 @@ object Pq {
       rows: DataFrame, id: Column, vec: Column): Unit = {
     // directed misuse guard, symmetric with Ann.addToIvfIndex's: a
     // PLAIN IVF index shares the codebook layout but has no pq sidecar
-    Ann.requirePqMarker(spark, path, expectPq = true, otherVerb = "Ann.addToIvfIndex")
-    val (coarse, prevMembers) = Ann.readCodebookSidecar(spark, path)
+    Ann.requireQuantizerMarker(spark, path, "pq", otherVerb = "Ann.addToIvfIndex")
+    val sidecar = Ann.readCodebookSidecar(spark, path)
     val cb = loadPqTables(spark, path)
-    val basePath = s"$path/base"
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // listing-diff occupancy: count exactly the files this add wrote
-    // (see addToIvfIndex — a lazy-plan recount could drift from disk)
-    val before = Ann.listDataFiles(fs, basePath)
-    pqScoreable(rows.select(id.as("b_id"), vec.as("b_emb")), coarse, cb)
-      .select("b_id", "codes", "d_nrm", "cell")
-      .transform(Ann.clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (Ann.listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // fail-loud on a silently vanished increment: a non-empty input
-    // whose EVERY row fell to the PQ-scoreable gates (wrong embedding
-    // dimension is the classic cause) must not report success — the
-    // ANN family's worst failure mode is the silent drop
-    if (delta.isEmpty)
-      require(rows.limit(1).collect().isEmpty,
-        s"no row of a non-empty increment was PQ-scoreable for $path -- wrong " +
-          s"embedding dimension (index dim ${cb.m * cb.sub})? nothing was added")
-    val members = coarse.indices
-      .map(c => c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    Ann.writeCodebookSidecar(spark, path, coarse, members, atomicSwap = true)
+    // a non-empty increment whose EVERY row fell to the PQ-scoreable
+    // gates (wrong embedding dimension is the classic cause) is refused
+    Ann.writeIvfLake(spark, path,
+      pqRows(rows.select(id.as("b_id"), vec.as("b_emb")), sidecar._1, cb), lit(true),
+      sidecar, Some(rows),
+      s"no row of a non-empty increment was PQ-scoreable for $path -- wrong " +
+        s"embedding dimension (index dim ${cb.m * cb.sub})? nothing was added")(())
   }
 
   /** Delete ids from a persisted [[buildIvfPqIndex]] index — the
@@ -597,7 +567,7 @@ object Pq {
   def removeFromIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       victims: DataFrame, vicId: Column): Unit = {
-    Ann.requirePqMarker(spark, path, expectPq = true, otherVerb = "Ann.removeFromIvfIndex")
+    Ann.requireQuantizerMarker(spark, path, "pq", otherVerb = "Ann.removeFromIvfIndex")
     Ann.removeFromIndexBase(spark, path, victims, vicId, scoreable = lit(true))
   }
 

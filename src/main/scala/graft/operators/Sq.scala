@@ -134,26 +134,35 @@ object Sq {
     */
   private def encodedBase(
       base: DataFrame, baseId: Column, baseVec: Column): (DataFrame, DataFrame, Int, Sq8Stats) = {
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .filter(col("b_emb").isNotNull &&
-        forall(col("b_emb"), x =>
-          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val b0 = finiteScoreable(base.select(baseId.as("b_id"), baseVec.as("b_emb")))
     val dRow = b0.select(min(size(col("b_emb"))).as("d")).head()
     require(!dRow.isNullAt(0), "SQ8: no scoreable base vectors")
     val d = dRow.getInt(0)
     val b = b0.filter(size(col("b_emb")) === d)
-
     val st = fitStats(b, col("b_emb"), d)
-    val enc = b
-      .withColumn("codes", encodeExpr(col("b_emb"), st))
+    (b, encodeScoreable(b, st), d, st)
+  }
+
+  /** Gates (1) and (2) of [[encodedBase]] on a (b_id, b_emb) frame,
+    * adding `b_nrm` — shared with [[addToIvfSq8Index]].
+    */
+  private def finiteScoreable(b: DataFrame): DataFrame =
+    b.filter(col("b_emb").isNotNull &&
+        forall(col("b_emb"), x =>
+          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
+      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
+      .filter(col("b_nrm") > 0)
+
+  /** SQ8 codes + reconstruction norm of fixed-dim rows under `st`;
+    * rows whose codes are null or whose reconstruction has zero norm
+    * are dropped.
+    */
+  private def encodeScoreable(b: DataFrame, st: Sq8Stats): DataFrame =
+    b.withColumn("codes", encodeExpr(col("b_emb"), st))
       .filter(forall(col("codes"), c => c.isNotNull))
       .withColumn("recon", decodeExpr(col("codes"), st))
       .withColumn("r_nrm", Vectors.norm2(col("recon")))
       .filter(col("r_nrm") > 0)
-    (b, enc, d, st)
-  }
 
   def knnSq8(
       base: DataFrame, baseId: Column, baseVec: Column,
@@ -269,34 +278,26 @@ object Sq {
     val (b, enc, d, st) = encodedBase(base, baseId, baseVec)
     val codebook = Ann.fitCodebook(
       b.select(col("b_id"), col("b_emb")), nlist, seed, maxFit)
-    // in-place REBUILD: the old index-complete marker must stop being
-    // valid BEFORE the lakes change — a crash after the base overwrite
-    // would otherwise pair new codes with STALE sq stats + codebook
-    // and serve silently wrong results (Ann.invalidateIndexMarker)
-    Ann.invalidateIndexMarker(spark, path)
-    enc
-      .withColumn("cell", Ann.cellExpr(col("b_emb"), codebook))
+    // the family's write core (Ann.writeIvfLake) invalidates the old
+    // index-complete marker before the base overwrite, and writes the
+    // sq sidecar below between the base and the codebook
+    Ann.writeIvfLake(spark, path, sqRows(enc, codebook), lit(true), (codebook, Map.empty),
+      increment = None,
+      s"no base row was SQ8-scoreable for $path -- empty or non-finite corpus?") {
+      import spark.implicits._
+      (0 until d).map(i => (i, st.mins(i), st.maxs(i)))
+        .toDF("dim_idx", "mn", "mx")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
+    }
+  }
+
+  /** The persisted IVF-SQ8 row: (b_id, codes, r_nrm, cell); rows
+    * without a cell are dropped.
+    */
+  private def sqRows(enc: DataFrame, coarse: Array[Array[Double]]): DataFrame =
+    enc.withColumn("cell", Ann.cellExpr(col("b_emb"), coarse))
       .filter(col("cell").isNotNull)
       .select("b_id", "codes", "r_nrm", "cell")
-      // cluster by the partition key before the write (the removal
-      // rewrite's writeShards discipline, round-15 extended to
-      // build/add): one file per cell instead of tasks × cells
-      .transform(Ann.clusterForWrite("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/base")
-    val members = spark.read.parquet(s"$path/base")
-      .groupBy("cell").agg(count(lit(1)).as("__m"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(members.nonEmpty,
-      s"no base row was SQ8-scoreable for $path -- empty or non-finite corpus?")
-    import spark.implicits._
-    // sq sidecar BEFORE the codebook (the index-complete marker lands
-    // last): a crash between the two leaves an index every entry point
-    // rejects loudly (readCodebookSidecar: no codebook dir)
-    (0 until d).map(i => (i, st.mins(i), st.maxs(i)))
-      .toDF("dim_idx", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sq")
-    Ann.writeCodebookSidecar(spark, path, codebook, members, atomicSwap = false)
-  }
 
   /** The persisted quantizer of an IVF-SQ8 index — bounded collect of
     * D rows, validated dense (a gap would decode every code of that
@@ -360,8 +361,9 @@ object Sq {
     * PERSISTED stats and assigned with the PERSISTED coarse codebook
     * (no re-fit — build+add equals build-all-with-the-same-model),
     * appended to the cell partitions, occupancy refreshed from the
-    * files this add wrote ([[Ann.addToIvfIndex]]'s listing-diff
-    * discipline and not-transactional caveat).
+    * files this add wrote — the family's write core,
+    * [[Ann.writeIvfLake]] (same not-transactional caveat as
+    * [[Ann.addToIvfIndex]]).
     */
   def addToIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -369,43 +371,16 @@ object Sq {
     Ann.requireQuantizerMarker(spark, path, "sq",
       "Ann.addToIvfIndex / Pq.addToIvfPqIndex")
     val st = loadSqStats(spark, path)
-    val (coarse, prevMembers) = Ann.readCodebookSidecar(spark, path)
-    val basePath = s"$path/base"
-    val fs = new org.apache.hadoop.fs.Path(basePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = Ann.listDataFiles(fs, basePath)
-    rows.select(id.as("b_id"), vec.as("b_emb"))
-      .filter(col("b_emb").isNotNull &&
-        forall(col("b_emb"), x =>
-          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val sidecar = Ann.readCodebookSidecar(spark, path)
+    val b = finiteScoreable(rows.select(id.as("b_id"), vec.as("b_emb")))
       .filter(size(col("b_emb")) === st.dim)
-      .withColumn("codes", encodeExpr(col("b_emb"), st))
-      .filter(forall(col("codes"), c => c.isNotNull))
-      .withColumn("recon", decodeExpr(col("codes"), st))
-      .withColumn("r_nrm", Vectors.norm2(col("recon")))
-      .filter(col("r_nrm") > 0)
-      .withColumn("cell", Ann.cellExpr(col("b_emb"), coarse))
-      .filter(col("cell").isNotNull)
-      .select("b_id", "codes", "r_nrm", "cell")
-      .transform(Ann.clusterForWrite("cell")) // clustered append (see build)
-      .write.partitionBy("cell").mode("append").parquet(basePath)
-    val newFiles = (Ann.listDataFiles(fs, basePath) -- before).toSeq
-    val delta =
-      if (newFiles.isEmpty) Map.empty[Int, Long]
-      else spark.read.option("basePath", basePath).parquet(newFiles: _*)
-        .groupBy("cell").agg(count(lit(1)).as("__m"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    require(delta.nonEmpty || rows.isEmpty,
+    Ann.writeIvfLake(spark, path, sqRows(encodeScoreable(b, st), sidecar._1), lit(true),
+      sidecar, Some(rows),
       s"no increment row was SQ8-scoreable for $path -- every row was gated " +
         "out by one of: null embedding, non-finite element (NaN/Inf/null " +
         s"cell), zero norm, dimension != fitted dim ${st.dim}, or " +
         "zero-norm reconstruction; inspect the increment against these " +
-        "gates (the empty append already ran and changed nothing)")
-    val merged = (prevMembers.keySet ++ delta.keySet).map(c =>
-      c -> (prevMembers.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap
-    Ann.writeCodebookSidecar(spark, path, coarse, merged, atomicSwap = true)
+        "gates (the empty append already ran and changed nothing)")(())
   }
 
   /** Retention-delete from a persisted IVF-SQ8 index — delegates to the

@@ -1,0 +1,178 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Ann, Bm25, Dedup, Pq, Sq}
+
+/** The persisted-index lifecycle verbs (build → add → remove) of the
+  * IVF, IVF-PQ and IVF-SQ8 families and the BM25 remove: how many Spark
+  * jobs each verb runs on a tiny fixed index, pinned as upper bounds,
+  * and the write core's refusal of an increment that wrote nothing.
+  */
+class IndexLifecycleSpec extends SparkSpecBase {
+
+  import spark.implicits._
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs launched while `body` runs — counted by a listener, the
+    * bus drained on both sides so no earlier job leaks in and no late
+    * event is missed.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** 40 dim-8 vectors in four loose clusters, ids 0..39. */
+  private lazy val vectors: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    (0 until 40).map { i =>
+      val v = Array.fill(8)((rnd.nextFloat() - 0.5f) * 0.2f)
+      v((i % 4) * 2) += 1.0f
+      (i.toLong, v)
+    }.toDF("vec_id", "embedding")
+  }
+  private lazy val queries = vectors.filter(col("vec_id") < 4)
+  private def even = vectors.filter(col("vec_id") % 2 === 0)
+  private def odd = vectors.filter(col("vec_id") % 2 === 1)
+  private def victims = Seq(3L, 8L, 21L).toDF("id")
+
+  /** Jobs of (build, add, remove) with a query after each write, the
+    * way a served index is maintained: the query leaves the sidecars
+    * and the lake schema resident, as they are when the next write
+    * comes.
+    */
+  private def lifecycle(
+      build: => Unit, add: => Unit, remove: => Unit, query: => Unit): (Int, Int, Int) = {
+    val b = jobsDuring(build)
+    query
+    val a = jobsDuring(add)
+    query
+    val r = jobsDuring(remove)
+    query
+    (b, a, r)
+  }
+
+  // Upper bounds (build, add, remove): the counts the verbs run on this
+  // fixture. The write core and the leaf-removal rewrite read back what
+  // they wrote with a known schema, so no verb pays a parquet footer
+  // inference job for it. A verb past its bound has added a Spark job
+  // to the lifecycle.
+  private val budget = Map(
+    "ivf" -> (8, 6, 12),
+    "ivfpq" -> (9, 8, 12),
+    "ivfsq8" -> (13, 8, 12))
+  private val bm25RemoveBudget = 26
+
+  private def assertBudget(family: String, got: (Int, Int, Int)): Unit = {
+    val (mb, ma, mr) = budget(family)
+    info(s"$family jobs: build ${got._1}, add ${got._2}, remove ${got._3}")
+    assert(got._1 <= mb, s"$family build ran ${got._1} Spark jobs, budget $mb")
+    assert(got._2 <= ma, s"$family add ran ${got._2} Spark jobs, budget $ma")
+    assert(got._3 <= mr, s"$family remove ran ${got._3} Spark jobs, budget $mr")
+  }
+
+  test("job budget: IVF build, add and remove") {
+    val p = tmpDir("graft_life_ivf") + "/ix"
+    val got = lifecycle(
+      Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), p, nlist = 4),
+      Ann.addToIvfIndex(spark, p, odd, col("vec_id"), col("embedding")),
+      Ann.removeFromIvfIndex(spark, p, victims, col("id")),
+      Dedup.scoped(Ann.queryIvfIndex(
+        spark, p, queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()))
+    assert(Ann.indexIds(spark, p).count() == 37)
+    assertBudget("ivf", got)
+  }
+
+  test("job budget: IVF-PQ build, add and remove") {
+    val p = tmpDir("graft_life_ivfpq") + "/ix"
+    val got = lifecycle(
+      Pq.buildIvfPqIndex(even, col("vec_id"), col("embedding"), p, nlist = 4, m = 2, kSub = 8),
+      Pq.addToIvfPqIndex(spark, p, odd, col("vec_id"), col("embedding")),
+      Pq.removeFromIvfPqIndex(spark, p, victims, col("id")),
+      Dedup.scoped(Pq.queryIvfPqIndex(
+        spark, p, vectors, col("vec_id"), col("embedding"),
+        queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()))
+    assert(Ann.indexIds(spark, p).count() == 37)
+    assertBudget("ivfpq", got)
+  }
+
+  test("job budget: IVF-SQ8 build, add and remove") {
+    val p = tmpDir("graft_life_ivfsq8") + "/ix"
+    val got = lifecycle(
+      Sq.buildIvfSq8Index(even, col("vec_id"), col("embedding"), p, nlist = 4),
+      Sq.addToIvfSq8Index(spark, p, odd, col("vec_id"), col("embedding")),
+      Sq.removeFromIvfSq8Index(spark, p, victims, col("id")),
+      Dedup.scoped(Sq.queryIvfSq8Index(
+        spark, p, vectors, col("vec_id"), col("embedding"),
+        queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()))
+    assert(Ann.indexIds(spark, p).count() == 37)
+    assertBudget("ivfsq8", got)
+  }
+
+  test("job budget: BM25 remove") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps"),
+      (2L, "lazy dogs sleep all day"),
+      (3L, "quick brown foxes and quick dogs"),
+      (4L, ""),
+      (5L, "brown bears eat honey"),
+      (6L, "the fox den sits under the hill")).toDF("id", "text")
+    val p = tmpDir("graft_life_lex") + "/lex"
+    Bm25.buildLexIndex(docs, col("id"), col("text"), p, nBuckets = 4)
+    def query() = Bm25.queryLexIndex(
+      spark, p, Seq((1L, "quick fox")).toDF("q_id", "q"), col("q_id"), col("q"), k = 3).collect()
+    query()
+    val n = jobsDuring(Bm25.removeFromLexIndex(
+      spark, p, Seq(3L, 4L).toDF("id"), col("id")))
+    assert(Bm25.lexIndexIds(spark, p).count() == 4)
+    assert(Bm25.lexIndexStats(spark, p).nDocs == 4)
+    info(s"bm25 remove jobs: $n")
+    assert(n <= bm25RemoveBudget, s"BM25 remove ran $n Spark jobs, budget $bm25RemoveBudget")
+  }
+
+  test("plain-IVF add of a non-empty increment that lands no row is refused, index unchanged") {
+    val p = tmpDir("graft_life_ivf_refuse") + "/ix"
+    Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), p, nlist = 4)
+    def ids() = Ann.indexIds(spark, p).as[Long].collect().toSet
+    def codebook() = spark.read.parquet(s"$p/codebook")
+      .select("cell", "centroid_d", "members").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1), r.getLong(2))).toSet
+    val (ids0, cb0) = (ids(), codebook())
+    // wrong dimension: every row is dropped, nothing is written
+    val wrongDim = Seq((100L, Array(1f, 0f, 0f)), (101L, Array(0f, 1f, 0f)))
+      .toDF("vec_id", "embedding")
+    // and null vectors or null elements, which take no cell at all
+    val nulls = Seq((104L, null), (105L, Array[java.lang.Float](1f, null, 0f, 0f, 0f, 0f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    for (inc <- Seq(wrongDim, nulls)) {
+      val e = intercept[IllegalArgumentException](
+        Ann.addToIvfIndex(spark, p, inc, col("vec_id"), col("embedding")))
+      assert(e.getMessage.contains("nothing was written"), e.getMessage)
+      assert(ids() == ids0)
+      assert(codebook() == cb0)
+    }
+    // a partly valid increment still lands its valid rows; the
+    // wrong-dimension row alone is dropped
+    val mixed = Seq((102L, Array(1f, 0f, 0f, 0f, 0f, 0f, 0f, 0f)), (103L, Array(1f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    Ann.addToIvfIndex(spark, p, mixed, col("vec_id"), col("embedding"))
+    assert(ids() == ids0 + 102L)
+    // an empty increment is a no-op, not a refusal
+    Ann.addToIvfIndex(spark, p, mixed.limit(0), col("vec_id"), col("embedding"))
+    assert(ids() == ids0 + 102L)
+  }
+}

@@ -291,7 +291,7 @@ class SearchSpec extends SparkSpecBase {
     graft.operators.Bm25.addToLexIndex(
       spark, pRem, ddf.filter(col("doc_id") % 2 === 1), col("doc_id"), col("text"))
     graft.operators.Bm25.removeFromLexIndex(
-      spark, pRem, victims, col("doc_id"), col("text"))
+      spark, pRem, victims, col("doc_id"))
     val pRef = java.nio.file.Files.createTempDirectory("graft_lex_ref").toString + "/ix"
     graft.operators.Bm25.buildLexIndex(
       ddf.filter(col("doc_id") % 3 =!= 0), col("doc_id"), col("text"), pRef, nBuckets = 4)
@@ -321,12 +321,12 @@ class SearchSpec extends SparkSpecBase {
     parked.mkdirs()
     java.nio.file.Files.writeString(parked.toPath.resolve("part-stranded.parquet"), "x")
     val e = intercept[IllegalArgumentException](graft.operators.Bm25.removeFromLexIndex(
-      spark, pRem, ddf.filter(col("doc_id") === 7), col("doc_id"), col("text")))
+      spark, pRem, ddf.filter(col("doc_id") === 7), col("doc_id")))
     assert(e.getMessage.contains("crashed mid-swap"), e.getMessage)
     // file-less residue is cleared and the remove proceeds
     java.nio.file.Files.delete(parked.toPath.resolve("part-stranded.parquet"))
     graft.operators.Bm25.removeFromLexIndex(
-      spark, pRem, ddf.filter(col("doc_id") === 7), col("doc_id"), col("text"))
+      spark, pRem, ddf.filter(col("doc_id") === 7), col("doc_id"))
     assert(!res(pRem).exists(_._2 == 7L), "victim 7 still served after recovery remove")
     // rebuildLexStats is the universal stats repair: recompute from the
     // surviving corpus text and compare exactly
@@ -351,7 +351,7 @@ class SearchSpec extends SparkSpecBase {
     // come from the INDEX, so the beta postings still die — and the
     // stats decrement uses the INDEXED dl (4), not the supplied text's
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, Seq((1L, "alpha gamma")).toDF("doc_id", "text"), col("doc_id"), col("text"))
+      spark, p, Seq((1L, "alpha gamma")).toDF("doc_id", "text"), col("doc_id"))
     assert(hits("beta").isEmpty, "drifted victim text left a ghost posting")
     assert(hits("alpha") == Set(2L))
     val stDrift = spark.read.parquet(s"$p/stats").head()
@@ -362,7 +362,7 @@ class SearchSpec extends SparkSpecBase {
     // stats (an unconditional decrement would corrupt N forever)
     val stBefore = spark.read.parquet(s"$p/stats").collect().toSeq
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, Seq((99L, "alpha zeta")).toDF("doc_id", "text"), col("doc_id"), col("text"))
+      spark, p, Seq((99L, "alpha zeta")).toDF("doc_id", "text"), col("doc_id"))
     assert(spark.read.parquet(s"$p/stats").collect().toSeq == stBefore,
       "unindexed victim decremented stats")
     assert(hits("alpha") == Set(2L))
@@ -378,7 +378,7 @@ class SearchSpec extends SparkSpecBase {
       assert(e.getMessage.contains("recover it before serving"), e.getMessage)
       // the next remove refuses the same tree instead of cementing loss
       val e2 = intercept[Exception](graft.operators.Bm25.removeFromLexIndex(
-        spark, p, Seq((2L, "alpha delta")).toDF("doc_id", "text"), col("doc_id"), col("text")))
+        spark, p, Seq((2L, "alpha delta")).toDF("doc_id", "text"), col("doc_id")))
       assert(e2.getMessage.contains("recover"), e2.getMessage)
       java.nio.file.Files.delete(parked.toPath.resolve("part-stranded.parquet"))
     }
@@ -474,7 +474,7 @@ class SearchSpec extends SparkSpecBase {
     // removal discipline carries over to the positional payload: the
     // victim's occurrences disappear from phrase serving too
     graft.operators.Bm25.removeFromLexIndex(
-      spark, path, ddf.filter(col("doc_id") === 2), col("doc_id"), col("text"))
+      spark, path, ddf.filter(col("doc_id") === 2), col("doc_id"))
     val afterRemove = graft.operators.Bm25.queryPhraseIndex(
       spark, path, qdf, col("q_id"), col("qtext"), k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -543,19 +543,19 @@ class SearchSpec extends SparkSpecBase {
     // used to pass the trusted-empty branch and decrement N. The
     // membership record proves it was never indexed → complete no-op.
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, Seq((99L, "")).toDF("doc_id", "text"), col("doc_id"), col("text"))
+      spark, p, Seq((99L, "")).toDF("doc_id", "text"), col("doc_id"))
     assert(stats() == ((3L, 3L)), "never-indexed empty-text victim decremented stats")
     // an indexed-empty doc whose caller text DRIFTED to non-empty is
     // still counted (membership is consulted, not the caller's text) —
     // the residual blind spot of the trusted-text contract, closed
     graft.operators.Bm25.removeFromLexIndex(
       spark, p, Seq((2L, "gained tokens later")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"))
+      col("doc_id"))
     assert(stats() == ((2L, 3L)), "indexed-empty victim with drifted text not decremented")
     // retrying the SAME remove decrements nothing: the membership
     // record was rewritten minus the victim before the sidecar
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, Seq((2L, "")).toDF("doc_id", "text"), col("doc_id"), col("text"))
+      spark, p, Seq((2L, "")).toDF("doc_id", "text"), col("doc_id"))
     assert(stats() == ((2L, 3L)), "re-removing an empty victim double-decremented")
     // lexIndexIds: the id surface unions postings and empty membership
     val idsAll = java.nio.file.Files.createTempDirectory("graft_lex_ids").toString + "/ix"
@@ -596,7 +596,7 @@ class SearchSpec extends SparkSpecBase {
     refuses("empty__old")(graft.operators.Bm25.lexIndexIds(spark, p))
     refuses("empty__old")(graft.operators.Bm25.lexIndexStats(spark, p))
     refuses("empty__old")(graft.operators.Bm25.removeFromLexIndex(
-      spark, p, Seq((2L, "")).toDF("doc_id", "text"), col("doc_id"), col("text")))
+      spark, p, Seq((2L, "")).toDF("doc_id", "text"), col("doc_id")))
     val filesBefore = postingFiles()
     refuses("empty__old")(graft.operators.Bm25.addToLexIndex(
       spark, p, Seq((5L, "delta"), (6L, "")).toDF("doc_id", "text"), col("doc_id"), col("text")))
@@ -632,27 +632,27 @@ class SearchSpec extends SparkSpecBase {
     // rewritten, stats sidecar NOT written
     val vic = Seq((3L, "gamma delta epsilon"), (2L, "")).toDF("doc_id", "text")
     intercept[IllegalStateException](graft.operators.Bm25.removeFromLexIndex(
-      spark, p, vic, col("doc_id"), col("text"), crashBeforeStatsSidecar = true))
+      spark, p, vic, col("doc_id"), crashBeforeStatsSidecar = true))
     assert(new java.io.File(s"$p/remove_intent").exists, "intent missing after crash")
     assert(stats() == ((3L, 5L)), "sidecar should be stale in the crash window")
     assert(hits("gamma").isEmpty, "victim postings survived the pre-crash swap")
     // retrying the SAME remove resumes the intent first, then finds
     // nothing left to remove: stats converge to exactly ONE remove
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, vic, col("doc_id"), col("text"))
+      spark, p, vic, col("doc_id"))
     assert(stats() == ((1L, 2L)),
       "retry after crash-before-sidecar did not converge to the one-remove stats")
     assert(!new java.io.File(s"$p/remove_intent").exists, "intent not cleaned up")
     assert(hits("alpha") == Set(1L))
     // a THIRD run is a complete no-op (converged fixed point)
     graft.operators.Bm25.removeFromLexIndex(
-      spark, p, vic, col("doc_id"), col("text"))
+      spark, p, vic, col("doc_id"))
     assert(stats() == ((1L, 2L)), "converged remove re-decremented")
     // other mutating verbs also resume a pending intent: crash a
     // remove of doc 1, then let an ADD complete it before its own work
     intercept[IllegalStateException](graft.operators.Bm25.removeFromLexIndex(
       spark, p, Seq((1L, "alpha beta")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"), crashBeforeStatsSidecar = true))
+      col("doc_id"), crashBeforeStatsSidecar = true))
     graft.operators.Bm25.addToLexIndex(
       spark, p, Seq((4L, "zeta eta")).toDF("doc_id", "text"), col("doc_id"), col("text"))
     assert(stats() == ((1L, 2L)),

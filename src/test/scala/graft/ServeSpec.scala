@@ -689,7 +689,7 @@ class ServeSpec extends SparkSpecBase {
       check("add")(client, port)
       val victims = Seq(2L, 8L)
       Bm25.removeFromLexIndex(spark, lex, df(corpus.filter(r => victims.contains(r._1))),
-        col("id"), col("text"))
+        col("id"))
       Ann.removeFromIvfIndex(spark, ann, victims.toDF("id"), col("id"))
       corpus = corpus.filterNot(r => victims.contains(r._1))
       check("remove")(client, port)

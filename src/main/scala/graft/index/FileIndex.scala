@@ -1,8 +1,16 @@
 package graft.index
 
+import java.security.MessageDigest
+import java.util.HexFormat
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.Compact
 import graft.functions.Glob
 
 /** File indexing & duplicate detection (SURVEY §2.1 S7-S10, §2.4 A1-A3) —
@@ -13,8 +21,9 @@ import graft.functions.Glob
   * Scale design: `binaryFile` lists and reads files across executors;
   * selecting only metadata columns prunes content IO entirely (the
   * reference's "lazy hash" heuristic is Catalyst column pruning here).
-  * The index persists as Parquet partitioned-friendly columns; "upsert"
-  * is a window dedup keeping the newest row per path.
+  * The index persists as one path-ordered Parquet lake, replaced
+  * whole on each [[save]]; "upsert" keeps the INCOMING row for every
+  * path it carries (see [[upsert]]).
   */
 object FileIndex {
 
@@ -46,35 +55,59 @@ object FileIndex {
   private val HashNames = Map(
     "md5" -> "MD5", "sha1" -> "SHA-1", "sha256" -> "SHA-256", "sha512" -> "SHA-512")
 
+  /** The session's Hadoop configuration as the hash read sees it: the
+    * SparkContext's entries overlaid with the session's SQL conf (the
+    * same layering the `binaryFile` listing reads with), so
+    * `spark.hadoop.*`, s3a credentials and custom `fs.<scheme>.impl`
+    * settings reach the hash too. Shipped once per scan as a broadcast
+    * of its entries; [[conf]] is built at most once per broadcast and
+    * JVM, never per file: a `Configuration` parses `core-default.xml`
+    * on its first lookup. The one place `src/main` constructs one
+    * (pinned by SourceLintSpec).
+    */
+  private final class HashConf(entries: Map[String, String]) extends Serializable {
+    @transient lazy val conf: Configuration = {
+      val c = new Configuration(false)
+      entries.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+  }
+
+  /** One 1 MiB read buffer per task thread, reused across files. */
+  private val readBuf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](1 << 20))
+
   /** Streaming content hash: the file flows through MessageDigest in
     * 1 MiB chunks via the Hadoop FS API — the content is NEVER
     * materialized. binaryFile's `content` column is one JVM byte array
     * per file, so a ≥ 2 GiB file fails the scan outright and multi-GB
     * files OOM executors — exactly the large media/backup files a
     * dedup index most needs to hash (the reference also hashes in
-    * chunks, file_indexing_system.py `_calculate_hash`).
+    * chunks, file_indexing_system.py `_calculate_hash`). Per file it
+    * pays one open and the bytes: the file system comes from the
+    * scan's shared `conf` ([[HashConf]]), the buffer is the thread's
+    * ([[readBuf]]), and the lowercase hex is `HexFormat`'s.
     */
-  private[index] def streamHashHex(path: String, jcaName: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val md = java.security.MessageDigest.getInstance(jcaName)
-    val in = fs.open(p)
+  private[index] def streamHashHex(path: String, jcaName: String, conf: Configuration): String = {
+    val p = new Path(path)
+    val md = MessageDigest.getInstance(jcaName)
+    val in = p.getFileSystem(conf).open(p)
     try {
-      val buf = new Array[Byte](1 << 20)
+      val buf = readBuf.get()
       var n = in.read(buf)
       while (n >= 0) {
         if (n > 0) md.update(buf, 0, n)
         n = in.read(buf)
       }
     } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
+    HexFormat.of().formatHex(md.digest())
   }
 
   /** Full content index: metadata + content hash (sha256 by default —
     * the reference's HashAlgorithm enum maps to md5/sha1/sha2). The
     * hash is computed by [[streamHashHex]] over the metadata listing:
     * same distributed per-file parallelism as the binaryFile content
-    * scan, bounded memory at ANY file size.
+    * scan, bounded memory at ANY file size. Each evaluation of the
+    * frame reads every file once; [[save]] evaluates it once.
     */
   def indexWithHash(
       spark: SparkSession,
@@ -83,7 +116,10 @@ object FileIndex {
       glob: Option[String] = None): DataFrame = {
     val jca = HashNames.getOrElse(algorithm.toLowerCase,
       throw new IllegalArgumentException(s"Unknown hash algorithm: $algorithm"))
-    val hashUdf = udf((p: String) => streamHashHex(p, jca))
+    val shipped = spark.sparkContext.broadcast(new HashConf(
+      spark.sparkContext.hadoopConfiguration.iterator().asScala
+        .map(e => e.getKey -> e.getValue).toMap ++ spark.conf.getAll))
+    val hashUdf = udf((p: String) => streamHashHex(p, jca, shipped.value.conf))
     indexMetadata(spark, dir, glob)
       .select(
         col("file_path"), col("file_name"), col("file_size"), col("modified_time"),
@@ -184,9 +220,22 @@ object FileIndex {
   def searchBySize(index: DataFrame, size: Long): DataFrame =
     index.filter(col("file_size") === size).orderBy("file_path")
 
-  /** Persist/export ordered by path (S10). */
-  def save(index: DataFrame, path: String): Unit =
-    index.orderBy("file_path").write.mode(SaveMode.Overwrite).parquet(path)
+  /** Persist ordered by path (S10), crash-safe: the index is written
+    * beside `path` and swapped in ([[Compact.replaceDir]]), so a write
+    * that fails midway leaves the previous index as it was, and an
+    * upsert of `path` into itself reads the old rows while it writes.
+    * One shuffle to a single sorted partition, one file: the input is
+    * evaluated once (a global `orderBy` samples it first, which would
+    * run [[indexWithHash]]'s hash read twice), in two Spark jobs.
+    */
+  def save(index: DataFrame, path: String): Unit = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(index.sparkSession.sparkContext.hadoopConfiguration)
+    Compact.replaceDir(fs, fs.makeQualified(target), "save_") { tmp =>
+      index.repartition(1).sortWithinPartitions("file_path")
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    }
+  }
 
   def export(index: DataFrame, path: String, format: String): Unit = format match {
     case "json" => index.orderBy("file_path").write.mode(SaveMode.Overwrite).json(path)

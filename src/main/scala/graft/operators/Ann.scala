@@ -144,10 +144,9 @@ object Ann {
       maxFit: Long = 100000L): DataFrame = {
     val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
     val codebook = fitCodebook(b, nlist, seed, maxFit)
-    val assigned = b
-      .withColumn("cell", cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull) // null vec/element: no cell, like a null join key
-      .select(col("b_id"), col("b_emb"), col("cell"))
+    // the persisted build's encode: null, null-element and
+    // wrong-dimension rows take no cell and are dropped alike
+    val assigned = ivfRows(b, codebook)
     // Probe only LIVE cells -- cells holding >= 1 scoreable (norm > 0)
     // member. The quantizer can leave dead centroids (an empty Lloyd
     // cell keeps its previous position, possibly coincident with a
@@ -158,7 +157,7 @@ object Ann {
     // query time; [[buildIvfIndex]] gets the same liveness for free as
     // write-time stats.
     val liveCells = assigned
-      .filter(Vectors.norm2(col("b_emb")) > 0)
+      .filter(col("b_nrm") > 0)
       .select("cell").distinct()
     val centDf = centroidFrame(base.sparkSession, codebook)
       .join(broadcast(liveCells), "cell")
@@ -166,7 +165,6 @@ object Ann {
     requireQueryDim(q, codebook(0).length)
     val probed = topProbeCells(q, centDf, nprobe).join(q, "q_id")
     val scored = assigned
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
       .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
       .join(broadcast(probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
       .select(col("q_id"), col("b_id"),
@@ -292,8 +290,9 @@ object Ann {
     * dimension: a ragged query folds to NULL against every centroid and
     * would otherwise read as "no neighbors" — a silent drop is the worst
     * failure mode for a correctness-first ANN path (base-side ragged
-    * rows keep their documented null-cell drop). One cheap narrow job
-    * (reads only array lengths, stops at the first offender).
+    * rows are dropped before they take a cell, see [[ivfRows]]). One
+    * cheap narrow job (reads only array lengths, stops at the first
+    * offender).
     */
   private[operators] def requireQueryDim(q: DataFrame, dim: Int): Unit = {
     val bad = q.filter(size(col("q_emb")) =!= dim)
@@ -364,11 +363,16 @@ object Ann {
       (codebook, Map.empty), increment = None, ivfNothingWritten(path, codebook))(())
   }
 
-  /** Plain-IVF encode: (b_id, b_emb, cell, b_nrm); a null vector or a
-    * null element has no cell and is dropped (see knnIvf).
+  /** Plain-IVF encode, shared by the build, the add and [[knnIvf]]:
+    * (b_id, b_emb, cell, b_nrm). A null vector or a null element has no
+    * cell and is dropped; so is a vector whose length is not the
+    * codebook's dimension, which would take a cell by its prefix
+    * distance, count as a live member and never score (every dot with
+    * a query is NULL).
     */
   private def ivfRows(b: DataFrame, codebook: Array[Array[Double]]): DataFrame =
-    b.withColumn("cell", cellExpr(col("b_emb"), codebook))
+    b.filter(size(col("b_emb")) === codebook(0).length)
+      .withColumn("cell", cellExpr(col("b_emb"), codebook))
       .filter(col("cell").isNotNull)
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
 
@@ -407,11 +411,7 @@ object Ann {
     // worst failure mode)
     require(readBaseLake(spark, path).schema.fieldNames.contains("b_emb"),
       s"$path/base does not hold vector rows (no b_emb column) -- not a plain IVF index")
-    // a row of the wrong dimension would take a cell by its prefix
-    // distance yet never score (every dot with a query is NULL):
-    // dropped, as the PQ and SQ8 adds drop it
     val inc = rows.select(id.as("b_id"), vec.as("b_emb"))
-      .filter(size(col("b_emb")) === sidecar._1(0).length)
     writeIvfLake(spark, path, ivfRows(inc, sidecar._1), col("b_nrm") > 0, sidecar,
       Some(rows), ivfNothingWritten(path, sidecar._1))(())
   }
@@ -528,8 +528,9 @@ object Ann {
     withVictims(fs, bp, victims.select(vicId.as("b_id")).distinct()) { vic =>
       val sidecar =
         if (withOccupancy) Some(readCodebookSidecar(spark, path)) else None
+      val lake = readBaseLake(spark, path)
       val (affected, tmpCnt) = rewriteLeavesWithout(
-        readBaseLake(spark, path), basePath, vic, "b_id", partCol, tmpRoot, scoreable)
+        lake, basePath, vic, "b_id", partCol, tmpRoot, scoreable)
       if (affected.nonEmpty) {
         // the DECREMENTED sidecar is written BEFORE the swaps: occupancy
         // must never overcount a swapped-out cell (members > 0 with no
@@ -551,6 +552,9 @@ object Ann {
                   else prevMembers.getOrElse(c, 0L))
           }.toMap
           writeCodebookSidecar(spark, path, codebook, members)
+          // the rewrite keeps the lake's schema; the sidecar moved its
+          // generation
+          recordBaseSchema(spark, path, lake.schema)
         }
         // per-leaf two-rename swaps (metadata ops); a fully-emptied leaf
         // is parked then dropped — its occupancy row (if any) is already 0
@@ -656,6 +660,9 @@ object Ann {
     *  5. `quantizerSidecar` (the `pq`/`sq` dir, also the layout
     *     marker), then the codebook sidecar LAST: `sidecar`'s
     *     centroids, its occupancy (empty on build) plus what landed.
+    *  6. The lake schema `encoded` was written with is recorded for the
+    *     new codebook generation ([[recordBaseSchema]]), so the next
+    *     [[readBaseLake]] pays no footer-inference job.
     */
   private[operators] def writeIvfLake(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -685,6 +692,8 @@ object Ann {
     val (codebook, prior) = sidecar
     writeCodebookSidecar(spark, path, codebook, codebook.indices
       .map(c => c -> (prior.getOrElse(c, 0L) + delta.getOrElse(c, 0L))).toMap)
+    recordBaseSchema(spark, path, org.apache.spark.sql.types.StructType(
+      encoded.schema.filter(_.name != "cell") ++ encoded.schema.filter(_.name == "cell")))
   }
 
   /** Cluster rows by the partition key before a `partitionBy` write —
@@ -1049,8 +1058,9 @@ object Ann {
 
   /** The cell-partitioned base lake of a persisted index, listed on
     * every read; its schema is resident per codebook generation (every
-    * writer of the base rewrites the codebook sidecar), which spares
-    * the footer-inference job per read.
+    * writer of the base rewrites the codebook sidecar, and records the
+    * schema it wrote: [[recordBaseSchema]]), which spares the
+    * footer-inference job per read.
     */
   private[operators] def readBaseLake(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
@@ -1058,6 +1068,16 @@ object Ann {
     spark.read.schema(SidecarMemo(spark, s"$path/codebook", "base")(
       spark.read.parquet(lake).schema)).parquet(lake)
   }
+
+  /** Record `written` — the base lake's columns as written, partition
+    * column last — for the codebook generation a write just made, in
+    * the form parquet inference reads back (every field nullable).
+    */
+  private def recordBaseSchema(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      written: org.apache.spark.sql.types.StructType): Unit =
+    SidecarMemo.record(spark, s"$path/codebook", "base",
+      org.apache.spark.sql.GraftColumnShim.asNullable(written))
 
   /** Probe + prune for a persisted index: the probe result is needed
     * TWICE (the pruning cell list and the scoring join). It is

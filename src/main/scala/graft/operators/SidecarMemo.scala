@@ -49,14 +49,27 @@ private[graft] object SidecarMemo {
     val dir = new Path(sidecar)
     val before = token(spark, dir)
     if (before.isEmpty) return load
-    val key = (dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(dir).toString, slot)
-    val hit = entries.get(key)
+    val k = key(spark, dir, slot)
+    val hit = entries.get(k)
     if (hit != null && hit.token == before) hit.value.asInstanceOf[A]
     else {
       val v = load
-      if (token(spark, dir) == before) entries.put(key, Entry(before, v))
+      if (token(spark, dir) == before) entries.put(k, Entry(before, v))
       v
     }
   }
+
+  /** Keep `value` for the sidecar's current generation without loading
+    * it: a writer that just moved the generation and knows what `slot`
+    * holds for it (the lake schema it wrote) saves the next read the
+    * load.
+    */
+  def record(spark: SparkSession, sidecar: String, slot: String, value: Any): Unit = {
+    val dir = new Path(sidecar)
+    val now = token(spark, dir)
+    if (now.nonEmpty) entries.put(key(spark, dir, slot), Entry(now, value))
+  }
+
+  private def key(spark: SparkSession, dir: Path, slot: String): (String, String) =
+    (dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir).toString, slot)
 }

@@ -12,6 +12,11 @@ object GraftColumnShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `schema` with every field, array element and map value nullable —
+    * the form a parquet read infers for what was written with it.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** The persisted internal RDD behind a `localCheckpoint`ed frame —
     * `Dataset.localCheckpoint` persists the PHYSICAL InternalRow RDD
     * inside a `LogicalRDD` leaf, which `Dataset.rdd` does NOT return (it

@@ -8,7 +8,9 @@ import graft.operators.{Ann, Bm25, Dedup, Pq, Sq}
 /** The persisted-index lifecycle verbs (build → add → remove) of the
   * IVF, IVF-PQ and IVF-SQ8 families and the BM25 remove: how many Spark
   * jobs each verb runs on a tiny fixed index, pinned as upper bounds,
-  * and the write core's refusal of an increment that wrote nothing.
+  * the base-lake schema every write records, the drop of wrong-dimension
+  * base rows, and the write core's refusal of an increment that wrote
+  * nothing.
   */
 class IndexLifecycleSpec extends SparkSpecBase {
 
@@ -16,25 +18,6 @@ class IndexLifecycleSpec extends SparkSpecBase {
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** Spark jobs launched while `body` runs — counted by a listener, the
-    * bus drained on both sides so no earlier job leaks in and no late
-    * event is missed.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** 40 dim-8 vectors in four loose clusters, ids 0..39. */
   private lazy val vectors: DataFrame = {
@@ -142,6 +125,50 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(Bm25.lexIndexStats(spark, p).nDocs == 4)
     info(s"bm25 remove jobs: $n")
     assert(n <= bm25RemoveBudget, s"BM25 remove ran $n Spark jobs, budget $bm25RemoveBudget")
+  }
+
+  test("every IVF-family write records the base-lake schema parquet infers, through compaction") {
+    def recorded(p: String): org.apache.spark.sql.types.StructType =
+      graft.operators.SidecarMemo(spark, s"$p/codebook", "base")(
+        fail(s"no base schema resident for $p"))
+    def check(p: String, after: String): Unit =
+      assert(recorded(p) == spark.read.parquet(s"$p/base").schema, s"after $after")
+    def lifecycle(family: String)(build: String => Unit, add: String => Unit,
+        remove: String => Unit): Unit = {
+      val p = tmpDir(s"graft_life_schema_$family") + "/ix"
+      build(p); check(p, s"$family build")
+      add(p); check(p, s"$family add")
+      remove(p); check(p, s"$family remove")
+      Ann.compactIndex(spark, p); check(p, s"$family compact")
+    }
+    lifecycle("ivf")(
+      Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), _, nlist = 4),
+      Ann.addToIvfIndex(spark, _, odd, col("vec_id"), col("embedding")),
+      Ann.removeFromIvfIndex(spark, _, victims, col("id")))
+    lifecycle("ivfpq")(
+      Pq.buildIvfPqIndex(even, col("vec_id"), col("embedding"), _, nlist = 4, m = 2, kSub = 8),
+      Pq.addToIvfPqIndex(spark, _, odd, col("vec_id"), col("embedding")),
+      Pq.removeFromIvfPqIndex(spark, _, victims, col("id")))
+    lifecycle("ivfsq8")(
+      Sq.buildIvfSq8Index(even, col("vec_id"), col("embedding"), _, nlist = 4),
+      Sq.addToIvfSq8Index(spark, _, odd, col("vec_id"), col("embedding")),
+      Sq.removeFromIvfSq8Index(spark, _, victims, col("id")))
+  }
+
+  test("a wrong-dimension base row takes no cell: not in the built index, not in knnIvf") {
+    val ragged = Seq((100L, Array(1f, 0f, 0f)), (101L, Array.fill(9)(0.5f))).toDF("vec_id", "embedding")
+    val base = even.unionByName(ragged)
+    val p = tmpDir("graft_life_ragged") + "/ix"
+    Ann.buildIvfIndex(base, col("vec_id"), col("embedding"), p, nlist = 4)
+    assert(Ann.indexIds(spark, p).as[Long].collect().toSet == (0L until 40L by 2).toSet)
+    assert(Ann.indexOccupancy(spark, p).occupancy == 20)
+    // persisted ≡ on-the-fly over the same ragged base
+    def rows(df: DataFrame) = df.select("q_id", "b_id", "rank").as[(Long, Long, Int)].collect().toSet
+    val onTheFly = rows(Ann.knnIvf(base, col("vec_id"), col("embedding"),
+      queries, col("vec_id"), col("embedding"), k = 3, nlist = 4, nprobe = 2))
+    val persisted = Dedup.scoped(rows(Ann.queryIvfIndex(
+      spark, p, queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2)))
+    assert(onTheFly.nonEmpty && onTheFly == persisted)
   }
 
   test("plain-IVF add of a non-empty increment that lands no row is refused, index unchanged") {

@@ -1,0 +1,48 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source rules the compiler cannot check, read from `src/main`. */
+class SourceLintSpec extends AnyFunSuite {
+
+  private def mainSources: Seq[Path] = {
+    val walk = Files.walk(Paths.get("src", "main"))
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && (p.toString.endsWith(".scala") || p.toString.endsWith(".java")))
+      .toList
+    finally walk.close()
+  }
+
+  /** Code lines of a source file: line comments, scaladoc and block
+    * comment lines are dropped, so prose may name what code may not do.
+    */
+  private def codeLines(p: Path): Seq[(String, Int)] =
+    Files.readAllLines(p).asScala.toSeq.zipWithIndex
+      .map { case (l, i) => (l.replaceAll("//.*$", "").trim, i + 1) }
+      .filterNot { case (l, _) => l.startsWith("*") || l.startsWith("/*") }
+
+  test("a Hadoop Configuration is constructed only by the file index's hashing context") {
+    // A fresh Configuration parses core-default.xml on its first lookup
+    // and knows none of the session's settings (spark.hadoop.*, s3a
+    // credentials, custom fs.<scheme>.impl): code reaches the file
+    // system through the session's configuration instead.
+    val construct =
+      """new\s+(org\.apache\.hadoop\.conf\.Configuration|Configuration|(org\.apache\.hadoop\.mapred\.)?JobConf)\s*\(""".r
+    val owner = Paths.get("src", "main", "scala", "graft", "index", "FileIndex.scala")
+    val sources = mainSources
+    assert(sources.contains(owner), s"$owner not found under src/main")
+    val hits = for {
+      p <- sources
+      (l, n) <- codeLines(p)
+      if construct.findFirstIn(l).isDefined
+    } yield (p, n)
+    val outside = hits.filter(_._1 != owner)
+    assert(outside.isEmpty, "Hadoop Configuration constructed outside FileIndex.HashConf: " +
+      outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
+    assert(hits.count(_._1 == owner) == 1, s"FileIndex constructs ${hits.count(_._1 == owner)} Configurations, expected 1")
+  }
+}

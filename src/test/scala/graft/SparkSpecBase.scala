@@ -21,6 +21,25 @@ abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Spark jobs launched while `body` runs — counted by a listener, the
+    * bus drained on both sides so no earlier job leaks in and no late
+    * event is missed.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   override def afterAll(): Unit = {
     // keep the session for other suites (getOrCreate shares it)
     super.afterAll()

@@ -1,27 +1,37 @@
 package graft.etl
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Small-files compaction for parquet datasets.
   *
   * Long-lived lakes accumulate small files (streaming micro-batches,
   * per-task outputs, incremental upserts) until listing and footer
   * overhead dominates scan time — at 100 TB the #1 operational decay
-  * mode. Compaction rewrites a directory into ~`targetBytes` files:
-  * read → repartition(ceil(bytes/target)) → write.
+  * mode. Compaction rewrites a directory into ~`targetBytes` files.
   *
   * Scope and guarantees:
-  *  - FLAT datasets (no partition subdirectories). A partitioned layout
-  *    compacts per partition directory — compact the leaf dirs, not the
-  *    root, or the partition column (encoded in dir names, absent from
-  *    the files) would be silently dropped in the rewrite.
-  *  - NOT transactional: the rewrite lands in a sibling temp dir and is
-  *    swapped in with two renames under an intent journal, so a crash
-  *    in the swap window parks the old data at `<path>__compact_old`
-  *    (never silently lost) and the next [[compact]] of the same path
+  *  - Only FRAGMENTED directories are touched: one that holds no more
+  *    files than its bytes call for, n = max(1, ceil(bytes /
+  *    targetBytes)), is not read, rewritten or swapped (Delta Lake's
+  *    OPTIMIZE skips single-file bins the same way).
+  *  - One core, [[rewriteFragmented]], rewrites every fragmented
+  *    directory of a pass in one read and one write, a fixed number of
+  *    Spark jobs, and gates them all on their parquet footer row counts
+  *    before the first swap.
+  *  - NOT transactional: each rewritten directory is swapped in with
+  *    two renames, so a crash in the swap window parks the old data at
+  *    `<path>__compact_old` (never silently lost). The flat swap is
+  *    intent-journaled and the next [[compact]] of the same path
   *    converges it ([[convergeCrashedSwap]]) before recompacting.
   *    Concurrent readers mid-swap see a missing directory — coordinate
   *    externally, or use an ACID table format when that matters.
@@ -54,9 +64,15 @@ object Compact {
   /** Non-metadata data file — single owner for the before/after
     * counts, which must agree on what "a file" is.
     */
-  private def isData(f: org.apache.hadoop.fs.FileStatus): Boolean =
+  private def isData(f: FileStatus): Boolean =
     f.isFile && !isHiddenName(f.getPath.getName)
 
+  /** Compact one FLAT dataset directory (no partition subdirectories —
+    * a partitioned root goes through [[compactPartitioned]], or its
+    * partition column, encoded in dir names and absent from the files,
+    * would be dropped). Returns the stats of the rewrite, or equal
+    * before/after counts when the directory was not fragmented.
+    */
   def compact(
       spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactStats = {
@@ -64,71 +80,147 @@ object Compact {
     // siblings of the NORMALIZED path: string concat on a trailing-slash
     // input would nest them inside the dataset and fail the swap after
     // the full rewrite
+    val tmp = new Path(p.getParent, p.getName + "__compact_tmp")
     val old = new Path(p.getParent, p.getName + "__compact_old")
     // a crashed previous compaction converges here instead of wedging:
     // the original is restored (mid-swap crash) or the landed rewrite
     // is kept (post-swap crash), then this run recompacts normally
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     convergeCrashedSwap(fs, p, old, "compact")
-    compactDir(spark, p, targetBytes,
-      tmp = new Path(p.getParent, p.getName + "__compact_tmp"),
-      old = old, journaled = true)
-  }
-
-  /** Rewrite `p` into `tmp`, gate, then swap via `old`. The swap dirs
-    * are CALLER-PLACED: flat [[compact]] puts them next to the dataset;
-    * [[compactPartitioned]] puts them OUTSIDE the lake root — a work
-    * dir next to a leaf would itself read as a partition directory
-    * (duplicated rows mid-rewrite, and a crash-parked `k=v__compact_old`
-    * would poison the inferred partition values forever).
-    */
-  private def compactDir(
-      spark: SparkSession, p: Path, targetBytes: Long,
-      tmp: Path, old: Path, journaled: Boolean = false): CompactStats = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listing = fs.listStatus(p)
     // subdir check FIRST: a partitionBy root holds only _SUCCESS plus
     // partition dirs, and the "no data files" message would mislead.
     // HIDDEN subdirs (`_temporary` residue from a crashed append,
     // `_batches` commit markers) are metadata, not partitions — the
-    // same [[isHiddenName]] rule [[compactPartitioned]]'s leaves()
-    // applies; refusing on them would wedge exactly the healthy leaf
-    // that leaves() just classified as compactable
+    // same [[isHiddenName]] rule [[dataLeaves]] applies
     require(listing.forall(s => s.isFile || isHiddenName(s.getPath.getName)),
       s"$p has subdirectories — compact partition leaf dirs individually")
-    val parts = listing.filter(isData)
+    val parts = listing.filter(isData).toSeq
     require(parts.nonEmpty, s"no data files to compact under $p")
-    val bytes = parts.map(_.getLen).sum
-    val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    // mergeSchema: a leaf whose files straddle a schema evolution
-    // (the dedup ledger's untagged → batch_tag-tagged generations)
-    // must rewrite the UNION of columns — plain inference samples one
-    // file and would silently drop the other generation's columns
-    val src = spark.read.option("mergeSchema", "true").parquet(p.toString)
-    val nSrc = src.count()
-    src.repartition(n).write.mode("overwrite").parquet(tmp.toString)
-    // row-count gate BEFORE the swap: a silently lossy rewrite (e.g.
-    // ignoreCorruptFiles=true eating a bad file, or a reader quirk)
-    // must abort with the original untouched — compaction is the one
-    // operator here that deletes data, so it must prove the replacement
-    // first. Both counts are parquet metadata-weight, cheap next to the
-    // rewrite itself.
-    val nTmp = spark.read.parquet(tmp.toString).count()
-    if (nTmp != nSrc) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compaction of $p would lose rows ($nSrc read, $nTmp rewritten) — aborted, original untouched")
+    try rewriteFragmented(spark, fs, p, Seq(p -> parts), targetBytes, tmp) match {
+      case Seq((_, stats)) =>
+        swapIntoJournaled(fs, tmp, p, old)
+        stats
+      case _ => CompactStats(parts.length, parts.map(_.getLen).sum, parts.length)
+    } finally fs.delete(tmp, true): Unit
+  }
+
+  /** `leaf`'s path relative to `root` ("" for the root itself). */
+  private def relTo(root: Path, leaf: Path): String =
+    leaf.toUri.getPath.stripPrefix(root.toUri.getPath.stripSuffix("/")).stripPrefix("/")
+
+  /** Row count a parquet file's footer records. A file without a
+    * readable footer aborts the compaction: it may be the only copy of
+    * its rows, so it is never skipped the way `ignoreCorruptFiles`
+    * readers skip it.
+    */
+  private def footerRows(
+      conf: org.apache.hadoop.conf.Configuration, f: FileStatus): Long = {
+    val r =
+      try ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      catch {
+        case NonFatal(e) => throw new IllegalStateException(
+          s"cannot read the parquet footer of ${f.getPath} — compaction aborted, original untouched", e)
+      }
+    try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+    finally r.close()
+  }
+
+  /** The one compaction core. `leaves` are directories under `root`
+    * (the root itself for a flat dataset, else `k=v` partition leaves)
+    * with their data files. A leaf with no more files than the
+    * n = max(1, ceil(bytes / targetBytes)) its bytes call for is
+    * skipped. The rest are rewritten together:
+    *  - the schema is resolved once, as the `mergeSchema` union of the
+    *    selected files (a leaf straddling a schema evolution — the
+    *    dedup ledger's untagged → tagged generations — keeps every
+    *    column), and their row counts come from the parquet footers;
+    *  - one read of the selected files with `basePath = root`, the
+    *    partition columns given as strings so a `bucket=00` or
+    *    `bucket=1e5` is never re-typed and written back as `0` or
+    *    `100000.0`;
+    *  - one `repartition` by the partition columns (plus a salt of
+    *    n buckets for the leaves whose bytes call for n > 1 files) and
+    *    one `partitionBy` write into `tmpRoot`;
+    *  - the gate: the rewrite must land exactly the selected leaves,
+    *    each with the row count of its source footers, or the pass
+    *    throws with every leaf untouched.
+    * Returns (source leaf, stats) for each rewritten leaf; its gated
+    * replacement sits at `tmpRoot/<relative leaf>`. The caller swaps
+    * it in and clears `tmpRoot` whether or not this throws.
+    */
+  private def rewriteFragmented(
+      spark: SparkSession, fs: FileSystem, root: Path,
+      leaves: Seq[(Path, Seq[FileStatus])], targetBytes: Long,
+      tmpRoot: Path): Seq[(Path, CompactStats)] = {
+    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
+    val chosen = leaves.flatMap { case (dir, files) =>
+      val n = math.max(1L, (files.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
+      if (files.length > n) Some((relTo(root, dir), dir, files, n)) else None
     }
-    val after = fs.listStatus(tmp).count(isData)
-    // flat compaction journals its swap (converge-on-rerun); the
-    // partitioned path keeps the bare swap — its per-leaf parks live
-    // under ONE outside-the-lake root with their own recovery contract
-    if (journaled) swapIntoJournaled(fs, tmp, p, old)
-    else swapInto(fs, tmp, p, old)
-    CompactStats(parts.length, bytes, after)
+    if (chosen.isEmpty) return Seq.empty
+    // partition columns from the leaf dir names, values as the string
+    // read below yields them (unescaped; the Hive default name is null)
+    val specs = chosen.map { case (rel, _, _, _) =>
+      rel.split("/").filter(_.nonEmpty).toSeq.map { seg =>
+        val eq = seg.indexOf('=')
+        require(eq > 0 && eq < seg.length - 1,
+          s"$root/$rel is not a k=v partition directory — compact it explicitly with compact()")
+        val v = seg.substring(eq + 1)
+        seg.substring(0, eq) ->
+          (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+           else ExternalCatalogUtils.unescapePathName(v))
+      }
+    }
+    val partCols = specs.head.map(_._1)
+    require(specs.forall(_.map(_._1) == partCols),
+      s"$root mixes partition layouts: ${specs.map(_.map(_._1)).distinct.mkString(", ")}")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val srcRows = chosen.map { case (rel, _, files, _) => rel -> files.map(footerRows(conf, _)).sum }.toMap
+    // the leaf dirs, not their files: Spark lists more than 32 paths in
+    // a job of its own, once per read (a file that lands after the
+    // listing above fails the footer gate)
+    val paths = chosen.map(_._2.toString)
+    fs.delete(tmpRoot, true)
+    val dataSchema = spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+    val src = spark.read
+      .schema(partCols.foldLeft(dataSchema)(_.add(_, StringType)))
+      .option("basePath", root.toString)
+      .parquet(paths: _*)
+    // salt only the leaves whose bytes call for several files: row
+    // position within its scan split, mod the leaf's n — balanced and
+    // stable across task retries (the scan splits are)
+    val salted = chosen.zip(specs).collect { case ((_, _, _, n), spec) if n > 1 =>
+      spec.map { case (c, v) => col(c) <=> lit(v).cast(StringType) }
+        .foldLeft(lit(true))(_ && _) -> n
+    }
+    val keyed =
+      if (salted.isEmpty) src
+      else src.withColumn("__compact_salt", pmod(monotonically_increasing_id(),
+        salted.tail.foldLeft(when(salted.head._1, salted.head._2)) {
+          case (acc, (m, n)) => acc.when(m, n)
+        }.otherwise(1).cast("long")))
+    val keys = partCols.map(col) ++ (if (salted.isEmpty) Nil else Seq(col("__compact_salt")))
+    val total = chosen.map(_._4).sum
+    val shuffled = (if (keys.isEmpty) keyed.repartition(total) else keyed.repartition(total, keys: _*))
+      .drop("__compact_salt")
+    (if (partCols.isEmpty) shuffled.write else shuffled.write.partitionBy(partCols: _*))
+      .mode("overwrite").parquet(tmpRoot.toString)
+    // the whole-lake gate, before any swap: exactly the selected
+    // leaves came back, each with its source footers' row count
+    val written = dataLeaves(fs, tmpRoot).map { case (d, fl) => relTo(tmpRoot, d) -> fl }.toMap
+    if (written.keySet != srcRows.keySet)
+      throw new IllegalStateException(
+        s"compaction of $root rewrote leaves ${written.keySet.toSeq.sorted.mkString(", ")} " +
+          s"instead of ${srcRows.keySet.toSeq.sorted.mkString(", ")} — aborted, original untouched")
+    chosen.map { case (rel, dir, files, _) =>
+      val nTmp = written(rel).map(footerRows(conf, _)).sum
+      if (nTmp != srcRows(rel))
+        throw new IllegalStateException(
+          s"compaction of $dir would lose rows (${srcRows(rel)} in the source footers, " +
+            s"$nTmp rewritten) — aborted, original untouched")
+      dir -> CompactStats(files.length, files.map(_.getLen).sum, written(rel).length)
+    }
   }
 
   /** Two-rename swap — the single owner of the replace-a-directory
@@ -324,7 +416,7 @@ object Compact {
     * [[swapInto]]; a leaf with NO rewritten counterpart was emptied by
     * the rewrite and is parked then dropped. Cleans both work roots at
     * the end. Single owner of the swap loop shared by the index
-    * removal verbs.
+    * removal verbs and [[compactPartitioned]].
     */
   private[graft] def swapRewrittenLeaves(
       fs: org.apache.hadoop.fs.FileSystem, base: Path,
@@ -344,14 +436,44 @@ object Compact {
     fs.delete(oldRoot, true)
   }
 
-  /** Compact every LEAF directory of a partitioned parquet lake — the
-    * operational common case ([[compact]] handles one flat dir). Walks
-    * `root` recursively: a directory holding data files and no
-    * subdirectories is a leaf and is compacted in place, so the
+  /** The data leaves under `dir`: directories holding data files and
+    * no partition subdirectories, each with its data files. Hidden dirs
+    * (`_batches` commit markers, `_temporary` crash residue) are
+    * metadata, not partitions, by the [[isHiddenName]] rule every
+    * reader here applies to files. A dir holding BOTH data files and
+    * subdirectories is not a partitioned layout and is refused, as is
+    * a flat [[compact]]'s work dir inside the lake: it means a crashed
+    * swap that may hold a leaf's only copy, and it poisons partition
+    * inference for every root reader.
+    */
+  private def dataLeaves(fs: FileSystem, dir: Path): Seq[(Path, Seq[FileStatus])] = {
+    val listing = fs.listStatus(dir).toSeq
+    listing.filter(_.isDirectory).map(_.getPath.getName)
+      .find(n => n.endsWith("__compact_tmp") || n.endsWith("__compact_old"))
+      .foreach(n => throw new IllegalArgumentException(
+        s"$dir/$n is a crashed compact() swap inside the lake — recover or " +
+          "remove it before compacting the root"))
+    val subdirs = listing.filter(s => s.isDirectory && !isHiddenName(s.getPath.getName))
+    val data = listing.filter(isData)
+    if (subdirs.isEmpty) {
+      if (data.nonEmpty) Seq(dir -> data) else Seq.empty // metadata-only dir: skip
+    } else {
+      require(data.isEmpty,
+        s"$dir holds both data files and subdirectories — not a partitioned layout; " +
+          "compact it explicitly with compact()")
+      subdirs.flatMap(d => dataLeaves(fs, d.getPath))
+    }
+  }
+
+  /** Compact the fragmented LEAF directories of a partitioned parquet
+    * lake — the operational common case ([[compact]] handles one flat
+    * dir). Walks `root` for its data leaves ([[dataLeaves]]); the
     * partition columns (encoded in the `k=v` directory names, absent
-    * from the files) survive untouched. Leaves are processed
-    * sequentially — each leaf's rewrite is already a full-width
-    * distributed job, so leaf-level parallelism would just contend.
+    * from the files) survive byte for byte. Leaves that are not
+    * fragmented are skipped; the others are rewritten by ONE read and
+    * ONE partitioned write and gated all together ([[rewriteFragmented]])
+    * before the first leaf is swapped, so a failed gate leaves the whole
+    * lake as it was. Temp space is every fragmented leaf at once.
     *
     * Swap/work directories live OUTSIDE the lake, as siblings of the
     * ROOT (`<root>__compact_tmp/<relative-leaf>`, same for `_old`):
@@ -362,78 +484,43 @@ object Compact {
     * `<root>__compact_old/<relative-leaf>` where no root read sees it;
     * recover by renaming it back.
     *
-    * Returns (leafPath, stats) per compacted leaf; empty-leaf or
-    * mixed-content dirs (files AND subdirs — not a partitioned layout)
-    * fail loudly rather than guessing.
+    * Returns (leafPath, stats) per REWRITTEN leaf — empty when nothing
+    * was fragmented. A lake with no data leaves, a flat root, a parked
+    * tree holding files and mixed-content dirs fail loudly rather than
+    * guessing.
     */
   def compactPartitioned(
       spark: SparkSession, root: String,
       targetBytes: Long = 128L * 1024 * 1024): Seq[(String, CompactStats)] = {
-    val rp = new Path(root)
-    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // qualified, so leaf paths from the listing are relative to it
+    val rp = fs.makeQualified(new Path(root))
     require(fs.getFileStatus(rp).isDirectory, s"$root is not a directory")
     val tmpRoot = new Path(rp.getParent, rp.getName + "__compact_tmp")
     val oldRoot = new Path(rp.getParent, rp.getName + "__compact_old")
     // a parked tree with FILES is a crashed swap (it may hold the only
     // copy of a leaf — block until recovered); one with only empty
-    // parent dirs is residue of an earlier aborted pass (e.g. a later
-    // leaf failed its row-count gate after earlier leaves swapped
-    // cleanly) and must not wedge the operator forever. Single owner:
-    // clearOrRefuseParked. After clearing our OWN tree, any OTHER
-    // verb's parked sibling (a crashed index removal) also blocks —
-    // compacting a lake with a swapped-out partition would bless the
-    // loss as the new normal.
+    // parent dirs is residue and must not wedge the operator forever.
+    // Single owner: clearOrRefuseParked. After clearing our OWN tree,
+    // any OTHER verb's parked sibling (a crashed index removal) also
+    // blocks — compacting a lake with a swapped-out partition would
+    // bless the loss as the new normal.
     clearOrRefuseParked(fs, oldRoot, "partitioned compaction")
     requireServable(fs, rp, action = "compacting")
-    def leaves(dir: Path): Seq[Path] = {
-      val listing = fs.listStatus(dir)
-      // a work dir INSIDE the lake means a previous FLAT compact() of a
-      // leaf crashed mid-swap (the partitioned path parks outside the
-      // root) — it may hold a leaf's only copy AND it poisons partition
-      // inference for every root reader, so refuse loudly rather than
-      // walk it as a partition or (worse) silently skip parked data
-      listing.filter(_.isDirectory).map(_.getPath.getName)
-        .find(n => n.endsWith("__compact_tmp") || n.endsWith("__compact_old"))
-        .foreach(n => throw new IllegalArgumentException(
-          s"$dir/$n is a crashed compact() swap inside the lake — recover or " +
-            "remove it before compacting the root"))
-      // hidden dirs are metadata, not partitions: `_batches` (the
-      // exactly-once gate's commit markers), `_temporary` residue from
-      // a crashed append — walking them as leaves would feed non-data
-      // files to the rewrite (or refuse a healthy leaf for carrying
-      // crash residue); the hadoop `_`/`.` convention [[isHiddenName]]
-      // every reader here already applies to FILES
-      val subdirs = listing.filter(s =>
-        s.isDirectory && !isHiddenName(s.getPath.getName))
-      val data = listing.filter(isData)
-      if (subdirs.isEmpty) {
-        if (data.nonEmpty) Seq(dir) else Seq.empty // metadata-only dir: skip
-      } else {
-        require(data.isEmpty,
-          s"$dir holds both data files and subdirectories — not a partitioned layout; " +
-            "compact it explicitly with compact()")
-        subdirs.toSeq.flatMap(d => leaves(d.getPath))
-      }
-    }
-    val targets = leaves(rp)
-    require(targets.nonEmpty, s"no data leaves to compact under $root")
-    require(targets != Seq(rp),
+    val leaves = dataLeaves(fs, rp)
+    require(leaves.nonEmpty, s"no data leaves to compact under $root")
+    require(leaves.map(_._1) != Seq(rp),
       s"$root is a flat (unpartitioned) dataset — use compact() directly")
-    fs.delete(tmpRoot, true)
-    val rootUri = rp.toUri.getPath
     val res =
-      try targets.map { l =>
-        val rel = l.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        l.toString -> compactDir(spark, l, targetBytes,
-          tmp = new Path(tmpRoot, rel), old = new Path(oldRoot, rel))
+      try {
+        val rewritten = rewriteFragmented(spark, fs, rp, leaves, targetBytes, tmpRoot)
+        swapRewrittenLeaves(fs, rp, tmpRoot, oldRoot, rewritten.map { case (leaf, _) => relTo(rp, leaf) })
+        rewritten
       }
       // tmp never holds the only copy — safe to clear on ANY failure.
-      // oldRoot is NOT touched here: if the swap-in rename failed it
+      // oldRoot is NOT touched here: if a swap-in rename failed it
       // holds the parked original (the recovery copy).
       finally fs.delete(tmpRoot, true)
-    // full success: every leaf swapped and its parked copy deleted by
-    // compactDir — oldRoot holds only empty parent dirs now
-    fs.delete(oldRoot, true)
-    res
+    res.map { case (leaf, stats) => leaf.toString -> stats }
   }
 }

@@ -793,7 +793,8 @@ object Ann {
     * files per cell — exactly the listing/footer pathology
     * [[graft.etl.Compact]] exists to fix, here composed with the index
     * layout. Delegates to [[graft.etl.Compact.compactPartitioned]]
-    * (work dirs OUTSIDE the lake, per-leaf row-count gate,
+    * (only fragmented cells are rewritten, in one write outside the
+    * lake; every cell's footer row count is gated before the first
     * park-then-swap), so the cell partition names survive untouched;
     * the codebook/pq sidecars are never touched, and query results are
     * bit-identical before/after (spec-pinned — compaction moves bytes,

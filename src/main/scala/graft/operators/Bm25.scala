@@ -879,9 +879,10 @@ object Bm25 {
     * [[addToLexIndex]] appends one file per touched bucket, so a
     * daily-add index decays into many small files per bucket over
     * time; same fix as [[Ann.compactIndex]], delegating to
-    * [[graft.etl.Compact.compactPartitioned]] (work dirs OUTSIDE the
-    * lake, per-leaf row-count gate, park-then-swap). The stats
-    * sidecar is untouched and query results are bit-identical
+    * [[graft.etl.Compact.compactPartitioned]] (only fragmented buckets
+    * are rewritten, in one write outside the lake; every bucket's
+    * footer row count is gated before the first park-then-swap). The
+    * stats sidecar is untouched and query results are bit-identical
     * before/after (spec-pinned).
     */
   def compactLexIndex(

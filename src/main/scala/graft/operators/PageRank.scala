@@ -172,6 +172,7 @@ object PageRank {
       shareBroadcast: String,
       shareLiteral: Long => String,
       tolUnits: Long): DataFrame = {
+    requireAnnotated(nodes)
     var ranks = Dedup.scopedCache(init)
     var converged = false
     // Deep runs: the rank plan grows one join template per iteration
@@ -284,6 +285,19 @@ object PageRank {
     }
     chkRdd.foreach(r => Dedup.scopedCleanup(() => r.unpersist(false)))
     ranks
+  }
+
+  /** Refuse a node frame with a null in an annotation column (every
+    * column but `node`, e.g. `is_seed`) on entry to [[loop]]: its max()
+    * restore returns each node's one zero-row value, so a null would
+    * come back null and the update's `when()` would drop that node's
+    * teleport term. A frame with no annotation costs no job.
+    */
+  private[graft] def requireAnnotated(nodes: DataFrame): Unit = {
+    val annot = nodes.columns.filterNot(_ == "node").toSeq
+    if (annot.nonEmpty)
+      require(nodes.filter(annot.map(col(_).isNull).reduce(_ || _)).limit(1).isEmpty,
+        s"pageRank: null in annotation column(s) ${annot.mkString(", ")} on entry to the loop")
   }
 
   /** max(|next.rank − prev.rank|) over all nodes — the integer

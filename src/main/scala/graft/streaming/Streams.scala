@@ -919,12 +919,14 @@ object Streams {
     * one file per touched bucket, so a long-lived stream decays each
     * `bucket=` dir into thousands of tiny files — the same decay (and
     * the same cure) as [[graft.operators.Bm25.compactLexIndex]],
-    * delegating to [[graft.etl.Compact.compactPartitioned]] (work dirs
-    * outside the lake, per-leaf row-count gate, park-then-swap, and
-    * the same refusal of a parked `<ledger>__*_old` sibling that
-    * [[ledgerScan]] applies). Run while the stream is STOPPED (the gate
-    * is the ledger's only writer). Fingerprint content — and therefore
-    * dedup semantics — is untouched.
+    * delegating to [[graft.etl.Compact.compactPartitioned]] (only
+    * fragmented buckets are rewritten, in one write outside the lake,
+    * every bucket's footer row count gated before the first
+    * park-then-swap, and the same refusal of a parked
+    * `<ledger>__*_old` sibling that [[ledgerScan]] applies). Run while
+    * the stream is STOPPED (the gate is the ledger's only writer).
+    * Fingerprint content — and therefore dedup semantics — is
+    * untouched.
     */
   def compactLedger(
       spark: org.apache.spark.sql.SparkSession, ledgerPath: String,

@@ -502,4 +502,104 @@ class EtlIndexSpec extends SparkSpecBase {
     val e3 = intercept[IllegalArgumentException](Compact.compactPartitioned(spark, flat))
     assert(e3.getMessage.contains("flat"), e3.getMessage)
   }
+
+  test("compactPartitioned: a file without a readable footer aborts the pass, every leaf untouched") {
+    import graft.etl.Compact
+    val root = tmp("fcompactbad") + "/lake"
+    // 400 rows in two leaves, four files per leaf
+    (0 until 400).map(i => (i.toLong, s"row-$i", if (i < 200) "a" else "b")).toDF("id", "s", "k")
+      .repartition(4).write.partitionBy("k").parquet(root)
+    def files(leaf: String) = new java.io.File(s"$root/$leaf").listFiles()
+      .map(_.getName).filter(_.startsWith("part-")).sorted.toSeq
+    assert(files("k=a").size == 4 && files("k=b").size == 4)
+    // truncate one file of the SECOND leaf (and drop its checksum, or
+    // the local file system refuses the read before parquet does)
+    val bad = new java.io.File(s"$root/k=b", files("k=b").head)
+    val ch = java.nio.channels.FileChannel.open(bad.toPath, java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(bad.length() / 2) finally ch.close()
+    new java.io.File(bad.getParentFile, s".${bad.getName}.crc").delete()
+    // a reader that skips the bad file would count the same rows on
+    // both sides of the rewrite; the footers do not skip it
+    val key = "spark.sql.files.ignoreCorruptFiles"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      def state() = Seq("k=a", "k=b").map(l =>
+        (files(l), spark.read.schema("id long, s string").parquet(s"$root/$l").count()))
+      val before = state()
+      val e = intercept[IllegalStateException](
+        Compact.compactPartitioned(spark, root, targetBytes = 1L << 30))
+      assert(e.getMessage.contains(bad.getName), e.getMessage)
+      assert(state() == before, "an aborted compaction changed a leaf")
+      assert(!new java.io.File(root + "__compact_tmp").exists(), "work dir left behind")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("compactPartitioned: partition dir names survive byte for byte, leaves of differing schema") {
+    import graft.etl.Compact
+    val root = tmp("fcompactnames") + "/lake"
+    // names type inference would rewrite (00 -> 0, 1e5 -> 100000.0) and
+    // the null partition; an untagged and a tagged generation, like the
+    // dedup ledger's, so leaves differ in schema and two straddle both
+    val buckets = Seq("00", "07", "1e5", null)
+    val rows = (0 until 80).map(i => (s"fp$i", buckets(i % 4)))
+    rows.filter(_._2 != "1e5").toDF("fp", "bucket")
+      .repartition(2).write.partitionBy("bucket").parquet(root)
+    rows.filter(_._2 != "00").map { case (fp, b) => (fp + "t", s"tag-$fp", b) }
+      .toDF("fp", "batch_tag", "bucket")
+      .repartition(2).write.mode("append").partitionBy("bucket").parquet(root)
+    def leaves() = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName).toSet
+    def leafRows() = leaves().toSeq.map(l =>
+      l -> spark.read.schema("fp string, batch_tag string").parquet(s"$root/$l").collect().toSet).toMap
+    def rootRead() = spark.read.option("mergeSchema", "true").parquet(root).collect().toSet
+    val (leaves0, leafRows0, root0) = (leaves(), leafRows(), rootRead())
+    assert(leaves0 == Set("bucket=00", "bucket=07", "bucket=1e5", "bucket=__HIVE_DEFAULT_PARTITION__"))
+    val stats = Compact.compactPartitioned(spark, root, targetBytes = 1L << 30)
+    assert(stats.size == 4 && stats.forall(_._2.filesAfter == 1), s"not every leaf merged: $stats")
+    assert(leaves() == leaves0, "a partition dir was renamed")
+    assert(leafRows() == leafRows0, "a leaf's rows changed")
+    assert(rootRead() == root0, "the root read changed")
+  }
+
+  test("compactPartitioned: one pass is three Spark jobs, past Spark's parallel-listing threshold too") {
+    // 40 fragmented files: listed one by one, Spark would list them in
+    // a job of its own per read
+    val root = tmp("fcompactjobs") + "/lake"
+    (0 until 4000).map(i => (i.toLong, s"r$i", i % 2)).toDF("id", "s", "k")
+      .repartition(20).write.partitionBy("k").parquet(root)
+    var stats: Seq[(String, graft.etl.Compact.CompactStats)] = Nil
+    val n = jobsDuring { stats = graft.etl.Compact.compactPartitioned(spark, root, targetBytes = 1L << 30) }
+    assert(stats.map(_._2.filesBefore) == Seq(20, 20), s"$stats")
+    assert(n <= 3, s"compaction of two 20-file leaves ran $n Spark jobs")
+  }
+
+  test("compaction splits a directory whose bytes call for several files") {
+    import graft.etl.Compact
+    val src = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
+    def fp(df: org.apache.spark.sql.DataFrame) =
+      df.select(xxhash64(struct(df.columns.sorted.map(col): _*)).as("h"))
+        .agg(count(lit(1)), expr("bit_xor(h)")).head()
+    def bytes(dir: String) = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.length()).sum
+    // flat: 12 files whose bytes call for 3
+    val dir = tmp("fcompactsplit") + "/ds"
+    src.repartition(12).write.parquet(dir)
+    val fp0 = fp(spark.read.parquet(dir))
+    val s = Compact.compact(spark, dir, targetBytes = bytes(dir) / 3 + 1)
+    assert(s.filesBefore == 12 && s.filesAfter > 1 && s.filesAfter <= 3, s"$s")
+    assert(fp(spark.read.parquet(dir)) == fp0, "the split rewrite changed the data")
+    // partitioned: the salt splits only the leaf whose bytes call for it
+    val root = tmp("fcompactsplitp") + "/lake"
+    src.filter(col("user_id") % 4 =!= 0).withColumn("big", lit(true))
+      .repartition(12).write.partitionBy("big").parquet(root)
+    src.filter(col("user_id") % 4 === 0).withColumn("big", lit(false))
+      .repartition(2).write.mode("append").partitionBy("big").parquet(root)
+    val fpRoot0 = fp(spark.read.parquet(root))
+    val stats = Compact.compactPartitioned(spark, root,
+      targetBytes = bytes(s"$root/big=true") / 2 + 1).toMap
+    val (big, small) = (stats.find(_._1.endsWith("big=true")).get._2,
+      stats.find(_._1.endsWith("big=false")).get._2)
+    assert(big.filesAfter == 2 && small.filesAfter == 1, s"$stats")
+    assert(fp(spark.read.parquet(root)) == fpRoot0, "the split rewrite changed the data")
+  }
 }

@@ -6,11 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Bm25, Dedup, Pq, Sq}
 
 /** The persisted-index lifecycle verbs (build → add → remove) of the
-  * IVF, IVF-PQ and IVF-SQ8 families and the BM25 remove: how many Spark
-  * jobs each verb runs on a tiny fixed index, pinned as upper bounds,
-  * the base-lake schema every write records, the drop of wrong-dimension
-  * base rows, and the write core's refusal of an increment that wrote
-  * nothing.
+  * IVF, IVF-PQ and IVF-SQ8 families, the BM25 remove and the IVF and
+  * BM25 compaction: how many Spark jobs each verb runs on a tiny fixed
+  * index, pinned as upper bounds, the base-lake schema every write
+  * records, the drop of wrong-dimension base rows, and the write core's
+  * refusal of an increment that wrote nothing.
   */
 class IndexLifecycleSpec extends SparkSpecBase {
 
@@ -125,6 +125,45 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(Bm25.lexIndexStats(spark, p).nDocs == 4)
     info(s"bm25 remove jobs: $n")
     assert(n <= bm25RemoveBudget, s"BM25 remove ran $n Spark jobs, budget $bm25RemoveBudget")
+  }
+
+  // Compaction rewrites only the fragmented leaves, all of them in one
+  // read and one write: a pass is a fixed number of jobs however many
+  // leaves there are, and a lake with nothing fragmented costs none.
+  private val compactBudget = 3
+
+  test("job budget: IVF and BM25 compaction, and a second pass over a compact lake") {
+    val p = tmpDir("graft_life_compact_ivf") + "/ix"
+    Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), p, nlist = 4)
+    Ann.addToIvfIndex(spark, p, odd, col("vec_id"), col("embedding"))
+    def ids() = Ann.indexIds(spark, p).as[Long].collect().toSet
+    val ids0 = ids()
+    var first: Seq[(String, graft.etl.Compact.CompactStats)] = Nil
+    val n1 = jobsDuring { first = Ann.compactIndex(spark, p) }
+    assert(first.nonEmpty && first.forall(s => s._2.filesBefore == 2 && s._2.filesAfter == 1),
+      s"build + add should leave two files in each cell the add touched: $first")
+    assert(ids() == ids0)
+    var second: Seq[(String, graft.etl.Compact.CompactStats)] = Nil
+    val n2 = jobsDuring { second = Ann.compactIndex(spark, p) }
+    assert(second.isEmpty, s"an already-compact index was rewritten: $second")
+
+    val docs = Seq(
+      (1L, "the quick brown fox jumps"),
+      (2L, "lazy dogs sleep all day"),
+      (3L, "quick brown foxes and quick dogs")).toDF("id", "text")
+    val lex = tmpDir("graft_life_compact_lex") + "/lex"
+    Bm25.buildLexIndex(docs, col("id"), col("text"), lex, nBuckets = 4)
+    Bm25.addToLexIndex(spark, lex,
+      Seq((4L, "brown bears eat honey"), (5L, "the fox den sits under the hill")).toDF("id", "text"),
+      col("id"), col("text"))
+    var lexStats: Seq[(String, graft.etl.Compact.CompactStats)] = Nil
+    val n3 = jobsDuring { lexStats = Bm25.compactLexIndex(spark, lex) }
+    assert(lexStats.nonEmpty, "the add left no bucket fragmented")
+    assert(Bm25.lexIndexIds(spark, lex).count() == 5)
+    info(s"compaction jobs: ivf $n1, ivf again $n2, bm25 $n3")
+    assert(n1 <= compactBudget, s"IVF compaction ran $n1 Spark jobs, budget $compactBudget")
+    assert(n2 == 0, s"compacting an already-compact index ran $n2 Spark jobs")
+    assert(n3 <= compactBudget, s"BM25 compaction ran $n3 Spark jobs, budget $compactBudget")
   }
 
   test("every IVF-family write records the base-lake schema parquet infers, through compaction") {

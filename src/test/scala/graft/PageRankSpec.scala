@@ -183,6 +183,14 @@ class PageRankSpec extends SparkSpecBase {
     }
   }
 
+  test("a null annotation on entry to the loop is refused") {
+    val e = intercept[IllegalArgumentException](PageRank.requireAnnotated(
+      Seq(("a", Some(true)), ("b", Option.empty[Boolean])).toDF("node", "is_seed")))
+    assert(e.getMessage.contains("is_seed"), e.getMessage)
+    PageRank.requireAnnotated(Seq(("a", true), ("b", false)).toDF("node", "is_seed"))
+    PageRank.requireAnnotated(Seq("a").toDF("node"))
+  }
+
   test("tolUnits early exit is bit-identical to the fixed-iteration result at the exit point") {
     val edges = Seq(
       ("a", "b", 1L), ("a", "c", 3L), ("b", "c", 1L), ("c", "a", 1L),

@@ -45,4 +45,19 @@ class SourceLintSpec extends AnyFunSuite {
       outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
     assert(hits.count(_._1 == owner) == 1, s"FileIndex constructs ${hits.count(_._1 == owner)} Configurations, expected 1")
   }
+
+  test("mergeSchema is read only by the compaction core") {
+    // A rewrite that unions schemas outside etl/Compact.scala would be a
+    // second owner of the rule for which columns a rewritten lake keeps.
+    val owner = Paths.get("src", "main", "scala", "graft", "etl", "Compact.scala")
+    val hits = for {
+      p <- mainSources
+      (l, n) <- codeLines(p)
+      if l.contains("mergeSchema")
+    } yield (p, n)
+    assert(hits.exists(_._1 == owner), s"$owner no longer resolves the rewrite schema")
+    val outside = hits.filter(_._1 != owner)
+    assert(outside.isEmpty, "mergeSchema outside etl/Compact.scala: " +
+      outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
+  }
 }

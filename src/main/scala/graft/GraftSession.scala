@@ -17,6 +17,22 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). It
+    * is a static conf, read once per JVM from the session of the first
+    * thread that generates code. A served request whose plan shape was
+    * seen before reuses the compiled classes only while they stay
+    * cached, and one JVM that builds and serves indexes needs more than
+    * 100: one perfbench run (seed 3, 4 cores) compiled about 185
+    * distinct classes on search_serve and 203 on maintain_batch. At 100
+    * the verbs evicted each other, and a warm search request compiled
+    * about 10 classes. 1000 holds both working sets with room to spare.
+    * Cost, one traced run each: peak RSS 1712 → 1757 MiB and live heap
+    * 253 → 253 MiB on search_serve, 1410 → 1309 MiB and 126 → 130 MiB
+    * on maintain_batch (the classes sit in metaspace, not the heap).
+    */
+  private[graft] val CodegenCacheEntries = 1000
+
   /** Session knobs resolved through the layered config
     * (graft.pipeline.GraftConfig): builder defaults < optional YAML at
     * `$GRAFT_CONFIG` < `GRAFT_SESSION_*` env vars. Mirrors the
@@ -69,6 +85,7 @@ object GraftSession {
       // the UI event — an unbounded cap turns a deep plan into a
       // driver OOM. 8 MB keeps real plans fully readable.
       .config("spark.sql.maxPlanStringLength", (8 * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // per-process warehouse: concurrent runs must not clobber each
       // other's saveAsTable data
       .config("spark.sql.warehouse.dir",

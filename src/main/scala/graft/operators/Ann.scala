@@ -265,18 +265,21 @@ object Ann {
     */
   private def codebookFrame(
       spark: org.apache.spark.sql.SparkSession,
-      codebook: Array[Array[Double]]): DataFrame = {
+      codebook: Array[Array[Double]],
+      cells: Seq[Int]): DataFrame = {
     import spark.implicits._
-    codebook.zipWithIndex
-      .map { case (c, i) => (i, c.map(_.toFloat).toSeq, c.toSeq) }.toSeq
+    cells.map { i => val c = codebook(i); (i, c.map(_.toFloat).toSeq, c.toSeq) }
       .toDF("cell", "centroid", "centroid_d")
   }
 
-  /** Probe-side view of [[codebookFrame]]: (cell, centroid, c_nrm). */
+  /** Probe-side view of [[codebookFrame]]: (cell, centroid, c_nrm) of
+    * `cells` (default: every cell).
+    */
   private[operators] def centroidFrame(
       spark: org.apache.spark.sql.SparkSession,
-      codebook: Array[Array[Double]]): DataFrame =
-    codebookFrame(spark, codebook)
+      codebook: Array[Array[Double]],
+      cells: Option[Seq[Int]] = None): DataFrame =
+    codebookFrame(spark, codebook, cells.getOrElse(codebook.indices))
       .withColumn("c_nrm", Vectors.norm2(col("centroid")))
       .select("cell", "centroid", "c_nrm")
 
@@ -409,7 +412,7 @@ object Ann {
     // resident per codebook generation): appending vector rows into a
     // codes-only base would be silent mixed-schema corruption (the
     // worst failure mode)
-    require(readBaseLake(spark, path).schema.fieldNames.contains("b_emb"),
+    require(baseSchema(spark, path).fieldNames.contains("b_emb"),
       s"$path/base does not hold vector rows (no b_emb column) -- not a plain IVF index")
     val inc = rows.select(id.as("b_id"), vec.as("b_emb"))
     writeIvfLake(spark, path, ivfRows(inc, sidecar._1), col("b_nrm") > 0, sidecar,
@@ -583,7 +586,8 @@ object Ann {
 
   /** The leaf-removal rewrite-and-gate of every partitioned lake (the
     * IVF family, OPQ, the BM25 postings): only the `partCol` leaves
-    * holding a victim `idCol` are rewritten without it, into `tmpRoot`.
+    * holding a victim `idCol` are read back (by path, under the lake
+    * `root`: [[Leaves.read]]) and rewritten without it, into `tmpRoot`.
     * ONE narrow (id, leaf) ⋈ victims pass answers which leaves those
     * are and the per-leaf (rows, victims) counts of the gate. The
     * rewrite is one job for all of them, OUTSIDE the lake (a work dir
@@ -596,7 +600,7 @@ object Ann {
     * ([[graft.etl.Compact.swapRewrittenLeaves]]) in its own order.
     */
   private[operators] def rewriteLeavesWithout(
-      lake: DataFrame, lakeName: String, vic: DataFrame, idCol: String, partCol: String,
+      lake: DataFrame, root: String, vic: DataFrame, idCol: String, partCol: String,
       tmpRoot: org.apache.hadoop.fs.Path,
       scoreable: Column = lit(true)): (Array[Int], Map[Int, (Long, Long)]) = {
     val spark = lake.sparkSession
@@ -610,7 +614,7 @@ object Ann {
     val affected = leafStats.collect { case (c, (_, nv)) if nv > 0 => c }
       .toArray.sorted
     if (affected.isEmpty) return (affected, Map.empty)
-    lake.filter(col(partCol).isin(affected.map(Int.box): _*))
+    Leaves.read(spark, root, lake.schema, partCol, affected)
       .join(vic, Seq(idCol), "left_anti")
       .transform(clusterForWrite(partCol))
       .write.partitionBy(partCol).mode("overwrite").parquet(tmpRoot.toString)
@@ -627,7 +631,7 @@ object Ann {
       if (kept != n - nv) {
         fs.delete(tmpRoot, true)
         throw new IllegalStateException(
-          s"removal rewrite of $lakeName $partCol=$c would lose rows " +
+          s"removal rewrite of $root $partCol=$c would lose rows " +
             s"($n read, $nv victims, $kept rewritten) -- aborted, index untouched")
       }
     }
@@ -774,7 +778,7 @@ object Ann {
       codebook: Array[Array[Double]], members: Map[Int, Long]): Unit = {
     import spark.implicits._
     val mdf = members.toSeq.toDF("__cell", "__m")
-    val cb = codebookFrame(spark, codebook)
+    val cb = codebookFrame(spark, codebook, codebook.indices)
       .join(mdf, col("cell") === col("__cell"), "left")
       .select(col("cell"), col("centroid"), col("centroid_d"),
         coalesce(col("__m"), lit(0L)).as("members"))
@@ -942,8 +946,9 @@ object Ann {
 
   /** KNN against a persisted [[buildIvfIndex]] index. The probe ranks
     * come from the codebook sidecar; the union of probed cells (a
-    * bounded <= nlist driver collect) turns the base scan into a
-    * partition-pruned read of only those cell directories. Same
+    * bounded <= nlist driver collect) is the list of cell directories
+    * the base read opens, by path ([[readBaseCells]]): only those are
+    * listed and read, and the plan holds no cell literal. Same
     * arithmetic as [[knnIvf]] end-to-end: the same build inputs and the
     * same (k, nprobe) produce identical rows.
     *
@@ -979,8 +984,7 @@ object Ann {
     // no rows can come back, so there is no dim to enforce
     if (live.nonEmpty) requireQueryDim(q, codebook(0).length)
     val (cells, probed) = probePruned(q, centDf, nprobe)
-    val base = readBaseLake(spark, path)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
+    val base = readBaseCells(spark, path, cells)
       .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
     val filtered = eligible match {
       case Some((el, elId)) =>
@@ -996,8 +1000,8 @@ object Ann {
     else
       // `withVec`: carry each served neighbor's embedding for
       // downstream re-ranks ([[Mmr.diversify]] at the serving layer).
-      // The join re-reads ONLY the probed cell partitions (same
-      // partition-pruned scan as the scoring pass) for ≤ queries × k
+      // The join re-reads ONLY the probed cell leaves (same
+      // leaf read as the scoring pass) for ≤ queries × k
       // ids — never the whole lake; results are identical to the
       // plain form plus one column.
       top.join(filtered.select(col("b_id"), col("b_emb")), "b_id")
@@ -1053,22 +1057,34 @@ object Ann {
       path: String): (Array[Array[Double]], Seq[Int], DataFrame) = {
     val (codebook, members) = readCodebookSidecar(spark, path)
     val live = members.collect { case (c, m) if m > 0 => c }.toSeq.sorted
-    (codebook, live, centroidFrame(spark, codebook)
-      .filter(col("cell").isin(live.map(Int.box): _*))) // live cells: see topProbeCells
+    (codebook, live, centroidFrame(spark, codebook, Some(live))) // live cells: see topProbeCells
   }
 
-  /** The cell-partitioned base lake of a persisted index, listed on
-    * every read; its schema is resident per codebook generation (every
-    * writer of the base rewrites the codebook sidecar, and records the
-    * schema it wrote: [[recordBaseSchema]]), which spares the
-    * footer-inference job per read.
+  /** The schema of a persisted index's cell-partitioned base lake,
+    * resident per codebook generation (every writer of the base
+    * rewrites the codebook sidecar, and records the schema it wrote:
+    * [[recordBaseSchema]]), which spares the footer-inference job per
+    * read.
+    */
+  private[operators] def baseSchema(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.types.StructType =
+    SidecarMemo(spark, s"$path/codebook", "base")(spark.read.parquet(s"$path/base").schema)
+
+  /** Every leaf of the base lake (the removal's per-leaf victim scan),
+    * read with the resident [[baseSchema]].
     */
   private[operators] def readBaseLake(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val lake = s"$path/base"
-    spark.read.schema(SidecarMemo(spark, s"$path/codebook", "base")(
-      spark.read.parquet(lake).schema)).parquet(lake)
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    spark.read.schema(baseSchema(spark, path)).parquet(s"$path/base")
+
+  /** Only the probed `cells` of the base lake, opened by path
+    * ([[Leaves.read]]): the request lists and reads just those leaves,
+    * and its plan carries no cell literal.
+    */
+  private[operators] def readBaseCells(
+      spark: org.apache.spark.sql.SparkSession, path: String, cells: Iterable[Int]): DataFrame =
+    Leaves.read(spark, s"$path/base", baseSchema(spark, path), "cell", cells)
 
   /** Record `written` — the base lake's columns as written, partition
     * column last — for the codebook generation a write just made, in

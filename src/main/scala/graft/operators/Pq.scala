@@ -425,11 +425,12 @@ object Pq {
     pqScoreable(b0, coarse, cb).select("b_id", "codes", "d_nrm", "cell")
 
   /** KNN against a persisted [[buildIvfPqIndex]] index: probe ranks
-    * from the codebook sidecar, a partition-pruned CODES scan of only
-    * the probed cell directories (the <= nlist cell list is the one
-    * driver collect, as in [[Ann.queryIvfIndex]]), compressed-domain
-    * shortlist, then exact rerank against `source` — the table holding
-    * the ORIGINAL vectors, joined by id for shortlist pairs only.
+    * from the codebook sidecar, a CODES scan of only the probed cell
+    * directories, opened by path ([[Ann.readBaseCells]]; the <= nlist
+    * cell list is the one driver collect, as in [[Ann.queryIvfIndex]]),
+    * compressed-domain shortlist, then exact rerank against `source` —
+    * the table holding the ORIGINAL vectors, joined by id for shortlist
+    * pairs only.
     * `source` must contain every indexed id (it is the corpus the
     * index was built from); reported sims are true cosines, same
     * oracle contract as the whole knn family.
@@ -464,8 +465,7 @@ object Pq {
     val probedQ = probed
       .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
       .withColumn("lut", lutExpr(col("q_emb"), cb))
-    val pruned = Ann.readBaseLake(spark, path)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
+    val pruned = Ann.readBaseCells(spark, path, cells)
     // filtered search (see Ann.queryIvfIndex's `eligible` scaladoc):
     // the semi-join lands on the COMPRESSED scan, before the shortlist
     // — so shortlist slots are never wasted on ineligible candidates

@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * metadata call, no Spark job) and reuses the value loaded for that
   * token; any write moves the token and the next read reloads.
   *
-  * What is NOT memoized: the lakes themselves (re-listed by every read,
-  * so appends and compactions stay visible), and every servability or
-  * intent guard (run by the verbs on each call, outside this object).
+  * What is NOT memoized: the lakes themselves (each read lists the
+  * leaves it opens, so appends and compactions stay visible), and
+  * every servability or intent guard (run by the verbs on each call,
+  * outside this object).
   * A missing or file-less sidecar is never served from memory: the
   * loader runs and fails loudly exactly as a direct read would.
   *

@@ -580,8 +580,11 @@ object Sketches {
     override def finish(b: Array[Int]): Seq[Int] = b.toSeq
     override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Int]] =
       org.apache.spark.sql.Encoders.kryo[Array[Int]]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Int]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Int]]()
+    // built here, on the driver, and shipped with the aggregator: a
+    // task that derives it by Scala reflection under an executor class
+    // loader can fail to resolve scala.Nothing
+    private val out = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Int]]()
+    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Int]] = out
   }
 
   /** Column form of [[HllRegs]]: `hllAgg(6)(Hashing.h60(value))`

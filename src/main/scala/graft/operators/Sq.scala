@@ -316,10 +316,11 @@ object Sq {
   }
 
   /** KNN against a persisted [[buildIvfSq8Index]] index: probe ranks
-    * from the codebook sidecar, a partition-pruned CODES scan of only
-    * the probed cells, ADC on the decoded reconstruction, exact rerank
-    * against `source` (the corpus table holding the original vectors —
-    * the `requireFullCoverage` drift guard of the PQ path applies).
+    * from the codebook sidecar, a CODES scan of only the probed cells
+    * (opened by path: [[Ann.readBaseCells]]), ADC on the decoded
+    * reconstruction, exact rerank against `source` (the corpus table
+    * holding the original vectors — the `requireFullCoverage` drift
+    * guard of the PQ path applies).
     * Same caller cache contract as [[Ann.queryIvfIndex]].
     */
   def queryIvfSq8Index(
@@ -337,8 +338,7 @@ object Sq {
     val q = Ann.validQueries(queries, qId, qVec)
     Ann.requireQueryDim(q, st.dim)
     val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
-    val pruned = Ann.readBaseLake(spark, path)
-      .filter(col("cell").isin(cells.map(Int.box): _*))
+    val pruned = Ann.readBaseCells(spark, path, cells)
     val filtered = eligible match {
       case Some((el, elId)) =>
         pruned.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")

@@ -10,7 +10,9 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -24,7 +26,7 @@ import graft.pipeline.{HtmlReport, Pipeline, ResultStore}
   * dependencies, same endpoint contract:
   *
   *   GET  /health                         — liveness
-  *   GET  /metrics                        — system + job metrics + history tail
+  *   GET  /metrics                        — system + job + codegen metrics + history tail
   *   GET  /jobs                           — ETL job history (last 50) + scheduled jobs
   *   GET  /events                         — filesystem events (last 100)
   *   GET  /status                         — agent status + uptime + both metric blocks
@@ -50,7 +52,8 @@ import graft.pipeline.{HtmlReport, Pipeline, ResultStore}
   * ([[graft.operators.SidecarMemo]]: the sidecar's file listing is the
   * generation, and every mutating verb rewrites it), so a request pays
   * one metadata listing per sidecar instead of Spark jobs to read it;
-  * the postings/base lakes are RE-LISTED on every request, so appends,
+  * the postings/base leaves a request probes are opened by path and
+  * listed on every request ([[graft.operators.Leaves]]), so appends,
   * removals and compactions are visible to the next query, and the
   * crash guards (parked swap trees, rebucket intent) run per request.
   * Every Spark job a search request launches carries the job
@@ -219,6 +222,24 @@ final class HttpApi(
       if (metricsHistory.size > 100) metricsHistory.remove(0, metricsHistory.size - 100)
     }
     m
+  }
+
+  /** Spark code generation in this JVM so far: classes compiled (cache
+    * misses of the generated-class cache) and the total compile time.
+    * A warm served request adds nothing to either, unless adaptive
+    * execution numbered a warm plan's codegen stages anew (the number
+    * is part of the generated source); otherwise a request that adds
+    * to them compiled a plan shape the cache did not hold.
+    */
+  private def codegenMetrics(): JValue = {
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // CodeGenerator sizes its class cache from the SQL conf of the
+    // thread that first touches it, and a handler thread has no active
+    // session (it would get Spark's default size): read it only once a
+    // compile has initialized it
+    JObject(
+      "compiled_classes" -> JLong(compiled),
+      "compile_ms" -> JDouble(if (compiled == 0) 0.0 else CodeGenerator.compileTime / 1e6))
   }
 
   /** monitoring.py:108-131 — counts + average completed duration. */
@@ -639,6 +660,7 @@ final class HttpApi(
       (200, JObject(
         "system" -> sys,
         "jobs" -> jobMetrics(),
+        "codegen" -> codegenMetrics(),
         "history" -> JArray(metricsHistory.synchronized(metricsHistory.toList))))
     })
     s.createContext("/jobs", handler("/jobs") { _ =>

@@ -458,11 +458,9 @@ class PlanSpec extends SparkSpecBase {
       path, nlist = 8)
     val df = Ann.queryIvfIndex(spark, path,
       emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"), k = 5, nprobe = 2)
-    val f = formatted(df)
-    val pf = f.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("cell")).getOrElse("")
-    assert(pf.contains("cell"),
-      s"index scan must prune on the cell partition key:\n$f")
+    val scans = scanRoots(df).filter(_.exists(_.contains(path)))
+    assert(scans.nonEmpty && scans.forall(_.forall(_.contains("/base/cell="))),
+      s"index scan must read probed cell leaves only: $scans")
     assert(df.count() > 0)
   }
 
@@ -522,11 +520,10 @@ class PlanSpec extends SparkSpecBase {
       emb.filter(col("vec_id") >= 10), col("vec_id"), col("embedding"),
       emb.filter(col("vec_id") < 10), col("vec_id"), col("embedding"),
       k = 5, nprobe = 2, shortlist = 20)
+    val scans = scanRoots(df).filter(_.exists(_.contains(path)))
+    assert(scans.nonEmpty && scans.forall(_.forall(_.contains("/base/cell="))),
+      s"IVF-PQ index scan must read probed cell leaves only: $scans")
     val f = formatted(df)
-    val pf = f.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("cell")).getOrElse("")
-    assert(pf.contains("cell"),
-      s"IVF-PQ index scan must prune on the cell partition key:\n$f")
     // the pruned scan reads the CODES table, never the original vectors:
     // its ReadSchema must carry codes/d_nrm and no embedding column
     val baseScan = f.linesIterator.find(l =>

@@ -164,12 +164,10 @@ class SearchSpec extends SparkSpecBase {
     assert(got == oneShot,
       s"index search diverged from one-shot:\n  only index: ${got -- oneShot}\n  only one-shot: ${oneShot -- got}")
     assert(got.nonEmpty)
-    // the posting read is partition-pruned to the query vocab's buckets
-    val f = viaIndex.queryExecution.executedPlan.toString
-    val pf = f.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("bucket")).getOrElse("")
-    assert(pf.contains("bucket#") || pf.contains("bucket IN") || pf.contains("isnotnull(bucket"),
-      s"postings scan is not partition-pruned on bucket:\n$f")
+    // the posting read opens only the query vocab's bucket leaves
+    val scans = scanRoots(viaIndex).filter(_.exists(_.contains(path)))
+    assert(scans.nonEmpty && scans.forall(_.forall(_.contains("/postings/bucket="))),
+      s"postings scan does not read bucket leaves only: $scans")
     // stats sidecar reflects the FULL corpus after the add (N and Σdl
     // drive idf/avgdl — a stale sidecar would skew every score)
     val st = spark.read.parquet(s"$path/stats").head()
@@ -224,11 +222,9 @@ class SearchSpec extends SparkSpecBase {
     val bucketDirs = new java.io.File(s"$path/postings").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket=")).map(_.getName)
     assert(bucketDirs.length > 2, s"lake not re-bucketed: ${bucketDirs.toSeq}")
-    val f = after.queryExecution.executedPlan.toString
-    val pf = f.linesIterator.find(l =>
-      l.contains("PartitionFilters") && l.contains("bucket")).getOrElse("")
-    assert(pf.contains("bucket#") || pf.contains("bucket IN") || pf.contains("isnotnull(bucket"),
-      s"rebucketed postings scan is not partition-pruned:\n$f")
+    val scans = scanRoots(after).filter(_.exists(_.contains(path)))
+    assert(scans.nonEmpty && scans.forall(_.forall(_.contains("/postings/bucket="))),
+      s"rebucketed postings scan does not read bucket leaves only: $scans")
     // adds keep working at the new width (sidecar's n_buckets drives them)
     graft.operators.Bm25.addToLexIndex(
       spark, path, Seq((9L, "red crust")).toDF("doc_id", "text"),
@@ -710,14 +706,11 @@ class SearchSpec extends SparkSpecBase {
     withVec.collect().foreach { r =>
       assert(r.getSeq[Float](4) === embById(r.getLong(1)))
     }
-    // EVERY base scan stays partition-pruned (the withVec join must
-    // not degrade its re-read into a full-lake scan)
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out)) { withVec.explain("formatted") }
-    val pfLines = out.toString("UTF-8").linesIterator
-      .filter(_.contains("PartitionFilters")).toSeq
-    assert(pfLines.count(_.contains("cell")) >= 2,
-      s"expected two cell-pruned base scans:\n${pfLines.mkString("\n")}")
+    // EVERY base scan reads only probed cell leaves (the withVec join
+    // must not degrade its re-read into a full-lake scan)
+    val scans = scanRoots(withVec).filter(_.exists(_.contains(p)))
+    assert(scans.size >= 2 && scans.forall(_.forall(_.contains("/base/cell="))),
+      s"expected two base scans of probed cell leaves only: $scans")
   }
 
   test("lex index: empty lake serves empty, rebuild is atomic-enough, add refuses parked trees") {

@@ -278,6 +278,10 @@ class ServeSpec extends SparkSpecBase {
       assert((mj \ "system" \ "cpu_percent").isInstanceOf[JDouble])
       assert((mj \ "system" \ "memory_percent").asInstanceOf[JDouble].num > 0.0)
       assert((mj \ "history").asInstanceOf[JArray].arr.nonEmpty)
+      // code generation so far in this JVM: a warm served request adds
+      // nothing to either number
+      assert((mj \ "codegen" \ "compiled_classes").asInstanceOf[JInt].num >= 0)
+      assert((mj \ "codegen" \ "compile_ms").asInstanceOf[JDouble].num >= 0.0)
 
       val (jc, jj) = get(client, port, "/jobs")
       assert(jc == 200)
@@ -624,6 +628,111 @@ class ServeSpec extends SparkSpecBase {
           s"$kind: jobs not all described as $desc: ${descs.distinct}")
         assert(descs.size <= maxJobs, s"$kind ran ${descs.size} Spark jobs, budget $maxJobs")
       }
+    }
+  }
+
+  /** Buckets of a lexical index with `nBuckets` that the analyzed
+    * `texts` hash into (the index's pmod-of-xxhash64 assignment).
+    */
+  private def bucketsOf(texts: Seq[String], nBuckets: Int): Set[Int] = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, explode, lit, pmod, xxhash64}
+    texts.toDF("q").select(explode(graft.operators.Bm25.analyze(col("q"))).as("t"))
+      .select(pmod(xxhash64(col("t")), lit(nBuckets.toLong)).cast("int"))
+      .as[Int].collect().toSet
+  }
+
+  private def batchBody(qs: Seq[String]): String =
+    qs.zipWithIndex.map { case (q, i) => s"""{"id":$i,"q":"$q"}""" }
+      .mkString("""{"queries":[""", ",", "]}")
+
+  test("http: a warm served request compiles no class its warm-up did not") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenCacheProbe
+    val root = tmpDir("codegen")
+    graft.operators.Bm25.buildLexIndex(searchDocs, col("id"), col("text"), s"$root/lex", nBuckets = 8)
+    graft.operators.Ann.buildIvfIndex(searchDocs, col("id"), col("emb"), s"$root/ann", nlist = 3)
+    val api = new HttpApi(spark, () => Findings.toDS(spark, fixtureFindings).toDF,
+      lexIndexPath = Some(s"$root/lex"), annIndexPath = Some(s"$root/ann"))
+    def enc(q: String) = q.replace(" ", "%20")
+    // per verb: the warm-up request first, then three whose vocabulary
+    // or vector reaches other buckets or cells
+    val texts = Seq("quick fox", "lazy dogs", "honey bears", "unrelated document")
+    val phrases = Seq("quick brown", "lazy dogs", "brown bears", "completely unrelated")
+    val vecs = Seq("1,0,0,0", "0,1,0,0", "0,0,1,0", "0,0,0.9,0.1")
+    val batches = Seq(Seq("quick fox", "honey"), Seq("lazy dogs", "den"),
+      Seq("brown bears", "hill"), Seq("unrelated document", "sleep"))
+    for (group <- Seq(texts, phrases, batches.map(_.mkString(" "))))
+      assert(group.tail.forall(t => !bucketsOf(Seq(t), 8).subsetOf(bucketsOf(group.take(1), 8))),
+        s"$group: every request after the warm-up must reach a bucket the warm-up did not")
+    withApi(api) { (port, client) =>
+      def send(kind: String, i: Int): JValue = {
+        val (c, j) = kind match {
+          case "batch" => postJson(client, port, "/search/lexical?k=3", batchBody(batches(i)))
+          case "lexical" => get(client, port, s"/search/lexical?q=${enc(texts(i))}&k=3")
+          case "phrase" => get(client, port, s"/search/phrase?q=${enc(phrases(i))}&k=3")
+          case "ann" => get(client, port, s"/search/ann?vec=${vecs(i)}&k=2&nprobe=1")
+          case "hybrid" =>
+            get(client, port, s"/search/hybrid?q=${enc(texts(i))}&vec=${vecs(i)}&k=3&nprobe=1")
+        }
+        assert(c == 200, s"$kind request $i answered $c: $j")
+        j \ "results"
+      }
+      val kinds = Seq("lexical", "phrase", "ann", "hybrid", "batch")
+      // adaptive execution numbers a plan's codegen stages in the order
+      // its query stages finish, and the number is part of the source:
+      // a warm plan shape may compile again under another number (seen
+      // on about one run in four), so sources compare without it
+      def unnumbered(src: String) = src.replaceAll("""CodegenStage\d+|codegenStageId=\d+""", "")
+      // every source the class cache held at some point of the warm-up:
+      // a class it has evicted since is compiled again, not new
+      val known = scala.collection.mutable.Set.empty[String]
+      def seen(): Unit = known ++= CodegenCacheProbe.sources().map(unnumbered)
+      seen()
+      val warmAnn = kinds.map { k => val r = send(k, 0); seen(); k -> r }.toMap.apply("ann")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val fresh = scala.collection.mutable.Set.empty[String]
+      val served = for (kind <- kinds; i <- 1 to 3) yield {
+        val r = send(kind, i)
+        fresh ++= CodegenCacheProbe.sources().filterNot(s => known(unnumbered(s)))
+        (kind, r)
+      }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(fresh.isEmpty, s"warm requests compiled ${fresh.size} new classes " +
+        s"($compiled compiles in all), e.g.\n${fresh.headOption.getOrElse("").take(3000)}")
+      // with nprobe=1 an ann request reads one cell: an answer unlike
+      // the warm-up's came from another cell
+      val annAnswers = served.collect { case ("ann", r) => r }
+      assert(annAnswers.forall(_ != warmAnn), s"an ann request probed the warm-up's cell: $annAnswers")
+      val (_, mj) = get(client, port, "/metrics")
+      assert((mj \ "codegen" \ "compiled_classes") ==
+        JInt(CodegenMetrics.METRIC_COMPILATION_TIME.getCount))
+    }
+  }
+
+  test("http: a batch over more than 32 buckets runs no more jobs than a whole-lake read") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = tmpDir("wide")
+    // 256 distinct terms over 64 buckets: every bucket holds postings,
+    // so a whole-lake read lists 64 leaves
+    val docs = (0 until 256).map(i => s"w$i").grouped(4).zipWithIndex
+      .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq.toDF("id", "text")
+    graft.operators.Bm25.buildLexIndex(docs, col("id"), col("text"), s"$root/lex", nBuckets = 64)
+    val qs = (0 until 64).map(i => s"w$i").grouped(4).map(_.mkString(" ")).toSeq
+    val probed = bucketsOf(qs, 64).size
+    assert(probed > 32, s"the batch reaches only $probed buckets")
+    val api = new HttpApi(spark, () => Findings.toDS(spark, fixtureFindings).toDF,
+      lexIndexPath = Some(s"$root/lex"))
+    withApi(api) { (port, client) =>
+      def once() = jobsDuring(postJson(client, port, "/search/lexical?k=3", batchBody(qs))._1)
+      once()
+      val (code, descs) = once()
+      assert(code == 200)
+      // Spark lists more than 32 leaves in a job of its own, as it does
+      // the 64 leaves of a whole-lake read: 10 jobs either way
+      assert(descs.size <= 10, s"a $probed-bucket batch ran ${descs.size} Spark jobs, budget 10")
     }
   }
 

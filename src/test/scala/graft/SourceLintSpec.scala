@@ -60,4 +60,24 @@ class SourceLintSpec extends AnyFunSuite {
     assert(outside.isEmpty, "mergeSchema outside etl/Compact.scala: " +
       outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
   }
+
+  test("an index lake's partition column is never filtered with isin outside the leaf reader") {
+    // A request-dependent id list in a filter becomes literals in the
+    // generated code (an IN switch and its bounds), so every new probe
+    // set or vocabulary compiles new classes. Probed cell=/bucket=
+    // leaves are opened by path through operators/Leaves.scala.
+    val owner = Paths.get("src", "main", "scala", "graft", "operators", "Leaves.scala")
+    val partIsin =
+      """(\(\s*["`]?(cell|bucket|partCol)["`]?\s*\)|\$"(cell|bucket)")\s*\.\s*(isin|isInCollection)\b""".r
+    val sources = mainSources
+    assert(sources.contains(owner), s"$owner not found under src/main")
+    val hits = for {
+      p <- sources
+      if p != owner
+      (l, n) <- codeLines(p)
+      if partIsin.findFirstIn(l).isDefined
+    } yield s"$p:$n"
+    assert(hits.isEmpty, "partition column filtered with isin outside the leaf reader: " +
+      hits.mkString(", "))
+  }
 }

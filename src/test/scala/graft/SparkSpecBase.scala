@@ -40,6 +40,25 @@ abstract class SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  /** Root paths of each file scan in `df`'s plan, cached parts
+    * included: a read of some leaves of a partitioned lake lists those
+    * leaves, a whole-lake read lists the lake root.
+    */
+  def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def roots(p: LogicalPlan): Seq[Seq[String]] = p.flatMap {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => Seq(r.location.rootPaths.map(_.toString))
+        case _ => Nil
+      }
+      case m: InMemoryRelation => roots(m.cacheBuilder.logicalPlan)
+      case _ => Nil
+    }
+    roots(df.queryExecution.optimizedPlan)
+  }
+
   override def afterAll(): Unit = {
     // keep the session for other suites (getOrCreate shares it)
     super.afterAll()

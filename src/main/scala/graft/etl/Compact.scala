@@ -1,6 +1,5 @@
 package graft.etl
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -280,13 +279,26 @@ object Compact {
     */
   private def relFileNames(
       fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
-    if (!fs.exists(root)) return Seq.empty
     val rootPath = root.toUri.getPath.stripSuffix("/")
-    val out = ArrayBuffer.empty[String]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext)
-      out += it.next().getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/")
-    out.sorted.toSeq
+    walkFiles(fs, root)
+      .map(_.getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/"))
+      .toSeq.sorted
+  }
+
+  /** Every file under `root` (or `root` itself, if it is a file),
+    * walked with `listStatus`. Hadoop's `listFiles` builds a
+    * `LocatedFileStatus` per entry, and without the native library the
+    * local file system fills in its permissions by running `ls -ld` in
+    * a subprocess, once per file. Lazy: a caller that needs one file
+    * stops listing at the first. A missing root has no files.
+    */
+  private[graft] def walkFiles(
+      fs: org.apache.hadoop.fs.FileSystem, root: Path): Iterator[org.apache.hadoop.fs.FileStatus] = {
+    val children =
+      try fs.listStatus(root)
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    children.iterator.flatMap(st =>
+      if (st.isDirectory) walkFiles(fs, st.getPath) else Iterator.single(st))
   }
 
   /** [[swapInto]] under an intent journal: the intent file (carrying
@@ -358,10 +370,8 @@ object Compact {
   /** True if any FILE exists under `p` (directories alone don't count —
     * a parked tree of empty partition parents is residue, not data).
     */
-  private def containsFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean = {
-    val it = fs.listFiles(p, true)
-    it.hasNext
-  }
+  private def containsFiles(fs: org.apache.hadoop.fs.FileSystem, p: Path): Boolean =
+    walkFiles(fs, p).hasNext
 
   /** Refuse a parked removal/compaction tree that still holds FILES —
     * it may be some partition's only copy after a crashed two-rename

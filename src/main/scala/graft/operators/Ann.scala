@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 import graft.functions.Vectors
 
@@ -295,7 +295,7 @@ object Ann {
     * failure mode for a correctness-first ANN path (base-side ragged
     * rows are dropped before they take a cell, see [[ivfRows]]). One
     * cheap narrow job (reads only array lengths, stops at the first
-    * offender).
+    * offender); none over a [[localBatch]].
     */
   private[operators] def requireQueryDim(q: DataFrame, dim: Int): Unit = {
     val bad = q.filter(size(col("q_emb")) =!= dim)
@@ -736,13 +736,8 @@ object Ann {
       }
       false
     }
-    val out = scala.collection.mutable.Set.empty[String]
-    val it = fs.listFiles(base, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (!hiddenAnywhere(f.getPath)) out += f.getPath.toString
-    }
-    out.toSet
+    graft.etl.Compact.walkFiles(fs, base).map(_.getPath)
+      .filterNot(hiddenAnywhere).map(_.toString).toSet
   }
 
   /** The persisted coarse codebook (double centroids, for assignment
@@ -756,8 +751,9 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Double]], Map[Int, Long]) =
     SidecarMemo(spark, s"$path/codebook", "codebook") {
-      val cbRows = spark.read.parquet(s"$path/codebook")
-        .select("cell", "centroid_d", "members").collect()
+      // read with its fixed schema: no footer-inference job
+      val cbRows = spark.read.schema(CodebookReadSchema).parquet(s"$path/codebook").collect()
+      require(!cbRows.exists(_.anyNull), s"$path/codebook has null fields -- corrupt index")
       require(cbRows.nonEmpty, s"$path/codebook is empty -- not an index")
       val byCell = cbRows.sortBy(_.getInt(0))
       require(
@@ -767,11 +763,18 @@ object Ann {
         byCell.map(r => r.getInt(0) -> r.getLong(2)).toMap)
     }
 
+  private val CodebookReadSchema = StructType(Seq(
+    StructField("cell", IntegerType),
+    StructField("centroid_d", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)),
+    StructField("members", org.apache.spark.sql.types.LongType)))
+
   /** Write the codebook sidecar (centroids in both precisions +
     * occupancy, via [[codebookFrame]] — the single owner of the float
     * cast) into `codebook__tmp` and put it in place
     * ([[graft.etl.Compact.replaceDir]]): a crash mid-write never
-    * leaves a partial index-complete marker.
+    * leaves a partial index-complete marker. What it wrote is recorded
+    * for the new generation ([[SidecarMemo.record]]), so the next
+    * [[readCodebookSidecar]] loads nothing.
     */
   private[operators] def writeCodebookSidecar(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -788,6 +791,8 @@ object Ann {
       target.getFileSystem(spark.sparkContext.hadoopConfiguration), target, "") { tmp =>
       cb.write.mode("overwrite").parquet(tmp.toString)
     }
+    SidecarMemo.record(spark, s"$path/codebook", "codebook",
+      (codebook, codebook.indices.map(c => c -> members.getOrElse(c, 0L)).toMap))
   }
 
   /** Compact a persisted index's base lake (`path/base`) — the second
@@ -876,7 +881,7 @@ object Ann {
     // __refit_old, and only after gating tmp), so finishing the delete
     // completes the swap, not discards an only copy
     if (fs.exists(old)) {
-      if (!fs.listFiles(old, true).hasNext) fs.delete(old, true)
+      if (graft.etl.Compact.walkFiles(fs, old).isEmpty) fs.delete(old, true)
       else {
         require(fs.exists(intent),
           s"$old holds parked index data without a refit intent -- " +
@@ -967,9 +972,9 @@ object Ann {
     * cells hold no eligible candidate return no rows (same contract as
     * an empty match set).
     *
-    * CALLER CONTRACT: caches the (q_id, cell) probe frame (it feeds
-    * both the pruning list and the scoring join) -- wrap in
-    * [[Dedup.scoped]] or clear the cache, as with the dedup operators.
+    * The query batch is bounded: it is collected once on the driver
+    * ([[localBatch]]) and its probe rows once more ([[probePruned]]);
+    * nothing is cached, so there is no cache for the caller to clear.
     */
   def queryIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -979,7 +984,7 @@ object Ann {
       withVec: Boolean = false): DataFrame = {
     requireBaseServable(spark, path)
     val (codebook, live, centDf) = readLiveCentroids(spark, path)
-    val q = validQueries(queries, qId, qVec)
+    val q = localBatch(validQueries(queries, qId, qVec))
     // an index whose every cell is dead has an empty live codebook —
     // no rows can come back, so there is no dim to enforce
     if (live.nonEmpty) requireQueryDim(q, codebook(0).length)
@@ -1096,25 +1101,45 @@ object Ann {
     SidecarMemo.record(spark, s"$path/codebook", "base",
       org.apache.spark.sql.GraftColumnShim.asNullable(written))
 
-  /** Probe + prune for a persisted index: the probe result is needed
-    * TWICE (the pruning cell list and the scoring join). It is
-    * queries x nprobe rows -- NOT driver-bounded when the query set is
-    * a big batch (the normal case for a corpus-vs-corpus ANN pass) --
-    * so it is CACHED, not collected: the only driver materialization
-    * is the distinct cell list, deduplicated per partition before the
-    * collect (<= nlist rows per partition, whatever the batch size —
-    * and no shuffle job for a global distinct).
-    * scopedCache: Verify/Bench clear the cache between queries;
-    * long-lived callers wrap in [[Dedup.scoped]] like the other
-    * multi-branch operators. Returns (pruning cells, probe frame
-    * joined back to the query columns).
+  /** A bounded query frame resolved ONCE on the driver: its rows
+    * collected (over a driver-local batch — every HTTP request — Spark
+    * folds the projection into the local relation and runs no job) and
+    * served back as a local relation, so every later use of the batch
+    * (dim check, probe, scoring, rerank) reads the same rows without
+    * evaluating the caller's plan again. Bounded: the batch contract
+    * every serving verb keeps (the same rows used to ride broadcasts).
+    */
+  private[operators] def localBatch(q: DataFrame): DataFrame =
+    localFrame(q.sparkSession, q.schema, q.collect().toSeq)
+
+  /** `rows` as a driver-local relation of `schema`: scanning it, or
+    * broadcasting it, reads no file, and its values reach no generated
+    * code.
+    */
+  private[operators] def localFrame(
+      spark: org.apache.spark.sql.SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Probe + prune for a persisted index, over a [[localBatch]] `q`
+    * of (q_id, q_emb, qp_nrm): the top-`nprobe` (q_id, cell) rows
+    * ([[topProbeCells]], ≤ queries × nprobe) are collected once and
+    * serve twice — their distinct cells are the pruning list, and
+    * joined on the driver to the batch's rows they are the probe side
+    * of the scoring join, one local relation of (q_id, cell, q_emb,
+    * qp_nrm). Nothing is cached. The join keeps the equi-join rules of
+    * [[knnIvf]]'s probe: a null q_id probes nothing, and every row of a
+    * repeated q_id scores its vector against all cells probed for
+    * that id. Returns (pruning cells, probe frame).
     */
   private[operators] def probePruned(
       q: DataFrame, centDf: DataFrame, nprobe: Int): (Array[Int], DataFrame) = {
-    val tc = Dedup.scopedCache(topProbeCells(q, centDf, nprobe))
-    import tc.sparkSession.implicits._
-    val cells = tc.select("cell").as[Int].mapPartitions(_.distinct).collect().distinct
-    (cells, tc.join(q, "q_id"))
+    val probes = topProbeCells(q, centDf, nprobe).collect()
+    val byId = q.collect().filterNot(_.isNullAt(0)).groupBy(_.get(0))
+    val rows = for (p <- probes; r <- byId.getOrElse(p.get(0), Array.empty[Row]))
+      yield Row(r.get(0), p.getInt(1), r.get(1), r.get(2))
+    (probes.map(_.getInt(1)).distinct,
+      localFrame(q.sparkSession, StructType(Seq(q.schema("q_id"),
+        StructField("cell", IntegerType), q.schema("q_emb"), q.schema("qp_nrm"))), rows.toSeq))
   }
 
   /** Embedding-cosine near-duplicate pairs at corpus scale: candidate

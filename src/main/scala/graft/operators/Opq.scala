@@ -371,8 +371,9 @@ object Opq {
     * against `source` — the table holding the ORIGINAL vectors, which
     * must cover every indexed id (enforced inside the rerank join).
     * Reported sims are true cosines — the self-verifying knn oracle
-    * contract, unchanged. Same two-cache caller contract as
-    * [[Pq.queryIvfPqIndex]] (wrap in [[Dedup.scoped]] or clear).
+    * contract, unchanged. Caches the projected queries and, like
+    * [[Pq.queryIvfPqIndex]], the rerank join (wrap in [[Dedup.scoped]]
+    * or clear).
     */
   def queryOpqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,

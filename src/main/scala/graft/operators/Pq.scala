@@ -147,7 +147,7 @@ object Pq {
     val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
       .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
-    val q = Ann.validQueries(queries, qId, qVec)
+    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
     Ann.requireQueryDim(q, cb.m * cb.sub)
     // raw (non-residual) layout: zero centroid in the norm, no
     // q·centroid term in the score — the same ADC owners serve both
@@ -435,12 +435,13 @@ object Pq {
     * index was built from); reported sims are true cosines, same
     * oracle contract as the whole knn family.
     *
-    * CALLER CONTRACT: caches TWO frames — the (q_id, cell) probe frame
-    * and the shortlist × source rerank join (which carries the original
-    * vectors of shortlist pairs) — so each scan in the plan executes
-    * once per call. Wrap in [[Dedup.scoped]] or clear the cache, as
-    * with [[Ann.queryIvfIndex]]; a long-lived caller that skips the
-    * scope accumulates BOTH per call.
+    * CALLER CONTRACT: caches the shortlist × source rerank join
+    * (which carries the original vectors of shortlist pairs), so each
+    * scan in the plan executes once per call; the query batch and its
+    * probe rows are collected once on the driver, as in
+    * [[Ann.queryIvfIndex]]. Wrap in [[Dedup.scoped]] or clear the
+    * cache; a long-lived caller that skips the scope accumulates one
+    * cached frame per call.
     */
   def queryIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -454,7 +455,7 @@ object Pq {
     // ONE resident sidecar read serves both the probe frame and the
     // residual decode (the double codebook)
     val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
-    val q = Ann.validQueries(queries, qId, qVec)
+    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
     Ann.requireQueryDim(q, cb.m * cb.sub)
     val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
     // ADC scoring: qc = q·centroid(cell) and the per-query LUT are
@@ -601,7 +602,7 @@ object Pq {
     val sample = Ann.sampleVectors(b0, maxFit)
     val coarse = Ann.fitCodebookFromSample(sample, nlist, seed)
     val cb = fitFromSample(residualSample(sample, coarse), m, kSub, pqSeed(seed))
-    val q = Ann.validQueries(queries, qId, qVec)
+    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
     Ann.requireQueryDim(q, cb.m * cb.sub)
     val b = b0
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))

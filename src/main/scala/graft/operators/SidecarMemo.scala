@@ -62,8 +62,8 @@ private[graft] object SidecarMemo {
 
   /** Keep `value` for the sidecar's current generation without loading
     * it: a writer that just moved the generation and knows what `slot`
-    * holds for it (the lake schema it wrote) saves the next read the
-    * load.
+    * holds for it (the sidecar row or codebook, or the lake schema it
+    * wrote) saves the next read the load.
     */
   def record(spark: SparkSession, sidecar: String, slot: String, value: Any): Unit = {
     val dir = new Path(sidecar)

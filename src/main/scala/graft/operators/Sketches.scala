@@ -191,8 +191,9 @@ object Sketches {
       buf.arr.take(buf.n).sorted.toSeq
     override def bufferEncoder: org.apache.spark.sql.Encoder[BottomBuf] =
       org.apache.spark.sql.Encoders.kryo[BottomBuf]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+    // built on the driver and shipped with the aggregator (see HllRegs)
+    private val out = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] = out
   }
 
   def kmvDistinctByKey(
@@ -669,8 +670,9 @@ object Sketches {
     }
     override def bufferEncoder: org.apache.spark.sql.Encoder[MgBuf] =
       org.apache.spark.sql.Encoders.kryo[MgBuf]
-    override def outputEncoder: org.apache.spark.sql.Encoder[MgSummary] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[MgSummary]()
+    // built on the driver and shipped with the aggregator (see HllRegs)
+    private val out = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[MgSummary]()
+    override def outputEncoder: org.apache.spark.sql.Encoder[MgSummary] = out
   }
 
   /** One-pass Misra–Gries candidate summary over `key` (cast to
@@ -1132,8 +1134,9 @@ object Sketches {
     }
     override def bufferEncoder: org.apache.spark.sql.Encoder[PairBuf] =
       org.apache.spark.sql.Encoders.kryo[PairBuf]
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Long)]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
+    // built on the driver and shipped with the aggregator (see HllRegs)
+    private val out = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Long)]]()
+    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[(Long, Long)]] = out
   }
 
   /** Per-key quantile estimates from a DETERMINISTIC uniform row

@@ -321,7 +321,8 @@ object Sq {
     * reconstruction, exact rerank against `source` (the corpus table
     * holding the original vectors — the `requireFullCoverage` drift
     * guard of the PQ path applies).
-    * Same caller cache contract as [[Ann.queryIvfIndex]].
+    * Same caller cache contract as [[Pq.queryIvfPqIndex]] (the rerank
+    * join).
     */
   def queryIvfSq8Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -335,7 +336,7 @@ object Sq {
     val sl = Pq.shortlistSize(shortlist, k)
     val st = loadSqStats(spark, path)
     val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
-    val q = Ann.validQueries(queries, qId, qVec)
+    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
     Ann.requireQueryDim(q, st.dim)
     val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
     val pruned = Ann.readBaseCells(spark, path, cells)

@@ -119,7 +119,11 @@ object TopK {
     override def finish(buf: Buf): Seq[MetricId] =
       sortedIdx(buf).map(i => MetricId(buf.longs(i), buf.ids(i))).toSeq
     override def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
-    override def outputEncoder: Encoder[Seq[MetricId]] = ExpressionEncoder[Seq[MetricId]]()
+    // built here, on the driver, and shipped with the aggregator: a
+    // task that derives it by Scala reflection under an executor class
+    // loader can fail to resolve scala.Nothing
+    private val out = ExpressionEncoder[Seq[MetricId]]()
+    override def outputEncoder: Encoder[Seq[MetricId]] = out
   }
 
   /** Column form: `topK(3)(metricCol, idCol)` inside an agg. */
@@ -141,7 +145,8 @@ object TopK {
     override def finish(buf: Buf): Seq[ScoredId] =
       sortedIdx(buf).map(i => ScoredId(buf.dbls(i), buf.ids(i))).toSeq
     override def bufferEncoder: Encoder[Buf] = Encoders.kryo[Buf]
-    override def outputEncoder: Encoder[Seq[ScoredId]] = ExpressionEncoder[Seq[ScoredId]]()
+    private val out = ExpressionEncoder[Seq[ScoredId]]() // on the driver: see TopKLongs
+    override def outputEncoder: Encoder[Seq[ScoredId]] = out
   }
 
   /** Column form for similarity metrics: `topKScored(5)(simCol, idCol)`. */

@@ -410,13 +410,10 @@ final class HttpApi(
     val sc = spark.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"search.$kind")
-    // scoped: the retrieval verbs cache small intermediates (the ANN
-    // probe frame) via Dedup.scopedCache — in a long-running server
-    // each request would otherwise leak one tiny cached frame into the
-    // block manager forever. The scope unpersists them after the
-    // bounded collect below; requests are single-threaded within a
-    // handler call, satisfying the scope's threading contract.
-    try graft.operators.Dedup.scoped { searchRouteImpl(kind, ex) }
+    // the served verbs cache nothing (each collects its bounded query
+    // batch on the driver), so a request leaves no frame in the block
+    // manager and needs no unpersisting scope
+    try searchRouteImpl(kind, ex)
     finally sc.setJobDescription(prevDesc) // null clears it
   }
 

@@ -166,6 +166,44 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(n3 <= compactBudget, s"BM25 compaction ran $n3 Spark jobs, budget $compactBudget")
   }
 
+  test("a query right after an IVF-family add or remove runs no more jobs than a warm query") {
+    // every write records the codebook, occupancy and base schema it
+    // wrote for the new generation, so the first read of that
+    // generation loads no sidecar and infers no schema
+    def check(family: String)(build: String => Unit, add: String => Unit,
+        remove: String => Unit, query: String => Unit): Unit = {
+      val p = tmpDir(s"graft_life_fresh_$family") + "/ix"
+      build(p)
+      query(p)
+      val warm = jobsDuring(query(p))
+      add(p)
+      val afterAdd = jobsDuring(query(p))
+      remove(p)
+      val afterRemove = jobsDuring(query(p))
+      info(s"$family query jobs: warm $warm, after add $afterAdd, after remove $afterRemove")
+      assert(afterAdd <= warm, s"$family: a query after the add ran $afterAdd jobs, a warm one $warm")
+      assert(afterRemove <= warm, s"$family: a query after the remove ran $afterRemove jobs, a warm one $warm")
+    }
+    check("ivf")(
+      Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), _, nlist = 4),
+      Ann.addToIvfIndex(spark, _, odd, col("vec_id"), col("embedding")),
+      Ann.removeFromIvfIndex(spark, _, victims, col("id")),
+      p => Ann.queryIvfIndex(spark, p, queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2)
+        .collect(): Unit)
+    check("ivfpq")(
+      Pq.buildIvfPqIndex(even, col("vec_id"), col("embedding"), _, nlist = 4, m = 2, kSub = 8),
+      Pq.addToIvfPqIndex(spark, _, odd, col("vec_id"), col("embedding")),
+      Pq.removeFromIvfPqIndex(spark, _, victims, col("id")),
+      p => Dedup.scoped(Pq.queryIvfPqIndex(spark, p, vectors, col("vec_id"), col("embedding"),
+        queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()): Unit)
+    check("ivfsq8")(
+      Sq.buildIvfSq8Index(even, col("vec_id"), col("embedding"), _, nlist = 4),
+      Sq.addToIvfSq8Index(spark, _, odd, col("vec_id"), col("embedding")),
+      Sq.removeFromIvfSq8Index(spark, _, victims, col("id")),
+      p => Dedup.scoped(Sq.queryIvfSq8Index(spark, p, vectors, col("vec_id"), col("embedding"),
+        queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()): Unit)
+  }
+
   test("every IVF-family write records the base-lake schema parquet infers, through compaction") {
     def recorded(p: String): org.apache.spark.sql.types.StructType =
       graft.operators.SidecarMemo(spark, s"$p/codebook", "base")(

@@ -970,4 +970,104 @@ class SearchSpec extends SparkSpecBase {
     assert(got.forall { case (q, b, _, sim) => sim == cosExact(embs(b), embs(q)) },
       "rerank sim is not the exact strict-fold cosine")
   }
+
+  // ---- served batches resolved on the driver ≡ the one-shot verbs ----
+
+  /** Corpus of the served-batch cases, its lexical index and its IVF
+    * index (nlist 3): (doc_id, text, emb).
+    */
+  private lazy val batchFixture = {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps", Array(1f, 0f, 0f, 0f)),
+      (2L, "lazy dogs sleep all day", Array(0f, 1f, 0f, 0f)),
+      (3L, "quick brown foxes and quick dogs", Array(0.9f, 0.1f, 0f, 0f)),
+      (4L, "a completely unrelated document", Array(0f, 0f, 1f, 0f)),
+      (5L, "brown bears eat honey", Array(0f, 0f, 0.9f, 0.1f)),
+      (6L, "the fox den sits under the hill", Array(0.8f, 0f, 0.2f, 0f)),
+      (7L, "quick quick brown fox den", Array(0.1f, 0.9f, 0f, 0.1f)),
+      (8L, "honey bears den under the hill", Array(0f, 0.2f, 0.1f, 0.9f))
+    ).toDF("doc_id", "text", "emb")
+    val root = java.nio.file.Files.createTempDirectory("graft_batch").toString
+    graft.operators.Bm25.buildLexIndex(docs, col("doc_id"), col("text"), s"$root/lex", nBuckets = 4)
+    graft.operators.Ann.buildIvfIndex(docs, col("doc_id"), col("emb"), s"$root/ann", nlist = 3)
+    (docs, s"$root/lex", s"$root/ann")
+  }
+
+  /** Rows of `df` as sorted strings: a null q_id compares too. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** `batch` (q_id, q, vec) through each served verb equals its
+    * one-shot twin: queryLexIndex ≡ searchTopK, queryPhraseIndex ≡
+    * phraseTopK, queryIvfIndex ≡ knnIvf with the build's parameters.
+    * Returns the lexical answer.
+    */
+  private def servedEqualsOneShot(batch: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val (docs, lex, ann) = batchFixture
+    import graft.operators.{Ann, Bm25}
+    val lexGot = rowsOf(Bm25.queryLexIndex(spark, lex, batch, col("q_id"), col("q"), k = 8))
+    assert(lexGot == rowsOf(Bm25.searchTopK(
+      docs, col("doc_id"), col("text"), batch, col("q_id"), col("q"), k = 8)), "lexical")
+    assert(rowsOf(Bm25.queryPhraseIndex(spark, lex, batch, col("q_id"), col("q"), k = 8)) ==
+      rowsOf(Bm25.phraseTopK(docs, col("doc_id"), col("text"), batch, col("q_id"), col("q"), k = 8)),
+      "phrase")
+    for (nprobe <- Seq(1, 3)) assert(
+      rowsOf(Ann.queryIvfIndex(spark, ann, batch, col("q_id"), col("vec"), k = 3, nprobe = nprobe)) ==
+        rowsOf(Ann.knnIvf(docs, col("doc_id"), col("emb"), batch, col("q_id"), col("vec"),
+          k = 3, nlist = 3, nprobe = nprobe)), s"ann nprobe $nprobe")
+    lexGot
+  }
+
+  /** Lexical (doc_id -> score_micro) of q_id `q` in `rows`. */
+  private def scoresOf(rows: Seq[String], q: String): Map[String, String] =
+    rows.map(_.split('|')).collect { case Array(`q`, d, _, s) => d -> s }.toMap
+
+  test("served batch: queries sharing terms ≡ one-shot; each scores as if asked alone") {
+    val batch = Seq((1L, "quick fox", Array(1f, 0f, 0f, 0f)),
+      (2L, "fox den", Array(0f, 1f, 0f, 0f)),
+      (3L, "quick brown fox", Array(0.5f, 0.5f, 0f, 0f))).toDF("q_id", "q", "vec")
+    val got = servedEqualsOneShot(batch)
+    // df is a corpus statistic: sharing a term with another query of
+    // the batch changes no score
+    for (i <- 1 to 3) assert(scoresOf(got, i.toString) ==
+      scoresOf(servedEqualsOneShot(batch.filter(col("q_id") === i)), i.toString), s"query $i")
+    assert(scoresOf(got, "3").nonEmpty)
+  }
+
+  test("served batch: a query with no analyzable term ≡ one-shot and answers nothing") {
+    val alone = Seq((1L, "!!! ???", Array(1f, 0f, 0f, 0f))).toDF("q_id", "q", "vec")
+    assert(servedEqualsOneShot(alone).isEmpty)
+    val mixed = alone.unionByName(Seq((2L, "honey", Array(0f, 0f, 1f, 0f))).toDF("q_id", "q", "vec"))
+    val got = servedEqualsOneShot(mixed)
+    assert(scoresOf(got, "1").isEmpty && scoresOf(got, "2").nonEmpty)
+  }
+
+  test("served batch: a null q_id ≡ one-shot; lexical scores it, phrase and ann drop it") {
+    val batch = Seq((Some(1L), "quick fox", Array(1f, 0f, 0f, 0f)),
+      (None, "honey bears", Array(0f, 0f, 1f, 0f))).toDF("q_id", "q", "vec")
+    val got = servedEqualsOneShot(batch)
+    val named = servedEqualsOneShot(
+      Seq((7L, "honey bears", Array(0f, 0f, 1f, 0f))).toDF("q_id", "q", "vec"))
+    assert(scoresOf(got, "null").nonEmpty && scoresOf(got, "null") == scoresOf(named, "7"))
+    val (_, lex, ann) = batchFixture
+    assert(graft.operators.Bm25.queryPhraseIndex(spark, lex, batch, col("q_id"), col("q"), k = 8)
+      .filter(col("q_id").isNull).isEmpty)
+    assert(graft.operators.Ann.queryIvfIndex(spark, ann, batch, col("q_id"), col("vec"), k = 3, nprobe = 3)
+      .filter(col("q_id").isNull).isEmpty)
+  }
+
+  test("served batch: duplicate q_ids ≡ one-shot; lexical sums the rows' scores") {
+    val batch = Seq((1L, "quick fox", Array(1f, 0f, 0f, 0f)),
+      (1L, "fox den", Array(0f, 0f, 0.9f, 0.1f)),
+      (2L, "honey", Array(0f, 1f, 0f, 0f)),
+      (2L, "honey", Array(0f, 1f, 0f, 0f))).toDF("q_id", "q", "vec")
+    val got = servedEqualsOneShot(batch)
+    val apart = servedEqualsOneShot(Seq((10L, "quick fox", Array(1f, 0f, 0f, 0f)),
+      (11L, "fox den", Array(0f, 0f, 0.9f, 0.1f)), (12L, "honey", Array(0f, 1f, 0f, 0f)))
+      .toDF("q_id", "q", "vec"))
+    def plus(a: Map[String, String], b: Map[String, String]) =
+      (a.keySet ++ b.keySet).map(d => d -> (a.getOrElse(d, "0").toLong + b.getOrElse(d, "0").toLong).toString).toMap
+    assert(scoresOf(got, "1") == plus(scoresOf(apart, "10"), scoresOf(apart, "11")))
+    assert(scoresOf(got, "2") == plus(scoresOf(apart, "12"), scoresOf(apart, "12")))
+  }
 }

@@ -80,4 +80,36 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, "partition column filtered with isin outside the leaf reader: " +
       hits.mkString(", "))
   }
+
+  test("a typed aggregator's output encoder is built once, not derived per call") {
+    // Spark asks for the output encoder inside tasks; an encoder derived
+    // there by Scala reflection, under an executor class loader, can
+    // fail to resolve scala.Nothing. Build it in a val on the driver.
+    val derive = """ExpressionEncoder\s*[\[(]|Encoders\s*\.|\bencoderFor\b|\bimplicitly\s*\[""".r
+    val hits = for {
+      p <- mainSources
+      lines = codeLines(p)
+      ((l, n), i) <- lines.zipWithIndex
+      if l.contains("def outputEncoder")
+      // the definition's line, and the next one when the body starts there
+      body = l + (if (l.endsWith("=") || l.endsWith("{")) lines.lift(i + 1).map(_._1).getOrElse("") else "")
+      if derive.findFirstIn(body.substring(body.indexOf("def outputEncoder"))).isDefined
+    } yield s"$p:$n"
+    assert(hits.isEmpty, "output encoder derived inside def outputEncoder: " + hits.mkString(", "))
+  }
+
+  test("file listings use listStatus, never listFiles or listLocatedStatus") {
+    // Hadoop's listFiles and listLocatedStatus build a LocatedFileStatus
+    // per entry; without the native library the local file system fills
+    // in its permissions by running `ls -ld` in a subprocess per file.
+    // Walk with listStatus (graft.etl.Compact.walkFiles). Only calls with
+    // arguments match: java.io.File.listFiles() takes none.
+    val located = """\b(listFiles|listLocatedStatus)\s*\(\s*[^)\s]""".r
+    val hits = for {
+      p <- mainSources
+      (l, n) <- codeLines(p)
+      if located.findFirstIn(l).isDefined
+    } yield s"$p:$n"
+    assert(hits.isEmpty, "Hadoop listFiles/listLocatedStatus in src/main: " + hits.mkString(", "))
+  }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-/** Small-files compaction for parquet datasets.
+/** Small-files compaction for parquet datasets, and the one owner of
+  * every directory swap in the repo.
   *
   * Long-lived lakes accumulate small files (streaming micro-batches,
   * per-task outputs, incremental upserts) until listing and footer
@@ -27,13 +28,20 @@ import org.apache.spark.sql.types.StringType
   *    directory of a pass in one read and one write, a fixed number of
   *    Spark jobs, and gates them all on their parquet footer row counts
   *    before the first swap.
-  *  - NOT transactional: each rewritten directory is swapped in with
-  *    two renames, so a crash in the swap window parks the old data at
-  *    `<path>__compact_old` (never silently lost). The flat swap is
-  *    intent-journaled and the next [[compact]] of the same path
-  *    converges it ([[convergeCrashedSwap]]) before recompacting.
-  *    Concurrent readers mid-swap see a missing directory — coordinate
-  *    externally, or use an ACID table format when that matters.
+  *  - Every verb that replaces a WHOLE directory — [[compact]], the
+  *    sketch-lake compactions, `Ann.refitIvfIndex` and
+  *    `Bm25.rebucketLexIndex` — runs through one journaled core,
+  *    [[rewriteJournaled]]: it converges its own crashed swap
+  *    ([[convergeCrashedSwap]]), refuses any other parked sibling,
+  *    lets the caller write and gate the replacement, and swaps it in
+  *    under an intent journal ([[swapIntoJournaled]]). So a crash at
+  *    any step leaves the before or the after state, and the next run
+  *    of any of those verbs reaches it.
+  *  - NOT transactional: a swap is two renames, so a crash in the swap
+  *    window parks the old data at `<path>__<verb>_old` (never
+  *    silently lost) and readers mid-swap see a missing directory —
+  *    coordinate externally, or use an ACID table format when that
+  *    matters. `fs.rename` is called only in this file.
   */
 object Compact {
 
@@ -76,32 +84,23 @@ object Compact {
       spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactStats = {
     val p = new Path(path)
-    // siblings of the NORMALIZED path: string concat on a trailing-slash
-    // input would nest them inside the dataset and fail the swap after
-    // the full rewrite
-    val tmp = new Path(p.getParent, p.getName + "__compact_tmp")
-    val old = new Path(p.getParent, p.getName + "__compact_old")
-    // a crashed previous compaction converges here instead of wedging:
-    // the original is restored (mid-swap crash) or the landed rewrite
-    // is kept (post-swap crash), then this run recompacts normally
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    convergeCrashedSwap(fs, p, old, "compact")
-    val listing = fs.listStatus(p)
-    // subdir check FIRST: a partitionBy root holds only _SUCCESS plus
-    // partition dirs, and the "no data files" message would mislead.
-    // HIDDEN subdirs (`_temporary` residue from a crashed append,
-    // `_batches` commit markers) are metadata, not partitions — the
-    // same [[isHiddenName]] rule [[dataLeaves]] applies
-    require(listing.forall(s => s.isFile || isHiddenName(s.getPath.getName)),
-      s"$p has subdirectories — compact partition leaf dirs individually")
-    val parts = listing.filter(isData).toSeq
-    require(parts.nonEmpty, s"no data files to compact under $p")
-    try rewriteFragmented(spark, fs, p, Seq(p -> parts), targetBytes, tmp) match {
-      case Seq((_, stats)) =>
-        swapIntoJournaled(fs, tmp, p, old)
-        stats
-      case _ => CompactStats(parts.length, parts.map(_.getLen).sum, parts.length)
-    } finally fs.delete(tmp, true): Unit
+    rewriteJournaled(fs, p, "compact") { tmp =>
+      val listing = fs.listStatus(p)
+      // subdir check FIRST: a partitionBy root holds only _SUCCESS plus
+      // partition dirs, and the "no data files" message would mislead.
+      // HIDDEN subdirs (`_temporary` residue from a crashed append,
+      // `_batches` commit markers) are metadata, not partitions — the
+      // same [[isHiddenName]] rule [[dataLeaves]] applies
+      require(listing.forall(s => s.isFile || isHiddenName(s.getPath.getName)),
+        s"$p has subdirectories — compact partition leaf dirs individually")
+      val parts = listing.filter(isData).toSeq
+      require(parts.nonEmpty, s"no data files to compact under $p")
+      rewriteFragmented(spark, fs, p, Seq(p -> parts), targetBytes, tmp) match {
+        case Seq((_, stats)) => stats
+        case _ => CompactStats(parts.length, parts.map(_.getLen).sum, parts.length)
+      }
+    }
   }
 
   /** `leaf`'s path relative to `root` ("" for the root itself). */
@@ -228,7 +227,7 @@ object Compact {
     * swap lands. A crash inside the window leaves the original
     * recoverable at `old`.
     */
-  private[graft] def swapInto(
+  private def swapInto(
       fs: org.apache.hadoop.fs.FileSystem, tmp: Path, target: Path, old: Path): Unit = {
     val oldParent = old.getParent
     if (oldParent != null) fs.mkdirs(oldParent)
@@ -244,8 +243,9 @@ object Compact {
     * place when it does not. A crash mid-write leaves only the tmp dir,
     * never a partial `target`. `write` may gate what it wrote and throw
     * to abort with `target` untouched. The single owner of the
-    * tmp-then-replace sequence for sidecars, records and rewritten
-    * lakes.
+    * unjournaled tmp-then-replace sequence: sidecars, records, and
+    * outputs a rerun recomputes from their source. A directory
+    * rewritten from its own contents goes through [[rewriteJournaled]].
     */
   private[graft] def replaceDir[A](
       fs: org.apache.hadoop.fs.FileSystem, target: Path, tag: String)(write: Path => A): A = {
@@ -277,7 +277,7 @@ object Compact {
     * manifest fingerprint (part-file names carry writer UUIDs, so two
     * independent rewrites collide with ~0 probability).
     */
-  private def relFileNames(
+  private[graft] def relFileNames(
       fs: org.apache.hadoop.fs.FileSystem, root: Path): Seq[String] = {
     val rootPath = root.toUri.getPath.stripSuffix("/")
     walkFiles(fs, root)
@@ -309,7 +309,7 @@ object Compact {
     * the manifest is the rerun's proof that a standing target is that
     * gated rewrite and not an external recreation.
     */
-  private[graft] def swapIntoJournaled(
+  private def swapIntoJournaled(
       fs: org.apache.hadoop.fs.FileSystem, tmp: Path, target: Path, old: Path): Unit = {
     val intent = swapIntent(target)
     val out = fs.create(intent, true)
@@ -338,7 +338,7 @@ object Compact {
     * first rename or after the park delete — the swap never started or
     * fully landed; cleared either way.
     */
-  private[graft] def convergeCrashedSwap(
+  private def convergeCrashedSwap(
       fs: org.apache.hadoop.fs.FileSystem, target: Path, old: Path,
       verb: String): Unit = {
     val intent = swapIntent(target)
@@ -367,6 +367,37 @@ object Compact {
     fs.delete(intent, true): Unit
   }
 
+  /** The one whole-directory rewrite, shared by every verb that
+    * replaces a directory wholesale ([[compact]], the sketch-lake
+    * compactions, `Ann.refitIvfIndex`, `Bm25.rebucketLexIndex`). In
+    * order:
+    *  1. any OTHER verb's parked sibling of `target` holding files is
+    *     refused ([[requireServable]]) — checked before step 2, so the
+    *     intent that verb's rerun needs is never cleared here;
+    *  2. this verb's own crashed swap converges to the before or the
+    *     after state ([[convergeCrashedSwap]] on `<target>__<verb>_old`);
+    *  3. `write` gets `<target>__<verb>_tmp` (cleared first): it writes
+    *     the replacement there and checks it, throwing to abort with
+    *     `target` untouched. A `write` that leaves no tmp (nothing to
+    *     rewrite: an absent or already-converged target) swaps nothing;
+    *  4. the gated tmp swaps in under the intent journal
+    *     ([[swapIntoJournaled]]), and tmp is cleared whatever happens.
+    * Returns what `write` returned.
+    */
+  private[graft] def rewriteJournaled[A](
+      fs: FileSystem, target: Path, verb: String)(write: Path => A): A = {
+    val tmp = new Path(target.getParent, s"${target.getName}__${verb}_tmp")
+    val old = new Path(target.getParent, s"${target.getName}__${verb}_old")
+    requireServable(fs, target, s"the $verb", except = old.getName)
+    convergeCrashedSwap(fs, target, old, verb)
+    fs.delete(tmp, true)
+    try {
+      val out = write(tmp)
+      if (fs.exists(tmp)) swapIntoJournaled(fs, tmp, target, old)
+      out
+    } finally fs.delete(tmp, true): Unit
+  }
+
   /** True if any FILE exists under `p` (directories alone don't count —
     * a parked tree of empty partition parents is residue, not data).
     */
@@ -391,17 +422,21 @@ object Compact {
 
   /** The first parked sibling tree of `lake` (`<name>__*_old` — the
     * naming every swap verb here uses: `__compact_old`,
-    * `__remove_old`) that still holds FILES, if any. A crashed swap of
-    * ANY verb parks a partition's only copy in such a tree, so both
-    * the serving paths and the next mutation must check ALL of them,
-    * not just their own verb's.
+    * `__remove_old`, `__refit_old`, …) that still holds FILES, if any,
+    * other than the one named `except`. A crashed swap of ANY verb
+    * parks a partition's only copy in such a tree, so both the serving
+    * paths and the next mutation must check ALL of them, not just their
+    * own verb's. One listing of the parent; an absent parent has none.
     */
-  private[graft] def anyParkedSibling(
-      fs: org.apache.hadoop.fs.FileSystem, lake: Path): Option[Path] = {
+  private def anyParkedSibling(
+      fs: FileSystem, lake: Path, except: String): Option[Path] = {
     val parent = lake.getParent
-    if (parent == null || !fs.exists(parent)) None
-    else fs.listStatus(parent).map(_.getPath)
-      .filter(p =>
+    val siblings =
+      if (parent == null) Array.empty[FileStatus]
+      else try fs.listStatus(parent)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    siblings.iterator.map(_.getPath)
+      .filter(p => p.getName != except &&
         p.getName.startsWith(lake.getName + "__") && p.getName.endsWith("_old"))
       .find(p => containsFiles(fs, p))
   }
@@ -410,16 +445,34 @@ object Compact {
     * ANY swap verb's parked tree still holds a partition's only copy —
     * a missing partition dir otherwise reads as silently-empty for
     * every query, and a mutation against it cements the loss. Used by
-    * the lex and ANN index query paths (`action = "serving"`) and by
-    * the mutating verbs after clearing their OWN tree (removal checks
-    * for a crashed compaction and vice versa).
+    * the lake readers (`action = "serving"`) and by the mutating verbs
+    * after clearing their OWN tree (removal checks for a crashed
+    * compaction and vice versa). `except` names a sibling the caller
+    * recovers itself.
     */
   private[graft] def requireServable(
       fs: org.apache.hadoop.fs.FileSystem, lake: Path,
-      action: String = "serving"): Unit =
-    anyParkedSibling(fs, lake).foreach(p =>
+      action: String = "serving", except: String = ""): Unit =
+    anyParkedSibling(fs, lake, except).foreach(p =>
       throw new IllegalArgumentException(
         s"$p holds parked data -- a swap crashed mid-rename; recover it before $action"))
+
+  /** The guard of a persisted index at `root` whose rows live in the
+    * lake `root/<lake>` (the IVF family's `base`, BM25's `postings`):
+    * [[requireServable]] over the lake's siblings (a crashed removal or
+    * compaction parks a leaf there) and over the root's (a crashed
+    * refit or rebucket parks the whole index at `<root>__<verb>_old`;
+    * a root recreated while the park holds the only good copy must not
+    * serve silently). Two directory listings, no Spark job. The one
+    * servability rule of every index query and mutating verb.
+    */
+  private[graft] def requireIndexServable(
+      spark: SparkSession, root: String, lake: String, action: String = "serving"): Unit = {
+    val rp = new Path(root)
+    val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    requireServable(fs, new Path(rp, lake), action)
+    requireServable(fs, rp, action)
+  }
 
   /** Per-leaf two-rename swap of a rewritten partition set: for each
     * leaf name, the rewritten `tmpRoot/name` replaces `base/name` via

@@ -523,7 +523,7 @@ object Ann {
     // cleared. A crashed COMPACTION's parked tree blocks equally: an
     // anti-join rewrite against a cell-less lake cements the loss.
     graft.etl.Compact.clearOrRefuseParked(fs, oldRoot, "removal")
-    graft.etl.Compact.requireServable(fs, bp, action = "removal")
+    graft.etl.Compact.requireIndexServable(spark, path, "base", action = "removal")
     // an already-emptied base (every leaf previously removed) holds no
     // victims by definition — and a schema-less read of it would die
     // in parquet inference with an error naming nothing
@@ -616,6 +616,7 @@ object Ann {
     if (affected.isEmpty) return (affected, Map.empty)
     Leaves.read(spark, root, lake.schema, partCol, affected)
       .join(vic, Seq(idCol), "left_anti")
+      .select(lake.columns.map(col): _*) // the using join moved the id first
       .transform(clusterForWrite(partCol))
       .write.partitionBy(partCol).mode("overwrite").parquet(tmpRoot.toString)
     // an all-victims rewrite produces no files at all: no read
@@ -829,21 +830,20 @@ object Ann {
     * construction — and since [[sampleVectors]] canonicalizes the fit
     * sample's order, the refit codebook is BIT-IDENTICAL to a fresh
     * build's over the same rows, whatever layout the base sits in), a
-    * pre-swap row-count gate, then ONE whole-index two-rename swap
-    * under a sibling intent marker (`path__refit_intent` — outside the
-    * index, since the whole of `path` swaps). Crash contract, the
-    * [[graft.operators.Bm25.rebucketLexIndex]] discipline: before the
-    * swap the original is untouched (tmp residue and an aborted gate
-    * clear the intent); between the renames the original is parked at
-    * `path__refit_old` and a rerun at the intent's nlist recovers it
-    * and completes the rewrite; after the swap-in but before the
-    * park's delete, the root is the count-gated complete index, so the
-    * rerun finishes the delete instead of rewriting; serving refuses a
-    * filed park throughout ([[requireBaseServable]]), and a park
-    * WITHOUT an intent is refused as unrecognized, never deleted.
-    * Post-swap, cached plans/listings over the path are invalidated
-    * (`refreshByPath`) so no reader pairs old cell rows with the new
-    * codebook.
+    * pre-swap row-count gate, then ONE swap of the whole index root
+    * through the journaled core ([[graft.etl.Compact.rewriteJournaled]],
+    * verb `refit`). Crash contract, shared with every whole-directory
+    * rewrite: before the swap the original is untouched (tmp residue
+    * and an aborted gate leave nothing behind); a crash in the swap
+    * window parks the original at `path__refit_old` under the
+    * `.<name>__swap_intent` manifest beside it, and the next refit
+    * converges first — restoring the park when the root is missing,
+    * dropping it when the root is the recorded rewrite, refusing
+    * anything else — and then refits to the width it was asked for
+    * (already at that width: a no-op). Serving refuses a filed park throughout
+    * ([[graft.etl.Compact.requireIndexServable]]). Post-swap, cached
+    * plans/listings over the path are invalidated (`refreshByPath`) so
+    * no reader pairs old cell rows with the new codebook.
     *
     * The quantizer is re-trained on the CURRENT base (the fitOn
     * train/add split does not survive a refit — the original fit frame
@@ -860,78 +860,30 @@ object Ann {
     require(newNlist >= 1, s"newNlist must be >= 1, got $newNlist")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__refit_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "__refit_old")
-    // the intent lives OUTSIDE the index (the whole of `path` swaps,
-    // so an in-tree marker would ride the rename into the park)
-    val intent = new org.apache.hadoop.fs.Path(path + "__refit_intent")
-    fs.delete(new org.apache.hadoop.fs.Path(path + "__refit_intent__tmp"), true)
-    if (fs.exists(intent)) {
-      val prev = spark.read.parquet(intent.toString).select("n_list").head().getInt(0)
-      require(prev == newNlist,
-        s"$path has a crashed refit to $prev cells in flight -- converge it " +
-          s"first (rerun with newNlist=$prev) before refitting to $newNlist")
-    }
-    // swap-window recovery BEFORE the servability guard (which would
-    // refuse our own parked tree). File-less residue is cleared;
-    // park-with-files + missing root ⇒ crash between swapInto's two
-    // renames — the park IS the index, recover it; park-with-files +
-    // present root ⇒ crash after the swap-in, before the delete — the
-    // root is the count-gated complete rewrite (only this verb creates
-    // __refit_old, and only after gating tmp), so finishing the delete
-    // completes the swap, not discards an only copy
-    if (fs.exists(old)) {
-      if (graft.etl.Compact.walkFiles(fs, old).isEmpty) fs.delete(old, true)
-      else {
-        require(fs.exists(intent),
-          s"$old holds parked index data without a refit intent -- " +
-            "unrecognized state; recover it (rename back or remove) manually")
-        if (!fs.exists(root)) require(fs.rename(old, root), s"could not recover $old")
-        else fs.delete(old, true)
+    graft.etl.Compact.rewriteJournaled(fs, root, "refit") { tmp =>
+      requireQuantizerMarker(spark, path, "",
+        otherVerb = "Pq.buildIvfPqIndex on the source corpus (codes carry no raw vectors to re-fit from)",
+        sqOtherVerb = "Sq.buildIvfSq8Index on the source corpus (codes carry no raw vectors to re-fit from)")
+      // parked BASE leaves (a crashed remove/compact) block equally — a
+      // refit reading a cell-less base would cement the loss
+      graft.etl.Compact.requireServable(
+        fs, new org.apache.hadoop.fs.Path(root, "base"), action = "refitting")
+      if (readCodebookSidecar(spark, path)._1.length != newNlist) {
+        val base = spark.read.parquet(s"$path/base").select("b_id", "b_emb")
+        val nSrc = base.count()
+        buildIvfIndex(base, col("b_id"), col("b_emb"), tmp.toString,
+          nlist = newNlist, seed = seed, maxFit = maxFit)
+        val nTmp = spark.read.parquet(s"$tmp/base").count()
+        if (nTmp != nSrc)
+          throw new IllegalStateException(
+            s"refit of $path would lose rows ($nSrc read, $nTmp rewritten) — aborted, original untouched")
       }
     }
-    requireQuantizerMarker(spark, path, "",
-      otherVerb = "Pq.buildIvfPqIndex on the source corpus (codes carry no raw vectors to re-fit from)",
-      sqOtherVerb = "Sq.buildIvfSq8Index on the source corpus (codes carry no raw vectors to re-fit from)")
-    // parked BASE leaves (a crashed remove/compact) block equally — a
-    // refit reading a cell-less base would cement the loss
-    requireBaseServable(spark, path)
-    if (spark.read.parquet(s"$path/codebook").count() == newNlist.toLong) {
-      // already at the target width: with a standing intent this is the
-      // crash window between the swap's old-delete and the intent
-      // delete — the index is converged, completing the delete IS the
-      // resume (no second rewrite). Without an intent it is a no-op.
-      fs.delete(intent, true)
-      return
-    }
-    if (!fs.exists(intent)) {
-      import spark.implicits._
-      val itmp = new org.apache.hadoop.fs.Path(path + "__refit_intent__tmp")
-      Seq(newNlist).toDF("n_list").coalesce(1)
-        .write.mode("overwrite").parquet(itmp.toString)
-      require(fs.rename(itmp, intent), s"could not place refit intent at $intent")
-    }
-    fs.delete(tmp, true)
-    val base = spark.read.parquet(s"$path/base").select("b_id", "b_emb")
-    val nSrc = base.count()
-    buildIvfIndex(base, col("b_id"), col("b_emb"), tmp.toString,
-      nlist = newNlist, seed = seed, maxFit = maxFit)
-    val nTmp = spark.read.parquet(s"$tmp/base").count()
-    if (nTmp != nSrc) {
-      fs.delete(tmp, true)
-      // original untouched and still serving — the intent must not
-      // outlive the abort or it would wedge every later verb
-      fs.delete(intent, true)
-      throw new IllegalStateException(
-        s"refit of $path would lose rows ($nSrc read, $nTmp rewritten) — aborted, original untouched")
-    }
-    graft.etl.Compact.swapInto(fs, tmp, root, old)
     // drop cached plans/file listings over the swapped tree — a stale
     // InMemoryFileIndex (or a cached DataFrame over path/base) would
     // pair OLD cell rows with the NEW codebook, which is silently
     // wrong, or throw on renamed-away files
     spark.catalog.refreshByPath(path)
-    fs.delete(intent, true)
   }
 
   /** Bounded observability read of a persisted index's codebook
@@ -982,7 +934,7 @@ object Ann {
       k: Int, nprobe: Int = 4,
       eligible: Option[(DataFrame, Column)] = None,
       withVec: Boolean = false): DataFrame = {
-    requireBaseServable(spark, path)
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     val (codebook, live, centDf) = readLiveCentroids(spark, path)
     val q = localBatch(validQueries(queries, qId, qVec))
     // an index whose every cell is dead has an empty live codebook —
@@ -1024,30 +976,6 @@ object Ann {
   def indexIds(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/base").select("b_id")
-
-  /** Serving-side crash guard for the persisted index family: a
-    * crashed removal (`base__remove_old`) or compaction
-    * (`base__compact_old`) swap leaves some cell's only copy parked
-    * OUTSIDE the lake, and a query would silently answer with that
-    * cell missing — dead wrong for a cell the probe ranks highly.
-    * Shared by [[queryIvfIndex]] and [[Pq.queryIvfPqIndex]]; single
-    * owner of the rule: [[graft.etl.Compact.requireServable]].
-    */
-  private[operators] def requireBaseServable(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/base")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.Compact.requireServable(fs, bp)
-    // and the INDEX ROOT's parked siblings: a crashed [[refitIvfIndex]]
-    // swap parks the whole original index at `path__refit_old` —
-    // normally path is then absent and every read fails loudly, but an
-    // operator recreating path while the park still holds the only
-    // good copy must not serve silently. Cost: one extra parent-dir
-    // listStatus per serving call — metadata-weight next to the Spark
-    // job the query already pays (the batch-serving shape amortizes
-    // it further), accepted for the correctness guarantee
-    graft.etl.Compact.requireServable(fs, new org.apache.hadoop.fs.Path(path))
-  }
 
   /** LIVE (members > 0) centroids of a persisted index — single owner
     * of the probe-side read shared by the IVF, IVF-PQ and IVF-SQ8 query

@@ -305,11 +305,8 @@ object Bm25 {
       spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, qId: Column, qPhrase: Column, k: Int): DataFrame = {
     require(k >= 1, s"top-k requires k >= 1, got $k")
-    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
-    // same serving-side crash guard as queryLexIndex: a parked tree
-    // with files means a bucket's only copy sits outside the lake
-    graft.etl.Compact.requireServable(
-      target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+    // same serving-side crash guard as queryLexIndex
+    graft.etl.Compact.requireIndexServable(spark, path, "postings")
     val (_, _, nBuckets) = readStatsSidecar(spark, path)
     val batch = QueryBatch(queries, qId, analyze(qPhrase), nBuckets)
     val post = readPostingsBuckets(spark, path, batch.buckets)
@@ -444,7 +441,8 @@ object Bm25 {
     // new postings would remove docs the caller just (re)indexed
     buildFs.delete(new org.apache.hadoop.fs.Path(s"$path/remove_intent"), true)
     buildFs.delete(new org.apache.hadoop.fs.Path(s"$path/remove_intent__tmp"), true)
-    positionalPostings(toks, nBuckets)
+    val postings = positionalPostings(toks, nBuckets)
+    postings
       // cluster by the partition key before the write (the removal
       // rewrite's writeShards discipline, round-15 extended to the
       // build/add paths): a bare partitionBy writes tasks × buckets
@@ -465,7 +463,7 @@ object Bm25 {
         dlF.agg(
           count(lit(1)).as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("total_tokens"))
-          .head(), nBuckets)
+          .head(), nBuckets, postings.schema)
     } finally dlF.unpersist()
   }
 
@@ -508,17 +506,17 @@ object Bm25 {
     // rename-back recovery collide with freshly-added rows (and the
     // sidecar would already count them) — the same guard every other
     // mutation and both query verbs apply
-    val addTarget = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val addFs = addTarget.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.Compact.requireServable(addFs, addTarget, action = "adding to")
+    graft.etl.Compact.requireIndexServable(spark, path, "postings", action = "adding to")
     // the empty docs below extend the membership record: a missing one
     // must refuse BEFORE the posting append, not leave a partial record
-    requireEmptyMembers(addFs, path)
+    requireEmptyMembers(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
     val toks = docs
       .select(docId.as("doc_id"), analyze(text).as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
-    positionalPostings(toks, nBuckets)
+    val postings = positionalPostings(toks, nBuckets)
+    postings
       .transform(Ann.clusterForWrite("bucket")) // clustered append (see build)
       .write.partitionBy("bucket").mode("append").parquet(s"$path/postings")
     // one tokenize pass for empty-members + stats, not two (see build)
@@ -531,7 +529,7 @@ object Bm25 {
         coalesce(sum(col("dl")), lit(0L)).as("total_tokens")).head()
       writeStatsSidecar(spark, path,
         org.apache.spark.sql.Row(nDocs + inc.getLong(0), totalTokens + inc.getLong(1)),
-        nBuckets)
+        nBuckets, postings.schema)
     } finally dlF.unpersist()
   }
 
@@ -615,10 +613,11 @@ object Bm25 {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.etl.Compact.clearOrRefuseParked(fs, removeOldRoot(target), "removal")
     // ANY other verb's parked tree (a crashed compactLexIndex swap
-    // lives at postings__compact_old) also blocks: the lake is missing
-    // a bucket's only copy, and an anti-join rewrite against it would
-    // cement the loss
-    graft.etl.Compact.requireServable(fs, target, action = "removal")
+    // lives at postings__compact_old, a crashed rebucket at
+    // <path>__rebucket_old) also blocks: the lake is missing a bucket's
+    // only copy, and an anti-join rewrite against it would cement the
+    // loss
+    graft.etl.Compact.requireIndexServable(spark, path, "postings", action = "removal")
     Ann.withVictims(fs, target, docs.select(docId.as("doc_id")).distinct()) { vicIds =>
       removeWithVictims(spark, path, fs, vicIds, nDocs, totalTokens, nBuckets,
         crashBeforeStatsSidecar)
@@ -688,6 +687,9 @@ object Bm25 {
       crashBeforeStatsSidecar: Boolean): Unit = {
     val target = new org.apache.hadoop.fs.Path(s"$path/postings")
     val tmpRoot = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__remove_tmp")
+    // the lake keeps its schema through the removal; the sidecar write
+    // below records it for the new generation
+    val schema = postingsSchema(spark, path)
     // the crashed remove being resumed may have emptied the lake
     // entirely (last posted docs removed): an empty lake reads as empty
     // and has nothing to rewrite
@@ -710,28 +712,26 @@ object Bm25 {
     // stats sidecar LAST (see ORDERING) — ABSOLUTE values from the
     // intent, so replaying this write converges instead of compounding
     writeStatsSidecar(spark, path,
-      org.apache.spark.sql.Row(newNDocs, newTotalTokens), nBuckets)
+      org.apache.spark.sql.Row(newNDocs, newTotalTokens), nBuckets, schema)
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/remove_intent"), true)
   }
 
-  /** Atomically place the remove intent (`path/remove_intent`):
-    * victim ids + absolute post-remove stats, written to a tmp dir and
-    * renamed into place so the intent either fully exists or not at
-    * all. A pre-existing intent cannot be present here — every
-    * mutating verb resumes it first.
+  /** Place the remove intent (`path/remove_intent`): victim ids +
+    * absolute post-remove stats, written to `remove_intent__tmp` and
+    * put in place by [[graft.etl.Compact.replaceDir]], so the intent
+    * either fully exists or not at all. A pre-existing intent cannot
+    * be present here — every mutating verb resumes it first.
     */
   private def writeRemoveIntent(
       spark: org.apache.spark.sql.SparkSession, path: String,
       fs: org.apache.hadoop.fs.FileSystem, vicIds: DataFrame,
       newNDocs: Long, newTotalTokens: Long): Unit = {
     import spark.implicits._
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/remove_intent__tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/remove_intent")
-    fs.delete(tmp, true); fs.delete(dst, true)
-    vicIds.write.parquet(s"$tmp/victims")
-    Seq((newNDocs, newTotalTokens)).toDF("n_docs", "total_tokens")
-      .coalesce(1).write.parquet(s"$tmp/stats")
-    require(fs.rename(tmp, dst), s"could not place remove intent at $dst")
+    graft.etl.Compact.replaceDir(fs, new org.apache.hadoop.fs.Path(s"$path/remove_intent"), "") { tmp =>
+      vicIds.write.parquet(s"$tmp/victims")
+      Seq((newNDocs, newTotalTokens)).toDF("n_docs", "total_tokens")
+        .coalesce(1).write.parquet(s"$tmp/stats")
+    }
   }
 
   /** Complete a crashed remove from its write-ahead intent — called by
@@ -755,7 +755,7 @@ object Bm25 {
     // blocks loudly (the Compact rule): the intent cannot replay a
     // rewrite over a lake missing a bucket's only copy
     graft.etl.Compact.clearOrRefuseParked(fs, removeOldRoot(target), "removal resume")
-    graft.etl.Compact.requireServable(fs, target, action = "resuming removal on")
+    graft.etl.Compact.requireIndexServable(spark, path, "postings", action = "resuming removal on")
     executeRemove(spark, path, fs, vicIds, st.getLong(0), st.getLong(1), nBuckets,
       crashBeforeStatsSidecar = false)
   }
@@ -888,7 +888,7 @@ object Bm25 {
         coalesce(sum(col("dl")), lit(0L)).as("total_tokens")).head()
     writeEmptyMembers(spark, path,
       toks.filter(col("dl") === 0).select("doc_id"), overwrite = true)
-    writeStatsSidecar(spark, path, row, nBuckets)
+    writeStatsSidecar(spark, path, row, nBuckets, postingsSchema(spark, path))
   }
 
   /** Top-k BM25 against a persisted [[buildLexIndex]] index —
@@ -908,15 +908,13 @@ object Bm25 {
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"top-k requires k >= 1, got $k")
     // serving-side crash guard: a parked tree with files — from a
-    // crashed REMOVAL (__remove_old) or COMPACTION (__compact_old)
-    // swap alike — means some bucket's only copy sits OUTSIDE the
-    // lake; serving would silently answer with that bucket's terms
-    // missing, for every query, indefinitely. Fail loudly instead;
-    // the stats sidecar alone cannot mark this (it predates the
-    // crash). Single owner: Compact.requireServable.
-    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
-    graft.etl.Compact.requireServable(
-      target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+    // crashed REMOVAL or COMPACTION of the lake (`postings__*_old`) or
+    // a crashed REBUCKET of the whole index (`<path>__rebucket_old`) —
+    // means some bucket's only copy sits outside what a query reads;
+    // serving would silently answer with its terms missing, for every
+    // query, indefinitely. Fail loudly instead; the stats sidecar alone
+    // cannot mark this (it predates the crash).
+    graft.etl.Compact.requireIndexServable(spark, path, "postings")
     val (nDocs, totalTokens, nBuckets) = readStatsSidecar(spark, path)
     val batch = QueryBatch(queries, qId, array_distinct(analyze(qText)), nBuckets)
     scoreAndRank(readPostingsBuckets(spark, path, batch.buckets),
@@ -940,15 +938,34 @@ object Bm25 {
     graft.etl.Compact.compactPartitioned(spark, s"$path/postings", targetBytes)
   }
 
+  /** Write the stats sidecar, which starts a new index generation,
+    * and record what the next reads of that generation would load: the
+    * stats row and the postings lake's schema (`postings`: the schema
+    * of what the caller wrote, or the lake's unchanged one), so the
+    * first query after a write infers nothing.
+    */
   private def writeStatsSidecar(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      row: org.apache.spark.sql.Row, nBuckets: Int): Unit = {
-    import spark.implicits._
+      row: org.apache.spark.sql.Row, nBuckets: Int, postings: StructType): Unit = {
     val stats = (row.getLong(0), row.getLong(1), nBuckets)
-    replaceRecord(spark, path, "stats")(
-      Seq(stats).toDF("n_docs", "total_tokens", "n_buckets").coalesce(1))
-    // what the next read would load for this generation
+    replaceRecord(spark, path, "stats")(statsFrame(spark, stats))
+    recordGeneration(spark, path, stats, postings)
+  }
+
+  private def statsFrame(
+      spark: org.apache.spark.sql.SparkSession, stats: (Long, Long, Int)): DataFrame = {
+    import spark.implicits._
+    Seq(stats).toDF("n_docs", "total_tokens", "n_buckets").coalesce(1)
+  }
+
+  private def recordGeneration(
+      spark: org.apache.spark.sql.SparkSession, path: String,
+      stats: (Long, Long, Int), postings: StructType): Unit = {
     SidecarMemo.record(spark, s"$path/stats", "stats", stats)
+    SidecarMemo.record(spark, s"$path/stats", "postings",
+      if (postings eq EmptyPostings) postings
+      else org.apache.spark.sql.GraftColumnShim.asNullable(StructType(
+        postings.filter(_.name != "bucket") ++ postings.filter(_.name == "bucket"))))
   }
 
   private val StatsSchema = StructType(Seq(StructField("n_docs", LongType),
@@ -956,26 +973,10 @@ object Bm25 {
 
   /** (n_docs, total_tokens, n_buckets) — bounded 1-row read; fails
     * loudly on a missing/corrupt sidecar (the index-complete marker).
-    * Also the single choke point for the rebucket-in-flight guard:
-    * every query/mutation verb reads the sidecar, and a crashed
-    * [[rebucketLexIndex]] can leave the LAKE laid out for the new
-    * bucket count while the sidecar still says the old one — pruning
-    * would then open the wrong dirs and silently answer with terms
-    * missing. The intent marker makes that window refuse loudly with
-    * the converging remedy instead.
     */
   private def readStatsSidecar(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      allowRebucketIntent: Boolean = false): (Long, Long, Int) = {
-    if (!allowRebucketIntent) {
-      val intent = new org.apache.hadoop.fs.Path(s"$path/rebucket_intent")
-      val fs = intent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!fs.exists(intent),
-        s"$path has a rebucket in flight (crashed mid-rebucket?) -- run " +
-          "Bm25.rebucketLexIndex(path, newBuckets) to converge it first")
-    }
-    // resident per sidecar generation (SidecarMemo); the intent guard
-    // above still runs on every call
+      spark: org.apache.spark.sql.SparkSession, path: String): (Long, Long, Int) =
+    // resident per sidecar generation (SidecarMemo)
     SidecarMemo(spark, s"$path/stats", "stats") {
       // read with its fixed schema: no footer-inference job
       val rows = spark.read.schema(StatsSchema).parquet(s"$path/stats").collect()
@@ -983,7 +984,6 @@ object Bm25 {
         s"$path/stats is not a 1-row sidecar -- not a lex index")
       (rows(0).getLong(0), rows(0).getLong(1), rows(0).getInt(2))
     }
-  }
 
   /** Re-bucket a persisted lex index to `newBuckets` posting buckets —
     * the layout-decay cure bucket COUNTS need: `nBuckets` is fixed at
@@ -995,113 +995,70 @@ object Bm25 {
     * honest cost of changing a hash-partitioned layout — then the
     * partition-pruned query path amortizes at the new width forever.
     *
-    * Crash contract (the sidecar's `n_buckets` DRIVES pruning, so a
-    * lake/sidecar mismatch must never serve): an INTENT marker
-    * (`path/rebucket_intent`, atomic rename placement, same pattern as
-    * the remove journal) is placed before the swap and removed after
-    * the sidecar lands; every other verb refuses while it exists
-    * ([[readStatsSidecar]]); and re-running this verb converges from
-    * ANY window — the rewrite keys buckets off the TERM column, so it
-    * is idempotent whether the lake it reads is old- or new-layout,
-    * and the two-rename swap's parked tree is recovered (rename-back
-    * or finish-the-delete, decided by which side of the swap the
-    * crash fell on). Stats (n_docs, total_tokens) are preserved
-    * bit-identically; query results are bit-identical before/after
-    * (spec-pinned). The IVF family has NO cheap equivalent: its cell
-    * count is baked into the trained coarse codebook, so growing
-    * `nlist` means re-fitting the quantizer ([[Ann.buildIvfIndex]]) —
-    * re-fit or accept the occupancy skew.
+    * The rewrite replaces the WHOLE index root through the journaled
+    * core ([[graft.etl.Compact.rewriteJournaled]], verb `rebucket`):
+    * `<path>__rebucket_tmp` receives the rebucketed `postings`, the
+    * `stats` row with the new `n_buckets` and a copy of `empty`, so the
+    * lake and the sidecar whose `n_buckets` drives pruning change in
+    * ONE swap and never disagree. Crash contract, shared with every
+    * whole-directory rewrite: before the swap the original is
+    * untouched; a crash in the swap window parks it at
+    * `<path>__rebucket_old` under the `.<name>__swap_intent` manifest;
+    * every query and mutating verb refuses while a filed park stands
+    * ([[graft.etl.Compact.requireIndexServable]]); and the next rebucket
+    * converges first (restore the park, or drop it when the root is the
+    * recorded rewrite), then rebuckets to the width it was asked for
+    * (already at that width: a no-op). Stats (n_docs, total_tokens)
+    * are preserved bit-identically; query results are bit-identical
+    * before/after (spec-pinned). The IVF family's twin is
+    * [[Ann.refitIvfIndex]], which re-fits the coarse quantizer: its
+    * cell count is baked into the trained codebook.
     */
   def rebucketLexIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newBuckets: Int): Unit = {
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    resumePendingRemove(spark, path)
-    val target = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(target.getParent, target.getName + "__rebucket_old")
-    val intent = new org.apache.hadoop.fs.Path(s"$path/rebucket_intent")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/rebucket_intent__tmp"), true)
-    if (fs.exists(intent)) {
-      val prev = spark.read.parquet(intent.toString).select("n_buckets")
-        .head().getInt(0)
-      require(prev == newBuckets,
-        s"$path has a crashed rebucket to $prev buckets in flight -- converge " +
-          s"it first (rerun with newBuckets=$prev) before rebucketing to $newBuckets")
-    }
-    // swap-window recovery BEFORE the servability guard (which would
-    // refuse our own parked tree): park-with-files + missing target ⇒
-    // crash between swapInto's two renames — the park IS the lake;
-    // park-with-files + present target ⇒ crash after the swap-in,
-    // before the delete — the target is the count-gated complete
-    // rewrite (only this verb creates __rebucket_old, and only after
-    // gating tmp), so finishing the delete is completing the swap,
-    // not discarding an only copy
-    if (fs.exists(old)) {
-      require(fs.exists(intent),
-        s"$old exists without a rebucket intent -- unrecognized state, refusing")
-      if (!fs.exists(target)) require(fs.rename(old, target), s"could not recover $old")
-      else fs.delete(old, true)
-    }
-    graft.etl.Compact.requireServable(fs, target, action = "rebucketing")
-    val (nDocs, totalTokens, oldBuckets) =
-      readStatsSidecar(spark, path, allowRebucketIntent = true)
-    if (oldBuckets == newBuckets) {
-      // already at the target width. With a standing intent this is
-      // the crash window between the sidecar write and the intent
-      // delete — the lake AND sidecar are converged, so completing the
-      // delete IS the resume (no second full rewrite)
-      fs.delete(intent, true)
-      return
-    }
-    if (!fs.exists(intent)) {
-      import spark.implicits._
-      val itmp = new org.apache.hadoop.fs.Path(s"$path/rebucket_intent__tmp")
-      Seq(newBuckets).toDF("n_buckets").coalesce(1)
-        .write.mode("overwrite").parquet(itmp.toString)
-      require(fs.rename(itmp, intent), s"could not place rebucket intent at $intent")
-    }
-    // cache for the rewrite + count gate, UNPERSISTED before the swap:
-    // a cached plan over path/postings would keep answering
-    // post-rebucket reads of the same path with the OLD lake's rows
-    // (Spark's cache substitutes by plan equality), serving stale
-    // bucket values against new-width pruning
-    val src = readPostingsLake(spark, path).cache()
-    try {
-      val n = src.count()
-      // a fully-purged lake (zero data files) has no layout to rewrite —
-      // only the sidecar's bucket count moves (and an empty tmp would
-      // fail its own count-gate read)
-      if (n > 0) {
-        // rewritten at postings__rebucket_tmp, swapped in via the
-        // __rebucket_old park recovered above
-        graft.etl.Compact.replaceDir(fs, target, "rebucket_") { tmp =>
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val landed = graft.etl.Compact.rewriteJournaled(fs, root, "rebucket") { tmp =>
+      // a crashed remove completes in place first: its intent is not
+      // carried into the rewritten root
+      resumePendingRemove(spark, path)
+      graft.etl.Compact.requireServable(
+        fs, new org.apache.hadoop.fs.Path(root, "postings"), action = "rebucketing")
+      requireEmptyMembers(fs, path)
+      val (nDocs, totalTokens, oldBuckets) = readStatsSidecar(spark, path)
+      if (oldBuckets == newBuckets) None
+      else {
+        val schema = postingsSchema(spark, path)
+        // cache for the rewrite + count gate, UNPERSISTED before the
+        // swap: a cached plan over path/postings would keep answering
+        // post-rebucket reads of the same path with the OLD lake's rows
+        // (Spark's cache substitutes by plan equality)
+        val src = readPostingsLake(spark, path).cache()
+        try {
+          val n = src.count()
           // bucket recomputed from the TERM — idempotent over any layout
           src.drop("bucket")
             .withColumn("bucket", bucketOf(col("term"), newBuckets))
             .transform(Ann.clusterForWrite("bucket"))
-            .write.partitionBy("bucket").mode("overwrite").parquet(tmp.toString)
-          val nTmp = spark.read.parquet(tmp.toString).count()
-          if (nTmp != n) {
-            fs.delete(tmp, true)
-            // the lake and sidecar are untouched at this point, so the
-            // intent must not outlive the abort: leaving it standing
-            // would wedge every verb ("rebucket in flight") on a fully
-            // servable index whose error just said "original untouched"
-            fs.delete(intent, true)
+            .write.partitionBy("bucket").parquet(s"$tmp/postings")
+          val nTmp = spark.read.schema(schema).parquet(s"$tmp/postings").count()
+          if (nTmp != n)
             throw new IllegalStateException(
               s"rebucket of $path would lose postings ($n read, $nTmp rewritten) -- " +
                 "aborted, original untouched and still serving")
-          }
-          src.unpersist(blocking = true)
-        }
-        // drop any cached file listing/data for the swapped path — a
-        // stale InMemoryFileIndex would read renamed-away files
-        spark.catalog.refreshByPath(target.toString)
+        } finally src.unpersist(blocking = true)
+        org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(root, "empty"),
+          fs, new org.apache.hadoop.fs.Path(tmp, "empty"), false, spark.sparkContext.hadoopConfiguration)
+        val stats = (nDocs, totalTokens, newBuckets)
+        statsFrame(spark, stats).write.parquet(s"$tmp/stats")
+        Some((stats, schema))
       }
-    } finally src.unpersist(blocking = true)
-    writeStatsSidecar(spark, path,
-      org.apache.spark.sql.Row(nDocs, totalTokens), newBuckets)
-    fs.delete(intent, true)
+    }
+    // drop any cached file listing/data for the swapped root — a stale
+    // InMemoryFileIndex would read renamed-away files
+    spark.catalog.refreshByPath(path)
+    landed.foreach { case (stats, schema) => recordGeneration(spark, path, stats, schema) }
   }
 }

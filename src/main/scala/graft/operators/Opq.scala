@@ -214,7 +214,7 @@ object Opq {
     // index whose serving guard wedges on the stale park — and the
     // guard's "recover it" remedy would then mix codes from two
     // geometries. Refuse until the operator recovers or deletes it.
-    requireOpqServable(spark, path)
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
       .filter(col("b_nrm") > 0)
@@ -380,7 +380,7 @@ object Opq {
       source: DataFrame, srcId: Column, srcVec: Column,
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, shortlist: Int = 0): DataFrame = {
-    requireOpqServable(spark, path)
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     val (rot, cb, _) = loadOpqSidecars(spark, path)
     val sl = Pq.shortlistSize(shortlist, k)
     val q0 = Ann.validQueries(queries, qId, qVec)
@@ -405,18 +405,6 @@ object Opq {
       q.select("q_id", "q_emb", "qp_nrm"), k, requireFullCoverage = true)
   }
 
-  /** Serving/append-side crash guard — the [[Ann.requireBaseServable]]
-    * posture for the flat layout: a parked `base__*_old` sibling may
-    * hold a bucket's only copy after a crashed removal/compaction swap.
-    */
-  private def requireOpqServable(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val bp = new org.apache.hadoop.fs.Path(s"$path/base")
-    val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.Compact.requireServable(fs, bp)
-    graft.etl.Compact.requireServable(fs, new org.apache.hadoop.fs.Path(path))
-  }
-
   /** Incrementally extend a persisted [[buildOpqIndex]] index: new rows
     * are rotated AND encoded with the PERSISTED basis + codebooks (no
     * re-fit — build+add equals build-all-with-the-same-fit), appended
@@ -427,7 +415,7 @@ object Opq {
   def addToOpqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
       rows: DataFrame, id: Column, vec: Column): Unit = {
-    requireOpqServable(spark, path)
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     val (rot, cb, nBuckets) = loadOpqSidecars(spark, path)
     val basePath = s"$path/base"
     val fs = new org.apache.hadoop.fs.Path(basePath)

@@ -449,7 +449,7 @@ object Pq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    Ann.requireBaseServable(spark, path) // crashed-swap guard: see Ann
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     val sl = shortlistSize(shortlist, k)
     val cb = loadPqTables(spark, path)
     // ONE resident sidecar read serves both the probe frame and the

@@ -892,8 +892,10 @@ object Sketches {
   }
 
   /** Compact an MG sketch lake: replace every increment with ONE
-    * merged increment (labelled `__compacted__`), two-rename swapped
-    * with the repo's parked-crash contract. Sound because MG merge
+    * merged increment (labelled `__compacted__`), swapped in by the
+    * journaled core ([[graft.etl.Compact.rewriteJournaled]]: a crashed
+    * earlier compaction converges first, any other verb's parked
+    * sibling refuses). Sound because MG merge
     * error adds LINEARLY — the compacted lake answers every future
     * merge with the same Σtotals/(k+1) guarantee as the original.
     * Pre-swap gate: the tmp tree re-merges to the EXACT summary the
@@ -904,38 +906,29 @@ object Sketches {
   def compactMgLake(
       spark: org.apache.spark.sql.SparkSession, path: String, k: Int): Unit = {
     val (fs, root) = fsRoot(spark, path)
-    // OUR crashed swap converges (original restored or landed rewrite
-    // kept); any OTHER verb's parked sibling still refuses below
-    graft.etl.Compact.convergeCrashedSwap(fs, root,
-      new org.apache.hadoop.fs.Path(path + "__compact_old"), "compactMgLake")
-    refuseParked(fs, root, "compactMgLake")
-    if (!fs.exists(root)) return
-    val src = spark.read.parquet(path)
-    // a k narrower than the lake was built with would silently DEGRADE
-    // the lake's guarantee (future merges could only promise the
-    // smaller k's bound, with nothing recording the loss). The widest
-    // increment's counter-row count lower-bounds the ingest k; refuse
-    // below it.
-    val widest = src.filter(!mgIsMarker)
-      .groupBy("inc").agg(count(lit(1)).as("w"))
-      .agg(coalesce(max("w"), lit(0L))).head().getLong(0)
-    require(k >= widest,
-      s"compactMgLake k=$k is narrower than the lake's widest increment " +
-        s"($widest counters) — compacting would degrade the n/(k+1) " +
-        "guarantee irreversibly; pass the ingest k")
-    val mg = mgMergeSketches(src, k)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    fs.delete(tmp, true)
-    mgRowsDf(spark, "__compacted__", mg).coalesce(1)
-      .write.parquet(tmp.toString)
-    val remerged = mgMergeSketches(spark.read.parquet(tmp.toString), k)
-    if (remerged != mg) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compaction of $path would change the merged summary — aborted, original untouched")
+    graft.etl.Compact.rewriteJournaled(fs, root, "compact") { tmp =>
+      if (fs.exists(root)) {
+        val src = spark.read.parquet(path)
+        // a k narrower than the lake was built with would silently DEGRADE
+        // the lake's guarantee (future merges could only promise the
+        // smaller k's bound, with nothing recording the loss). The widest
+        // increment's counter-row count lower-bounds the ingest k; refuse
+        // below it.
+        val widest = src.filter(!mgIsMarker)
+          .groupBy("inc").agg(count(lit(1)).as("w"))
+          .agg(coalesce(max("w"), lit(0L))).head().getLong(0)
+        require(k >= widest,
+          s"compactMgLake k=$k is narrower than the lake's widest increment " +
+            s"($widest counters) — compacting would degrade the n/(k+1) " +
+            "guarantee irreversibly; pass the ingest k")
+        val mg = mgMergeSketches(src, k)
+        mgRowsDf(spark, "__compacted__", mg).coalesce(1)
+          .write.parquet(tmp.toString)
+        if (mgMergeSketches(spark.read.parquet(tmp.toString), k) != mg)
+          throw new IllegalStateException(
+            s"compaction of $path would change the merged summary — aborted, original untouched")
+      }
     }
-    graft.etl.Compact.swapIntoJournaled(fs, tmp, root, old)
   }
 
   /** Compact a pair-sample lake ([[pairSampleByKey]] increments):
@@ -943,45 +936,37 @@ object Sketches {
     * bottom-k pairs form a true semilattice, so the compacted lake is
     * BIT-equivalent to the original under every future merge. Pre-swap
     * gate: key count and Σn preserved (a lost key or rows would shift
-    * every later estimate). Same swap/parked contract as
-    * [[compactMgLake]].
+    * every later estimate). Same journaled swap as [[compactMgLake]].
     */
   def compactSampleLake(
       spark: org.apache.spark.sql.SparkSession, path: String, k: Int): Unit = {
     val (fs, root) = fsRoot(spark, path)
-    // same converge-then-refuse-foreign order as compactMgLake
-    graft.etl.Compact.convergeCrashedSwap(fs, root,
-      new org.apache.hadoop.fs.Path(path + "__compact_old"), "compactSampleLake")
-    refuseParked(fs, root, "compactSampleLake")
-    if (!fs.exists(root)) return
-    val src = spark.read.parquet(path)
-    // a k narrower than ingest would TRUNCATE every saturated sample
-    // while the key-count/Σn gate still passes (n is exact either
-    // way) — breaking the bit-identity-with-one-shot claim silently.
-    // The widest stored sample lower-bounds the ingest k; refuse
-    // below it.
-    val widest = src
-      .agg(coalesce(max(size(col("pairs"))), lit(0))).head().getInt(0)
-    require(k >= widest,
-      s"compactSampleLake k=$k is narrower than the lake's widest sample " +
-        s"($widest pairs) — compacting would truncate samples irreversibly; " +
-        "pass the ingest k")
-    // scopedCache: the merged frame feeds BOTH the gate baseline and
-    // the tmp write — without it the lake scan + merge runs twice
-    val merged = Dedup.scopedCache(mergePairSamples(src, k))
-    val (srcKeys, srcN) = keyCountAndN(merged)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    fs.delete(tmp, true)
-    merged.write.parquet(tmp.toString)
-    val (tmpKeys, tmpN) = keyCountAndN(spark.read.parquet(tmp.toString))
-    if (tmpKeys != srcKeys || tmpN != srcN) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compaction of $path would lose data ($srcKeys keys/$srcN rows merged, " +
-          s"$tmpKeys/$tmpN rewritten) — aborted, original untouched")
+    graft.etl.Compact.rewriteJournaled(fs, root, "compact") { tmp =>
+      if (fs.exists(root)) {
+        val src = spark.read.parquet(path)
+        // a k narrower than ingest would TRUNCATE every saturated sample
+        // while the key-count/Σn gate still passes (n is exact either
+        // way) — breaking the bit-identity-with-one-shot claim silently.
+        // The widest stored sample lower-bounds the ingest k; refuse
+        // below it.
+        val widest = src
+          .agg(coalesce(max(size(col("pairs"))), lit(0))).head().getInt(0)
+        require(k >= widest,
+          s"compactSampleLake k=$k is narrower than the lake's widest sample " +
+            s"($widest pairs) — compacting would truncate samples irreversibly; " +
+            "pass the ingest k")
+        // scopedCache: the merged frame feeds BOTH the gate baseline and
+        // the tmp write — without it the lake scan + merge runs twice
+        val merged = Dedup.scopedCache(mergePairSamples(src, k))
+        val (srcKeys, srcN) = keyCountAndN(merged)
+        merged.write.parquet(tmp.toString)
+        val (tmpKeys, tmpN) = keyCountAndN(spark.read.parquet(tmp.toString))
+        if (tmpKeys != srcKeys || tmpN != srcN)
+          throw new IllegalStateException(
+            s"compaction of $path would lose data ($srcKeys keys/$srcN rows merged, " +
+              s"$tmpKeys/$tmpN rewritten) — aborted, original untouched")
+      }
     }
-    graft.etl.Compact.swapIntoJournaled(fs, tmp, root, old)
   }
 
   /** Compact an HLL sketch lake ([[hllSketchByKey]] increments — rows
@@ -997,64 +982,59 @@ object Sketches {
     * them), and the rewritten tree must carry the same key count and
     * the same order-independent content fingerprint as the merged
     * source (a lost key or a corrupted register would shift every
-    * later estimate). Same converge/refuse-parked/two-rename swap
-    * contract as [[compactMgLake]]; run while no increment writer is
-    * active.
+    * later estimate). Same journaled swap as [[compactMgLake]]; run
+    * while no increment writer is active.
     */
   def compactHllLake(
       spark: org.apache.spark.sql.SparkSession, path: String, p: Int): Unit = {
     requireHllP(p)
     val m = 1 << p
     val (fs, root) = fsRoot(spark, path)
-    // same converge-then-refuse-foreign order as compactMgLake
-    graft.etl.Compact.convergeCrashedSwap(fs, root,
-      new org.apache.hadoop.fs.Path(path + "__compact_old"), "compactHllLake")
-    refuseParked(fs, root, "compactHllLake")
-    if (!fs.exists(root)) return
-    val src = spark.read.parquet(path)
-    val g = src.agg(
-      count(lit(1)).as("rows"),
-      count(when(col("regs").isNull, lit(1))).as("nulls"),
-      coalesce(min(size(col("regs"))), lit(0)).as("mn"),
-      coalesce(max(size(col("regs"))), lit(0)).as("mx")).head()
-    if (g.getLong(0) == 0L) return // empty lake: nothing to compact
-    require(g.getLong(1) == 0L,
-      s"compactHllLake: $path holds ${g.getLong(1)} null register row(s) " +
-        "-- a corrupt lake; repair before compacting")
-    require(g.getInt(2) == m && g.getInt(3) == m,
-      s"compactHllLake p=$p expects $m registers per row but the lake " +
-        s"holds arrays of ${g.getInt(2)}..${g.getInt(3)} -- pass the ingest p")
-    // scopedCache: the merged frame feeds BOTH the gate baseline and
-    // the tmp write — without it the lake scan + merge runs twice
-    val merged = Dedup.scopedCache(
-      hllMergeSketches(src, col("key"), col("regs"), p))
-    val (srcKeys, srcFp) = keyCountAndFp(merged)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "__compact_old")
-    fs.delete(tmp, true)
-    merged.write.parquet(tmp.toString)
-    val (tmpKeys, tmpFp) = keyCountAndFp(spark.read.parquet(tmp.toString))
-    if (tmpKeys != srcKeys || tmpFp != srcFp) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"compaction of $path would change the merged registers " +
-          s"($srcKeys keys/fp $srcFp merged, $tmpKeys/$tmpFp rewritten) " +
-          "-- aborted, original untouched")
+    graft.etl.Compact.rewriteJournaled(fs, root, "compact") { tmp =>
+      if (fs.exists(root)) {
+        val src = spark.read.parquet(path)
+        val g = src.agg(
+          count(lit(1)).as("rows"),
+          count(when(col("regs").isNull, lit(1))).as("nulls"),
+          coalesce(min(size(col("regs"))), lit(0)).as("mn"),
+          coalesce(max(size(col("regs"))), lit(0)).as("mx")).head()
+        // an empty lake has nothing to compact
+        if (g.getLong(0) > 0L) {
+          require(g.getLong(1) == 0L,
+            s"compactHllLake: $path holds ${g.getLong(1)} null register row(s) " +
+              "-- a corrupt lake; repair before compacting")
+          require(g.getInt(2) == m && g.getInt(3) == m,
+            s"compactHllLake p=$p expects $m registers per row but the lake " +
+              s"holds arrays of ${g.getInt(2)}..${g.getInt(3)} -- pass the ingest p")
+          // scopedCache: the merged frame feeds BOTH the gate baseline and
+          // the tmp write — without it the lake scan + merge runs twice
+          val merged = Dedup.scopedCache(
+            hllMergeSketches(src, col("key"), col("regs"), p))
+          val (srcKeys, srcFp) = keyCountAndFp(merged)
+          merged.write.parquet(tmp.toString)
+          val (tmpKeys, tmpFp) = keyCountAndFp(spark.read.parquet(tmp.toString))
+          if (tmpKeys != srcKeys || tmpFp != srcFp)
+            throw new IllegalStateException(
+              s"compaction of $path would change the merged registers " +
+                s"($srcKeys keys/fp $srcFp merged, $tmpKeys/$tmpFp rewritten) " +
+                "-- aborted, original untouched")
+        }
+      }
     }
-    graft.etl.Compact.swapIntoJournaled(fs, tmp, root, old)
   }
 
-  /** Key count + order-independent content fingerprint (sum of per-row
-    * xxhash64 over the full (key, regs) row — wrapping overflow is fine
-    * for a same-engine equality gate) for [[compactHllLake]]'s pre-swap
-    * comparison: exact on every key and register at metadata cost,
-    * unlike a count-only gate.
+  /** Key count + order-independent content fingerprint (the exact sum
+    * of per-row xxhash64 over the full (key, regs) row, as a decimal: a
+    * long sum overflows, which ANSI mode raises as an error) for
+    * [[compactHllLake]]'s pre-swap comparison: exact on every key and
+    * register at metadata cost, unlike a count-only gate.
     */
-  private def keyCountAndFp(merged: DataFrame): (Long, Long) = {
+  private def keyCountAndFp(merged: DataFrame): (Long, BigDecimal) = {
     val r = merged.agg(
       count(lit(1)).as("keys"),
-      coalesce(sum(xxhash64(col("key"), col("regs"))), lit(0L)).as("fp")).head()
-    (r.getLong(0), r.getLong(1))
+      coalesce(sum(xxhash64(col("key"), col("regs")).cast("decimal(38,0)")),
+        lit(0).cast("decimal(38,0)")).as("fp")).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
   }
 
   private def fsRoot(
@@ -1062,19 +1042,6 @@ object Sketches {
     val root = new org.apache.hadoop.fs.Path(path)
     (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
-
-  /** Refuse ANY parked `<lake>__*_old` sibling still holding files —
-    * it may be the lake's only copy after a crashed swap (the
-    * [[graft.etl.Compact.anyParkedSibling]] rule every swap verb in
-    * the repo shares).
-    */
-  private def refuseParked(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      verb: String): Unit =
-    graft.etl.Compact.anyParkedSibling(fs, root).foreach { parked =>
-      sys.error(s"$parked holds parked sketch-lake data -- a previous swap " +
-        s"crashed mid-flight; recover it (rename back) before $verb")
-    }
 
   private def keyCountAndN(merged: DataFrame): (Long, Long) = {
     val r = merged.agg(

@@ -330,7 +330,7 @@ object Sq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    Ann.requireBaseServable(spark, path)
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
     Ann.requireQuantizerMarker(spark, path, "sq",
       "Ann.queryIvfIndex / Pq.queryIvfPqIndex")
     val sl = Pq.shortlistSize(shortlist, k)

@@ -1043,16 +1043,16 @@ object RelationalQueries {
     * the register family: per-(flag, ship-year) increments land in a
     * lake as (key = flag, regs) rows (several rows per flag — the
     * daily-append shape), [[graft.operators.Sketches.compactHllLake]]
-    * rewrites the lake to ONE merged row per flag behind its
-    * converge/refuse-parked/fingerprint-gate/two-rename swap contract,
+    * rewrites the lake to ONE merged row per flag (fingerprint-gated,
+    * then swapped in by the journaled core),
     * and the post-compaction read + [[graft.operators.Sketches
     * .hllMergeSketches]] (idempotent over the already-merged rows —
     * register max is a semilattice) estimates per flag. Because
     * compaction is BIT-equivalent under merge, the result must equal
     * the one-shot q44 replay exactly — which is what this oracle (the
     * SAME text as q44's) asserts, `regs_fp` pinning all 64 registers
-    * through write → compact → merge. The crash-residue /
-    * wrong-p-refusal legs of the verb are SketchesSpec's.
+    * through write → compact → merge. The wrong-p refusal is
+    * SketchesSpec's, the crash windows JournaledSwapSpec's.
     */
   def q45HllCompact(s: SparkSession, dir: String): DataFrame = {
     val out = graft.queries.Scratch.wiped(s, "hll_lake", dir)

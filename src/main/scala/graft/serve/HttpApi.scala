@@ -55,7 +55,8 @@ import graft.pipeline.{HtmlReport, Pipeline, ResultStore}
   * the postings/base leaves a request probes are opened by path and
   * listed on every request ([[graft.operators.Leaves]]), so appends,
   * removals and compactions are visible to the next query, and the
-  * crash guards (parked swap trees, rebucket intent) run per request.
+  * crash guard (no parked swap tree beside the lake or the index root,
+  * [[graft.etl.Compact.requireIndexServable]]) runs per request.
   * Every Spark job a search request launches carries the job
   * description `search.<kind>`.
   *

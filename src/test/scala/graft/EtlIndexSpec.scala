@@ -390,65 +390,6 @@ class EtlIndexSpec extends SparkSpecBase {
     assert(spark.read.parquet(dir3).count() == beforeRows)
   }
 
-  test("compact: every crash window of the journaled swap converges on rerun") {
-    import graft.etl.Compact
-    val base = tmp("fcompactcrash")
-    val dir = base + "/ds"
-    val src = graft.Tables.t(spark, "/root/testdata/sf0.001", "events")
-    src.repartition(6).write.parquet(dir)
-    val beforeRows = spark.read.parquet(dir).count()
-    def intentF = new java.io.File(base + "/.ds__swap_intent")
-    def oldF = new java.io.File(base + "/ds__compact_old")
-    // window: crash between the swap's two renames — dataset parked,
-    // root gone, intent filed; the rerun restores the park and
-    // recompacts instead of wedging
-    Compact.compact(spark, dir, targetBytes = 1L << 30)
-    assert(new java.io.File(dir).renameTo(oldF))
-    assert(intentF.createNewFile())
-    val s1 = Compact.compact(spark, dir, targetBytes = 1L << 30)
-    assert(s1.filesAfter == 1)
-    assert(spark.read.parquet(dir).count() == beforeRows)
-    assert(!oldF.exists() && !intentF.exists())
-    // window: crash after the swap-in, before the park delete — root is
-    // the gated rewrite, park still holds the old copy; the rerun drops
-    // the park only because the intent's MANIFEST matches the standing
-    // target (the proof it IS the gated swap, not a recreation)
-    // the dataset dir is flat, so the manifest is just its sorted file
-    // names (matches Compact.relFileNames for a flat dir, _SUCCESS incl.)
-    // (drop the .crc sidecars: java.io sees them, the Hadoop checksum
-    // FS hides them from listFiles — relFileNames never records them)
-    def manifestOf(d: java.io.File): String =
-      d.listFiles().filter(f => f.isFile && !f.getName.startsWith("."))
-        .map(_.getName).sorted.mkString("\n")
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), oldF)
-    java.nio.file.Files.writeString(intentF.toPath, manifestOf(new java.io.File(dir)))
-    Compact.compact(spark, dir, targetBytes = 1L << 30)
-    assert(spark.read.parquet(dir).count() == beforeRows)
-    assert(!oldF.exists() && !intentF.exists())
-    // window: crash BETWEEN the renames, then an external writer
-    // recreated the target — the manifest does not match, so the rerun
-    // must REFUSE and keep the park (it holds the only pre-swap copy)
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), oldF)
-    java.nio.file.Files.writeString(intentF.toPath, "part-someone-elses-rewrite.parquet")
-    val eRecreate = intercept[IllegalArgumentException](
-      Compact.compact(spark, dir, targetBytes = 1L << 30))
-    assert(eRecreate.getMessage.contains("recorded rewrite"), eRecreate.getMessage)
-    assert(oldF.exists(), "park with the pre-swap copy must never be deleted on a manifest mismatch")
-    org.apache.commons.io.FileUtils.deleteDirectory(oldF)
-    assert(intentF.delete())
-    // window: intent alone (crash before the first rename) — cleared
-    assert(intentF.createNewFile())
-    Compact.compact(spark, dir, targetBytes = 1L << 30)
-    assert(!intentF.exists())
-    // a park with files and NO intent is not our crash: refused, kept
-    oldF.mkdirs()
-    java.nio.file.Files.writeString(oldF.toPath.resolve("part-stranded.parquet"), "x")
-    val e = intercept[IllegalArgumentException](
-      Compact.compact(spark, dir, targetBytes = 1L << 30))
-    assert(e.getMessage.contains("without a compact swap intent"), e.getMessage)
-    assert(oldF.exists(), "unrecognized park must never be deleted")
-  }
-
   test("compactPartitioned: leaf dirs merge, partition columns survive") {
     import graft.etl.Compact
     val root = tmp("fcompactpart") + "/lake"

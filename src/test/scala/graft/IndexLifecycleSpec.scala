@@ -8,8 +8,7 @@ import graft.operators.{Ann, Bm25, Dedup, Pq, Sq}
 /** The persisted-index lifecycle verbs (build → add → remove) of the
   * IVF, IVF-PQ and IVF-SQ8 families, the BM25 remove and the IVF and
   * BM25 compaction: how many Spark jobs each verb runs on a tiny fixed
-  * index, pinned as upper bounds, the base-lake schema every write
-  * records, the drop of wrong-dimension base rows, and the write core's
+  * index, pinned as upper bounds, the lake schema every write records, the drop of wrong-dimension base rows, and the write core's
   * refusal of an increment that wrote nothing.
   */
 class IndexLifecycleSpec extends SparkSpecBase {
@@ -202,6 +201,38 @@ class IndexLifecycleSpec extends SparkSpecBase {
       Sq.removeFromIvfSq8Index(spark, _, victims, col("id")),
       p => Dedup.scoped(Sq.queryIvfSq8Index(spark, p, vectors, col("vec_id"), col("embedding"),
         queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()): Unit)
+  }
+
+  test("a lexical query right after a BM25 write runs no more jobs than a warm query") {
+    // every BM25 writer records the postings schema parquet infers for
+    // the stats generation it wrote, so the first query of that
+    // generation infers nothing
+    val p = tmpDir("graft_life_fresh_lex") + "/lex"
+    def recorded(): org.apache.spark.sql.types.StructType =
+      graft.operators.SidecarMemo(spark, s"$p/stats", "postings")(
+      fail(s"no postings schema resident for $p"))
+    def query() = Bm25.queryLexIndex(
+      spark, p, Seq((1L, "quick fox")).toDF("q_id", "q"), col("q_id"), col("q"), k = 3).collect()
+    def step(write: => Unit, name: String): Int = {
+      write
+      assert(recorded() == spark.read.parquet(s"$p/postings").schema, s"after $name")
+      jobsDuring(query())
+    }
+    val docs = Seq(
+      (1L, "the quick brown fox jumps"), (2L, "lazy dogs sleep all day"),
+      (3L, "quick brown foxes and quick dogs"), (4L, "")).toDF("id", "text")
+    val afterBuild = step(Bm25.buildLexIndex(docs, col("id"), col("text"), p, nBuckets = 4), "build")
+    val warm = jobsDuring(query())
+    val afterAdd = step(Bm25.addToLexIndex(spark, p,
+      Seq((5L, "brown bears eat honey"), (6L, "the fox den")).toDF("id", "text"),
+      col("id"), col("text")), "add")
+    val afterRemove = step(Bm25.removeFromLexIndex(
+      spark, p, Seq(3L, 4L).toDF("id"), col("id")), "remove")
+    val afterRebucket = step(Bm25.rebucketLexIndex(spark, p, 8), "rebucket")
+    info(s"bm25 query jobs: warm $warm, after build $afterBuild, add $afterAdd, remove $afterRemove, " +
+      s"rebucket $afterRebucket")
+    for ((n, after) <- Seq(afterBuild -> "build", afterAdd -> "add", afterRemove -> "remove", afterRebucket -> "rebucket"))
+      assert(n <= warm, s"a query after the $after ran $n jobs, a warm one $warm")
   }
 
   test("every IVF-family write records the base-lake schema parquet infers, through compaction") {

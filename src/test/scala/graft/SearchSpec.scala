@@ -230,47 +230,32 @@ class SearchSpec extends SparkSpecBase {
       spark, path, Seq((9L, "red crust")).toDF("doc_id", "text"),
       col("doc_id"), col("text"))
     assert(serve().collect().nonEmpty)
-    // same-width call is a no-op (no intent left behind)
+    // a same-width call is a no-op: nothing rewritten, nothing left
+    // beside the index (its crash windows are JournaledSwapSpec's)
+    val ixPath = new org.apache.hadoop.fs.Path(path)
+    val fs = ixPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def lakeFiles() = graft.etl.Compact.relFileNames(fs, ixPath)
+    val layout = lakeFiles()
     graft.operators.Bm25.rebucketLexIndex(spark, path, newBuckets = 16)
-    assert(!new java.io.File(s"$path/rebucket_intent").exists())
+    assert(lakeFiles() == layout, "a same-width rebucket rewrote the index")
+    assert(new java.io.File(path).getParentFile.list().toSeq == Seq("ix"))
 
-    // CRASH WINDOW 1 — intent placed, lake swapped to the new width,
-    // sidecar still old (the silent-wrong-pruning window): fabricate
-    // by placing the intent and hand-shrinking the sidecar's claim
-    import spark.implicits._
-    val itmp = s"$path/rebucket_intent__tmp2"
-    Seq(4).toDF("n_buckets").coalesce(1).write.parquet(itmp)
-    assert(new java.io.File(itmp).renameTo(new java.io.File(s"$path/rebucket_intent")))
-    // every verb refuses loudly while the intent stands
+    // a crashed rebucket's parked root blocks every BM25 verb, as a
+    // parked refit root blocks ANN: the park may hold the only copy
+    val parked = new java.io.File(path + "__rebucket_old")
+    parked.mkdirs()
+    java.nio.file.Files.writeString(parked.toPath.resolve("part-stranded.parquet"), "x")
     val e = intercept[IllegalArgumentException](serve().collect())
-    assert(e.getMessage.contains("rebucketLexIndex"), e.getMessage)
+    assert(e.getMessage.contains("recover it before serving"), e.getMessage)
+    intercept[IllegalArgumentException](graft.operators.Bm25.queryPhraseIndex(
+      spark, path, qdf, col("q_id"), col("qtext"), k = 5).collect())
     intercept[IllegalArgumentException](graft.operators.Bm25.addToLexIndex(
       spark, path, Seq((10L, "x")).toDF("doc_id", "text"), col("doc_id"), col("text")))
-    // a DIFFERENT width refuses (ambiguous in-flight state)...
-    val e2 = intercept[IllegalArgumentException](
-      graft.operators.Bm25.rebucketLexIndex(spark, path, newBuckets = 8))
-    assert(e2.getMessage.contains("newBuckets=4"), e2.getMessage)
-    // ...and re-running at the INTENT's width converges from the window
-    graft.operators.Bm25.rebucketLexIndex(spark, path, newBuckets = 4)
-    assert(spark.read.parquet(s"$path/stats").head().getInt(2) == 4)
-    assert(!new java.io.File(s"$path/rebucket_intent").exists())
-    val conv = serve()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
-    assert(conv.map(t => (t._1, t._2)).nonEmpty)
-
-    // CRASH WINDOW 2 — between swapInto's two renames: the whole lake
-    // parked at __rebucket_old, the target gone, intent standing
-    Seq(8).toDF("n_buckets").coalesce(1).write.parquet(itmp)
-    assert(new java.io.File(itmp).renameTo(new java.io.File(s"$path/rebucket_intent")))
-    assert(new java.io.File(s"$path/postings")
-      .renameTo(new java.io.File(s"$path/postings__rebucket_old")))
-    intercept[Exception](serve().collect()) // never reads as empty
-    graft.operators.Bm25.rebucketLexIndex(spark, path, newBuckets = 8)
-    val recovered = serve()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
-    assert(recovered.nonEmpty, "recovery lost the lake")
-    assert(!new java.io.File(s"$path/postings__rebucket_old").exists())
-    assert(spark.read.parquet(s"$path/stats").head().getInt(2) == 8)
+    intercept[IllegalArgumentException](graft.operators.Bm25.removeFromLexIndex(
+      spark, path, Seq(9L).toDF("doc_id"), col("doc_id")))
+    // file-less residue does not block
+    java.nio.file.Files.delete(parked.toPath.resolve("part-stranded.parquet"))
+    assert(serve().collect().nonEmpty)
   }
 
   test("lex index retention: remove(build+add) ≡ build-without; stats decremented") {
@@ -728,6 +713,14 @@ class SearchSpec extends SparkSpecBase {
     // surface must report them without touching the fileless lake
     assert(graft.operators.Bm25.lexIndexIds(spark, p1)
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
+    // and rebucketing it moves only the width: an empty lake, the same
+    // membership record
+    graft.operators.Bm25.rebucketLexIndex(spark, p1, newBuckets = 8)
+    assert(graft.operators.Bm25.lexIndexStats(spark, p1).nBuckets == 8)
+    assert(graft.operators.Bm25.queryLexIndex(
+      spark, p1, qdf, col("q_id"), col("qtext"), 5).count() === 0)
+    assert(graft.operators.Bm25.lexIndexIds(spark, p1)
+      .collect().map(_.getLong(0)).toSet === Set(1L, 2L))
 
     // (2) an in-place REBUILD with different nBuckets serves correctly
     // (the old sidecar is invalidated before the lake is touched, so
@@ -810,65 +803,6 @@ class SearchSpec extends SparkSpecBase {
       base, col("vec_id"), col("embedding"), sqPath, nlist = 4)
     val e3 = intercept[IllegalArgumentException](Ann.refitIvfIndex(spark, sqPath, 8))
     assert(e3.getMessage.contains("Sq.buildIvfSq8Index"), e3.getMessage)
-  }
-
-  test("refitIvfIndex crash windows: every interruption point converges on rerun") {
-    import graft.operators.Ann
-    val df = clusteredRows.toDF("vec_id", "embedding")
-    val base = df.filter(col("vec_id") % 100 >= 5)
-    val qs = df.filter(col("vec_id") % 100 < 5)
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_refit_crash").toString
-    val path = tmpRoot + "/ix"
-    Ann.buildIvfIndex(base, col("vec_id"), col("embedding"), path, nlist = 8)
-    def serve() = graft.operators.Dedup.scoped {
-      Ann.queryIvfIndex(spark, path, qs, col("vec_id"), col("embedding"), k = 5, nprobe = 16)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    }
-    val healthy = serve()
-    import spark.implicits._
-    def writeIntent(n: Int): Unit =
-      Seq(n).toDF("n_list").coalesce(1)
-        .write.mode("overwrite").parquet(path + "__refit_intent")
-    // window A: standing intent at a DIFFERENT width refuses loudly
-    writeIntent(4)
-    val eA = intercept[IllegalArgumentException](Ann.refitIvfIndex(spark, path, 6))
-    assert(eA.getMessage.contains("converge it first"), eA.getMessage)
-    // window B: crash between the swap's renames — index parked, root
-    // gone, intent standing; rerun at the intent width recovers the
-    // park AND completes the refit
-    assert(new java.io.File(path).renameTo(new java.io.File(path + "__refit_old")))
-    Ann.refitIvfIndex(spark, path, 4)
-    assert(spark.read.parquet(s"$path/codebook").count() === 4L)
-    assert(!new java.io.File(path + "__refit_old").exists())
-    assert(!new java.io.File(path + "__refit_intent").exists())
-    assert(serve().nonEmpty)
-    // window C: crash after the swap-in, before the park delete — root
-    // is the complete new index; rerun finishes the delete, no rewrite
-    val before = serve()
-    val oldDir = new java.io.File(path + "__refit_old")
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path), oldDir)
-    writeIntent(4)
-    // serving refuses while the park stands (it cannot know the root
-    // is the good copy) — the rerun below is what resolves it
-    intercept[IllegalArgumentException](serve())
-    Ann.refitIvfIndex(spark, path, 4)
-    assert(!oldDir.exists(), "converged rerun must finish the park delete")
-    assert(!new java.io.File(path + "__refit_intent").exists())
-    assert(serve() === before, "converged rerun must not rewrite the index")
-    // window D: intent standing alone (crash between park delete and
-    // intent delete) — rerun at the intent width just clears it
-    writeIntent(4)
-    Ann.refitIvfIndex(spark, path, 4)
-    assert(!new java.io.File(path + "__refit_intent").exists())
-    // and the index still answers exactly like a fresh 4-cell build
-    val fresh = tmpRoot + "/fresh4"
-    Ann.buildIvfIndex(base, col("vec_id"), col("embedding"), fresh, nlist = 4)
-    val freshServe = graft.operators.Dedup.scoped {
-      Ann.queryIvfIndex(spark, fresh, qs, col("vec_id"), col("embedding"), k = 5, nprobe = 16)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    }
-    assert(serve() === freshServe)
-    assert(healthy.nonEmpty)
   }
 
   test("IVF codebook is a pure function of the rows: layout-independent fit") {

@@ -586,37 +586,6 @@ class SketchesSpec extends SparkSpecBase {
     assert(e2.getMessage.contains("parked"))
   }
 
-  test("sketch-lake compaction crash windows converge on rerun (intent journaled)") {
-    val base = java.nio.file.Files.createTempDirectory("graft_lake_crash").toString
-    val dir = base + "/lake"
-    val k = 4
-    for (i <- 0 until 3)
-      Sketches.mgSketch((Seq.fill(20 + i)("hot") ++ Seq("a", "b")).toDF("key"),
-        col("key"), k, s"i$i").write.mode("append").parquet(dir)
-    val before = Sketches.mgMergeSketches(spark.read.parquet(dir), k)
-    def intentF = new java.io.File(base + "/.lake__swap_intent")
-    def oldF = new java.io.File(base + "/lake__compact_old")
-    // crash between the renames: lake parked, root gone, intent filed —
-    // the rerun restores the park and completes the compaction
-    assert(new java.io.File(dir).renameTo(oldF))
-    assert(intentF.createNewFile())
-    Sketches.compactMgLake(spark, dir, k)
-    assert(Sketches.mgMergeSketches(spark.read.parquet(dir), k) === before)
-    assert(!oldF.exists() && !intentF.exists())
-    // crash after the swap-in, before the park delete: root is the
-    // gated rewrite — the rerun drops the park only because the
-    // intent's recorded manifest matches the standing root (round-12
-    // converge hardening: a recreated root must NOT license the drop)
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), oldF)
-    val manifest = new java.io.File(dir).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .map(_.getName).sorted.mkString("\n")
-    java.nio.file.Files.writeString(intentF.toPath, manifest)
-    Sketches.compactMgLake(spark, dir, k)
-    assert(Sketches.mgMergeSketches(spark.read.parquet(dir), k) === before)
-    assert(!oldF.exists() && !intentF.exists())
-  }
-
   // -------------------- bottom-k sample quantiles -------------------- //
 
   test("groups under k are exact: quantiles equal nearest-rank over the full group") {

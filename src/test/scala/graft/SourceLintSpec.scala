@@ -61,6 +61,24 @@ class SourceLintSpec extends AnyFunSuite {
       outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
   }
 
+  test("a file system rename is called only by the swap core") {
+    // Every directory replace parks, swaps and recovers through
+    // etl/Compact.scala (swapInto, replaceDir, rewriteJournaled and
+    // convergeCrashedSwap); a rename elsewhere would be a second
+    // crash-recovery rule with windows no rerun knows how to converge.
+    val owner = Paths.get("src", "main", "scala", "graft", "etl", "Compact.scala")
+    val rename = """\.rename\s*\(""".r
+    val hits = for {
+      p <- mainSources
+      (l, n) <- codeLines(p)
+      if rename.findFirstIn(l).isDefined
+    } yield (p, n)
+    assert(hits.exists(_._1 == owner), s"$owner no longer owns the swap renames")
+    val outside = hits.filter(_._1 != owner)
+    assert(outside.isEmpty, "rename outside etl/Compact.scala: " +
+      outside.map { case (p, n) => s"$p:$n" }.mkString(", "))
+  }
+
   test("an index lake's partition column is never filtered with isin outside the leaf reader") {
     // A request-dependent id list in a filter becomes literals in the
     // generated code (an IN switch and its bounds), so every new probe

@@ -46,22 +46,8 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
     if (l == null) return null
     val r = right.eval(input)
     if (r == null) return null
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) return null
-    val lf = elemIsFloat(left)
-    val rf = elemIsFloat(right)
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = if (lf) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rf) b.getFloat(i).toDouble else b.getDouble(i)
-      acc += x * y
-      i += 1
-    }
-    acc
+    VecDot.fold(l.asInstanceOf[ArrayData], elemIsFloat(left),
+      r.asInstanceOf[ArrayData], elemIsFloat(right))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -90,4 +76,29 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
+}
+
+object VecDot {
+
+  /** The interpreted owner of `vec_dot`'s fold (the generated code is
+    * its twin): `acc += (double)a[i] * (double)b[i]` left to right from
+    * 0.0; `aFloat`/`bFloat` say whether each side holds floats or
+    * doubles. A length mismatch or a null element gives null. Called by
+    * [[VecDot.eval]] and by the driver-side IVF probe
+    * ([[graft.operators.Ann.probeCells]]), so both rank with one fold.
+    */
+  def fold(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Any = {
+    val n = a.numElements()
+    if (n != b.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return null
+      val x = if (aFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      acc += x * y
+      i += 1
+    }
+    acc
+  }
 }

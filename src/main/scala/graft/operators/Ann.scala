@@ -2,9 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructField, StructType}
 
 import graft.functions.Vectors
+import graft.functions.expr.VecDot
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -317,7 +319,9 @@ object Ann {
     * (below cosine's [-1, 1] floor): probed last, never dropped.
     * `centDf` must hold only LIVE cells, so every valid query probes
     * >= 1 non-empty cell and therefore returns rows. Returns
-    * (q_id, cell).
+    * (q_id, cell). The persisted indexes rank the same cells on the
+    * driver ([[probeCells]]); this plan form is the on-the-fly
+    * operators' probe, whose live cells come from a base scan.
     */
   private[operators] def topProbeCells(q: DataFrame, centDf: DataFrame, nprobe: Int): DataFrame =
     q.crossJoin(broadcast(centDf))
@@ -925,8 +929,10 @@ object Ann {
     * an empty match set).
     *
     * The query batch is bounded: it is collected once on the driver
-    * ([[localBatch]]) and its probe rows once more ([[probePruned]]);
-    * nothing is cached, so there is no cache for the caller to clear.
+    * ([[localBatch]]), and its probe cells are ranked there against
+    * the resident live centroids ([[probePruned]]), which runs no Spark
+    * job; nothing is cached, so there is no cache for the caller to
+    * clear.
     */
   def queryIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -983,7 +989,8 @@ object Ann {
     * the probe frame (cell, centroid, c_nrm) as a LOCAL relation built
     * from the codebook through [[centroidFrame]] — the same float cast
     * the sidecar's float column was written with, so probe ranks stay
-    * bit-identical, and the broadcast probe side costs no Spark job.
+    * bit-identical, and collecting its rows for the driver-side probe
+    * ([[probePruned]]) runs no Spark job.
     */
   private[operators] def readLiveCentroids(
       spark: org.apache.spark.sql.SparkSession,
@@ -1049,26 +1056,70 @@ object Ann {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Probe + prune for a persisted index, over a [[localBatch]] `q`
-    * of (q_id, q_emb, qp_nrm): the top-`nprobe` (q_id, cell) rows
-    * ([[topProbeCells]], ≤ queries × nprobe) are collected once and
-    * serve twice — their distinct cells are the pruning list, and
-    * joined on the driver to the batch's rows they are the probe side
-    * of the scoring join, one local relation of (q_id, cell, q_emb,
-    * qp_nrm). Nothing is cached. The join keeps the equi-join rules of
-    * [[knnIvf]]'s probe: a null q_id probes nothing, and every row of a
-    * repeated q_id scores its vector against all cells probed for
-    * that id. Returns (pruning cells, probe frame).
+    * of (q_id, q_emb, qp_nrm) and the local probe frame `centDf` of
+    * [[readLiveCentroids]]: both are collected without a Spark job and
+    * the top-`nprobe` (q_id, cell) rows are ranked on the driver
+    * ([[probeCells]], ≤ queries × nprobe). They serve twice — their
+    * distinct cells are the pruning list, and joined on the driver to
+    * the batch's rows they are the probe side of the scoring join, one
+    * local relation of (q_id, cell, q_emb, qp_nrm). Nothing is cached.
+    * The join keeps the equi-join rules of [[knnIvf]]'s probe: a null
+    * q_id probes nothing, and every row of a repeated q_id scores its
+    * vector against all cells probed for that id. Returns (pruning
+    * cells, probe frame).
     */
   private[operators] def probePruned(
       q: DataFrame, centDf: DataFrame, nprobe: Int): (Array[Int], DataFrame) = {
-    val probes = topProbeCells(q, centDf, nprobe).collect()
-    val byId = q.collect().filterNot(_.isNullAt(0)).groupBy(_.get(0))
-    val rows = for (p <- probes; r <- byId.getOrElse(p.get(0), Array.empty[Row]))
-      yield Row(r.get(0), p.getInt(1), r.get(1), r.get(2))
-    (probes.map(_.getInt(1)).distinct,
+    val batch = q.collect()
+    val probes = probeCells(batch, q.schema("q_emb").dataType, centDf.collect(), nprobe)
+      .filter(_._1 != null)
+    val byId = batch.groupBy(_.get(0))
+    val rows = for ((id, cell) <- probes; r <- byId(id))
+      yield Row(r.get(0), cell, r.get(1), r.get(2))
+    (probes.map(_._2).distinct.toArray,
       localFrame(q.sparkSession, StructType(Seq(q.schema("q_id"),
-        StructField("cell", IntegerType), q.schema("q_emb"), q.schema("qp_nrm"))), rows.toSeq))
+        StructField("cell", IntegerType), q.schema("q_emb"), q.schema("qp_nrm"))), rows))
   }
+
+  /** [[topProbeCells]] ranked on the driver, over rows already held
+    * there: `q` rows (q_id, q_emb, qp_nrm) with `qEmb` the type of
+    * q_emb (a float or a double array), and `cents` rows (cell,
+    * centroid, c_nrm) of [[centroidFrame]]. The same ranks bit for bit:
+    * the dot is [[VecDot.fold]], the same
+    * division, -2 for a zero-norm centroid, a null sim dropped, and
+    * the k-buffer's order ([[TopK.beatsD]]: sim descending, cell
+    * ascending). Rows group by q_id as `topProbeCells`'s aggregate
+    * groups them: a repeated q_id ranks the union of its rows (a cell
+    * may come twice) and the null q_id is one group. Returns
+    * (q_id, cell) pairs.
+    */
+  private[operators] def probeCells(
+      q: Seq[Row], qEmb: DataType, cents: Seq[Row], nprobe: Int): Seq[(Any, Int)] = {
+    require(nprobe >= 1, s"top-k requires k >= 1, got $nprobe")
+    val qFloat = qEmb.asInstanceOf[ArrayType].elementType == FloatType
+    def arr(r: Row, i: Int) = new GenericArrayData(r.getSeq[Any](i).toArray)
+    val cs = cents.map(c => (c.getInt(0), arr(c, 1), c.getDouble(2)))
+    q.groupBy(_.get(0)).toSeq.flatMap { case (id, rows) =>
+      val sims: Seq[(Double, Int)] = for {
+        r <- rows
+        qv = arr(r, 1)
+        (cell, cv, cNrm) <- cs
+        // `c_nrm > 0` in SQL order: NaN is above every number
+        sim <- if (cNrm > 0 || cNrm.isNaN)
+          cosine(VecDot.fold(qv, qFloat, cv, bFloat = true), r.getDouble(2) * cNrm)
+        else Some(-2.0)
+      } yield (sim, cell)
+      sims.sortWith((x, y) => TopK.beatsD(x._1, x._2, y._1, y._2)).take(nprobe).map(s => (id, s._2))
+    }
+  }
+
+  /** `dot / nrm` as SQL divides a double: a null dot gives no sim, and
+    * a zero divisor fails, as ANSI mode does.
+    */
+  private def cosine(dot: Any, nrm: Double): Option[Double] =
+    if (dot == null) None
+    else if (nrm == 0.0) throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero.")
+    else Some(dot.asInstanceOf[Double] / nrm)
 
   /** Embedding-cosine near-duplicate pairs at corpus scale: candidate
     * generation via multi-table sign-LSH bucket equi-join, then an exact

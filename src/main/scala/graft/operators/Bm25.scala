@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *    immediately semi-joined against the BROADCAST query vocabulary,
   *    so the postings shuffle carries only rows for terms someone
   *    asked about — ∝ matched postings, never ∝ corpus tokens.
-  *  - document frequencies aggregate over that restricted postings
-  *    frame (vocabulary-sized result, broadcast back).
+  *  - document frequencies are counted by a window over that
+  *    restricted hit stream, in the same pass that scores it.
   *  - the one-shot verbs collect nothing to the driver; corpus
   *    scalars (N, Σdl) are a 1-row agg joined in by broadcast. The
   *    index query verbs collect only the bounded query batch, once
@@ -183,21 +183,20 @@ object Bm25 {
     *
     * df is derived FROM the postings, which is what lets the persisted
     * index skip storing it — a term's whole posting list is always
-    * co-resident with the term. It is counted per (q_id, term): `qt`
-    * holds each pair once and postings are unique per (term, doc_id),
-    * so that count is the term's df. `mult` is how often the batch
-    * asked the pair (rows sharing a q_id); it multiplies the rounded
-    * contribution, which the exact long sum makes identical to adding
-    * it `mult` times. The count joins back null-safe on q_id: a null
-    * q_id is scored like any other.
+    * co-resident with the term. It is counted per (q_id, term) by a
+    * window over the one hit stream (one scan, no df aggregate
+    * broadcast back): `qt` holds each pair once and postings are unique
+    * per (term, doc_id), so that count is the term's df. `mult` is how
+    * often the batch asked the pair (rows sharing a q_id); it
+    * multiplies the rounded contribution, which the exact long sum
+    * makes identical to adding it `mult` times. A window partition
+    * keeps a null q_id together: it is scored like any other.
     */
   private def scoreAndRank(
       post: DataFrame, qt: DataFrame, k: Int, k1: Double, b: Double): DataFrame = {
-    val hits = post.join(broadcast(qt), "term")
-    val dft = hits.groupBy("q_id", "term").agg(count(lit(1)).as("df"))
-      .select(col("q_id").as("df_q"), col("term").as("df_term"), col("df"))
-    val scores = hits
-      .join(broadcast(dft), col("q_id") <=> col("df_q") && col("term") === col("df_term"))
+    val scores = post.join(broadcast(qt), "term")
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("q_id", "term")))
       .select(col("q_id"), col("doc_id"),
         (contribMicro(col("tf"), col("df"), col("dl"),
           col("n_docs"), col("total_tokens"), k1, b) * col("mult")).as("c_micro"))
@@ -898,7 +897,7 @@ object Bm25 {
     * ([[readPostingsBuckets]]: only those are listed, and the plan holds
     * no bucket literal), instead of a corpus scan. The query batch is
     * analyzed and collected once on the driver ([[QueryBatch]];
-    * bounded, the same contract as the ANN probe rows): its terms give
+    * bounded, the same contract as the ANN query batch): its terms give
     * the bucket list and, as one local relation carrying the corpus
     * scalars, the scoring side, so the batch is evaluated exactly once.
     */

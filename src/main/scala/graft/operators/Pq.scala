@@ -507,26 +507,30 @@ object Pq {
     * validation, parameterized on the layout-version column ([[Opq]]'s
     * lake uses `rotated` where IVF-PQ uses `residual`): a partial or
     * mixed-layout pq dir must fail HERE by name in every index family,
-    * and a validation fix must reach all of them at once.
+    * and a validation fix must reach all of them at once. The parsed
+    * tables are resident per generation of the pq sidecar
+    * ([[SidecarMemo]], slot = the marker column): callers must not
+    * mutate them.
     */
   private[operators] def parsePqTables(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      markerCol: String, missingMarkerMsg: String): Codebooks = {
-    val pqDf = spark.read.parquet(s"$path/pq")
-    require(pqDf.schema.fieldNames.contains(markerCol), missingMarkerMsg)
-    val pqRows = pqDf.select("subspace", "code", "centroid_d").collect()
-    require(pqRows.nonEmpty, s"$path/pq is empty -- not a PQ-coded index")
-    val m = pqRows.map(_.getInt(0)).max + 1
-    val kSub = pqRows.map(_.getInt(1)).max + 1
-    require(pqRows.length == m * kSub &&
-      pqRows.map(r => (r.getInt(0), r.getInt(1))).distinct.length == m * kSub,
-      s"$path/pq is not a dense ${m}x$kSub code table -- corrupt index")
-    val tables = Array.tabulate(m) { j =>
-      pqRows.filter(_.getInt(0) == j).sortBy(_.getInt(1))
-        .map(_.getSeq[Double](2).toArray)
+      markerCol: String, missingMarkerMsg: String): Codebooks =
+    SidecarMemo(spark, s"$path/pq", markerCol) {
+      val pqDf = spark.read.parquet(s"$path/pq")
+      require(pqDf.schema.fieldNames.contains(markerCol), missingMarkerMsg)
+      val pqRows = pqDf.select("subspace", "code", "centroid_d").collect()
+      require(pqRows.nonEmpty, s"$path/pq is empty -- not a PQ-coded index")
+      val m = pqRows.map(_.getInt(0)).max + 1
+      val kSub = pqRows.map(_.getInt(1)).max + 1
+      require(pqRows.length == m * kSub &&
+        pqRows.map(r => (r.getInt(0), r.getInt(1))).distinct.length == m * kSub,
+        s"$path/pq is not a dense ${m}x$kSub code table -- corrupt index")
+      val tables = Array.tabulate(m) { j =>
+        pqRows.filter(_.getInt(0) == j).sortBy(_.getInt(1))
+          .map(_.getSeq[Double](2).toArray)
+      }
+      Codebooks(m, tables(0)(0).length, tables)
     }
-    Codebooks(m, tables(0)(0).length, tables)
-  }
 
   /** Incrementally extend a persisted [[buildIvfPqIndex]] index: new
     * rows are assigned AND encoded with the PERSISTED codebooks (no

@@ -7,11 +7,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Resident sidecar state of the persisted indexes — the single owner
   * of what a read verb may keep between requests. A sidecar (the BM25
-  * stats row, the IVF codebook) changes only when a mutating verb
-  * writes it, and every writer lands a NEW part file (Spark part names
-  * carry a per-write UUID). So the sidecar directory's data-file
-  * listing — (name, length, mtime) per file — is a generation token:
-  * equal token, equal content. Each read lists the directory (one
+  * stats row, the IVF codebook, the PQ code tables, the SQ8 stats)
+  * changes only when a mutating verb writes it, and every writer lands
+  * a NEW part file (Spark part names carry a per-write UUID). So the
+  * sidecar directory's data-file listing — (name, length, mtime) per
+  * file — is a generation token: equal token, equal content. Each read lists the directory (one
   * metadata call, no Spark job) and reuses the value loaded for that
   * token; any write moves the token and the next read reloads.
   *

@@ -301,19 +301,22 @@ object Sq {
 
   /** The persisted quantizer of an IVF-SQ8 index — bounded collect of
     * D rows, validated dense (a gap would decode every code of that
-    * dimension wrongly; fail loudly like Pq.loadPqTables).
+    * dimension wrongly; fail loudly like Pq.loadPqTables). Resident per
+    * generation of the sq sidecar ([[SidecarMemo]]): callers must not
+    * mutate it.
     */
   private def loadSqStats(
-      spark: org.apache.spark.sql.SparkSession, path: String): Sq8Stats = {
-    val rows = spark.read.parquet(s"$path/sq")
-      .select("dim_idx", "mn", "mx").collect()
-    require(rows.nonEmpty, s"$path/sq is empty -- not an IVF-SQ8 index")
-    val d = rows.map(_.getInt(0)).max + 1
-    require(rows.length == d && rows.map(_.getInt(0)).distinct.length == d,
-      s"$path/sq is not a dense $d-dimension stats table -- corrupt index")
-    val sorted = rows.sortBy(_.getInt(0))
-    Sq8Stats(sorted.map(_.getDouble(1)), sorted.map(_.getDouble(2)))
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): Sq8Stats =
+    SidecarMemo(spark, s"$path/sq", "stats") {
+      val rows = spark.read.parquet(s"$path/sq")
+        .select("dim_idx", "mn", "mx").collect()
+      require(rows.nonEmpty, s"$path/sq is empty -- not an IVF-SQ8 index")
+      val d = rows.map(_.getInt(0)).max + 1
+      require(rows.length == d && rows.map(_.getInt(0)).distinct.length == d,
+        s"$path/sq is not a dense $d-dimension stats table -- corrupt index")
+      val sorted = rows.sortBy(_.getInt(0))
+      Sq8Stats(sorted.map(_.getDouble(1)), sorted.map(_.getDouble(2)))
+    }
 
   /** KNN against a persisted [[buildIvfSq8Index]] index: probe ranks
     * from the codebook sidecar, a CODES scan of only the probed cells

@@ -48,7 +48,7 @@ object TopK {
     * order, NaN largest — matching Spark's descending sort) with
     * `+ 0.0` collapsing -0.0 to 0.0 so zero ties break by id.
     */
-  private def beatsD(am: Double, ai: Long, bm: Double, bi: Long): Boolean = {
+  private[operators] def beatsD(am: Double, ai: Long, bm: Double, bi: Long): Boolean = {
     val c = java.lang.Double.compare(am + 0.0, bm + 0.0)
     c > 0 || (c == 0 && ai < bi)
   }

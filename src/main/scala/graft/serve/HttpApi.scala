@@ -48,17 +48,22 @@ import graft.pipeline.{HtmlReport, Pipeline, ResultStore}
   *   GET  /index/stats                    — index lifecycle state from the sidecars
   *
   * What a search request costs: the index sidecars (BM25 stats, IVF
-  * codebook) and each lake's schema are RESIDENT per index generation
-  * ([[graft.operators.SidecarMemo]]: the sidecar's file listing is the
-  * generation, and every mutating verb rewrites it), so a request pays
-  * one metadata listing per sidecar instead of Spark jobs to read it;
+  * codebook, PQ tables, SQ8 stats) and each lake's schema are RESIDENT
+  * per index generation ([[graft.operators.SidecarMemo]]: the
+  * sidecar's file listing is the generation, and every mutating verb
+  * rewrites it), so a request pays one metadata listing per sidecar
+  * instead of Spark jobs to read it;
   * the postings/base leaves a request probes are opened by path and
   * listed on every request ([[graft.operators.Leaves]]), so appends,
   * removals and compactions are visible to the next query, and the
   * crash guard (no parked swap tree beside the lake or the index root,
   * [[graft.etl.Compact.requireIndexServable]]) runs per request.
-  * Every Spark job a search request launches carries the job
-  * description `search.<kind>`.
+  * The query batch is collected once on the driver, where the ANN
+  * probe cells are also ranked, so a request runs only the data
+  * stages of its scoring plan: on a small index 5 Spark jobs for a
+  * lexical GET or batch, 5 for phrase, 3 for ann and 7 for hybrid
+  * (ServeSpec pins them). Every Spark job a search request launches
+  * carries the job description `search.<kind>`.
   *
   * Serving discipline at scale: every endpoint that touches DATA goes
   * through a Spark plan with the limit/filter PUSHED INTO the plan

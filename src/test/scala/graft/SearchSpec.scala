@@ -92,8 +92,15 @@ class SearchSpec extends SparkSpecBase {
     assert(!plan.contains("SortMergeJoin"),
       s"corpus-side join shuffled instead of broadcasting:\n$plan")
     // ...and the ranking tail is the k-buffer aggregator, not a Window
-    // sort of the full candidate stream
-    assert(!plan.contains("Window"), s"Window leaked into the BM25 tail:\n$plan")
+    // sort of the full candidate stream: the one Window is df's
+    // unordered count per (q_id, term), below the per-document sum
+    assert(plan.contains("topklongs"), s"no k-buffer top-k in the BM25 tail:\n$plan")
+    val windows = plan.linesIterator.filter(_.contains("Window [")).toSeq
+    val dfCount = ("""Window \[count\(1\) windowspecdefinition\(q_id#\d+L, term#\d+, """ +
+      """specifiedwindowframe\(RowFrame, unboundedpreceding\$\(\), unboundedfollowing\$\(\)\)\) """ +
+      """AS df#\d+L\], \[q_id#\d+L, term#\d+\]""").r
+    assert(windows.size == 1 && dfCount.findFirstIn(windows.head).isDefined,
+      s"a Window other than df's count leaked into the BM25 plan:\n$plan")
   }
 
   test("phrase search: consecutive-token semantics, overlaps, repeated terms, ranking") {

@@ -605,16 +605,16 @@ class ServeSpec extends SparkSpecBase {
     val api = new HttpApi(spark, () => Findings.toDS(spark, fixtureFindings).toDF,
       lexIndexPath = Some(s"$root/lex"), annIndexPath = Some(s"$root/ann"))
     // (kind, request, job description, most jobs one request may run):
-    // with the sidecars, lake schemas and probe centroids resident, and
-    // the query batch (and the ANN probe rows) collected once on the
-    // driver into one local relation, a request pays only its pruned
-    // scoring plan and, for ANN, the probe
+    // with the sidecars, lake schemas and probe centroids resident, the
+    // query batch collected once on the driver into one local relation,
+    // and the ANN probe cells ranked there, a request pays only the
+    // data stages of its pruned scoring plan
     val budget = Seq(
-      ("lexical", "/search/lexical?q=quick%20fox&k=3", "search.lexical", 7),
+      ("lexical", "/search/lexical?q=quick%20fox&k=3", "search.lexical", 5),
       ("phrase", "/search/phrase?q=quick%20brown&k=3", "search.phrase", 5),
-      ("ann", "/search/ann?vec=1,0,0,0&k=2&nprobe=2", "search.ann", 6),
-      ("hybrid", "/search/hybrid?q=quick%20fox&vec=1,0,0,0&k=3&nprobe=2", "search.hybrid", 12),
-      ("batch", "/search/lexical?k=3", "search.lexical", 7))
+      ("ann", "/search/ann?vec=1,0,0,0&k=2&nprobe=2", "search.ann", 3),
+      ("hybrid", "/search/hybrid?q=quick%20fox&vec=1,0,0,0&k=3&nprobe=2", "search.hybrid", 7),
+      ("batch", "/search/lexical?k=3", "search.lexical", 5))
     val batch = """{"queries":[{"id":1,"q":"quick fox"},{"id":2,"q":"lazy dogs"},{"id":3,"q":"honey"}]}"""
     withApi(api) { (port, client) =>
       for ((kind, path, desc, maxJobs) <- budget) {
@@ -734,9 +734,9 @@ class ServeSpec extends SparkSpecBase {
       assert(code == 200)
       info(s"$probed-bucket batch jobs: ${descs.size}")
       // Spark lists more than 32 leaves in a job of its own, as it does
-      // the 64 leaves of a whole-lake read: one job over the 7 of a
+      // the 64 leaves of a whole-lake read: one job over the 5 of a
       // small batch
-      assert(descs.size <= 8, s"a $probed-bucket batch ran ${descs.size} Spark jobs, budget 8")
+      assert(descs.size <= 6, s"a $probed-bucket batch ran ${descs.size} Spark jobs, budget 6")
     }
   }
 

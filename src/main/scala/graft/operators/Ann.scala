@@ -88,24 +88,41 @@ object Ann {
   def knnBruteForce(
       base: DataFrame, baseId: Column, baseVec: Column,
       queries: DataFrame, qId: Column, qVec: Column,
-      k: Int): DataFrame = {
-    // norms hoisted to once per ROW (not once per scored pair): the
-    // division keeps cosine's exact op sequence, so results stay
-    // bit-identical while the per-pair work drops to one dot fold.
-    // Zero-norm vectors are EXCLUDED before scoring: cosine is
-    // undefined for them, and under ANSI SQL the division would throw
-    // (non-ANSI: score NaN and pollute every query's rank 1).
-    val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
+      k: Int): DataFrame =
+    topkPerQuery(validVectors(base, baseId, baseVec)
+      .crossJoin(broadcast(validQueries(queries, qId, qVec)))
+      .select(col("q_id"), col("b_id"), exactSim), k)
+
+  /** Valid (norm > 0) base vectors as (b_id, b_emb, b_nrm) — the one
+    * owner of the base side of every cosine in the family, as
+    * [[validQueries]] is of the query side. Norms are hoisted to once
+    * per ROW, not once per scored pair ([[exactSim]]). Zero-norm
+    * vectors are EXCLUDED before scoring: cosine is undefined for
+    * them, and under ANSI SQL the division would throw (non-ANSI:
+    * score NaN and pollute every query's rank 1).
+    */
+  private[operators] def validVectors(base: DataFrame, id: Column, vec: Column): DataFrame =
+    base.select(id.as("b_id"), vec.as("b_emb"))
       .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
       .filter(col("b_nrm") > 0)
-    val q = queries.select(qId.as("q_id"), qVec.as("q_emb"))
-      .withColumn("q_nrm", Vectors.norm2(col("q_emb")))
-      .filter(col("q_nrm") > 0)
-    val scored = b.crossJoin(broadcast(q))
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    topkPerQuery(scored, k)
-  }
+
+  /** Valid (norm > 0) queries as (q_id, q_emb, qp_nrm) — the one
+    * owner of the query side of every cosine in the family (a
+    * `SourceLintSpec` rule: no other code computes a query norm).
+    */
+  private[operators] def validQueries(queries: DataFrame, qId: Column, qVec: Column): DataFrame =
+    queries.select(qId.as("q_id"), qVec.as("q_emb"))
+      .withColumn("qp_nrm", Vectors.norm2(col("q_emb")))
+      .filter(col("qp_nrm") > 0)
+
+  /** The exact cosine `sim` of a [[validVectors]] row against a
+    * [[validQueries]] row: one dot fold over the hoisted norms, whose
+    * division keeps cosine's op sequence, so every exact score in the
+    * family — brute force, IVF scans, the rerank tail — is the same
+    * bits.
+    */
+  private[operators] def exactSim: Column =
+    (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("qp_nrm"))).as("sim")
 
   /** IVF (inverted-file) approximate KNN: a k-means coarse quantizer
     * partitions the base vectors into `nlist` cells; each query probes
@@ -148,30 +165,38 @@ object Ann {
     val codebook = fitCodebook(b, nlist, seed, maxFit)
     // the persisted build's encode: null, null-element and
     // wrong-dimension rows take no cell and are dropped alike
-    val assigned = ivfRows(b, codebook)
-    // Probe only LIVE cells -- cells holding >= 1 scoreable (norm > 0)
-    // member. The quantizer can leave dead centroids (an empty Lloyd
-    // cell keeps its previous position, possibly coincident with a
-    // twin), and a query whose every probed cell were dead would emit
-    // ZERO rows -- breaking the contract that every valid query returns
-    // candidates (which v05's self-verifying oracle enforces with its
-    // coverage sentinel). Costs one extra narrow pass over the base at
-    // query time; [[buildIvfIndex]] gets the same liveness for free as
-    // write-time stats.
-    val liveCells = assigned
-      .filter(col("b_nrm") > 0)
-      .select("cell").distinct()
-    val centDf = centroidFrame(base.sparkSession, codebook)
-      .join(broadcast(liveCells), "cell")
-    val q = validQueries(queries, qId, qVec)
+    // scoreable (norm > 0) members only: see validVectors
+    val scoreable = ivfRows(b, codebook).filter(col("b_nrm") > 0)
+    val probed = probeLiveCells(validQueries(queries, qId, qVec), codebook, scoreable, nprobe)
+    topkPerQuery(scoreable.join(broadcast(probed), "cell")
+      .select(col("q_id"), col("b_id"), exactSim), k)
+  }
+
+  /** The probe of the on-the-fly IVF operators ([[knnIvf]],
+    * [[Pq.knnIvfPq]], [[Sq.knnIvfSq8]]): a query of another dimension
+    * than the codebook fails ([[requireQueryDim]]), then each valid
+    * query of `q` (q_id, q_emb, qp_nrm) ranks its `nprobe` nearest LIVE
+    * cells ([[topProbeCells]]) and its rows are joined back:
+    * (q_id, cell, q_emb, qp_nrm), the probe side of the scan join.
+    *
+    * Live = holding >= 1 row of `scoreable` (a frame with a `cell`
+    * column: the members the family can score). The quantizer can
+    * leave dead centroids (an empty Lloyd cell keeps its previous
+    * position, possibly coincident with a twin), and a query whose
+    * every probed cell were dead would emit ZERO rows -- breaking the
+    * contract that every valid query returns candidates (which v05's
+    * self-verifying oracle enforces with its coverage sentinel). Costs
+    * one extra narrow pass over the base at query time; the persisted
+    * indexes get the same liveness for free as write-time stats
+    * ([[readLiveCentroids]]).
+    */
+  private[operators] def probeLiveCells(
+      q: DataFrame, codebook: Array[Array[Double]], scoreable: DataFrame,
+      nprobe: Int): DataFrame = {
     requireQueryDim(q, codebook(0).length)
-    val probed = topProbeCells(q, centDf, nprobe).join(q, "q_id")
-    val scored = assigned
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
-      .join(broadcast(probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    topkPerQuery(scored, k)
+    val live = centroidFrame(q.sparkSession, codebook)
+      .join(broadcast(scoreable.select("cell").distinct()), "cell")
+    topProbeCells(q, live, nprobe).join(q, "q_id")
   }
 
   /** Bounded deterministic vector sample of a (b_id, b_emb) frame — the
@@ -284,12 +309,6 @@ object Ann {
     codebookFrame(spark, codebook, cells.getOrElse(codebook.indices))
       .withColumn("c_nrm", Vectors.norm2(col("centroid")))
       .select("cell", "centroid", "c_nrm")
-
-  /** Valid (norm > 0) queries as (q_id, q_emb, qp_nrm). */
-  private[operators] def validQueries(queries: DataFrame, qId: Column, qVec: Column): DataFrame =
-    queries.select(qId.as("q_id"), qVec.as("q_emb"))
-      .withColumn("qp_nrm", Vectors.norm2(col("q_emb")))
-      .filter(col("qp_nrm") > 0)
 
   /** Fail LOUDLY if any query embedding's length differs from the index
     * dimension: a ragged query folds to NULL against every centroid and
@@ -905,34 +924,12 @@ object Ann {
     IndexOccupancy(members.values.sum, codebook.length, members.values.count(_ > 0))
   }
 
-  /** KNN against a persisted [[buildIvfIndex]] index. The probe ranks
-    * come from the codebook sidecar; the union of probed cells (a
-    * bounded <= nlist driver collect) is the list of cell directories
-    * the base read opens, by path ([[readBaseCells]]): only those are
-    * listed and read, and the plan holds no cell literal. Same
-    * arithmetic as [[knnIvf]] end-to-end: the same build inputs and the
-    * same (k, nprobe) produce identical rows.
-    *
-    * `eligible` — FILTERED search (the serving-side metadata predicate:
-    * "nearest neighbors WHERE license = permissive"): a frame + id
-    * column naming the base ids allowed to score. PRE-filtering, not
-    * post-filtering — ineligible candidates are semi-joined out of the
-    * probed-cell scan BEFORE scoring, so the top-k ranks over eligible
-    * candidates only (a post-filter of an unfiltered top-k would
-    * return < k rows and silently lose eligible neighbors ranked k+1+).
-    * The index stores vectors only; eligibility arrives as an id set
-    * precisely so any metadata predicate — computed on any table — can
-    * drive it. Spark picks broadcast vs shuffle for the semi-join from
-    * the eligible frame's size (AQE); a selective predicate also
-    * shrinks the scoring work ∝ selectivity. Queries whose probed
-    * cells hold no eligible candidate return no rows (same contract as
-    * an empty match set).
-    *
-    * The query batch is bounded: it is collected once on the driver
-    * ([[localBatch]]), and its probe cells are ranked there against
-    * the resident live centroids ([[probePruned]]), which runs no Spark
-    * job; nothing is cached, so there is no cache for the caller to
-    * clear.
+  /** KNN against a persisted [[buildIvfIndex]] index: the probed cells'
+    * vectors from [[probeFront]] (filtered search by `eligible`
+    * included), scored exactly. Same arithmetic as [[knnIvf]]
+    * end-to-end: the same build inputs and the same (k, nprobe) produce
+    * identical rows. Nothing is cached, so there is no cache for the
+    * caller to clear.
     */
   def queryIvfIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
@@ -940,25 +937,11 @@ object Ann {
       k: Int, nprobe: Int = 4,
       eligible: Option[(DataFrame, Column)] = None,
       withVec: Boolean = false): DataFrame = {
-    graft.etl.Compact.requireIndexServable(spark, path, "base")
-    val (codebook, live, centDf) = readLiveCentroids(spark, path)
-    val q = localBatch(validQueries(queries, qId, qVec))
-    // an index whose every cell is dead has an empty live codebook —
-    // no rows can come back, so there is no dim to enforce
-    if (live.nonEmpty) requireQueryDim(q, codebook(0).length)
-    val (cells, probed) = probePruned(q, centDf, nprobe)
-    val base = readBaseCells(spark, path, cells)
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        base.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => base
-    }
-    val scored = filtered
-      .join(broadcast(probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    val top = topkPerQuery(scored, k)
+    val (_, _, probed, base) =
+      probeFront(spark, path, "b_emb", queries, qId, qVec, nprobe, eligible)(None)
+    val filtered = base.filter(col("b_nrm") > 0) // zero-norm: see validVectors
+    val top = topkPerQuery(filtered.join(broadcast(probed), "cell")
+      .select(col("q_id"), col("b_id"), exactSim), k)
     if (!withVec) top
     else
       // `withVec`: carry each served neighbor's embedding for
@@ -983,14 +966,14 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(s"$path/base").select("b_id")
 
-  /** LIVE (members > 0) centroids of a persisted index — single owner
-    * of the probe-side read shared by the IVF, IVF-PQ and IVF-SQ8 query
-    * paths. Returns the resident double codebook, the live cells, and
-    * the probe frame (cell, centroid, c_nrm) as a LOCAL relation built
-    * from the codebook through [[centroidFrame]] — the same float cast
-    * the sidecar's float column was written with, so probe ranks stay
-    * bit-identical, and collecting its rows for the driver-side probe
-    * ([[probePruned]]) runs no Spark job.
+  /** LIVE (members > 0) centroids of a persisted index — the
+    * probe-side read of [[probeFront]]. Returns the resident double
+    * codebook, the live cells, and the probe frame (cell, centroid,
+    * c_nrm) as a LOCAL relation built from the codebook through
+    * [[centroidFrame]] — the same float cast the sidecar's float column
+    * was written with, so probe ranks stay bit-identical, and
+    * collecting its rows for the driver-side probe ([[probePruned]])
+    * runs no Spark job.
     */
   private[operators] def readLiveCentroids(
       spark: org.apache.spark.sql.SparkSession,
@@ -1018,13 +1001,75 @@ object Ann {
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.schema(baseSchema(spark, path)).parquet(s"$path/base")
 
-  /** Only the probed `cells` of the base lake, opened by path
-    * ([[Leaves.read]]): the request lists and reads just those leaves,
-    * and its plan carries no cell literal.
+  /** The query verb of each persisted IVF-family layout, by the column
+    * only that layout's base holds.
     */
-  private[operators] def readBaseCells(
-      spark: org.apache.spark.sql.SparkSession, path: String, cells: Iterable[Int]): DataFrame =
-    Leaves.read(spark, s"$path/base", baseSchema(spark, path), "cell", cells)
+  private val QueryVerbs = Seq(
+    "b_emb" -> "Ann.queryIvfIndex", "d_nrm" -> "Pq.queryIvfPqIndex",
+    "r_nrm" -> "Sq.queryIvfSq8Index")
+
+  /** The probe front every persisted IVF-family query shares
+    * ([[queryIvfIndex]], [[Pq.queryIvfPqIndex]],
+    * [[Sq.queryIvfSq8Index]]); the verbs keep only their scan score and
+    * their tail. In order:
+    *
+    *  1. the servability guard;
+    *  2. the layout check: the resident [[baseSchema]] must hold
+    *     `payload`, the column only the calling verb's layout has, or
+    *     the call is refused naming the verb of the layout found (no
+    *     file-system call: the schema is read once and serves step 6);
+    *  3. the resident live centroids ([[readLiveCentroids]]);
+    *  4. the bounded query batch, collected once on the driver
+    *     ([[localBatch]] of [[validQueries]]);
+    *  5. the dim check against `dim` — evaluated here, after step 2, so
+    *     a verb may read its quantizer for it. None is plain IVF's
+    *     rule: the coarse codebook's dim, enforced only while some cell
+    *     is live (an all-dead index answers nothing, so there is no dim
+    *     to enforce);
+    *  6. the probe, ranked on the driver ([[probePruned]], no Spark
+    *     job), and the probed cell leaves read by path
+    *     ([[Leaves.read]]): only those are listed and read, and the
+    *     plan holds no cell literal;
+    *  7. `eligible` — FILTERED search (the serving-side metadata
+    *     predicate: "nearest neighbors WHERE license = permissive"): a
+    *     frame + id column naming the base ids allowed to score.
+    *     PRE-filtering, not post-filtering — ineligible candidates are
+    *     semi-joined out of the probed-cell scan BEFORE scoring, so the
+    *     top-k (or a quantized verb's shortlist) ranks over eligible
+    *     candidates only (a post-filter would return < k rows and
+    *     silently lose eligible neighbors ranked k+1+). The index
+    *     stores vectors or codes only; eligibility arrives as an id set
+    *     so any metadata predicate — computed on any table — can drive
+    *     it. Spark picks broadcast vs shuffle for the semi-join from the
+    *     eligible frame's size (AQE). Queries whose probed cells hold
+    *     no eligible candidate return no rows.
+    *
+    * Returns (coarse codebook, query batch (q_id, q_emb, qp_nrm), probe
+    * frame (q_id, cell, q_emb, qp_nrm), probed base rows).
+    */
+  private[operators] def probeFront(
+      spark: org.apache.spark.sql.SparkSession, path: String, payload: String,
+      queries: DataFrame, qId: Column, qVec: Column, nprobe: Int,
+      eligible: Option[(DataFrame, Column)])(
+      dim: => Option[Int]): (Array[Array[Double]], DataFrame, DataFrame, DataFrame) = {
+    graft.etl.Compact.requireIndexServable(spark, path, "base")
+    val schema = baseSchema(spark, path)
+    val fields = schema.fieldNames
+    require(fields.contains(payload), {
+      val found = QueryVerbs.collectFirst { case (c, v) if fields.contains(c) => v }
+        .filter(_ => fields.contains("cell"))
+      s"$path/base holds no $payload column, so it is not the layout this verb reads" +
+        found.fold(" -- not an IVF-family index")(v => s" -- use $v")
+    })
+    val (codebook, live, centDf) = readLiveCentroids(spark, path)
+    val q = localBatch(validQueries(queries, qId, qVec))
+    dim.orElse(Option.when(live.nonEmpty)(codebook(0).length)).foreach(requireQueryDim(q, _))
+    val (cells, probed) = probePruned(q, centDf, nprobe)
+    val base = Leaves.read(spark, s"$path/base", schema, "cell", cells)
+    (codebook, q, probed, eligible.fold(base) { case (el, elId) =>
+      base.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
+    })
+  }
 
   /** Record `written` — the base lake's columns as written, partition
     * column last — for the codebook generation a write just made, in
@@ -1148,24 +1193,20 @@ object Ann {
       minSim: Double, bits: Int = 8, tables: Int = 2): DataFrame = {
     require(tables >= 1, "tables must be >= 1")
     // narrow per-row prep, scanned by the bucket pass and both verify
-    // joins: id + embedding + hoisted norm (zero-norm rows excluded —
-    // cosine undefined; see knnBruteForce)
-    val e = Dedup.scopedCache(
-      df.select(id.as("vec_id"), vec.as("emb"))
-        .withColumn("nrm", Vectors.norm2(col("emb")))
-        .filter(col("nrm") > 0))
+    // joins: the valid vectors ([[validVectors]])
+    val e = Dedup.scopedCache(validVectors(df, id, vec))
     val buckets = Dedup.scopedCache(e.select(
-      col("vec_id"),
+      col("b_id"),
       explode(array((0 until tables).map(t =>
-        struct(lit(t).as("t"), Vectors.signLsh(col("emb"), bits, t).as("bucket"))): _*)).as("tb")))
+        struct(lit(t).as("t"), Vectors.signLsh(col("b_emb"), bits, t).as("bucket"))): _*)).as("tb")))
     val cand = buckets.as("x")
       .join(buckets.as("y"),
-        col("x.tb") === col("y.tb") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("d1"), col("y.vec_id").as("d2"))
+        col("x.tb") === col("y.tb") && col("x.b_id") < col("y.b_id"))
+      .select(col("x.b_id").as("d1"), col("y.b_id").as("d2"))
       .distinct()
     cand
-      .join(e.select(col("vec_id").as("d1"), col("emb").as("ea"), col("nrm").as("na")), "d1")
-      .join(e.select(col("vec_id").as("d2"), col("emb").as("eb"), col("nrm").as("nb")), "d2")
+      .join(e.select(col("b_id").as("d1"), col("b_emb").as("ea"), col("b_nrm").as("na")), "d1")
+      .join(e.select(col("b_id").as("d2"), col("b_emb").as("eb"), col("b_nrm").as("nb")), "d2")
       .select(col("d1"), col("d2"),
         (Vectors.dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("sim"))
       .filter(col("sim") >= minSim)
@@ -1197,20 +1238,16 @@ object Ann {
       df: DataFrame, id: Column, vec: Column, tau: Double,
       nlist: Int = 16, seed: Long = 42L, maxFit: Long = 100000L): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1], got $tau")
-    val e = Dedup.scopedCache(
-      df.select(id.as("vec_id"), vec.as("emb"))
-        .withColumn("nrm", Vectors.norm2(col("emb")))
-        .filter(col("nrm") > 0))
-    val codebook = fitCodebook(
-      e.select(col("vec_id").as("b_id"), col("emb").as("b_emb")), nlist, seed, maxFit)
+    val e = Dedup.scopedCache(validVectors(df, id, vec))
+    val codebook = fitCodebook(e.select("b_id", "b_emb"), nlist, seed, maxFit)
     val cells = Dedup.scopedCache(
-      e.withColumn("cell", cellExpr(col("emb"), codebook))
+      e.withColumn("cell", cellExpr(col("b_emb"), codebook))
         .filter(col("cell").isNotNull))
     cells.as("a")
       .join(cells.as("b"),
-        col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("d1"), col("b.vec_id").as("d2"),
-        (Vectors.dot(col("a.emb"), col("b.emb")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
+        col("a.cell") === col("b.cell") && col("a.b_id") < col("b.b_id"))
+      .select(col("a.b_id").as("d1"), col("b.b_id").as("d2"),
+        (Vectors.dot(col("a.b_emb"), col("b.b_emb")) / (col("a.b_nrm") * col("b.b_nrm"))).as("sim"))
       .filter(col("sim") >= tau)
   }
 
@@ -1226,9 +1263,7 @@ object Ann {
       nlist: Int = 16, seed: Long = 42L, maxFit: Long = 100000L): DataFrame = {
     val pairs = semDedupPairs(df, id, vec, tau, nlist, seed, maxFit)
     val groups = Dedup.groupPairs(pairs)
-    df.select(id.as("doc_id"), vec.as("__v"))
-      .filter(Vectors.norm2(col("__v")) > 0)
-      .select("doc_id")
+    validVectors(df, id, vec).select(col("b_id").as("doc_id"))
       .join(groups, Seq("doc_id"), "left")
       .select(
         col("doc_id"),
@@ -1263,12 +1298,8 @@ object Ann {
     require(tables >= 1, "tables must be >= 1")
     require(probeRadius >= 1 && probeRadius <= 2,
       s"probeRadius must be 1 or 2, got $probeRadius")
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
-    val q0 = queries.select(qId.as("q_id"), qVec.as("q_emb"))
-      .withColumn("q_nrm", Vectors.norm2(col("q_emb")))
-      .filter(col("q_nrm") > 0)
+    val b0 = validVectors(base, baseId, baseVec)
+    val q0 = validQueries(queries, qId, qVec)
     // one (table, bucket) key per row per table: a single explode keeps
     // one scan of each side instead of a tables-way union
     def bucketed(df: DataFrame, vec: String) = df.withColumn(
@@ -1294,10 +1325,9 @@ object Ann {
           struct(col("tb.t").as("t"),
             col("tb.bucket").bitwiseXOR(lit(m)).as("bucket"))): _*)))
     val scored0 = bucketed(b0, "b_emb").join(
-        broadcast(qBucketed.select(col("tb"), col("q_id"), col("q_emb"), col("q_nrm"))),
+        broadcast(qBucketed.select(col("tb"), col("q_id"), col("q_emb"), col("qp_nrm"))),
         "tb")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
+      .select(col("q_id"), col("b_id"), exactSim)
     // a pair colliding in several tables would occupy several top-k
     // slots — dedup AFTER scoring so the shuffle ships the narrow
     // (q_id, b_id, sim) projection, not embedding arrays. Within ONE

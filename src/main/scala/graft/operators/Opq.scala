@@ -137,9 +137,7 @@ object Opq {
       k: Int, m: Int = 8, kSub: Int = 256, shortlist: Int = 0,
       seed: Long = 42L, maxFit: Long = 20000L): DataFrame = {
     val sl = Pq.shortlistSize(shortlist, k)
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val b0 = Ann.validVectors(base, baseId, baseVec)
     val rot = fitRotation(b0, m, maxFit)
     val d = rot.inputDim
 
@@ -156,9 +154,7 @@ object Opq {
       .withColumn("d_nrm", Pq.reconNormExpr(col("codes"), zeroCent, cb))
       .select("b_id", "codes", "d_nrm")
     val short = Ann.topkPerQuery(adcL2Sims(enc, qLutOf(q, cb), cb), sl)
-    Pq.rerankExact(short,
-      b.select("b_id", "b_emb", "b_nrm"),
-      q.select("q_id", "q_emb", "qp_nrm"), k)
+    Pq.rerankExact(short, b, q, k)
   }
 
   // ------------------------------------------------------------------ //
@@ -215,13 +211,8 @@ object Opq {
     // guard's "recover it" remedy would then mix codes from two
     // geometries. Refuse until the operator recovers or deletes it.
     graft.etl.Compact.requireIndexServable(spark, path, "base")
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    val fitB = fitOn.map(f =>
-      f.select(baseId.as("b_id"), baseVec.as("b_emb"))
-        .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-        .filter(col("b_nrm") > 0)).getOrElse(b0)
+    val b0 = Ann.validVectors(base, baseId, baseVec)
+    val fitB = fitOn.map(Ann.validVectors(_, baseId, baseVec)).getOrElse(b0)
     val rot = fitRotation(fitB, m, maxFit)
     val d = rot.inputDim
     // in-place rebuild: kill the completeness marker BEFORE touching
@@ -398,11 +389,8 @@ object Opq {
     // shared projection + ADC arithmetic owners with knnOpq —
     // persisted ≡ on-the-fly holds by construction
     val short = Ann.topkPerQuery(adcL2Sims(enc, qLutOf(q, cb), cb), sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    Pq.rerankExact(short, src,
-      q.select("q_id", "q_emb", "qp_nrm"), k, requireFullCoverage = true)
+    Pq.rerankExact(short, Ann.validVectors(source, srcId, srcVec), q, k,
+      requireFullCoverage = true)
   }
 
   /** Incrementally extend a persisted [[buildOpqIndex]] index: new rows
@@ -421,10 +409,7 @@ object Opq {
     val fs = new org.apache.hadoop.fs.Path(basePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = Ann.listDataFiles(fs, basePath)
-    val b0 = rows.select(id.as("b_id"), vec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    opqScoreable(b0, rot, cb, nBuckets)
+    opqScoreable(Ann.validVectors(rows, id, vec), rot, cb, nBuckets)
       .transform(Ann.clusterForWrite("bucket")) // clustered append (see build)
       .write.partitionBy("bucket").mode("append").parquet(basePath)
     if ((Ann.listDataFiles(fs, basePath) -- before).isEmpty)

@@ -203,9 +203,7 @@ object Pca {
       maxFit: Long = 20000L, model: Option[PcaModel] = None): DataFrame = {
     require(k >= 1 && shortlist >= k,
       s"need shortlist >= k >= 1, got shortlist=$shortlist k=$k")
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .withColumn("b_nrm", graft.functions.Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val b0 = Ann.validVectors(base, baseId, baseVec)
     val m = model.getOrElse(fitUnit(b0, col("b_id"), col("b_emb"), dims, maxFit))
     // unit-sphere projection + hoisted reduced-space squared norm; a
     // dimension-mismatched BASE vector yields null coords (vec_dot) and
@@ -229,9 +227,7 @@ object Pca {
         (-(col("bp2") + col("qp2")
           - lit(2.0) * graft.functions.Vectors.dot(col("bp"), col("qp")))).as("sim"))
     val short = Ann.topkPerQuery(scored, shortlist)
-    Pq.rerankExact(
-      short, b.select("b_id", "b_emb", "b_nrm"),
-      q.select("q_id", "q_emb", "qp_nrm"), k)
+    Pq.rerankExact(short, b, q, k)
   }
 
   /** Unit-sphere projection: coordinate j = `vec_dot(x, pc_j)/‖x‖ −

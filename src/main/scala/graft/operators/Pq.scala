@@ -144,9 +144,7 @@ object Pq {
       seed: Long = 42L, maxFit: Long = 100000L): DataFrame = {
     val sl = shortlistSize(shortlist, k)
     val cb = fit(base, baseId, baseVec, m, kSub, seed, maxFit)
-    val b = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
+    val b = Ann.validVectors(base, baseId, baseVec)
     val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
     Ann.requireQueryDim(q, cb.m * cb.sub)
     // raw (non-residual) layout: zero centroid in the norm, no
@@ -170,13 +168,16 @@ object Pq {
     sl
   }
 
-  /** Exact rerank of a compressed-domain shortlist — the SINGLE owner
-    * of the tail both [[knnPq]] and [[knnIvfPq]] end with, because the
+  /** Exact rerank of an approximate shortlist — the SINGLE owner of
+    * the tail every shortlist family ends with (PQ, IVF-PQ, SQ8,
+    * IVF-SQ8, OPQ, PCA, on the fly and persisted), because the
     * self-verifying oracle contract depends on this arithmetic staying
-    * bit-identical to [[Ann.knnBruteForce]]'s. Shortlist pairs only
-    * (<= queries × shortlist rows): the wide original vectors travel
-    * once per surviving pair, not per compressed-domain comparison.
-    * `b` = (b_id, b_emb, b_nrm > 0); `q` = [[Ann.validQueries]] shape.
+    * bit-identical to [[Ann.knnBruteForce]]'s ([[Ann.exactSim]]).
+    * Shortlist pairs only (<= queries × shortlist rows): the wide
+    * original vectors travel once per surviving pair, not per
+    * compressed-domain comparison. `b` holds the [[Ann.validVectors]]
+    * columns, `q` the [[Ann.validQueries]] ones (other columns are
+    * dropped).
     *
     * `requireFullCoverage` (the persisted-index paths): the rerank join
     * runs as a LEFT join and a shortlist id with no source row FAILS
@@ -192,10 +193,11 @@ object Pq {
       short: DataFrame, b: DataFrame, q: DataFrame, k: Int,
       requireFullCoverage: Boolean = false): DataFrame = {
     val pairs = short.select("q_id", "b_id")
+    val vecs = b.select("b_id", "b_emb", "b_nrm")
     val withVec =
-      if (!requireFullCoverage) pairs.join(b, "b_id")
+      if (!requireFullCoverage) pairs.join(vecs, "b_id")
       else {
-        val j = Dedup.scopedCache(pairs.join(b, Seq("b_id"), "left"))
+        val j = Dedup.scopedCache(pairs.join(vecs, Seq("b_id"), "left"))
         // bounded probe of the CACHED join: stops at the first
         // uncovered shortlist id (retention delete / drifted filter on
         // the source), which would otherwise silently shrink or empty
@@ -207,23 +209,10 @@ object Pq {
             "index was built; rebuild the index or remove the ids from it")
         j
       }
-    val scored = withVec
-      .join(broadcast(q.withColumnRenamed("qp_nrm", "q_nrm")), "q_id")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    Ann.topkPerQuery(scored, k)
+    Ann.topkPerQuery(withVec.join(broadcast(q.select("q_id", "q_emb", "qp_nrm")), "q_id")
+      .select(col("q_id"), col("b_id"), Ann.exactSim), k)
   }
 
-  /** Build a PERSISTED IVF-PQ index at `path` — the compressed
-    * build-once/query-many serving shape for 10^9+ vectors: the base
-    * stores ONLY (b_id, codes, d_nrm) partitioned by coarse cell, so a
-    * query's probed-cell scan reads ~m bytes per candidate instead of
-    * 4·D (the full vectors stay in the SOURCE table and are joined
-    * back only for the exact-rerank shortlist). Layout:
-    * `path/base` (b_id, codes, d_nrm; cell = partition key),
-    * `path/codebook` (the coarse sidecar, occupancy = PQ-scoreable
-    * members), `path/pq` (one row per (subspace, code): the PQ tables).
-    */
   /** The coarse centroids as a FLOAT array-of-arrays literal — the
     * IVF-PQ paths' single owner of the residual arithmetic's centroid
     * operand. The float cast must match [[Ann]]'s `codebookFrame`
@@ -344,9 +333,9 @@ object Pq {
       Array.tabulate(x.length)(i => x(i) - cf(i).toFloat)
     }
 
-  /** The PQ-scoreable enrichment of a (b_id, b_emb) frame — the SINGLE
-    * owner of the filter chain (nonzero norm, exact dim, valid cell,
-    * valid codes, nonzero decoded norm) that [[buildIvfPqIndex]]
+  /** The PQ-scoreable enrichment of an [[Ann.validVectors]] frame — the
+    * SINGLE owner of the filter chain (exact dim, valid cell, valid
+    * codes, nonzero decoded norm) that [[buildIvfPqIndex]]
     * persists and [[knnIvfPq]] computes on the fly: the persisted ≡
     * on-the-fly row-for-row contract depends on both paths drawing the
     * SAME row universe. Codes are RESIDUAL ([[residExpr]]): encode
@@ -356,9 +345,8 @@ object Pq {
     * Returns (b_id, cell, codes, d_nrm).
     */
   private def pqScoreable(
-      b0: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
-    b0.filter(Vectors.norm2(col("b_emb")) > 0) // zero-norm: see knnBruteForce
-      .filter(size(col("b_emb")) === cb.m * cb.sub) // ragged: see encode
+      b: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
+    b.filter(size(col("b_emb")) === cb.m * cb.sub) // ragged: see encode
       .withColumn("cell", Ann.cellExpr(col("b_emb"), coarse))
       .filter(col("cell").isNotNull)
       // __cent as its own projected column: both the encode and the
@@ -379,6 +367,16 @@ object Pq {
     */
   private def pqSeed(seed: Long): Long = seed + 1000003L
 
+  /** Build a PERSISTED IVF-PQ index at `path` — the compressed
+    * build-once/query-many serving shape for 10^9+ vectors: the base
+    * stores ONLY (b_id, codes, d_nrm) partitioned by coarse cell, so a
+    * query's probed-cell scan reads ~m bytes per candidate instead of
+    * 4·D (the full vectors stay in the SOURCE table and are joined
+    * back only for the exact-rerank shortlist). Layout:
+    * `path/base` (b_id, codes, d_nrm; cell = partition key),
+    * `path/codebook` (the coarse sidecar, occupancy = PQ-scoreable
+    * members), `path/pq` (one row per (subspace, code): the PQ tables).
+    */
   def buildIvfPqIndex(
       base: DataFrame, baseId: Column, baseVec: Column, path: String,
       nlist: Int = 16, m: Int = 8, kSub: Int = 256,
@@ -399,7 +397,8 @@ object Pq {
     // base whose EVERY row fell to them (classic cause: fitOn frame
     // with a different embedding dimension than the base) is refused,
     // never persisted as a silently empty index
-    Ann.writeIvfLake(spark, path, pqRows(b0, coarse, cb), lit(true), (coarse, Map.empty),
+    Ann.writeIvfLake(spark, path, pqRows(Ann.validVectors(base, baseId, baseVec), coarse, cb),
+      lit(true), (coarse, Map.empty),
       increment = None,
       s"no base row was PQ-scoreable for $path -- does the base embedding " +
         s"dimension match the fitted codebooks (dim ${cb.m * cb.sub})?") {
@@ -421,14 +420,15 @@ object Pq {
   }
 
   /** The persisted IVF-PQ row: [[pqScoreable]] as (b_id, codes, d_nrm, cell). */
-  private def pqRows(b0: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
-    pqScoreable(b0, coarse, cb).select("b_id", "codes", "d_nrm", "cell")
+  private def pqRows(b: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
+    pqScoreable(b, coarse, cb).select("b_id", "codes", "d_nrm", "cell")
 
-  /** KNN against a persisted [[buildIvfPqIndex]] index: probe ranks
-    * from the codebook sidecar, a CODES scan of only the probed cell
-    * directories, opened by path ([[Ann.readBaseCells]]; the <= nlist
-    * cell list is the one driver collect, as in [[Ann.queryIvfIndex]]),
-    * compressed-domain shortlist, then exact rerank against `source` —
+  /** KNN against a persisted [[buildIvfPqIndex]] index: a CODES scan
+    * of only the probed cells ([[Ann.probeFront]], filtered search by
+    * `eligible` included — the semi-join lands on the compressed scan,
+    * before the shortlist, so no shortlist slot is spent on an
+    * ineligible candidate), compressed-domain shortlist, then exact
+    * rerank ([[rerankExact]]) against `source` —
     * the table holding the ORIGINAL vectors, joined by id for shortlist
     * pairs only.
     * `source` must contain every indexed id (it is the corpus the
@@ -449,46 +449,35 @@ object Pq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    graft.etl.Compact.requireIndexServable(spark, path, "base")
-    val sl = shortlistSize(shortlist, k)
-    val cb = loadPqTables(spark, path)
-    // ONE resident sidecar read serves both the probe frame and the
-    // residual decode (the double codebook)
-    val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
-    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
-    Ann.requireQueryDim(q, cb.m * cb.sub)
-    val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
+    lazy val cb = loadPqTables(spark, path) // read once the front has checked the layout
+    val (coarse, q, probed, base) =
+      Ann.probeFront(spark, path, "d_nrm", queries, qId, qVec, nprobe, eligible)(
+        Some(cb.m * cb.sub))
     // ADC scoring: qc = q·centroid(cell) and the per-query LUT are
     // computed on the BOUNDED probe frame (≤ queries × nprobe rows) and
     // broadcast; the probed-cell scan then reads (b_id, codes, d_nrm)
     // and pays m lookups per candidate — no reconstruction, and the
     // nlist × D centroid literal stays OUT of the scan-side task binary
-    val probedQ = probed
-      .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
-      .withColumn("lut", lutExpr(col("q_emb"), cb))
-    val pruned = Ann.readBaseCells(spark, path, cells)
-    // filtered search (see Ann.queryIvfIndex's `eligible` scaladoc):
-    // the semi-join lands on the COMPRESSED scan, before the shortlist
-    // — so shortlist slots are never wasted on ineligible candidates
-    // (a post-filter would starve the rerank of eligible neighbors)
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        pruned.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => pruned
-    }
-    val approx = filtered
-      .join(broadcast(probedQ), "cell")
-      .select(col("q_id"), col("b_id"),
-        ((col("qc") + adcExpr(col("codes"), col("lut"), cb)) /
-          (col("d_nrm") * col("qp_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(approx, sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+    val approx = base.join(broadcast(adcProbe(probed, coarse, cb)), "cell")
+      .select(col("q_id"), col("b_id"), adcSim(cb))
     // the 'source holds every indexed id' contract is enforced INSIDE
     // the rerank join (requireFullCoverage) — zero extra source passes
-    rerankExact(short, src, q, k, requireFullCoverage = true)
+    rerankExact(Ann.topkPerQuery(approx, shortlistSize(shortlist, k)),
+      Ann.validVectors(source, srcId, srcVec), q, k, requireFullCoverage = true)
   }
+
+  /** The IVF-PQ probe frame: per (query, probed cell) the residual ADC
+    * terms, `qc` = q·centroid(cell) and the query's LUT ([[lutExpr]]).
+    */
+  private def adcProbe(probed: DataFrame, coarse: Array[Array[Double]], cb: Codebooks): DataFrame =
+    probed
+      .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
+      .withColumn("lut", lutExpr(col("q_emb"), cb))
+
+  /** The residual ADC cosine of a codes row against an [[adcProbe]] row. */
+  private def adcSim(cb: Codebooks): Column =
+    ((col("qc") + adcExpr(col("codes"), col("lut"), cb)) /
+      (col("d_nrm") * col("qp_nrm"))).as("sim")
 
   /** The persisted PQ tables of an IVF-PQ index — bounded collect of
     * m × kSub rows, validated DENSE before use: a partial/corrupt pq
@@ -552,7 +541,7 @@ object Pq {
     // a non-empty increment whose EVERY row fell to the PQ-scoreable
     // gates (wrong embedding dimension is the classic cause) is refused
     Ann.writeIvfLake(spark, path,
-      pqRows(rows.select(id.as("b_id"), vec.as("b_emb")), sidecar._1, cb), lit(true),
+      pqRows(Ann.validVectors(rows, id, vec), sidecar._1, cb), lit(true),
       sidecar, Some(rows),
       s"no row of a non-empty increment was PQ-scoreable for $path -- wrong " +
         s"embedding dimension (index dim ${cb.m * cb.sub})? nothing was added")(())
@@ -600,36 +589,22 @@ object Pq {
       m: Int = 8, kSub: Int = 256, shortlist: Int = 0,
       seed: Long = 42L, maxFit: Long = 100000L): DataFrame = {
     val sl = shortlistSize(shortlist, k)
-    val b0 = base.select(baseId.as("b_id"), baseVec.as("b_emb"))
     // ONE sample scan feeds both quantizers; PQ codebooks fit on
     // RESIDUALS (see residExpr); PQ seed family offset — see [[pqSeed]]
-    val sample = Ann.sampleVectors(b0, maxFit)
+    val sample = Ann.sampleVectors(base.select(baseId.as("b_id"), baseVec.as("b_emb")), maxFit)
     val coarse = Ann.fitCodebookFromSample(sample, nlist, seed)
     val cb = fitFromSample(residualSample(sample, coarse), m, kSub, pqSeed(seed))
     val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
-    Ann.requireQueryDim(q, cb.m * cb.sub)
-    val b = b0
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0) // zero-norm: see knnBruteForce
+    val b = Ann.validVectors(base, baseId, baseVec)
     // one narrow enrichment pass ([[pqScoreable]] — the shared row
     // universe with the persisted build): cell + codes + decode,
     // keeping only PQ-scoreable rows — the liveness universe for the
-    // probe below
-    val enc = pqScoreable(b0, coarse, cb)
-    val liveCells = enc.select("cell").distinct()
-    val centDf = Ann.centroidFrame(base.sparkSession, coarse)
-      .join(broadcast(liveCells), "cell")
-    // qc + LUT on the bounded probe frame, ADC on the scan — same
-    // arithmetic owners as queryIvfPqIndex (the persisted ≡ on-the-fly
-    // contract)
-    val probed = Ann.topProbeCells(q, centDf, nprobe).join(q, "q_id")
-      .withColumn("qc", Vectors.dot(col("q_emb"), centCol(col("cell"), coarse)))
-      .withColumn("lut", lutExpr(col("q_emb"), cb))
-    val approx = enc
-      .join(broadcast(probed), "cell")
-      .select(col("q_id"), col("b_id"),
-        ((col("qc") + adcExpr(col("codes"), col("lut"), cb)) /
-          (col("d_nrm") * col("qp_nrm"))).as("sim"))
+    // probe; qc + LUT on the bounded probe frame, ADC on the scan —
+    // the same arithmetic owners as queryIvfPqIndex (the persisted ≡
+    // on-the-fly contract)
+    val enc = pqScoreable(b, coarse, cb)
+    val probed = adcProbe(Ann.probeLiveCells(q, coarse, enc, nprobe), coarse, cb)
+    val approx = enc.join(broadcast(probed), "cell").select(col("q_id"), col("b_id"), adcSim(cb))
     rerankExact(Ann.topkPerQuery(approx, sl), b, q, k)
   }
 }

@@ -95,23 +95,6 @@ object Sq {
     })
   }
 
-  /** Approximate top-k cosine via SQ8 shortlist + EXACT rerank (the
-    * [[Pq.knnPq]] deployment with the closed-form quantizer):
-    *
-    *  1. gate base and queries to scoreable fixed-dim vectors;
-    *  2. fit per-dimension [min, max] (one aggregate);
-    *  3. encode + reconstruct the base (narrow projection), score all
-    *     (base × broadcast queries) pairs on the RECONSTRUCTION
-    *     (asymmetric distance — the query stays full-precision), and
-    *     keep a deterministic per-query shortlist (ADC score desc,
-    *     id asc — the k-buffer tail, no Window);
-    *  4. re-score shortlist pairs exactly on the originals; report
-    *     top k true cosines.
-    *
-    * Every stage is deterministic arithmetic, so the v15 oracle
-    * replays the WHOLE pipeline — shortlist membership included, which
-    * the PQ paths cannot offer (their codebooks are engine-side).
-    */
   /** Shared gate + fit + encode stanza of [[knnSq8]] and
     * [[knnIvfSq8]] — SINGLE owner because the v15 oracle replays this
     * arithmetic token-for-token and the two paths' bit-equality spec
@@ -134,7 +117,7 @@ object Sq {
     */
   private def encodedBase(
       base: DataFrame, baseId: Column, baseVec: Column): (DataFrame, DataFrame, Int, Sq8Stats) = {
-    val b0 = finiteScoreable(base.select(baseId.as("b_id"), baseVec.as("b_emb")))
+    val b0 = finiteScoreable(base, baseId, baseVec)
     val dRow = b0.select(min(size(col("b_emb"))).as("d")).head()
     require(!dRow.isNullAt(0), "SQ8: no scoreable base vectors")
     val d = dRow.getInt(0)
@@ -143,15 +126,19 @@ object Sq {
     (b, encodeScoreable(b, st), d, st)
   }
 
-  /** Gates (1) and (2) of [[encodedBase]] on a (b_id, b_emb) frame,
-    * adding `b_nrm` — shared with [[addToIvfSq8Index]].
+  /** Gates (1) and (2) of [[encodedBase]]: the [[Ann.validVectors]] of
+    * the rows whose every element is finite — shared with
+    * [[addToIvfSq8Index]].
     */
-  private def finiteScoreable(b: DataFrame): DataFrame =
-    b.filter(col("b_emb").isNotNull &&
-        forall(col("b_emb"), x =>
-          x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity)))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
+  private def finiteScoreable(df: DataFrame, id: Column, vec: Column): DataFrame =
+    Ann.validVectors(df.filter(vec.isNotNull &&
+      forall(vec, x => x.isNotNull && !isnan(x) && abs(x) < lit(Float.PositiveInfinity))), id, vec)
+
+  /** The SQ8 ADC cosine: the full-precision query against a row's
+    * reconstruction `recon` (norm `r_nrm`).
+    */
+  private def adcSim: Column =
+    (Vectors.dot(col("recon"), col("q_emb")) / (col("r_nrm") * col("qp_nrm"))).as("sim")
 
   /** SQ8 codes + reconstruction norm of fixed-dim rows under `st`;
     * rows whose codes are null or whose reconstruction has zero norm
@@ -164,31 +151,36 @@ object Sq {
       .withColumn("r_nrm", Vectors.norm2(col("recon")))
       .filter(col("r_nrm") > 0)
 
+  /** Approximate top-k cosine via SQ8 shortlist + EXACT rerank (the
+    * [[Pq.knnPq]] deployment with the closed-form quantizer):
+    *
+    *  1. gate base and queries to scoreable fixed-dim vectors;
+    *  2. fit per-dimension [min, max] (one aggregate);
+    *  3. encode + reconstruct the base (narrow projection), score all
+    *     (base × broadcast queries) pairs on the RECONSTRUCTION
+    *     (asymmetric distance — the query stays full-precision), and
+    *     keep a deterministic per-query shortlist (ADC score desc,
+    *     id asc — the k-buffer tail, no Window);
+    *  4. re-score shortlist pairs exactly on the originals; report
+    *     top k true cosines.
+    *
+    * Every stage is deterministic arithmetic, so the v15 oracle
+    * replays the WHOLE pipeline — shortlist membership included, which
+    * the PQ paths cannot offer (their codebooks are engine-side).
+    */
   def knnSq8(
       base: DataFrame, baseId: Column, baseVec: Column,
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, shortlist: Int = 0): DataFrame = {
     val sl = Pq.shortlistSize(shortlist, k)
     val (b, enc, d, _) = encodedBase(base, baseId, baseVec)
-
-    val q = queries.select(qId.as("q_id"), qVec.as("q_emb"))
-      .withColumn("q_nrm", Vectors.norm2(col("q_emb")))
-      .filter(col("q_nrm") > 0)
+    val q = Ann.validQueries(queries, qId, qVec)
     // a wrong-dim query must fail LOUDLY, not read as "no neighbors" —
     // the same contract every other ANN path enforces
     Ann.requireQueryDim(q, d)
-
-    val adcScored = enc.crossJoin(broadcast(q))
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("recon"), col("q_emb")) / (col("r_nrm") * col("q_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(adcScored, sl).select("q_id", "b_id")
-
-    val exact = short
-      .join(b.select(col("b_id"), col("b_emb"), col("b_nrm")), "b_id")
-      .join(broadcast(q), "q_id")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    Ann.topkPerQuery(exact, k)
+    val short = Ann.topkPerQuery(
+      enc.crossJoin(broadcast(q)).select(col("q_id"), col("b_id"), adcSim), sl)
+    Pq.rerankExact(short, b, q, k)
   }
 
   /** IVF × SQ8 composition (FAISS `IndexIVFScalarQuantizer`, global
@@ -217,38 +209,21 @@ object Sq {
 
     // shared stanza with knnSq8 (single owner — see [[encodedBase]]);
     // the coarse quantizer fits on the SAME gated rows it will assign,
-    // and the cell assignment is a narrow per-row pass over both the
-    // raw and encoded frames
-    val (b0, enc0, _, _) = encodedBase(base, baseId, baseVec)
+    // and the rows that take a cell are encoded
+    val (b0, _, _, st) = encodedBase(base, baseId, baseVec)
     val codebook = Ann.fitCodebook(
       b0.select(col("b_id"), col("b_emb")), nlist, seed, maxFit)
     val b = b0
       .withColumn("cell", Ann.cellExpr(col("b_emb"), codebook))
       .filter(col("cell").isNotNull)
-    val enc = enc0
-      .withColumn("cell", Ann.cellExpr(col("b_emb"), codebook))
-      .filter(col("cell").isNotNull)
+    val enc = encodeScoreable(b, st)
 
     // live-cell probing + loud dim gate, exactly the knnIvf discipline
-    val liveCells = b.select("cell").distinct()
-    val centDf = Ann.centroidFrame(base.sparkSession, codebook)
-      .join(broadcast(liveCells), "cell")
     val q = Ann.validQueries(queries, qId, qVec)
-    Ann.requireQueryDim(q, codebook(0).length)
-    val probed = Ann.topProbeCells(q, centDf, nprobe).join(q, "q_id")
-
-    val adc = enc
-      .join(broadcast(probed.withColumnRenamed("qp_nrm", "q_nrm")), "cell")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("recon"), col("q_emb")) / (col("r_nrm") * col("q_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(adc, sl).select("q_id", "b_id")
-
-    val exact = short
-      .join(b.select(col("b_id"), col("b_emb"), col("b_nrm")), "b_id")
-      .join(broadcast(q.withColumnRenamed("qp_nrm", "q_nrm")), "q_id")
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("b_emb"), col("q_emb")) / (col("b_nrm") * col("q_nrm"))).as("sim"))
-    Ann.topkPerQuery(exact, k)
+    val probed = Ann.probeLiveCells(q, codebook, b, nprobe)
+    val short = Ann.topkPerQuery(
+      enc.join(broadcast(probed), "cell").select(col("q_id"), col("b_id"), adcSim), sl)
+    Pq.rerankExact(short, b, q, k)
   }
 
   // ------------------------------------------------ persisted index
@@ -318,10 +293,10 @@ object Sq {
       Sq8Stats(sorted.map(_.getDouble(1)), sorted.map(_.getDouble(2)))
     }
 
-  /** KNN against a persisted [[buildIvfSq8Index]] index: probe ranks
-    * from the codebook sidecar, a CODES scan of only the probed cells
-    * (opened by path: [[Ann.readBaseCells]]), ADC on the decoded
-    * reconstruction, exact rerank against `source` (the corpus table
+  /** KNN against a persisted [[buildIvfSq8Index]] index: a CODES scan
+    * of only the probed cells ([[Ann.probeFront]], filtered search by
+    * `eligible` included), ADC on the decoded reconstruction, exact
+    * rerank ([[Pq.rerankExact]]) against `source` (the corpus table
     * holding the original vectors — the `requireFullCoverage` drift
     * guard of the PQ path applies).
     * Same caller cache contract as [[Pq.queryIvfPqIndex]] (the rerank
@@ -333,31 +308,14 @@ object Sq {
       queries: DataFrame, qId: Column, qVec: Column,
       k: Int, nprobe: Int = 4, shortlist: Int = 0,
       eligible: Option[(DataFrame, Column)] = None): DataFrame = {
-    graft.etl.Compact.requireIndexServable(spark, path, "base")
-    Ann.requireQuantizerMarker(spark, path, "sq",
-      "Ann.queryIvfIndex / Pq.queryIvfPqIndex")
-    val sl = Pq.shortlistSize(shortlist, k)
-    val st = loadSqStats(spark, path)
-    val (coarse, _, centDf) = Ann.readLiveCentroids(spark, path)
-    val q = Ann.localBatch(Ann.validQueries(queries, qId, qVec))
-    Ann.requireQueryDim(q, st.dim)
-    val (cells, probed) = Ann.probePruned(q, centDf, nprobe)
-    val pruned = Ann.readBaseCells(spark, path, cells)
-    val filtered = eligible match {
-      case Some((el, elId)) =>
-        pruned.join(el.select(elId.as("b_id")), Seq("b_id"), "left_semi")
-      case None => pruned
-    }
-    val approx = filtered
-      .join(broadcast(probed), "cell")
+    lazy val st = loadSqStats(spark, path) // read once the front has checked the layout
+    val (_, q, probed, base) =
+      Ann.probeFront(spark, path, "r_nrm", queries, qId, qVec, nprobe, eligible)(Some(st.dim))
+    val approx = base.join(broadcast(probed), "cell")
       .withColumn("recon", decodeExpr(col("codes"), st))
-      .select(col("q_id"), col("b_id"),
-        (Vectors.dot(col("recon"), col("q_emb")) / (col("r_nrm") * col("qp_nrm"))).as("sim"))
-    val short = Ann.topkPerQuery(approx, sl)
-    val src = source.select(srcId.as("b_id"), srcVec.as("b_emb"))
-      .withColumn("b_nrm", Vectors.norm2(col("b_emb")))
-      .filter(col("b_nrm") > 0)
-    Pq.rerankExact(short, src, q, k, requireFullCoverage = true)
+      .select(col("q_id"), col("b_id"), adcSim)
+    Pq.rerankExact(Ann.topkPerQuery(approx, Pq.shortlistSize(shortlist, k)),
+      Ann.validVectors(source, srcId, srcVec), q, k, requireFullCoverage = true)
   }
 
   /** Incrementally extend a persisted [[buildIvfSq8Index]] index: new
@@ -376,8 +334,7 @@ object Sq {
       "Ann.addToIvfIndex / Pq.addToIvfPqIndex")
     val st = loadSqStats(spark, path)
     val sidecar = Ann.readCodebookSidecar(spark, path)
-    val b = finiteScoreable(rows.select(id.as("b_id"), vec.as("b_emb")))
-      .filter(size(col("b_emb")) === st.dim)
+    val b = finiteScoreable(rows, id, vec).filter(size(col("b_emb")) === st.dim)
     Ann.writeIvfLake(spark, path, sqRows(encodeScoreable(b, st), sidecar._1), lit(true),
       sidecar, Some(rows),
       s"no increment row was SQ8-scoreable for $path -- every row was gated " +

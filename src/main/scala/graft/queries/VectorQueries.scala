@@ -67,7 +67,7 @@ object VectorQueries {
 
   /** Sign-LSH approximate KNN, six hash tables with Hamming-2
     * multiprobe (recall@5 1.00 vs 0.92 for the round-8 radius-1
-    * config — see RecallSweep; the probe ladder expands only the tiny
+    * config — see RecallBoard; the probe ladder expands only the tiny
     * broadcast query side, so the base index footprint rides `tables`
     * alone). The bucketing is pure integer/double arithmetic
     * (sign_lsh — deterministic hyperplanes from an (i, j) bit mix)

@@ -208,6 +208,34 @@ class IndexLifecycleSpec extends SparkSpecBase {
         queries, col("vec_id"), col("embedding"), k = 3, nprobe = 2).collect()): Unit)
   }
 
+  test("each IVF-family query verb refuses the other two layouts and names the right one") {
+    // the verb of each layout, with its build and its query on this fixture
+    val families = Seq[(String, String => Unit, String => Unit)](
+      ("Ann.queryIvfIndex",
+        Ann.buildIvfIndex(even, col("vec_id"), col("embedding"), _, nlist = 4),
+        p => Ann.queryIvfIndex(spark, p, queries, col("vec_id"), col("embedding"), k = 3)
+          .collect(): Unit),
+      ("Pq.queryIvfPqIndex",
+        Pq.buildIvfPqIndex(even, col("vec_id"), col("embedding"), _, nlist = 4, m = 2, kSub = 8),
+        p => Dedup.scoped(Pq.queryIvfPqIndex(spark, p, vectors, col("vec_id"), col("embedding"),
+          queries, col("vec_id"), col("embedding"), k = 3).collect()): Unit),
+      ("Sq.queryIvfSq8Index",
+        Sq.buildIvfSq8Index(even, col("vec_id"), col("embedding"), _, nlist = 4),
+        p => Dedup.scoped(Sq.queryIvfSq8Index(spark, p, vectors, col("vec_id"), col("embedding"),
+          queries, col("vec_id"), col("embedding"), k = 3).collect()): Unit))
+    for ((right, build, _) <- families) {
+      val p = tmpDir("graft_layout_misuse") + "/ix"
+      build(p)
+      for ((wrong, _, query) <- families if wrong != right) {
+        val e = intercept[IllegalArgumentException](query(p))
+        info(s"$wrong on a $right index: ${e.getMessage}")
+        assert(e.getMessage.contains(s"use $right"), e.getMessage)
+        assert(families.forall { case (v, _, _) => v == right || !e.getMessage.contains(v) },
+          e.getMessage)
+      }
+    }
+  }
+
   test("a lexical query right after a BM25 write runs no more jobs than a warm query") {
     // every BM25 writer records the postings schema parquet infers for
     // the stats generation it wrote, so the first query of that

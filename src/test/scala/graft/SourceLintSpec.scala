@@ -116,6 +116,26 @@ class SourceLintSpec extends AnyFunSuite {
     assert(hits.isEmpty, "output encoder derived inside def outputEncoder: " + hits.mkString(", "))
   }
 
+  test("a query-vector norm is computed only by Ann.validQueries") {
+    // Every ANN verb takes its valid queries (q_id, q_emb, qp_nrm) from
+    // Ann.validQueries; a second norm of q_emb would be a second rule
+    // for which queries score, and a second name for their norm.
+    val owner = Paths.get("src", "main", "scala", "graft", "operators", "Ann.scala")
+    val queryNorm = """norm2\s*\(\s*col\s*\(\s*"q_emb"\s*\)\s*\)""".r
+    val hits = for {
+      p <- mainSources
+      lines = codeLines(p)
+      ((l, n), i) <- lines.zipWithIndex
+      if queryNorm.findFirstIn(l).isDefined
+      // the nearest definition at or above the line
+      enclosing = lines.take(i + 1).reverseIterator.map(_._1).find(_.contains("def ")).getOrElse("")
+    } yield (p, n, enclosing)
+    assert(hits.exists(_._1 == owner), "Ann.validQueries no longer computes the query norm")
+    val outside = hits.filterNot { case (p, _, d) => p == owner && d.contains("def validQueries") }
+    assert(outside.isEmpty, "query-vector norm outside Ann.validQueries: " +
+      outside.map { case (p, n, _) => s"$p:$n" }.mkString(", "))
+  }
+
   test("file listings use listStatus, never listFiles or listLocatedStatus") {
     // Hadoop's listFiles and listLocatedStatus build a LocatedFileStatus
     // per entry; without the native library the local file system fills

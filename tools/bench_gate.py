@@ -281,17 +281,17 @@ def recall_check(repo_dir):
     dirty = _git(["status", "--porcelain", "--"] + RECALL_FILES, repo_dir)
     if dirty:
         fails.append("ANN-family sources carry uncommitted changes -- "
-                     "re-run RecallSweep and commit RECALL with them:\n    "
+                     "re-run RecallBoard and commit RECALL with them:\n    "
                      + dirty.replace("\n", "\n    "))
     t_ann = _git(["log", "-1", "--format=%ct", "--"] + RECALL_FILES, repo_dir)
     t_rec = _git(["log", "-1", "--format=%ct", "--", "RECALL_r*.json"],
                  repo_dir)
     if t_rec is None or not t_rec:
         fails.append("no committed RECALL_r*.json artifact -- run "
-                     "RecallSweep and commit the result")
+                     "RecallBoard and commit the result")
     elif t_ann and int(t_ann) > int(t_rec):
         fails.append("ANN-family sources were committed AFTER the newest "
-                     "RECALL artifact -- re-run RecallSweep (recall is "
+                     "RECALL artifact -- re-run RecallBoard (recall is "
                      "re-measured at every ANN diff, not remembered)")
     return fails, notes
 
